@@ -2,7 +2,7 @@
 
 Two kinds of input:
 
-- check corpora for the ``micr_*`` workloads, written with
+- the check corpus of ``micr_direct``, written with
   ``sources.fixtures.generate_fixture_rows_range`` at a fixed number of
   rows per media part file, so the file layout (and with it the scan's
   work units) depends only on the corpus size, never on the host;
@@ -40,10 +40,10 @@ SPAN_TYPE = pa.struct([
 ])
 
 
-def _gen_part(args: tuple[int, int, int, bool]) -> tuple[list, list, list]:
-    start, count, seed, lossy = args
+def _gen_part(args: tuple[int, int, int]) -> tuple[list, list, list]:
+    start, count, seed = args
     from fin_ocr_sdk_spark.sources.fixtures import generate_fixture_rows_range
-    return generate_fixture_rows_range(start, count, seed, lossy)
+    return generate_fixture_rows_range(start, count, seed, lossy=False)
 
 
 def _write_media_part(path: str, rows: list[dict]) -> None:
@@ -80,41 +80,37 @@ def _write_check_tables(out: str, parts: list[tuple[list, list, list]]
     }), os.path.join(out, "expected_spans.parquet"))
 
 
-def check_corpus(cache_root: str, seed: int, n_docs: int, lossy: bool,
-                 workers: int, with_warm: bool = True) -> dict[str, str]:
-    """Write (or reuse) the measured corpus and, with ``with_warm``, a
+def check_corpus(cache_root: str, seed: int, n_docs: int,
+                 workers: int) -> dict[str, str]:
+    """Write (or reuse) a lossless (png/tiff/bmp) check corpus and a
     small warm-up corpus of WARM_FILES part files.
 
-    Returns ``{"main": dir[, "warm": dir]}``; each dir holds
+    Returns ``{"main": dir, "warm": dir}``; each dir holds
     ``documents.parquet``, ``media.parquet/part-*.parquet`` and
     ``expected_spans.parquet``.  The warm-up corpus uses doc indices
     after the measured ones, so the two never share an image."""
     if n_docs % ROWS_PER_PART:
         raise ValueError(f"n_docs must be a multiple of {ROWS_PER_PART}")
-    key = (f"checks-{'lossy' if lossy else 'lossless'}-{n_docs}"
-           f"{'-warm' if with_warm else ''}-seed{seed}")
+    key = f"checks-{n_docs}-seed{seed}"
     root = os.path.join(cache_root, key)
     marker = os.path.join(root, "DONE.json")
     want = {"version": CORPUS_VERSION, "seed": seed, "n_docs": n_docs,
-            "lossy": lossy, "rows_per_part": ROWS_PER_PART,
-            "warm": with_warm}
-    dirs = {"main": os.path.join(root, "main")}
-    if with_warm:
-        dirs["warm"] = os.path.join(root, "warm")
+            "rows_per_part": ROWS_PER_PART}
+    dirs = {"main": os.path.join(root, "main"),
+            "warm": os.path.join(root, "warm")}
     if os.path.exists(marker):
         with open(marker) as f:
             if json.load(f) == want:
                 return dirs
     shutil.rmtree(root, ignore_errors=True)
-    main_tasks = [(i, ROWS_PER_PART, seed, lossy)
+    main_tasks = [(i, ROWS_PER_PART, seed)
                   for i in range(0, n_docs, ROWS_PER_PART)]
-    warm_tasks = [(n_docs + k * WARM_ROWS, WARM_ROWS, seed, lossy)
-                  for k in range(WARM_FILES if with_warm else 0)]
+    warm_tasks = [(n_docs + k * WARM_ROWS, WARM_ROWS, seed)
+                  for k in range(WARM_FILES)]
     with ProcessPoolExecutor(max_workers=workers) as ex:
         results = list(ex.map(_gen_part, main_tasks + warm_tasks))
     _write_check_tables(dirs["main"], results[:len(main_tasks)])
-    if with_warm:
-        _write_check_tables(dirs["warm"], results[len(main_tasks):])
+    _write_check_tables(dirs["warm"], results[len(main_tasks):])
     with open(marker, "w") as f:
         json.dump(want, f)
     return dirs

@@ -4,8 +4,9 @@ Runs ``plans.scan.scan_check`` over a fixed subset of a workload's
 images, each image once untraced (the kernel's own ms per image and its
 tail) and once traced, with the public functions it calls rebound to
 span-recording wrappers.  Codec cost per format comes from a separate probe set with
-the same number of images of every format, because the lossy mix holds
-too few JPEG and GIF images to time them on their own.
+the same number of images of every format, drawn from the lossy mix
+(1/16 JPEG, half of them progressive, and 1/16 GIF), because the
+measured corpus is lossless.
 """
 
 from __future__ import annotations

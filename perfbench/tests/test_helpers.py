@@ -98,14 +98,14 @@ def test_benchmark_json_lists_the_catalogue():
 
 def test_corpus_layout_follows_size_not_host(tmp_path):
     dirs = corpus.check_corpus(str(tmp_path), 3, 2 * corpus.ROWS_PER_PART,
-                               lossy=False, workers=2)
+                               workers=2)
     parts = sorted(glob.glob(os.path.join(dirs["main"], "media.parquet",
                                           "*.parquet")))
     assert len(parts) == 2
     assert all(pq.ParquetFile(p).metadata.num_rows == corpus.ROWS_PER_PART
                for p in parts)
     again = corpus.check_corpus(str(tmp_path), 3, 2 * corpus.ROWS_PER_PART,
-                                lossy=False, workers=1)
+                                workers=1)
     assert again == dirs
 
 
@@ -130,8 +130,7 @@ def test_undecodable_image_counts_as_failed(tmp_path, sampler, monkeypatch):
     n = corpus.ROWS_PER_PART
     monkeypatch.setattr(workloads, "MICR_DIRECT_DOCS", n)
     run = _run(tmp_path, sampler, "micr_direct", trace=False)
-    main = corpus.check_corpus(run.cache, run.seed, n, lossy=False,
-                               workers=2)["main"]
+    main = corpus.check_corpus(run.cache, run.seed, n, workers=2)["main"]
     part = sorted(glob.glob(os.path.join(main, "media.parquet",
                                          "*.parquet")))[0]
     t = pq.read_table(part)
@@ -150,18 +149,19 @@ def test_undecodable_image_counts_as_failed(tmp_path, sampler, monkeypatch):
 def test_files_skipped_equals_files_committed_in_setup(tmp_path, sampler,
                                                        monkeypatch):
     n = 2 * corpus.ROWS_PER_PART
-    monkeypatch.setattr(workloads, "MICR_RESUME_DOCS", n)
+    monkeypatch.setattr(workloads, "MICR_DIRECT_DOCS", n)
     monkeypatch.setattr(perfimage, "SUBSET", 2)
-    run = _run(tmp_path, sampler, "micr_resume", trace=True)
+    run = _run(tmp_path, sampler, "micr_direct", trace=True)
     try:
-        workloads.micr_resume(run)
+        workloads.micr_direct(run)
     finally:
         run.stop()
-    assert run.failed == 0 and run.attempted == n
+    # the direct job and the assembled resume output, both checked
+    assert run.failed == 0 and run.attempted == 2 * n
     assert run.metrics["lineage.files_skipped"][0] == 1
     assert run.metrics["lineage.files_scanned"][0] == 1
     assert run.metrics["lineage.scan_tasks"][0] >= 1
-    spans = os.path.join(run.cache, "spans-micr_resume-seed5.jsonl")
+    spans = os.path.join(run.cache, "spans-micr_direct-seed5.jsonl")
     with open(spans) as f:
         names = {json.loads(line)["name"] for line in f}
     assert {"scan_check", "decode", "skew_angle", "get_micr_band",

@@ -1,5 +1,5 @@
-"""The three workloads, each driven as a closed loop: one client, one
-Spark job at a time, on ``local[cores]``.
+"""The workloads, each driven as a closed loop: one client, one Spark
+job at a time, on ``local[cores]``.
 
 Every workload follows the same shape:
 
@@ -13,7 +13,8 @@ Every workload follows the same shape:
 With ``trace`` on, the job runs once with its Spark jobs tagged, the
 stage metrics are read back from the monitoring REST API, and a
 single-process traced run over a fixed subset of images gives the
-per-image split (see :mod:`perfimage`).
+per-image split (see :mod:`perfimage`).  ``micr_direct``'s traced run
+also drives the resumable path (``plans.lineage``) over its corpus.
 """
 
 from __future__ import annotations
@@ -37,7 +38,6 @@ QUERY_SUITE = (
 )
 
 MICR_DIRECT_DOCS = 256
-MICR_RESUME_DOCS = 64
 
 
 class Run:
@@ -158,7 +158,7 @@ def _media_parts(d: str) -> list[str]:
 def micr_direct(run: Run) -> None:
     from fin_ocr_sdk_spark.plans.pipeline import extract_spans
     dirs = corpus.check_corpus(run.cache, run.seed, MICR_DIRECT_DOCS,
-                               lossy=False, workers=run.cores)
+                               workers=run.cores)
     main, warm = dirs["main"], dirs["warm"]
     expected = checks.expected_by_doc(
         os.path.join(main, "expected_spans.parquet"))
@@ -209,6 +209,7 @@ def micr_direct(run: Run) -> None:
     for k in ("shuffle_write_bytes", "shuffle_read_bytes", "spill_bytes"):
         run.put(f"pipeline.{k}", summ[k], "bytes")
     run.put("pipeline.gc_s", summ["gc_s"], "s")
+    _lineage_cycle(run, main, expected)
     from .perfimage import per_image
     per_image(run, _media_parts(main))
 
@@ -219,94 +220,53 @@ def _put_scan_stage(run: Run, prefix: str, summ: dict) -> None:
             "ratio")
 
 
-# ------------------------------------------------------------ micr_resume
+# ------------------------------------------------------- plans.lineage
 
 def _dir_bytes(d: str) -> int:
     return sum(os.path.getsize(os.path.join(p, f))
                for p, _, fs in os.walk(d) for f in fs)
 
 
-def micr_resume(run: Run) -> None:
+def _lineage_cycle(run: Run, main: str, expected: dict) -> None:
+    """Per-layer readout of the resumable path on the workload's corpus:
+    commit the first half of the part files with
+    ``run_resumable_extract``, then resume over the whole table and
+    ``assemble_output``.  Records ``lineage.*``; the assembled output is
+    checked like the direct job's."""
     from fin_ocr_sdk_spark.plans.lineage import (assemble_output,
                                                  emitted_spans,
                                                  run_resumable_extract)
-    main = corpus.check_corpus(run.cache, run.seed, MICR_RESUME_DOCS,
-                               lossy=True, workers=run.cores,
-                               with_warm=False)["main"]
-    expected = checks.expected_by_doc(
-        os.path.join(main, "expected_spans.parquet"))
+    sp = run.spark
     parts = _media_parts(main)
     committed = parts[:len(parts) // 2]
-    os.makedirs(run.scratch, exist_ok=True)
-    run.log("inputs ready")
-    # the committed half: written by the set-up's warm-up pass, copied
-    # before each repetition
-    base = os.path.join(run.scratch, "base")
-
-    def warm_pass():
-        sp = run.spark
-        docs = sp.read.parquet(os.path.join(main, "documents.parquet"))
-        shutil.rmtree(base, ignore_errors=True)
-        run_resumable_extract(sp, docs, sp.read.parquet(*committed), base)
-        assemble_output(docs, emitted_spans(sp, base)).collect()
-
-    run.setup(warm_pass)
-    sp = run.spark
     docs = sp.read.parquet(os.path.join(main, "documents.parquet"))
     media = sp.read.parquet(os.path.join(main, "media.parquet"))
-    base_bytes = _dir_bytes(base)
-    stats: list[dict] = []
-
-    def rep(k):
-        out = os.path.join(run.scratch, f"rep{k}")
-        shutil.copytree(base, out)
-        run.tagged(f"perfbench.micr_resume.run.{k}")
-        t0 = time.perf_counter()
-
-        def job():
-            res = run_resumable_extract(sp, docs, media, out)
-            t1 = time.perf_counter()
-            run.tagged(f"perfbench.micr_resume.assemble.{k}")
-            rows = assemble_output(docs, emitted_spans(sp, out)).collect()
-            return res, t1, rows
-
-        got = _safe(job)
-        dt = time.perf_counter() - t0
-        if got is None:
-            shutil.rmtree(out, ignore_errors=True)
-            return {"job_s": dt, "attempted": MICR_RESUME_DOCS,
-                    "failed": MICR_RESUME_DOCS, "docs": 0}
-        res, t1, rows = got
-        stats.append({"run_s": t1 - t0, "assemble_s": dt - (t1 - t0),
-                      "scanned": res.scanned_files,
-                      "skipped": res.skipped_files,
-                      "bytes": _dir_bytes(out) - base_bytes})
-        shutil.rmtree(out, ignore_errors=True)
-        failed, n_docs = checks.failed_images(rows, expected)
-        # the anti-join must skip exactly the committed half
-        if (res.skipped_files != len(committed)
-                or res.scanned_files != len(parts) - len(committed)):
-            failed = MICR_RESUME_DOCS
-        return {"job_s": dt, "attempted": MICR_RESUME_DOCS,
-                "failed": failed, "docs": n_docs}
-
-    reps = run.loop(rep)
-    if not run.trace:
-        run.put_loop_metrics(reps)
-        return
+    out = os.path.join(run.scratch, "lineage")
+    run.tagged("perfbench.lineage.commit")
+    run_resumable_extract(sp, docs, sp.read.parquet(*committed), out)
+    base_bytes = _dir_bytes(out)
+    run.tagged("perfbench.lineage.run")
+    t0 = time.perf_counter()
+    res = run_resumable_extract(sp, docs, media, out)
+    t1 = time.perf_counter()
+    run.tagged("perfbench.lineage.assemble")
+    rows = assemble_output(docs, emitted_spans(sp, out)).collect()
+    t2 = time.perf_counter()
+    failed, _ = checks.failed_images(rows, expected)
+    # the anti-join must skip exactly the committed half
+    if (res.skipped_files != len(committed)
+            or res.scanned_files != len(parts) - len(committed)):
+        failed = len(expected)
+    run.attempted += len(expected)
+    run.failed += failed
     rest = SparkRest(sp.sparkContext)
-    summ = stage_summary(
-        rest, job_stages(rest, "perfbench.micr_resume.run.0"), run.cores)
-    _put_scan_stage(run, "lineage", summ)
-    if stats:
-        s = stats[0]
-        run.put("lineage.run_s", s["run_s"], "s")
-        run.put("lineage.assemble_s", s["assemble_s"], "s")
-        run.put("lineage.files_scanned", s["scanned"], "count")
-        run.put("lineage.files_skipped", s["skipped"], "count")
-        run.put("lineage.bytes_written", s["bytes"], "bytes")
-    from .perfimage import per_image
-    per_image(run, _media_parts(main))
+    _put_scan_stage(run, "lineage", stage_summary(
+        rest, job_stages(rest, "perfbench.lineage.run"), run.cores))
+    run.put("lineage.run_s", t1 - t0, "s")
+    run.put("lineage.assemble_s", t2 - t1, "s")
+    run.put("lineage.files_scanned", res.scanned_files, "count")
+    run.put("lineage.files_skipped", res.skipped_files, "count")
+    run.put("lineage.bytes_written", _dir_bytes(out) - base_bytes, "bytes")
 
 
 # ---------------------------------------------------------- train_queries
@@ -367,5 +327,4 @@ def train_queries(run: Run) -> None:
     per_image(run, None)
 
 
-WORKLOADS = {"micr_direct": micr_direct, "micr_resume": micr_resume,
-             "train_queries": train_queries}
+WORKLOADS = {"micr_direct": micr_direct, "train_queries": train_queries}
