@@ -58,25 +58,17 @@ def frames_equal(got: pd.DataFrame, exp: pd.DataFrame) -> bool:
             and g.equals(e))
 
 
-class Oracle:
-    """DuckDB twins of the queries over one table directory."""
-
-    def __init__(self, sf_dir: str, threads: int) -> None:
-        import duckdb
-        import __spark_entry__ as entry
-        self.con = duckdb.connect()
-        self.con.execute(f"SET threads TO {threads}")
+def oracle_frames(sf_dir: str, names, threads: int) -> dict[str, pd.DataFrame]:
+    """Each named query's DuckDB twin over one table directory."""
+    import duckdb
+    import __spark_entry__ as entry
+    sql = entry.oracle_sql()
+    con = duckdb.connect()
+    try:
+        con.execute(f"SET threads TO {threads}")
         for t in TRAIN_TABLES:
-            self.con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{sf_dir}/{t}.parquet')")
-        self.sql = entry.oracle_sql()
-        self._cache: dict[str, pd.DataFrame] = {}
-
-    def expected(self, name: str) -> pd.DataFrame:
-        if name not in self._cache:
-            self._cache[name] = self.con.execute(self.sql[name]).fetchdf()
-        return self._cache[name]
-
-    def close(self) -> None:
-        self.con.close()
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                        f"read_parquet('{sf_dir}/{t}.parquet')")
+        return {name: con.execute(sql[name]).fetchdf() for name in names}
+    finally:
+        con.close()

@@ -6,9 +6,10 @@ Two kinds of input:
   ``sources.fixtures.generate_fixture_rows_range`` at a fixed number of
   rows per media part file, so the file layout (and with it the scan's
   work units) depends only on the corpus size, never on the host;
-- TPC-H-ish and training-data tables for ``train_queries``, with the
-  schemas of the ``sf*`` table directories the queries are written
-  against (``lineitem``, ``orders``, ``documents``, ``embeddings``).
+- TPC-H-ish and training-data tables for ``train_queries``
+  (``lineitem``, ``orders``, ``documents``, ``embeddings``), with the
+  schemas, sizes and value distributions of the reference ``sf0.01``
+  table directory the queries are written against.
 
 Everything is a pure function of the seed.  A finished corpus carries a
 ``DONE.json`` marker; an interrupted write leaves no marker and is
@@ -32,7 +33,7 @@ ROWS_PER_PART = 16
 WARM_FILES = 4
 WARM_ROWS = 2
 
-CORPUS_VERSION = 2
+CORPUS_VERSION = 3
 
 SPAN_TYPE = pa.struct([
     ("kind", pa.string()), ("text", pa.string()),
@@ -118,57 +119,57 @@ def check_corpus(cache_root: str, seed: int, n_docs: int,
 
 # ------------------------------------------------- training-data tables
 
-#: table sizes (rows), those of the sf0.01 tables; the query suite is
-#: dominated by per-query fixed cost here, so larger tables mostly
-#: lengthen each run
+#: table sizes (rows), those of the reference sf0.01 tables; the query
+#: suite is dominated by per-query fixed cost here, so larger tables
+#: mostly lengthen each run
 N_DOCUMENTS = 500
 N_EMBEDDINGS = 500
 N_ORDERS = 15000
 N_LINEITEM = 60000
 N_CUSTOMERS = 1500
 
+# The distributions below follow the reference sf0.01 tables
+# (TESTDATA.md) as measured by ``tablestats.py`` (figures side by side in
+# METRICS.md): documents of 10-100 words drawn uniformly from a 30-word
+# vocabulary, one in 20 of them overwritten by a random document's text
+# plus a " dup" marker; unit embeddings with no cluster structure and a
+# uniform label in 0-9.
 _VOCAB = ("a the spark line column order small sort fast value scan hash "
           "slow group agg filter query big key window row part table "
           "stream merge data batch vector join customer").split()
 _LANGS = ("en", "en", "en", "zh", "es", "fr", "de")
+NEAR_DUP_EVERY = 20
 
 
 def _documents(rng: np.random.Generator) -> pa.Table:
+    n = N_DOCUMENTS
     vocab = np.array(_VOCAB)
-    texts: list[str] = []
-    for i in range(N_DOCUMENTS):
-        r = rng.random()
-        if i > 10 and r < 0.02:
-            # exact duplicate of an earlier document
-            texts.append(texts[int(rng.integers(0, i))])
-        elif i > 10 and r < 0.07:
-            # near duplicate: an earlier document with one marker word
-            texts.append(texts[int(rng.integers(0, i))] + " dup")
-        else:
-            n = int(rng.integers(10, 101))
-            texts.append(" ".join(vocab[rng.integers(0, len(vocab), n)]))
-    langs = [_LANGS[int(k)] for k in rng.integers(0, len(_LANGS),
-                                                   N_DOCUMENTS)]
+    texts = [" ".join(vocab[rng.integers(0, len(vocab), k)])
+             for k in rng.integers(10, 101, n)]
+    # near duplicates, applied in turn, so a copy of a copy carries two
+    # markers; a source may be copied twice, which makes the occasional
+    # exact duplicate, as in the reference tables
+    for i in rng.choice(n, n // NEAR_DUP_EVERY, replace=False):
+        texts[i] = texts[int(rng.integers(0, n))] + " dup"
+    langs = [_LANGS[int(k)] for k in rng.integers(0, len(_LANGS), n)]
     return pa.table({
-        "doc_id": pa.array(np.arange(N_DOCUMENTS), type=pa.int64()),
+        "doc_id": pa.array(np.arange(n), type=pa.int64()),
         "text": texts,
         "lang": langs,
-        "source": [f"src{i % 20}" for i in range(N_DOCUMENTS)],
+        "source": [f"src{i % 20}" for i in range(n)],
         "n_chars": pa.array([len(t) for t in texts], type=pa.int64()),
     })
 
 
 def _embeddings(rng: np.random.Generator) -> pa.Table:
-    dim, n_labels = 64, 10
-    centers = rng.normal(size=(n_labels, dim))
-    labels = rng.integers(0, n_labels, N_EMBEDDINGS)
-    vecs = centers[labels] * 0.6 + rng.normal(size=(N_EMBEDDINGS, dim))
+    vecs = rng.normal(size=(N_EMBEDDINGS, 64))
     vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
-    vecs = vecs.astype(np.float32)
     return pa.table({
         "vec_id": pa.array(np.arange(N_EMBEDDINGS), type=pa.int64()),
-        "embedding": pa.array(list(vecs), type=pa.list_(pa.float32())),
-        "label": pa.array(labels, type=pa.int32()),
+        "embedding": pa.array(list(vecs.astype(np.float32)),
+                              type=pa.list_(pa.float32())),
+        "label": pa.array(rng.integers(0, 10, N_EMBEDDINGS),
+                          type=pa.int32()),
     })
 
 

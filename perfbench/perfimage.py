@@ -1,12 +1,14 @@
-"""Single-process per-image split of the scan kernel.
+"""Single-process per-image split of the scan kernel, part of
+``micr_direct``'s traced run.
 
-Runs ``plans.scan.scan_check`` over a fixed subset of a workload's
+Runs ``plans.scan.scan_check`` over a fixed subset of the workload's
 images, each image once untraced (the kernel's own ms per image and its
 tail) and once traced, with the public functions it calls rebound to
-span-recording wrappers.  Codec cost per format comes from a separate probe set with
-the same number of images of every format, drawn from the lossy mix
-(1/16 JPEG, half of them progressive, and 1/16 GIF), because the
-measured corpus is lossless.
+span-recording wrappers.  Codec cost per format comes from a separate
+probe set with the same number of images of every format, drawn from
+the lossy mix (1/16 JPEG, half of them progressive, and 1/16 GIF),
+because the workload's corpus is lossless: the ``codecs.decode_ms.*``
+figures describe the codecs, not work ``micr_direct`` does.
 """
 
 from __future__ import annotations
@@ -49,14 +51,13 @@ def _patch(tr: Tracer):
     return tr.wrap("scan_check", scan.scan_check)
 
 
-def per_image(run, parts: list[str] | None) -> None:
+def per_image(run, parts: list[str]) -> None:
     """Record the per-image metrics on ``run``.  ``parts`` are the
-    workload's media part files; None uses the codec probe set (a
-    workload without images of its own)."""
+    workload's media part files."""
     from fin_ocr_sdk_spark.plans.scan import get_default_templates, scan_check
     from fin_ocr_sdk_spark.sources import codecs
     probe = corpus.codec_probe(run.cache, run.seed)
-    images = _images(parts, SUBSET) if parts else probe
+    images = _images(parts, SUBSET)
     templates = get_default_templates()
     scan_check(images[0][0], images[0][1], templates)  # first-call costs
 

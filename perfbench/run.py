@@ -10,7 +10,8 @@ last line of stdout, one JSON object::
      "metrics": {name: {"value": number, "unit": str}}}
 
 ``--trace 0`` reports the end-to-end metrics, ``--trace 1`` the
-per-layer ones (a layer the workload does not call reports 0).  Inputs
+per-layer ones (a layer the workload does not call reports 0); both
+lists, with their units, are read from ``BENCHMARK.json``.  Inputs
 are generated from ``--seed`` and cached under ``.perfbench_cache/``;
 Spark's scratch space lives there too, so a run writes nothing outside
 the checkout.
@@ -99,7 +100,7 @@ def main(argv: list[str] | None = None) -> int:
         return 2
     if ROOT not in sys.path:
         sys.path.insert(0, ROOT)
-    from perfbench import catalog, workloads
+    from perfbench import workloads
     from perfbench.sparkmetrics import RssSampler
     if args.workload not in workloads.WORKLOADS:
         print(f"perfbench: unknown workload {args.workload!r}; choose from "
@@ -118,9 +119,11 @@ def main(argv: list[str] | None = None) -> int:
             run.stop()
             _shutdown_jvm()
 
-    wanted = catalog.PER_LAYER if args.trace else catalog.END_TO_END
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        wanted = json.load(f)["per_layer" if args.trace else "end_to_end"]
     metrics = {}
-    for name, unit, _ in wanted:
+    for m in wanted:
+        name, unit = m["name"], m["unit"]
         if name in run.metrics:
             value, unit = run.metrics[name]
         elif args.trace:

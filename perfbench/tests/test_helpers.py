@@ -21,7 +21,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.dirname(
 if ROOT not in sys.path:
     sys.path.insert(0, ROOT)
 
-from perfbench import catalog, corpus, perfimage, workloads  # noqa: E402
+from perfbench import corpus, perfimage, workloads  # noqa: E402
 from perfbench.trace import (Span, Tracer, percentile,  # noqa: E402
                              self_times, tail_percentile)
 
@@ -83,15 +83,11 @@ def test_tracer_records_nested_calls_and_restores():
     assert st[outer.sid] == pytest.approx(outer.dur - inner.dur)
 
 
-# ------------------------------------------------ catalogue and manifest
+# ------------------------------------------------- manifest and inputs
 
-def test_benchmark_json_lists_the_catalogue():
+def test_benchmark_json_lists_the_workloads():
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
-    e2e = [(m["name"], m["unit"], m["better"]) for m in bench["end_to_end"]]
-    assert e2e == list(catalog.END_TO_END)
-    per = [(m["name"], m["unit"], m["better"]) for m in bench["per_layer"]]
-    assert per == list(catalog.PER_LAYER)
     assert [w["name"] for w in bench["workloads"]] == list(
         workloads.WORKLOADS)
 
@@ -107,6 +103,23 @@ def test_corpus_layout_follows_size_not_host(tmp_path):
     again = corpus.check_corpus(str(tmp_path), 3, 2 * corpus.ROWS_PER_PART,
                                 workers=1)
     assert again == dirs
+
+
+def test_query_tables_follow_the_reference_shapes():
+    import numpy as np
+    d = corpus._documents(np.random.default_rng([7, 0])).to_pandas()
+    words = d.text.str.split()
+    assert len(d) == corpus.N_DOCUMENTS
+    assert {w for ws in words for w in ws} == set(corpus._VOCAB) | {"dup"}
+    assert words.map(lambda ws: 10 <= len(ws) - ws.count("dup") <= 100).all()
+    assert (words.map(lambda ws: "dup" in ws).sum()
+            == corpus.N_DOCUMENTS // corpus.NEAR_DUP_EVERY)
+    assert (d.n_chars == d.text.str.len()).all()
+    e = corpus._embeddings(np.random.default_rng([7, 1])).to_pandas()
+    v = np.stack(e.embedding.to_numpy())
+    assert v.shape == (corpus.N_EMBEDDINGS, 64)
+    assert np.allclose(np.linalg.norm(v, axis=1), 1.0, atol=1e-5)
+    assert set(e.label) <= set(range(10))
 
 
 # ------------------------------------------------------ Spark-backed runs

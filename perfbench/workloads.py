@@ -8,13 +8,15 @@ Every workload follows the same shape:
    pass; ``setup_s`` is its wall time;
 3. the timed job, repeated until ``seconds`` have passed (at least
    once); ``job_s`` is the median repetition;
-4. output checks after every repetition, outside the timed interval.
+4. output checks after every repetition, outside the timed interval and
+   after the repetition's memory peak is read.
 
 With ``trace`` on, the job runs once with its Spark jobs tagged, the
-stage metrics are read back from the monitoring REST API, and a
-single-process traced run over a fixed subset of images gives the
-per-image split (see :mod:`perfimage`).  ``micr_direct``'s traced run
-also drives the resumable path (``plans.lineage``) over its corpus.
+stage metrics are read back from the monitoring REST API.
+``micr_direct``'s traced run also drives the resumable path
+(``plans.lineage``) over its corpus, and a single-process traced run
+over a fixed subset of its images gives the per-image split (see
+:mod:`perfimage`).  Layers a workload does not call report 0.
 """
 
 from __future__ import annotations
@@ -113,18 +115,22 @@ class Run:
     def tagged(self, description: str):
         self.spark.sparkContext.setJobDescription(description)
 
-    def loop(self, rep) -> list[dict]:
+    def loop(self, rep, check) -> list[dict]:
         """Call ``rep(k)`` until ``seconds`` have passed (at least once;
-        exactly once under trace).  ``rep`` returns a dict with
-        ``job_s``, ``attempted``, ``failed`` and ``docs``."""
+        exactly once under trace).  ``rep`` returns (job seconds,
+        output); ``check(output)`` returns (attempted, failed, docs) and
+        runs after the repetition's memory peak is read."""
         out = []
         t0 = time.perf_counter()
         while True:
             self.sampler.reset()
-            r = rep(len(out))
-            r["peak_rss_mb"] = self.sampler.peak_mb
-            self.attempted += r["attempted"]
-            self.failed += r["failed"]
+            job_s, output = rep(len(out))
+            peak = self.sampler.peak_mb
+            attempted, failed, docs = check(output)
+            r = {"job_s": job_s, "peak_rss_mb": peak, "attempted": attempted,
+                 "failed": failed, "docs": docs}
+            self.attempted += attempted
+            self.failed += failed
             out.append(r)
             self.log(f"rep {len(out)}: {r['job_s']:.3f}s, "
                      f"{r['failed']}/{r['attempted']} failed")
@@ -187,15 +193,15 @@ def micr_direct(run: Run) -> None:
             return out.collect()
 
         rows = _safe(job)
-        dt = time.perf_counter() - t0
-        if rows is None:
-            return {"job_s": dt, "attempted": MICR_DIRECT_DOCS,
-                    "failed": MICR_DIRECT_DOCS, "docs": 0}
-        failed, n_docs = checks.failed_images(rows, expected)
-        return {"job_s": dt, "attempted": MICR_DIRECT_DOCS,
-                "failed": failed, "docs": n_docs}
+        return time.perf_counter() - t0, rows
 
-    reps = run.loop(rep)
+    def check(rows):
+        if rows is None:
+            return MICR_DIRECT_DOCS, MICR_DIRECT_DOCS, 0
+        failed, n_docs = checks.failed_images(rows, expected)
+        return MICR_DIRECT_DOCS, failed, n_docs
+
+    reps = run.loop(rep, check)
     if not run.trace:
         run.put_loop_metrics(reps)
         return
@@ -275,7 +281,9 @@ def train_queries(run: Run) -> None:
     import __spark_entry__ as entry
     sf_dir = corpus.train_tables(run.cache, run.seed)
     qs = entry.queries()
-    oracle = checks.Oracle(sf_dir, run.cores)
+    # every expected frame is fetched, and DuckDB closed, before the
+    # session starts, so the checker's memory stays out of peak_rss_mb
+    expected = checks.oracle_frames(sf_dir, QUERY_SUITE, run.cores)
     run.log("inputs ready")
 
     def suite(tag: str) -> tuple[float, dict, dict]:
@@ -295,7 +303,7 @@ def train_queries(run: Run) -> None:
     def failures(results: dict) -> int:
         return sum(1 for name, got in results.items()
                    if got is None
-                   or not checks.frames_equal(got, oracle.expected(name)))
+                   or not checks.frames_equal(got, expected[name]))
 
     warm: list[dict] = []
     run.setup(lambda: warm.append(suite("warm")[1]))
@@ -306,11 +314,12 @@ def train_queries(run: Run) -> None:
     def rep(k):
         dt, results, per = suite(f"timed{k}")
         per_q.append(per)
-        return {"job_s": dt, "attempted": len(QUERY_SUITE),
-                "failed": failures(results), "docs": corpus.N_DOCUMENTS}
+        return dt, results
 
-    reps = run.loop(rep)
-    oracle.close()
+    def check(results):
+        return len(QUERY_SUITE), failures(results), corpus.N_DOCUMENTS
+
+    reps = run.loop(rep, check)
     if not run.trace:
         run.put_loop_metrics(reps)
         return
@@ -323,8 +332,6 @@ def train_queries(run: Run) -> None:
         run.put(f"query.{name}.shuffle_bytes",
                 summ["shuffle_write_bytes"], "bytes")
         run.put(f"query.{name}.spill_bytes", summ["spill_bytes"], "bytes")
-    from .perfimage import per_image
-    per_image(run, None)
 
 
 WORKLOADS = {"micr_direct": micr_direct, "train_queries": train_queries}
