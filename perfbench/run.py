@@ -1,7 +1,7 @@
 """Benchmark entry point.
 
     python3 perfbench/run.py --workload micr_direct --seed 1 \\
-        --seconds 10 --trace 0
+        --seconds 14 --trace 0
 
 Run from the repository root.  Prints progress to stderr and, as the
 last line of stdout, one JSON object::
