@@ -330,11 +330,14 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_part_size_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouping + count-distinct breadth: per part brand, distinct sizes
-    and average retail price."""
+    and average retail price.  The average is taken over integer cents:
+    a double sum's order (and so the half-cent tie) depends on the
+    partitioning, while a sum of integers is exact in any order."""
     p = _t(spark, sf_dir, "part")
+    cents = F.floor(F.col("p_retailprice") * 100 + F.lit(0.5)).cast("long")
     return (p.groupBy("p_brand")
             .agg(F.countDistinct("p_size").alias("n_sizes"),
-                 F.floor(F.avg("p_retailprice") * 100 + F.lit(0.5))
+                 F.floor(F.avg(cents) + F.lit(0.5))
                  .cast("long").alias("avg_price_cents"),
                  F.count(F.lit(1)).alias("n_parts")))
 
@@ -2140,7 +2143,8 @@ def oracle_sql() -> dict[str, str]:
         """,
         "part_size_distribution": """
             SELECT p_brand, count(DISTINCT p_size) AS n_sizes,
-                   CAST(floor(avg(p_retailprice) * 100 + 0.5) AS BIGINT)
+                   CAST(floor(avg(CAST(floor(p_retailprice * 100 + 0.5)
+                                           AS BIGINT)) + 0.5) AS BIGINT)
                        AS avg_price_cents,
                    count(*) AS n_parts
             FROM part GROUP BY p_brand

@@ -164,6 +164,20 @@ def committed_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
     return spark.read.parquet(path)
 
 
+def scan_lineage(spark: SparkSession, files_df: DataFrame, n_files: int,
+                 out_dir: str, run_id: str) -> DataFrame:
+    """Scan the ``n_files`` media files listed in ``files_df.path``,
+    writing their span files; returns their lineage rows in ONE
+    partition.  repartition(1), not coalesce(1): coalesce would fold
+    the scan into a single task, while the shuffle keeps the scan's
+    ``nparts`` tasks and runs the lineage write as a later stage."""
+    nparts = max(1, min(n_files, spark.sparkContext.defaultParallelism * 2))
+    kernel = make_lineage_kernel(out_dir, run_id, spark=spark)
+    return (files_df.repartition(nparts)
+            .mapInPandas(kernel, LINEAGE_SCHEMA)
+            .repartition(1))
+
+
 def run_resumable_extract(spark: SparkSession, documents: DataFrame,
                           media: DataFrame, out_dir: str,
                           run_id: str | None = None) -> ExtractRunResult:
@@ -190,15 +204,10 @@ def run_resumable_extract(spark: SparkSession, documents: DataFrame,
             "path", "anti")
     n_pending = files_df.count()
     if n_pending:
-        nparts = max(1, min(n_pending,
-                            spark.sparkContext.defaultParallelism * 2))
-        kernel = make_lineage_kernel(out_dir, run_id, spark=spark)
-        new_lineage = (files_df.repartition(nparts)
-                       .mapInPandas(kernel, LINEAGE_SCHEMA))
         # lineage-last: the append below only happens after every span
         # file in this run has been atomically renamed into place
-        (new_lineage.coalesce(1).write.mode("append")
-         .parquet(os.path.join(out_dir, "lineage")))
+        (scan_lineage(spark, files_df, n_pending, out_dir, run_id)
+         .write.mode("append").parquet(os.path.join(out_dir, "lineage")))
     lineage = committed_lineage(spark, out_dir)
     assert lineage is not None
     agg = lineage.agg(F.sum("doc_count"), F.sum("span_count")).first()

@@ -254,23 +254,31 @@ def scan_check(image_bytes: bytes, fmt: str,
     ``full_page_engine`` (anything with translate_image(gray) -> str)
     enables the full-page check-number fallback (src/check.ts:129-177);
     None — the default, and this environment's reality — keeps the
-    reference's disabled-translator behavior."""
+    reference's disabled-translator behavior.
+
+    Never raises for a bad image: a decode failure, a missing line or
+    any exception from the later steps (e.g. a 1-row image) is an
+    ``ok=False`` result, so one image never fails its task."""
     if templates is None:
         templates = get_default_templates()
     try:
         gray = K.grayscale(codecs.decode_image(image_bytes, fmt))
     except (ValueError, NotImplementedError) as e:
         return ScanResult(ok=False, error=f"decode: {e}")
-    band = get_micr_band(gray, cfg)
-    line = find_micr_line(band, templates, cfg)
-    if line is None:
-        return ScanResult(ok=False, error="micr line not found")
-    tr = translate_line(line, templates, cfg.max_translator_choices)
-    info = parse_micr(tr.value)
-    if not info.check_number and full_page_engine is not None:
-        from .translators import search_check_number_if_missing
-        info = search_check_number_if_missing(
-            {"opencv": info}, full_page_engine, gray)["opencv"]
+    try:
+        band = get_micr_band(gray, cfg)
+        line = find_micr_line(band, templates, cfg)
+        if line is None:
+            return ScanResult(ok=False, error="micr line not found")
+        tr = translate_line(line, templates, cfg.max_translator_choices)
+        info = parse_micr(tr.value)
+        if not info.check_number and full_page_engine is not None:
+            from .translators import search_check_number_if_missing
+            info = search_check_number_if_missing(
+                {"opencv": info}, full_page_engine, gray)["opencv"]
+    except Exception as e:  # noqa: BLE001 — the per-image boundary
+        return ScanResult(ok=False,
+                          error=f"internal: {type(e).__name__}: {e}")
     return ScanResult(ok=True, check_info=info, micr_value=tr.value,
                       score=tr.score, overlap=line.overlap,
                       nchars=len(line.get_chars()),

@@ -131,6 +131,19 @@ def encode_bmp(img: np.ndarray) -> bytes:
     return header + dib + palette + rows
 
 
+def _bmp_rows(data: bytes, offset: int, h: int, row_size: int,
+              row_bytes: int) -> np.ndarray:
+    """The (h, row_size) padded pixel rows at ``offset``.  Some writers
+    omit the final row's padding, so only ``(h-1)*row_size + row_bytes``
+    bytes are required; the missing padding is zero-filled.  A shorter
+    buffer raises ValueError on the reshape."""
+    full = row_size * h
+    buf = data[offset:offset + full]
+    if h and (h - 1) * row_size + row_bytes <= len(buf) < full:
+        buf = bytes(buf) + bytes(full - len(buf))
+    return np.frombuffer(buf, dtype=np.uint8).reshape(h, row_size)
+
+
 def decode_bmp(data: bytes) -> np.ndarray:
     if data[:2] != b"BM":
         raise ValueError("not a BMP")
@@ -146,22 +159,16 @@ def decode_bmp(data: bytes) -> np.ndarray:
         gray_palette = np.clip(
             np.round(palette @ np.array([0.114, 0.587, 0.299])), 0, 255
         ).astype(np.uint8)
-        row_size = (w + 3) & ~3
-        # one frombuffer over the whole pixel region (a short buffer
-        # raises ValueError on reshape, same error contract as the old
-        # per-row loop), strip the 4-byte row padding, then one palette
-        # gather; bottom-up files are a view flip
-        px = np.frombuffer(
-            data[pixel_offset:pixel_offset + row_size * h],
-            dtype=np.uint8).reshape(h, row_size)[:, :w]
+        # one frombuffer over the whole pixel region, strip the 4-byte
+        # row padding, then one palette gather; bottom-up files are a
+        # view flip
+        px = _bmp_rows(data, pixel_offset, h, (w + 3) & ~3, w)[:, :w]
         out = gray_palette[px if top_down else px[::-1]]
         return np.ascontiguousarray(out)
     if bpp == 24:
-        row_size = (w * 3 + 3) & ~3
         wts = np.array([0.114, 0.587, 0.299])  # BGR order
-        px = np.frombuffer(
-            data[pixel_offset:pixel_offset + row_size * h],
-            dtype=np.uint8).reshape(h, row_size)[:, :w * 3]
+        px = _bmp_rows(data, pixel_offset, h, (w * 3 + 3) & ~3,
+                       w * 3)[:, :w * 3]
         px = (px if top_down else px[::-1]).reshape(-1, 3)
         # (N, 3) @ (3,) keeps the per-pixel dot shape (and summation
         # order) of the old per-row (w, 3) @ (3,) exactly

@@ -53,7 +53,7 @@ def materialize_fixtures(out_dir: str, n_docs: int, seed: int = 42,
     (used by throughput benches — see fixtures.py docstring)."""
     os.makedirs(out_dir, exist_ok=True)
     manifest_path = os.path.join(out_dir, "MANIFEST.json")
-    want = {"n_docs": n_docs, "seed": seed, "version": 11, "lossy": lossy}
+    want = {"n_docs": n_docs, "seed": seed, "version": 12, "lossy": lossy}
     if os.path.exists(manifest_path):
         with open(manifest_path) as f:
             if json.load(f) == want:
@@ -63,8 +63,11 @@ def materialize_fixtures(out_dir: str, n_docs: int, seed: int = 42,
     # TIFF/BMP payloads compress ~10:1 in parquet, so a single file /
     # row group would force every Spark read of the image column
     # through ONE task; many small part files give parallel scans
-    # (exactly how a 100 TB media table is laid out in practice)
-    chunk = min(32, max(1, (n_docs + workers - 1) // workers))
+    # (exactly how a 100 TB media table is laid out in practice).
+    # The layout depends on n_docs alone, never on the host: 32 parts
+    # up to 1,024 docs, 32-doc parts beyond; ``workers`` only sets how
+    # fast the chunks are generated
+    chunk = min(32, max(1, -(-n_docs // 32)))
     tasks = [(i, min(chunk, n_docs - i), seed, lossy)
              for i in range(0, n_docs, chunk)]
     docs: list = []

@@ -277,3 +277,33 @@ def test_jpeg_frame_size_cap_is_valueerror():
         data[sof + 7:sof + 9] = b"\xff\x18"   # width 65304
         with pytest.raises(ValueError, match="33 MP"):
             decode_jpeg(bytes(data))
+
+
+def _bmp24(img: np.ndarray) -> bytes:
+    """Bottom-up 24-bit BMP of a gray image (B = G = R)."""
+    h, w = img.shape
+    row_size = (w * 3 + 3) & ~3
+    pad = b"\x00" * (row_size - 3 * w)
+    rows = b"".join(np.repeat(img[y], 3).tobytes() + pad
+                    for y in range(h - 1, -1, -1))
+    dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(rows),
+                      2835, 2835, 0, 0)
+    return (struct.pack("<2sIHHI", b"BM", 54 + len(rows), 0, 0, 54)
+            + dib + rows)
+
+
+@pytest.mark.parametrize("bpp", [8, 24])
+@pytest.mark.parametrize("w", [5, 6, 7])
+def test_bmp_without_final_row_padding(bpp, w):
+    """Writers may omit the last row's padding bytes: the file still
+    decodes to the padded file's pixels; one byte less is an error."""
+    img = np.random.default_rng(w).integers(0, 256, (4, w), dtype=np.uint8)
+    data = codecs.encode_bmp(img) if bpp == 8 else _bmp24(img)
+    pad = -(w * bpp // 8) % 4
+    assert pad
+    stripped = data[:-pad]
+    np.testing.assert_array_equal(codecs.decode_bmp(stripped),
+                                  codecs.decode_bmp(data))
+    np.testing.assert_array_equal(codecs.decode_bmp(data), img)
+    with pytest.raises(ValueError):
+        codecs.decode_bmp(stripped[:-1])

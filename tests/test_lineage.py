@@ -120,3 +120,20 @@ def test_checksum_is_deterministic(spark, smoke_dir, tmp_path_factory):
           .sort_values("partition_id").reset_index(drop=True))
     assert (la["checksum"] == lb["checksum"]).all()
     assert (la["partition_id"] == lb["partition_id"]).all()
+
+
+def test_lineage_scan_keeps_its_tasks(spark, smoke_dir, tmp_path):
+    """The lineage rows meet in one partition through a shuffle: no
+    Coalesce directly above the MapInPandas scan, which would fold the
+    scan into a single task."""
+    from fin_ocr_sdk_spark.plans.lineage import scan_lineage
+    from fin_ocr_sdk_spark.plans.pipeline import media_manifest
+
+    media = spark.read.parquet(os.path.join(smoke_dir, "media.parquet"))
+    files = media_manifest(media).select("path")
+    df = scan_lineage(spark, files, 16, str(tmp_path), "plan")
+    assert df.rdd.getNumPartitions() == 1
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    scan_at = next(i for i, s in enumerate(lines) if "MapInPandas" in s)
+    assert "Exchange SinglePartition" in lines[scan_at - 1]
+    assert not any("Coalesce" in s for s in lines[:scan_at])

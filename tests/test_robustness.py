@@ -55,3 +55,34 @@ def test_byte_weighted_partitions_metadata_path():
         assert n_floor == spark.sparkContext.defaultParallelism
     finally:
         spark.stop()
+
+
+TINY_SHAPES = [(1, 1), (1, 64), (64, 1), (2, 2), (3, 300)]
+
+
+@pytest.mark.parametrize("shape", TINY_SHAPES)
+@pytest.mark.parametrize("fmt", ["png", "bmp", "tiff"])
+def test_tiny_images_are_scan_errors_not_exceptions(shape, fmt):
+    """Degenerate rasters (1-row images used to raise inside the band
+    step) come back as ok=False results."""
+    data = codecs.encode_image(np.full(shape, 200, np.uint8), fmt)
+    res = scan_check(data, fmt, get_default_templates())
+    assert not res.ok
+    assert (res.error == "micr line not found"
+            or res.error.startswith("internal: ")), res.error
+
+
+def test_scan_step_exception_becomes_internal_error(monkeypatch):
+    from fin_ocr_sdk_spark.plans import scan
+
+    def boom(*_a, **_k):
+        raise RuntimeError("boom")
+
+    monkeypatch.setattr(scan, "find_micr_line", boom)
+    img = np.full((40, 60), 200, np.uint8)
+    res = scan_check(codecs.encode_image(img, "png"), "png",
+                     get_default_templates())
+    assert not res.ok
+    assert res.error == "internal: RuntimeError: boom"
+    # decode failures keep their own text
+    assert scan_check(b"\x89PNGjunk", "png").error.startswith("decode: ")

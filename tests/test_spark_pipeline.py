@@ -289,3 +289,39 @@ def test_manifest_distributed_path_same_spans(spark, smoke_dir,
            .sort_values(["doc_id", "order"]).reset_index(drop=True))
     cols = ["doc_id", "kind", "text", "media_ref", "order"]
     pd.testing.assert_frame_equal(got[cols], base[cols])
+
+
+def test_tiny_images_yield_one_error_span_each(spark, tmp_path):
+    """Every degenerate image yields exactly one micr:error span and the
+    job succeeds (a 1-row PNG used to fail its task, then the job)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from fin_ocr_sdk_spark.sources import codecs
+    from fin_ocr_sdk_spark.sources.tables import SPAN_TYPE
+
+    shapes = [(1, 1), (1, 64), (64, 1), (2, 2), (3, 300)]
+    refs = [f"tiny-{h}x{w}" for h, w in shapes]
+    pq.write_table(pa.table({
+        "media_ref": refs,
+        "format": ["png"] * len(shapes),
+        "width": pa.array([w for _, w in shapes], type=pa.int32()),
+        "height": pa.array([h for h, _ in shapes], type=pa.int32()),
+        "image": pa.array([codecs.encode_png(np.full(s, 200, np.uint8))
+                           for s in shapes], type=pa.binary()),
+    }), str(tmp_path / "media.parquet"))
+    pq.write_table(pa.table({
+        "doc_id": [f"doc-{r}" for r in refs],
+        "spans": pa.array([[{"kind": "image", "text": "", "media_ref": r,
+                             "offset": 0}] for r in refs],
+                          type=pa.list_(SPAN_TYPE)),
+    }), str(tmp_path / "documents.parquet"))
+    docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
+    media = spark.read.parquet(str(tmp_path / "media.parquet"))
+    for repartition_scan in (None, True):     # direct, then arrow
+        out = extract_spans(docs, media,
+                            repartition_scan=repartition_scan).toPandas()
+        micr = out[out["kind"].str.startswith("micr:")]
+        assert (micr["kind"] == "micr:error").all()
+        assert sorted(micr["media_ref"]) == sorted(refs)
