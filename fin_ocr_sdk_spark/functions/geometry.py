@@ -64,14 +64,6 @@ def x_distance(r1: Rect, r2: Rect) -> int:
     return 0
 
 
-def mid_x(r: Rect) -> float:
-    return r[0] + r[2] / 2
-
-
-def mid_y(r: Rect) -> float:
-    return r[1] + r[3] / 2
-
-
 def bounding_rect_of_rects(rects: list[Rect]) -> Rect:
     if not rects:
         return (0, 0, 0, 0)

@@ -34,6 +34,14 @@ class CheckInfo:
     check_number: str
     micr_line: str
 
+    def spans(self) -> tuple[tuple[str, str], ...]:
+        """The (kind, text) micr:* spans of one check, in output order
+        (sub_order 1..4 after the image span)."""
+        return (("micr:line", self.micr_line),
+                ("micr:routing", self.routing_number),
+                ("micr:account", self.account_number),
+                ("micr:check", self.check_number))
+
 
 def remove_leading_zeros(s: str | None) -> str:
     if not s:

@@ -10,7 +10,6 @@ OpenCV's documented math so behavior matches the reference pipeline
   otsu threshold      src/image.ts:269-278  (THRESH_BINARY_INV+OTSU)
   adaptive threshold  src/image.ts:280-290  (GAUSSIAN_C, INV, block 19, C 1)
   erode/dilate        src/image.ts:292-323  (rect kernel, default 2x2)
-  morph open/close    src/image.ts:325-355
   resize (INTER_AREA) src/image.ts:211-225
   rotate              src/image.ts:714-727  (INTER_CUBIC, BORDER_REPLICATE)
   min-area rect       src/contour.ts:130-141 (for skew angle)
@@ -18,7 +17,6 @@ OpenCV's documented math so behavior matches the reference pipeline
   clear_padding       src/image.ts:1102-1122
   clear_by_vertical_thickness src/image.ts:1077-1100
   hv_thin             src/image.ts:1124-1184
-  zhang_suen          src/image.ts:1033-1070
 
 Convention: images are 2-D uint8 arrays indexed [y, x]; binary images
 use 255 = set (ink), 0 = clear, i.e. white-on-black after thresholding
@@ -49,90 +47,8 @@ def grayscale(img: np.ndarray) -> np.ndarray:
     return np.clip(np.round(img[..., :3].astype(np.float64) @ w), 0, 255).astype(np.uint8)
 
 
-def rgb(img: np.ndarray) -> np.ndarray:
-    """gray -> 3-channel RGB (src/image.ts:249-256, COLOR_GRAY2RGB) —
-    the reference's debug-rendering conversion."""
-    assert img.ndim == 2
-    return np.repeat(img[:, :, None], 3, axis=2)
-
-
-def arc_length(points: np.ndarray, closed: bool = True) -> float:
-    """Perimeter of a polyline (cv.arcLength analog)."""
-    pts = np.asarray(points, dtype=np.float64)
-    if len(pts) < 2:
-        return 0.0
-    seg = np.diff(pts, axis=0)
-    total = float(np.hypot(seg[:, 0], seg[:, 1]).sum())
-    if closed:
-        total += float(np.hypot(*(pts[0] - pts[-1])))
-    return total
-
-
-def approx_poly_dp(points: np.ndarray, epsilon: float,
-                   closed: bool = True) -> np.ndarray:
-    """Ramer–Douglas–Peucker simplification (cv.approxPolyDP analog).
-    For closed curves the chain is split at the two mutually farthest
-    points and each half simplified independently."""
-    pts = np.asarray(points, dtype=np.float64)
-    if len(pts) < 3:
-        return pts.copy()
-
-    def rdp(p: np.ndarray) -> np.ndarray:
-        if len(p) < 3:
-            return p
-        a, b = p[0], p[-1]
-        ab = b - a
-        nrm = np.hypot(*ab)
-        if nrm == 0:
-            d = np.hypot(p[:, 0] - a[0], p[:, 1] - a[1])
-        else:
-            d = np.abs(ab[0] * (p[:, 1] - a[1])
-                       - ab[1] * (p[:, 0] - a[0])) / nrm
-        i = int(d.argmax())
-        if d[i] <= epsilon:
-            return np.vstack([a, b])
-        left = rdp(p[:i + 1])
-        return np.vstack([left[:-1], rdp(p[i:])])
-
-    if not closed:
-        return rdp(pts)
-    # split at the two farthest points of the closed chain
-    i0 = 0
-    d0 = np.hypot(pts[:, 0] - pts[0, 0], pts[:, 1] - pts[0, 1])
-    i1 = int(d0.argmax())
-    if i1 == 0:
-        return pts[:1].copy()
-    lo, hi = sorted((i0, i1))
-    half1 = rdp(pts[lo:hi + 1])
-    half2 = rdp(np.vstack([pts[hi:], pts[:lo + 1]]))
-    return np.vstack([half1[:-1], half2[:-1]])
-
-
-def get_num_sides(points: np.ndarray) -> int:
-    """Contour.getNumSides (src/contour.ts:117-128): approxPolyDP with
-    epsilon = 1% of the closed arc length — then the reference counts
-    `approxCurve.data.length`, the raw BYTE buffer of a CV_32SC2 mat,
-    i.e. 8 bytes per vertex.  That 8x factor is kept as a documented
-    quirk (numSides is never consumed on the reference's main path)."""
-    approx = approx_poly_dp(points, 0.01 * arc_length(points, True), True)
-    return 8 * len(approx)
-
-
 def bitwise_not(img: np.ndarray) -> np.ndarray:
     return (255 - img.astype(np.int16)).astype(np.uint8)
-
-
-def normalize_minmax(img: np.ndarray, lo: int = 0, hi: int = 255) -> np.ndarray:
-    mn, mx = int(img.min()), int(img.max())
-    if mx == mn:
-        return np.full_like(img, lo)
-    scaled = (img.astype(np.float64) - mn) * (hi - lo) / (mx - mn) + lo
-    return np.clip(np.round(scaled), 0, 255).astype(np.uint8)
-
-
-def pad_border(img: np.ndarray, top: int, bottom: int, left: int, right: int,
-               value: int = 0) -> np.ndarray:
-    return np.pad(img, ((top, bottom), (left, right)), constant_values=value)
 
 
 # -------------------------------------------------------- gaussian blur
@@ -337,14 +253,6 @@ def dilate(img: np.ndarray, width: int = 2, height: int = 2,
     for _ in range(iterations):
         out = _window_reduce(out, width, height, is_min=False, pad_val=0)
     return out
-
-
-def morph_open(img: np.ndarray, width: int = 17, height: int = 7) -> np.ndarray:
-    return dilate(erode(img, width, height), width, height)
-
-
-def morph_close(img: np.ndarray, width: int = 17, height: int = 7) -> np.ndarray:
-    return erode(dilate(img, width, height), width, height)
 
 
 # --------------------------------------------------------------- resize
@@ -614,15 +522,20 @@ def min_area_rect(points: np.ndarray) -> tuple[float, float, float]:
     # all caliper edges at once: each projection element is the same
     # two-term dot (x*ux + y*uy) the per-edge loop computed, and
     # argmin picks the FIRST minimum exactly like the loop's strict
-    # '<', so the chosen edge (and hence the angle) is bit-identical
+    # '<', so the chosen edge (and hence the angle) is bit-identical.
+    # Explicit broadcasting, not a matmul: a BLAS kernel may fuse the
+    # two terms (FMA), which would make near-tie edge choices depend
+    # on the BLAS build
     e = np.roll(hull, -1, axis=0) - hull            # (n, 2)
     norms = np.hypot(e[:, 0], e[:, 1])
     valid = norms != 0
     if not valid.any():
         return (0.0, 0.0, 0.0)
     u = e[valid] / norms[valid, None]               # (m, 2) unit edges
-    pu = u @ hull.T                                 # (m, N)
-    pv = np.column_stack([-u[:, 1], u[:, 0]]) @ hull.T
+    ux, uy = u[:, 0, None], u[:, 1, None]
+    x, y = hull[:, 0], hull[:, 1]
+    pu = ux * x + uy * y                            # (m, N)
+    pv = -uy * x + ux * y
     wid = pu.max(axis=1) - pu.min(axis=1)
     hei = pv.max(axis=1) - pv.min(axis=1)
     area = wid * hei
@@ -728,13 +641,6 @@ class Region:
             return None
         xs = np.nonzero(sub)[1]
         return (int(xs.min()), int(xs.max()))
-
-
-def label_components(binary: np.ndarray) -> tuple[np.ndarray, int]:
-    """8-connected component labeling of set (non-zero) pixels.
-    Returns (labels, count); see :func:`_label_runs`."""
-    labels, count, _runs = _label_runs(binary)
-    return labels.materialize(), count
 
 
 def _label_runs(binary: np.ndarray):
@@ -1029,41 +935,6 @@ def _run_lengths(mask: np.ndarray, axis: int) -> np.ndarray:
         for s, e in zip(starts, ends):
             out[r, s:e] = e - s
     return out if axis == 1 else out.T
-
-
-def zhang_suen_skeletonize(img: np.ndarray) -> np.ndarray:
-    """Zhang-Suen thinning until fixpoint (src/image.ts:1033-1070),
-    vectorized with boolean masks.  Border pixels are never candidates
-    (the reference iterates strictly inside the rect)."""
-    m = (img > 128)
-    changed = True
-    while changed:
-        changed = False
-        for it in (0, 1):
-            p = m.astype(np.int8)
-            p2 = np.roll(p, 1, 0)
-            p3 = np.roll(np.roll(p, 1, 0), -1, 1)
-            p4 = np.roll(p, -1, 1)
-            p5 = np.roll(np.roll(p, -1, 0), -1, 1)
-            p6 = np.roll(p, -1, 0)
-            p7 = np.roll(np.roll(p, -1, 0), 1, 1)
-            p8 = np.roll(p, 1, 1)
-            p9 = np.roll(np.roll(p, 1, 0), 1, 1)
-            seq = [p2, p3, p4, p5, p6, p7, p8, p9, p2]
-            a = sum(((seq[i] == 0) & (seq[i + 1] == 1)).astype(np.int8)
-                    for i in range(8))
-            b = p2 + p3 + p4 + p5 + p6 + p7 + p8 + p9
-            if it == 0:
-                m1, m2 = p2 * p4 * p6, p4 * p6 * p8
-            else:
-                m1, m2 = p2 * p4 * p8, p2 * p6 * p8
-            cand = m & (a == 1) & (b >= 2) & (b <= 6) & (m1 == 0) & (m2 == 0)
-            cand[0, :] = cand[-1, :] = False
-            cand[:, 0] = cand[:, -1] = False
-            if cand.any():
-                m[cand] = False
-                changed = True
-    return np.where(m, 255, 0).astype(np.uint8)
 
 
 # ----------------------------------------------------------- sampling

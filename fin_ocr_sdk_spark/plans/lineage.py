@@ -30,12 +30,13 @@ from collections.abc import Iterator
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (IntegerType, LongType, StringType,
-                               StructField, StructType)
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from .pipeline import SPAN_OUT_COLS, explode_spans, make_scan_batches
+from .pipeline import (MEDIA_SCAN_SCHEMA, _direct_media_rows,
+                       _pin_worker_threads, broadcast_templates,
+                       explode_spans, interleave, scan_rows)
 
 LINEAGE_SCHEMA = StructType([
     StructField("partition_id", StringType()),
@@ -47,39 +48,25 @@ LINEAGE_SCHEMA = StructType([
     StructField("wall_ms", LongType()),
 ])
 
-EMITTED_SCHEMA = StructType([
-    StructField("media_ref", StringType()),
-    StructField("sub_order", IntegerType()),
-    StructField("kind", StringType()),
-    StructField("text", StringType()),
-])
-
 
 def _partition_id(media_file: str) -> str:
     return hashlib.sha1(media_file.encode()).hexdigest()[:16]
 
 
-def make_lineage_kernel(out_dir: str, run_id: str, templates=None,
-                        spark: SparkSession | None = None):
-    """mapInPandas kernel over (path): scan one media file, write its
-    emitted spans to <out>/spans/<partition_id>.parquet, return the
+def make_lineage_kernel(out_dir: str, run_id: str, spark: SparkSession):
+    """mapInPandas kernel over (path): scan one whole media file, write
+    its emitted spans to <out>/spans/<partition_id>.parquet, return the
     lineage row.  The span write happens BEFORE the lineage row is
     returned (lineage-last commit protocol)."""
-    if templates is None:
-        from .scan import get_default_templates
-        templates = get_default_templates()
-    bc = spark.sparkContext.broadcast(templates) if spark else None
+    bc = broadcast_templates(spark)
     spans_dir = os.path.join(out_dir, "spans")
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .pipeline import _pin_worker_threads
         _pin_worker_threads()
         import pyarrow as pa
         import pyarrow.parquet as papq
-        from .scan import scan_check
-        pa.set_cpu_count(1)
-        pa.set_io_thread_count(1)
-        tmpl = bc.value if bc is not None else templates
+        from pyspark.sql.pandas.types import to_arrow_schema
+        arrow_schema = to_arrow_schema(MEDIA_SCAN_SCHEMA)
         os.makedirs(spans_dir, exist_ok=True)
         for pdf in batches:
             rows = {k: [] for k in ("partition_id", "media_file",
@@ -88,58 +75,25 @@ def make_lineage_kernel(out_dir: str, run_id: str, templates=None,
             for path in pdf["path"]:
                 t0 = time.time()
                 local = path.replace("file:", "")
-                out = {k: [] for k in ("media_ref", "sub_order", "kind",
-                                       "text")}
+                # images stream by record batch (a 1 GB part never
+                # becomes a 1 GB Arrow table); only the text spans stay
+                out = list(scan_rows(_direct_media_rows(local, 0, 1),
+                                     bc.value))
                 h = hashlib.sha256()
-                n_docs = 0
-                # stream record batches like the non-resumable scan
-                # (pipeline.scan_media_files): memory stays bounded by
-                # the batch, not the part-file size — a 1 GB part must
-                # not become a 1 GB Arrow table per task
-                pf = papq.ParquetFile(local)
-                for rb in pf.iter_batches(batch_size=32,
-                                          use_threads=False):
-                    for ref, fmt, image in zip(
-                            rb.column("media_ref").to_pylist(),
-                            rb.column("format").to_pylist(),
-                            rb.column("image").to_pylist()):
-                        res = scan_check(image, fmt, tmpl)
-                        n_docs += 1
-                        if res.ok and res.check_info is not None:
-                            emitted = (
-                                ("micr:line", res.check_info.micr_line),
-                                ("micr:routing",
-                                 res.check_info.routing_number),
-                                ("micr:account",
-                                 res.check_info.account_number),
-                                ("micr:check",
-                                 res.check_info.check_number),
-                            )
-                        else:
-                            emitted = (("micr:error", res.error),)
-                        for k, (kind, text) in enumerate(emitted, start=1):
-                            out["media_ref"].append(ref)
-                            out["sub_order"].append(k)
-                            out["kind"].append(kind)
-                            out["text"].append(text)
-                            h.update(
-                                f"{ref}\x00{kind}\x00{text}\x01".encode())
+                for ref, _, kind, text in out:
+                    h.update(f"{ref}\x00{kind}\x00{text}\x01".encode())
                 pid = _partition_id(local)
                 span_path = os.path.join(spans_dir, f"{pid}.parquet")
                 tmp_path = span_path + f".tmp-{run_id}"
-                papq.write_table(pa.table(
-                    {k: out[k] for k in out},
-                    schema=pa.schema([
-                        ("media_ref", pa.string()),
-                        ("sub_order", pa.int32()),
-                        ("kind", pa.string()),
-                        ("text", pa.string()),
-                    ])), tmp_path)
+                papq.write_table(pa.Table.from_pylist(
+                    [dict(zip(arrow_schema.names, r)) for r in out],
+                    schema=arrow_schema), tmp_path)
                 os.replace(tmp_path, span_path)  # atomic on posix
                 rows["partition_id"].append(pid)
                 rows["media_file"].append(local)
-                rows["doc_count"].append(n_docs)
-                rows["span_count"].append(len(out["media_ref"]))
+                # every image yields exactly one sub_order-1 span
+                rows["doc_count"].append(sum(r[1] == 1 for r in out))
+                rows["span_count"].append(len(out))
                 rows["checksum"].append(h.hexdigest()[:32])
                 rows["run_id"].append(run_id)
                 rows["wall_ms"].append(int((time.time() - t0) * 1000))
@@ -238,7 +192,7 @@ def emitted_spans(spark: SparkSession, out_dir: str) -> DataFrame:
     # foreign *.parquet here is an uncommitted orphan, which must not
     # fail the read — the semi-join drops its rows anyway, and the
     # lineage checksum column audits committed-file integrity
-    all_spans = (spark.read.schema(EMITTED_SCHEMA)
+    all_spans = (spark.read.schema(MEDIA_SCAN_SCHEMA)
                  .option("pathGlobFilter", "*.parquet")  # skip .tmp-*
                  .option("ignoreCorruptFiles", "true")
                  .parquet(spans_dir)
@@ -253,17 +207,5 @@ def emitted_spans(spark: SparkSession, out_dir: str) -> DataFrame:
 
 def assemble_output(documents: DataFrame, emitted: DataFrame) -> DataFrame:
     """Final interleaved span table from originals + committed emitted
-    spans (same renumber as pipeline.extract_spans)."""
-    spans = explode_spans(documents)
-    image_spans = (spans.filter(F.col("kind") == "image")
-                   .select("doc_id", "media_ref", "offset"))
-    joined = (image_spans.join(emitted, "media_ref")
-              .select("doc_id", "kind", "text", "media_ref", "offset",
-                      "sub_order"))
-    originals = spans.withColumn("sub_order", F.lit(0))
-    unioned = originals.unionByName(joined)
-    w = Window.partitionBy("doc_id").orderBy("offset", "sub_order")
-    return (unioned
-            .withColumn("order", (F.row_number().over(w) - F.lit(1))
-                        .cast("int"))
-            .select(*SPAN_OUT_COLS))
+    spans (the same tail as pipeline.extract_spans)."""
+    return interleave(explode_spans(documents), emitted)

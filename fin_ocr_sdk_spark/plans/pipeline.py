@@ -2,21 +2,20 @@
 
 Dataflow (SURVEY.md §2.8):
 
-    documents ──explode spans──┐
-                               ├─ text/image spans pass through
-    image spans ⋈ media ───────┘
-          │  equi-join on media_ref (both sides co-shuffled; AQE handles
-          │  skew; at 100 TB pre-bucket both tables by media_ref)
-          ▼
-    byte-weighted repartition (skew axis = media bytes/row, not rows)
-          ▼
-    mapInPandas(scan_batches)   ← ALL image work: decode → deskew →
-          │                        band → segment → classify → grammar;
-          │                        vectorized NumPy per Arrow batch,
-          │                        templates built once per worker
-          ▼
-    emitted micr:* spans ∪ original spans
-          ▼
+    media ── direct: (path, slice, n_slices) units; tasks read the
+       │             parquet parts themselves (bytes never cross the JVM)
+       │     arrow:  rows semi-joined on the image spans' media_ref,
+       │             byte-weighted repartition on media_ref
+       ▼
+    mapInPandas(make_scan_batches)  ← ALL image work, once per MEDIA row:
+       │                              scan_rows = decode → deskew → band
+       │                              → segment → classify → grammar;
+       │                              templates broadcast once per worker
+       ▼
+    per-media micr:* spans (media_ref, sub_order, kind, text)
+       ▼
+    image spans ⋈ per-media  ∪  original spans        (interleave)
+       ▼
     window renumber within doc → (doc_id, kind, text, media_ref, order)
 
 Everything relational stays in Catalyst (joins/filters/windows); the
@@ -27,24 +26,24 @@ the final per-doc renumber.
 
 from __future__ import annotations
 
+import itertools
 import math
 import os
 import warnings
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark import Broadcast
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (BinaryType, IntegerType, StringType,
                                StructField, StructType)
 
-SCAN_OUT_SCHEMA = StructType([
-    StructField("doc_id", StringType()),
-    StructField("offset", IntegerType()),
+MEDIA_SCAN_SCHEMA = StructType([
+    StructField("media_ref", StringType()),
     StructField("sub_order", IntegerType()),
     StructField("kind", StringType()),
     StructField("text", StringType()),
-    StructField("media_ref", StringType()),
 ])
 
 SPAN_OUT_COLS = ("doc_id", "kind", "text", "media_ref", "order")
@@ -62,67 +61,60 @@ def _pin_worker_threads() -> None:
         os.environ.setdefault(var, "1")
 
 
-def make_scan_batches(templates=None, kernel=None, spark=None):
-    """Build the mapInPandas kernel with the template tensor attached:
-    constructed ONCE on the driver (~145 KB pickled), shipped as a Spark
-    broadcast when a session is given (deserialized once per WORKER and
-    cached), else captured in the closure (deserialized per task).
-    Mirrors the reference's init-once translator (src/ocr.ts:44-56)."""
-    if templates is None:
-        from ..plans.scan import get_default_templates
-        templates = get_default_templates()
-    kernel = kernel or scan_batches
-    if spark is not None:
-        bc = spark.sparkContext.broadcast(templates)
-
-        def scan_fn_bc(batches: Iterator[pd.DataFrame]
-                       ) -> Iterator[pd.DataFrame]:
-            return kernel(batches, bc.value)
-
-        return scan_fn_bc
-
-    def scan_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return kernel(batches, templates)
-
-    return scan_fn
+def scan_rows(rows, templates) -> Iterator[tuple[str, int, str, str]]:
+    """The per-image step of every extraction path: Check.scan
+    (src/check.ts:88-114) over (media_ref, format, image) rows, yielding
+    (media_ref, sub_order, kind, text) — micr:line/routing/account/check
+    at sub_order 1..4, or one micr:error span, so every image yields at
+    least one row and lineage counts reconcile."""
+    from ..plans.scan import scan_check
+    for ref, fmt, image in rows:
+        res = scan_check(image, fmt, templates)
+        if res.ok and res.check_info is not None:
+            emitted = res.check_info.spans()
+        else:
+            emitted = (("micr:error", res.error),)
+        for k, (kind, text) in enumerate(emitted, start=1):
+            yield ref, k, kind, text
 
 
-def scan_batches(batches: Iterator[pd.DataFrame],
-                 templates=None) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: (doc_id, media_ref, offset, format, image) →
-    emitted OCR spans (micr:line/routing/account/check), sub_order 1..4
-    (the source image span itself passes through outside the UDF)."""
-    _pin_worker_threads()
-    from ..plans.scan import get_default_templates, scan_check
-    if templates is None:
-        templates = get_default_templates()
-    for pdf in batches:
-        out: dict[str, list] = {k: [] for k in
-                                ("doc_id", "offset", "sub_order", "kind",
-                                 "text", "media_ref")}
-        for doc_id, media_ref, offset, fmt, image in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["offset"],
-                pdf["format"], pdf["image"]):
-            res = scan_check(bytes(image), fmt, templates)
-            if res.ok and res.check_info is not None:
-                emitted = (
-                    ("micr:line", res.check_info.micr_line),
-                    ("micr:routing", res.check_info.routing_number),
-                    ("micr:account", res.check_info.account_number),
-                    ("micr:check", res.check_info.check_number),
-                )
-            else:
-                # extraction failure: emit an error span so lineage counts
-                # reconcile (every image yields at least one emitted row)
-                emitted = (("micr:error", res.error),)
-            for k, (kind, text) in enumerate(emitted, start=1):
-                out["doc_id"].append(doc_id)
-                out["offset"].append(int(offset))
-                out["sub_order"].append(k)
-                out["kind"].append(kind)
-                out["text"].append(text)
-                out["media_ref"].append(media_ref)
-        yield pd.DataFrame(out)
+def broadcast_templates(spark: SparkSession) -> Broadcast:
+    """The template tensor, constructed ONCE on the driver (~145 KB
+    pickled) and shipped as a Spark broadcast: deserialized once per
+    WORKER and cached.  Mirrors the reference's init-once translator
+    (src/ocr.ts:44-56)."""
+    from ..plans.scan import get_default_templates
+    return spark.sparkContext.broadcast(get_default_templates())
+
+
+def make_scan_batches(spark: SparkSession, per_image, schema: StructType):
+    """The media-keyed mapInPandas kernel both media strategies run:
+    ``per_image(rows, templates)`` over the (media_ref, format, image)
+    rows of each input batch (see :func:`media_rows`), one output row
+    per tuple it yields, in ``schema``'s column order."""
+    bc = broadcast_templates(spark)
+    columns = schema.fieldNames()
+
+    def scan_fn_bc(batches: Iterator[pd.DataFrame]
+                   ) -> Iterator[pd.DataFrame]:
+        _pin_worker_threads()
+        for pdf in batches:
+            yield pd.DataFrame(list(per_image(media_rows(pdf), bc.value)),
+                               columns=columns)
+
+    return scan_fn_bc
+
+
+def media_rows(pdf: pd.DataFrame) -> Iterator[tuple]:
+    """(media_ref, format, image) rows of one kernel input batch: the
+    arrow strategy's batches carry the media rows themselves; the
+    direct strategy's carry (path, slice, n_slices) work units, read
+    from the parquet parts by :func:`_direct_media_rows`."""
+    if "path" not in pdf.columns:
+        return zip(pdf["media_ref"], pdf["format"], pdf["image"])
+    return itertools.chain.from_iterable(
+        _direct_media_rows(*unit)
+        for unit in zip(pdf["path"], pdf["slice"], pdf["n_slices"]))
 
 
 def byte_weighted_partitions(df: DataFrame, bytes_col: str = "image",
@@ -153,20 +145,10 @@ def explode_spans(documents: DataFrame) -> DataFrame:
             .select("doc_id", "s.kind", "s.text", "s.media_ref", "s.offset"))
 
 
-MEDIA_SCAN_SCHEMA = StructType([
-    StructField("media_ref", StringType()),
-    StructField("sub_order", IntegerType()),
-    StructField("kind", StringType()),
-    StructField("text", StringType()),
-])
-
-
-def scan_media_files(batches: Iterator[pd.DataFrame],
-                     templates=None) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel over (path[, slice, n_slices]) rows: each
-    worker reads its media parquet file DIRECTLY with pyarrow and scans
-    the images of its row slice (the whole file when no slice columns
-    are present — the resumable lineage path keeps whole files as its
+def _direct_media_rows(path: str, sl: int, nsl: int) -> Iterator[tuple]:
+    """Yield (media_ref, format, image) for row slice ``sl`` of
+    ``nsl`` of one media parquet part, read DIRECTLY with pyarrow (the
+    resumable lineage path passes ``(path, 0, 1)``: whole files are its
     exactly-once commit unit).
 
     Rationale: media bytes never cross the JVM.  Shipping ~350 KB
@@ -177,46 +159,13 @@ def scan_media_files(batches: Iterator[pd.DataFrame],
     the engine plans over METADATA; workers pull bulk bytes straight
     from storage (the classic petabyte image-pipeline layout).
 
-    Slices split a file into ``n_slices`` equal row ranges computed
-    from the footer's row count in the worker (no driver footer loop):
+    Slices split a file into ``nsl`` equal row ranges computed from the
+    footer's row count in the worker (no driver footer loop):
     whole-file work units make the scan's makespan the slowest
     ceil(files/cores) bundle — measured ~20-30% straggler tax at 80
     files on 32 cores — while sub-file units bound the imbalance by one
     slice.  Decode cost is per-IMAGE, so two tasks sharing a file pay
     only the (cheap) parquet column read twice, never scan_check.
-    """
-    _pin_worker_threads()
-    from ..plans.scan import get_default_templates, scan_check
-    if templates is None:
-        templates = get_default_templates()
-    for pdf in batches:
-        out: dict[str, list] = {k: [] for k in
-                                ("media_ref", "sub_order", "kind", "text")}
-        for ref, fmt, image in _direct_media_rows(pdf):
-            res = scan_check(image, fmt, templates)
-            if res.ok and res.check_info is not None:
-                emitted = (
-                    ("micr:line", res.check_info.micr_line),
-                    ("micr:routing", res.check_info.routing_number),
-                    ("micr:account", res.check_info.account_number),
-                    ("micr:check", res.check_info.check_number),
-                )
-            else:
-                emitted = (("micr:error", res.error),)
-            for k, (kind, text) in enumerate(emitted, start=1):
-                out["media_ref"].append(ref)
-                out["sub_order"].append(k)
-                out["kind"].append(kind)
-                out["text"].append(text)
-        yield pd.DataFrame(out)
-
-
-def _direct_media_rows(pdf: pd.DataFrame):
-    """Yield (media_ref, format, image) for one batch of
-    (path[, slice, n_slices]) unit rows by reading the media parquet
-    parts DIRECTLY with pyarrow — shared by the extraction and
-    preprocess kernels so image bytes never cross the JVM on either
-    path.
 
     Streams record batches (memory bounded by the batch, not the part
     file) and prunes the read to the slice: only the row groups
@@ -233,38 +182,30 @@ def _direct_media_rows(pdf: pd.DataFrame):
     # (ncpus wide) would put 32x32 threads on the host
     pa.set_cpu_count(1)
     pa.set_io_thread_count(1)
-    if "slice" in pdf.columns:
-        units = zip(pdf["path"], pdf["slice"], pdf["n_slices"])
-    else:
-        units = ((p, 0, 1) for p in pdf["path"])
-    for path, sl, nsl in units:
-        pf = papq.ParquetFile(path.replace("file:", ""))
-        nrows = pf.metadata.num_rows
-        if nsl > 1:
-            lo = nrows * int(sl) // int(nsl)
-            hi = nrows * (int(sl) + 1) // int(nsl)
-        else:
-            lo, hi = 0, nrows
-        if hi <= lo:
+    pf = papq.ParquetFile(path.replace("file:", ""))
+    nrows = pf.metadata.num_rows
+    lo = nrows * int(sl) // int(nsl)
+    hi = nrows * (int(sl) + 1) // int(nsl)
+    if hi <= lo:
+        return
+    rgs, base = _overlapping_row_groups(pf.metadata, lo, hi)
+    seen = base
+    for rb in pf.iter_batches(
+            batch_size=32, row_groups=rgs,
+            columns=["media_ref", "format", "image"],
+            use_threads=False):
+        if seen >= hi:
+            break
+        b_lo = max(lo - seen, 0)
+        b_hi = min(hi - seen, rb.num_rows)
+        seen += rb.num_rows
+        if b_hi <= b_lo:
             continue
-        rgs, base = _overlapping_row_groups(pf.metadata, lo, hi)
-        seen = base
-        for rb in pf.iter_batches(
-                batch_size=32, row_groups=rgs,
-                columns=["media_ref", "format", "image"],
-                use_threads=False):
-            if seen >= hi:
-                break
-            b_lo = max(lo - seen, 0)
-            b_hi = min(hi - seen, rb.num_rows)
-            seen += rb.num_rows
-            if b_hi <= b_lo:
-                continue
-            if (b_lo, b_hi) != (0, rb.num_rows):
-                rb = rb.slice(b_lo, b_hi - b_lo)
-            yield from zip(rb.column("media_ref").to_pylist(),
-                           rb.column("format").to_pylist(),
-                           rb.column("image").to_pylist())
+        if (b_lo, b_hi) != (0, rb.num_rows):
+            rb = rb.slice(b_lo, b_hi - b_lo)
+        yield from zip(rb.column("media_ref").to_pylist(),
+                       rb.column("format").to_pylist(),
+                       rb.column("image").to_pylist())
 
 
 def _overlapping_row_groups(md, lo: int, hi: int
@@ -540,14 +481,14 @@ def _survivor_fraction(media: DataFrame) -> float | None:
 
 
 def _choose_media_strategy(media: DataFrame) -> str:
-    """Pick the media scan strategy (see extract_spans docstring):
+    """Pick the media scan strategy (see :func:`_per_media`):
 
     - ``direct``       unfiltered file-backed table: read parts directly,
                        no corrective semi-join needed
     - ``direct+semi``  filtered but still mostly-selective: direct reads
                        plus a semi-join to re-apply the relational filter
     - ``arrow``        heavily filtered (<50% of sampled footer rows
-                       survive) or not file-backed: classic join +
+                       survive) or not file-backed: semi-join +
                        byte-weighted repartition so only surviving rows
                        are decoded
     """
@@ -563,61 +504,50 @@ def _choose_media_strategy(media: DataFrame) -> str:
     return "direct+semi"
 
 
-def extract_spans(documents: DataFrame, media: DataFrame,
-                  target_partition_bytes: int = 64 << 20,
-                  repartition_scan: bool | None = None) -> DataFrame:
-    """Full pipeline: interleaved documents + media → output span table
-    under the (kind, text, media_ref, order) invariant.
-
-    Media strategy — never move image bytes through the engine; chosen
-    automatically by :func:`_choose_media_strategy` (override with
-    ``repartition_scan``: True forces arrow, False forces direct):
+def _per_media(media: DataFrame, spans: DataFrame, per_image,
+               schema: StructType) -> DataFrame:
+    """``per_image`` (see :func:`make_scan_batches`) over each media
+    row, keyed by media_ref, under the strategy
+    :func:`_choose_media_strategy` picks — never moving image bytes
+    through the engine when the plan allows otherwise:
 
     1. *direct* (unfiltered file-backed media): plan over the media FILE
        LIST; each scan task reads its parquet part directly with
-       pyarrow and emits only extracted text.  The relational join to
-       per-document span metadata happens on the (tiny) OCR output.
-       When the media plan carries filters, a semi-join on media_ref
-       re-applies them to the output (inputFiles() is pre-filter);
-       skipped entirely for a bare scan — no wasted ref-column pass.
-    2. *arrow* (heavily filtered or non-file media): classic
-       image-span ⋈ media join with byte-weighted repartitioning —
-       direct file reads would decode every image only to drop most.
-    """
-    spans = explode_spans(documents)
-    image_spans = (spans.filter(F.col("kind") == "image")
-                   .select("doc_id", "media_ref", "offset"))
-    if repartition_scan is None:
-        strategy = _choose_media_strategy(media)
-    elif repartition_scan:
-        strategy = "arrow"
-    elif _is_bare_file_scan(media):
-        strategy = "direct"
-    elif _is_filter_over_file_scan(media):
-        strategy = "direct+semi"
-    else:
-        strategy = "arrow"  # direct reads impossible on derived columns
+       pyarrow and emits only the per-image output.  When the media
+       plan carries filters, a semi-join on media_ref re-applies them
+       to the output (inputFiles() is pre-filter); skipped entirely for
+       a bare scan — no wasted ref-column pass.
+    2. *arrow* (heavily filtered or non-file media): the media rows the
+       documents' image spans reference (semi-join on media_ref),
+       byte-weighted repartition, then the same kernel — direct file
+       reads would decode every image only to drop most."""
+    kernel = make_scan_batches(media.sparkSession, per_image, schema)
+    strategy = _choose_media_strategy(media)
     files_df = None if strategy == "arrow" else _media_files_df(media)
     if files_df is not None:
-        per_media = files_df.mapInPandas(
-            make_scan_batches(kernel=scan_media_files,
-                              spark=documents.sparkSession),
-            MEDIA_SCAN_SCHEMA)
+        per_media = files_df.mapInPandas(kernel, schema)
         if strategy == "direct+semi":
             per_media = per_media.join(media.select("media_ref"),
                                        "media_ref", "semi")
-        emitted = (image_spans.join(per_media, "media_ref")
-                   .select("doc_id", "kind", "text", "media_ref",
-                           "offset", "sub_order"))
-    else:
-        nparts = byte_weighted_partitions(media, "image",
-                                          target_partition_bytes)
-        scan_input = (image_spans.join(media, "media_ref")
-                      .repartition(nparts, "media_ref"))
-        emitted = (scan_input
-                   .mapInPandas(make_scan_batches(), SCAN_OUT_SCHEMA)
-                   .select("doc_id", "kind", "text", "media_ref",
-                           "offset", "sub_order"))
+        return per_media
+    refs = spans.filter(F.col("kind") == "image").select("media_ref")
+    return (media.join(refs, "media_ref", "semi")
+            .select("media_ref", "format", "image")
+            .repartition(byte_weighted_partitions(media), "media_ref")
+            .mapInPandas(kernel, schema))
+
+
+def interleave(spans: DataFrame, per_media: DataFrame) -> DataFrame:
+    """Output span table from exploded document spans and per-media
+    emitted spans (media_ref, sub_order, kind, text): each image span
+    joins its media's emitted spans, the originals (sub_order 0) are
+    unioned in, and rows are renumbered within each doc by (offset,
+    sub_order) under the (kind, text, media_ref, order) invariant."""
+    image_spans = (spans.filter(F.col("kind") == "image")
+                   .select("doc_id", "media_ref", "offset"))
+    emitted = (image_spans.join(per_media, "media_ref")
+               .select("doc_id", "kind", "text", "media_ref", "offset",
+                       "sub_order"))
     originals = spans.withColumn("sub_order", F.lit(0))
     unioned = originals.unionByName(emitted)
     w = Window.partitionBy("doc_id").orderBy("offset", "sub_order")
@@ -627,86 +557,57 @@ def extract_spans(documents: DataFrame, media: DataFrame,
             .select(*SPAN_OUT_COLS))
 
 
+def extract_spans(documents: DataFrame, media: DataFrame) -> DataFrame:
+    """Full pipeline: interleaved documents + media → output span table
+    under the (kind, text, media_ref, order) invariant.  Every media row
+    is scanned once (:func:`_per_media`); the relational join to
+    per-document span metadata happens on the (tiny) OCR output."""
+    spans = explode_spans(documents)
+    return interleave(spans, _per_media(media, spans, scan_rows,
+                                        MEDIA_SCAN_SCHEMA))
+
+
+PREPROCESS_SCHEMA = StructType([
+    StructField("media_ref", StringType()),
+    StructField("overlap", StringType()),
+    StructField("band", BinaryType()),
+])
+
+
+def preprocess_rows(rows, templates) -> Iterator[tuple]:
+    """preprocess_only's per-image step: (media_ref, format, image) →
+    (media_ref, overlap, band PNG), with scan_check's failure boundary —
+    a decode failure or any later exception is an error row
+    (band None), never a failed task."""
+    from ..operators import kernels as K
+    from ..plans.scan import find_micr_line, get_micr_band
+    from ..sources import codecs
+    for ref, fmt, image in rows:
+        try:
+            gray = K.grayscale(codecs.decode_image(image, fmt))
+        except (ValueError, NotImplementedError) as e:
+            yield ref, f"error: decode: {e}", None
+            continue
+        try:
+            band = get_micr_band(gray)
+            line = find_micr_line(band, templates)
+            row = (ref, "" if line is None else str(line.overlap).lower(),
+                   codecs.encode_png(band))
+        except Exception as e:  # noqa: BLE001 — the per-image boundary
+            row = (ref, f"error: internal: {type(e).__name__}: {e}", None)
+        yield row
+
+
 def preprocess_only(documents: DataFrame, media: DataFrame) -> DataFrame:
     """Entry point 2 analog (CheckMgr.preprocess, src/check.ts:116-127):
     stop after band isolation; emit per-image band geometry + overlap
     flag.  This is the pipeline's debug/inspection mode and its natural
-    checkpoint boundary."""
-    import pandas as pd  # noqa: F811
-
-    schema = StructType([
-        StructField("doc_id", StringType()),
-        StructField("media_ref", StringType()),
-        StructField("overlap", StringType()),
-        StructField("band", BinaryType()),
-    ])
-
-    def _one_image(media_ref, fmt, image, templates, rows):
-        from ..operators import kernels as K
-        from ..plans.scan import find_micr_line, get_micr_band
-        from ..sources import codecs
-        rows["media_ref"].append(media_ref)
-        try:  # same failure contract as scan_check: one corrupt
-            # image yields an error row, never a failed task
-            gray = K.grayscale(codecs.decode_image(bytes(image), fmt))
-        except ValueError as e:
-            rows["overlap"].append(f"error: decode: {e}")
-            rows["band"].append(None)
-            return
-        band = get_micr_band(gray)
-        line = find_micr_line(band, templates)
-        rows["overlap"].append(
-            "" if line is None else str(line.overlap).lower())
-        rows["band"].append(codecs.encode_png(band))
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..plans.scan import get_default_templates
-        templates = get_default_templates()
-        for pdf in it:
-            rows: dict[str, list] = {"doc_id": [], "media_ref": [],
-                                     "overlap": [], "band": []}
-            for doc_id, media_ref, fmt, image in zip(
-                    pdf["doc_id"], pdf["media_ref"], pdf["format"],
-                    pdf["image"]):
-                rows["doc_id"].append(doc_id)
-                _one_image(media_ref, fmt, image, templates, rows)
-            yield pd.DataFrame(rows)
-
-    per_media_schema = StructType([
-        StructField("media_ref", StringType()),
-        StructField("overlap", StringType()),
-        StructField("band", BinaryType()),
-    ])
-
-    def file_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _pin_worker_threads()
-        from ..plans.scan import get_default_templates
-        templates = get_default_templates()
-        for pdf in it:
-            rows: dict[str, list] = {"media_ref": [], "overlap": [],
-                                     "band": []}
-            for media_ref, fmt, image in _direct_media_rows(pdf):
-                _one_image(media_ref, fmt, image, templates, rows)
-            yield pd.DataFrame(rows)
-
+    checkpoint boundary.  Same media strategy as extract_spans: debug
+    mode may be slower, but it must not be the one entry point that
+    ships image bytes through the JVM over a full corpus."""
     spans = explode_spans(documents)
-    image_spans = (spans.filter(F.col("kind") == "image")
-                   .select("doc_id", "media_ref"))
-    # Same media strategy as extract_spans (direct file reads whenever
-    # the plan allows them): debug mode is allowed to be slower, but it
-    # must not be the one entry point that ships image bytes through
-    # the JVM over a full corpus.  The per-document metadata joins the
-    # (small) per-image output, not the other way around.
-    strategy = _choose_media_strategy(media)
-    files_df = None if strategy == "arrow" else _media_files_df(media)
-    if files_df is not None:
-        per_media = files_df.mapInPandas(file_batches, per_media_schema)
-        if strategy == "direct+semi":
-            per_media = per_media.join(media.select("media_ref"),
-                                       "media_ref", "semi")
-        return (image_spans.join(per_media, "media_ref")
-                .select("doc_id", "media_ref", "overlap", "band"))
-    # plain equi-join: image_spans is one row per document (the BIG
-    # side at scale) — AQE broadcasts it when it is actually small
-    return (media.join(image_spans, "media_ref")
-            .mapInPandas(batches, schema))
+    per_media = _per_media(media, spans, preprocess_rows, PREPROCESS_SCHEMA)
+    return (spans.filter(F.col("kind") == "image")
+            .select("doc_id", "media_ref")
+            .join(per_media, "media_ref")
+            .select("doc_id", "media_ref", "overlap", "band"))

@@ -238,12 +238,7 @@ def generate_fixture_rows_range(start: int, count: int, seed: int = 42,
                              "order": order})
             order += 1
             if s["kind"] == "image":
-                for kind, text in (
-                    ("micr:line", info.micr_line),
-                    ("micr:routing", info.routing_number),
-                    ("micr:account", info.account_number),
-                    ("micr:check", info.check_number),
-                ):
+                for kind, text in info.spans():
                     expected.append({"doc_id": doc_id, "kind": kind,
                                      "text": text, "media_ref": media_ref,
                                      "order": order})

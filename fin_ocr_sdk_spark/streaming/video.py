@@ -10,15 +10,14 @@ Spark mapping:
   - frame source   → file-stream of media parquet parts (new part files
                      appear as frames arrive; maxFilesPerTrigger=1 keeps
                      the at-most-one-in-flight property)
-  - per-frame scan → foreachBatch running the SAME scan kernel used by
-                     the batch pipeline
+  - per-frame scan → foreachBatch running the SAME per-image step
+                     (pipeline.scan_rows) as the batch pipeline
   - stop-on-false  → the batch callback calls query.stop() when the
                      caller's callback returns False
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,15 +40,16 @@ def start_scan_stream(
     available_now: bool = False,
 ):
     """Stream media part files from `input_dir`; scan each micro-batch;
-    call ``on_results(rows, batch_id)`` with the extracted CheckInfo
-    rows.  Returning False stops the query (the reference's callback
-    contract).  `available_now=True` drains what exists then stops —
-    the test/demo trigger."""
-    from ..plans.pipeline import make_scan_batches
+    call ``on_results(rows, batch_id)`` with the extracted spans, one
+    dict per span with keys ``media_ref``, ``sub_order``, ``kind`` and
+    ``text`` (pipeline.MEDIA_SCAN_SCHEMA).  Returning False stops the
+    query (the reference's callback contract).  `available_now=True`
+    drains what exists then stops — the test/demo trigger."""
+    from ..plans.pipeline import MEDIA_SCAN_SCHEMA, media_rows, scan_rows
     from ..plans.scan import get_default_templates
 
     templates = get_default_templates()
-    scan_fn = make_scan_batches(templates=templates)
+    keys = MEDIA_SCAN_SCHEMA.fieldNames()
 
     stream = (spark.readStream.schema(MEDIA_SCHEMA)
               .option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -60,13 +60,9 @@ def start_scan_stream(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if stop_flag["stop"]:
             return
-        pdf_iter = batch_df.withColumn("doc_id", batch_df.media_ref) \
-            .withColumn("offset", batch_df.media_ref.isNotNull().cast("int")) \
-            .select("doc_id", "media_ref", "offset", "format", "image") \
-            .toPandas()
-        rows = []
-        for out in scan_fn(iter([pdf_iter])):
-            rows.extend(out.to_dict("records"))
+        pdf = batch_df.select("media_ref", "format", "image").toPandas()
+        rows = [dict(zip(keys, r))
+                for r in scan_rows(media_rows(pdf), templates)]
         if not on_results(rows, batch_id):
             stop_flag["stop"] = True
 

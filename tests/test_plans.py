@@ -44,13 +44,19 @@ def test_direct_plan_never_exchanges_image_bytes(smoke):
     assert "row_number" in plan
 
 
-def test_arrow_plan_byte_weighted_exchange(smoke):
-    """The fallback arrow strategy hash-partitions on media_ref with the
-    byte-weighted partition count."""
+def test_arrow_plan_byte_weighted_exchange(smoke, monkeypatch):
+    """The fallback arrow strategy semi-joins media on the image spans'
+    media_ref and hash-partitions on media_ref with the byte-weighted
+    partition count before the scan kernel."""
+    from fin_ocr_sdk_spark.plans import pipeline as P
     docs, media = smoke
-    plan = _plan(extract_spans(docs, media, repartition_scan=True))
-    assert "hashpartitioning(media_ref" in plan
-    assert "image#" in plan  # this path does carry bytes (documented)
+    monkeypatch.setattr(P, "_choose_media_strategy", lambda m: "arrow")
+    lines = _plan(extract_spans(docs, media)).splitlines()
+    scan_at = next(i for i, s in enumerate(lines) if "MapInPandas" in s)
+    below = "\n".join(lines[scan_at:])
+    assert "hashpartitioning(media_ref" in below
+    assert "LeftSemi" in below
+    assert "image#" in lines[scan_at]  # this path does carry bytes
 
 
 def test_column_pruning_on_span_explode(smoke):
@@ -99,7 +105,6 @@ def test_overlapping_row_groups_pruning(tmp_path):
     """Slice reads must touch only the row groups overlapping the
     slice's row range (the round-5 read-amplification finding) and the
     sliced union must equal the whole-file read exactly."""
-    import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as papq
 
@@ -120,12 +125,11 @@ def test_overlapping_row_groups_pruning(tmp_path):
     assert _overlapping_row_groups(md, 18, 20) == ([3], 18)
     assert _overlapping_row_groups(md, 0, 20) == ([0, 1, 2, 3], 0)
     # sliced union == whole file, in order, with only projected columns
-    whole = list(_direct_media_rows(pd.DataFrame({"path": [path]})))
+    whole = list(_direct_media_rows(path, 0, 1))
     n_slices = 7
     sliced = []
     for sl in range(n_slices):
-        sliced += list(_direct_media_rows(pd.DataFrame(
-            {"path": [path], "slice": [sl], "n_slices": [n_slices]})))
+        sliced += list(_direct_media_rows(path, sl, n_slices))
     assert sliced == whole
     assert [r[0] for r in whole] == refs
 

@@ -116,18 +116,23 @@ def test_strategy_probe_reads_bounded_files(spark, smoke_dir):
     assert n_files <= P._PROBE_FILES  # pruned: 4 of 16 smoke files
 
 
-def test_heavily_filtered_media_same_result_both_paths(spark, smoke_dir):
-    """Auto (arrow) and forced-direct strategies agree on a heavily
-    filtered media table."""
+def test_heavily_filtered_media_same_result_both_paths(spark, smoke_dir,
+                                                       monkeypatch):
+    """The auto strategy (direct+semi: the filter drops whole smoke
+    files) and the forced arrow strategy agree on a heavily filtered
+    media table."""
     from pyspark.sql import functions as F
+
+    from fin_ocr_sdk_spark.plans import pipeline as P
     docs = spark.read.parquet(os.path.join(smoke_dir, "documents.parquet"))
     media = (spark.read.parquet(os.path.join(smoke_dir, "media.parquet"))
              .filter(F.col("media_ref") < "img-00000002"))
     cols = ["doc_id", "kind", "text", "media_ref", "order"]
     auto = (extract_spans(docs, media).toPandas()[cols]
             .sort_values(["doc_id", "order"]).reset_index(drop=True))
-    forced = (extract_spans(docs, media, repartition_scan=False)
-              .toPandas()[cols]
+    assert P._choose_media_strategy(media) == "direct+semi"
+    monkeypatch.setattr(P, "_choose_media_strategy", lambda m: "arrow")
+    forced = (extract_spans(docs, media).toPandas()[cols]
               .sort_values(["doc_id", "order"]).reset_index(drop=True))
     pd.testing.assert_frame_equal(auto, forced)
     assert (auto["kind"] == "micr:line").sum() == 2
@@ -291,13 +296,16 @@ def test_manifest_distributed_path_same_spans(spark, smoke_dir,
     pd.testing.assert_frame_equal(got[cols], base[cols])
 
 
-def test_tiny_images_yield_one_error_span_each(spark, tmp_path):
+def test_tiny_images_yield_one_error_span_each(spark, tmp_path,
+                                               monkeypatch):
     """Every degenerate image yields exactly one micr:error span and the
-    job succeeds (a 1-row PNG used to fail its task, then the job)."""
+    job succeeds (a 1-row PNG used to fail its task, then the job), on
+    both media strategies and through preprocess_only."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from fin_ocr_sdk_spark.plans import pipeline as P
     from fin_ocr_sdk_spark.sources import codecs
     from fin_ocr_sdk_spark.sources.tables import SPAN_TYPE
 
@@ -319,9 +327,111 @@ def test_tiny_images_yield_one_error_span_each(spark, tmp_path):
     }), str(tmp_path / "documents.parquet"))
     docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
     media = spark.read.parquet(str(tmp_path / "media.parquet"))
-    for repartition_scan in (None, True):     # direct, then arrow
-        out = extract_spans(docs, media,
-                            repartition_scan=repartition_scan).toPandas()
+    for strategy in ("direct", "arrow"):
+        monkeypatch.setattr(P, "_choose_media_strategy",
+                            lambda m, s=strategy: s)
+        out = extract_spans(docs, media).toPandas()
         micr = out[out["kind"].str.startswith("micr:")]
         assert (micr["kind"] == "micr:error").all()
         assert sorted(micr["media_ref"]) == sorted(refs)
+        # preprocess_only: the same images yield rows, never a failed
+        # task; a failure past decode is an internal error row
+        pre = preprocess_only(docs, media).toPandas()
+        assert sorted(pre["media_ref"]) == sorted(refs)
+        err = pre["overlap"].str.startswith("error: ")
+        assert pre.loc[err, "overlap"].str.startswith(
+            "error: internal: ").all()
+        assert pre.loc[err, "band"].isna().all()
+        assert err.any()  # the 1-row images fail in get_micr_band
+
+
+def _micr_set(rows) -> set:
+    return {(r["media_ref"], r["kind"], r["text"]) for r in rows
+            if r["kind"].startswith("micr:")}
+
+
+def test_scan_kernel_local_equals_map_in_pandas(spark, smoke_dir):
+    """The media-keyed kernel gives the same frame called on local
+    pandas media rows as under mapInPandas over either strategy's
+    input (direct work units, arrow media rows)."""
+    from fin_ocr_sdk_spark.plans import pipeline as P
+
+    kernel = P.make_scan_batches(spark, P.scan_rows, P.MEDIA_SCAN_SCHEMA)
+    path = os.path.join(smoke_dir, "media.parquet")
+    local = pd.concat(kernel(iter([pd.read_parquet(
+        path, columns=["media_ref", "format", "image"])])))
+    media = spark.read.parquet(path)
+    direct = (P._media_files_df(media)
+              .mapInPandas(kernel, P.MEDIA_SCAN_SCHEMA).toPandas())
+    arrow = (media.select("media_ref", "format", "image")
+             .mapInPandas(kernel, P.MEDIA_SCAN_SCHEMA).toPandas())
+
+    def norm(df):
+        df = df.astype({"sub_order": "int32"})
+        return df.sort_values(["media_ref", "sub_order"]).reset_index(
+            drop=True)
+
+    assert len(local) == 16 * 4
+    pd.testing.assert_frame_equal(norm(direct), norm(local))
+    pd.testing.assert_frame_equal(norm(arrow), norm(local))
+
+
+def test_every_extraction_path_same_micr_spans(spark, smoke_dir, tmp_path,
+                                               monkeypatch):
+    """direct, arrow, resumable lineage + assemble_output and the
+    streaming demo emit the same micr:* (media_ref, kind, text) set."""
+    from fin_ocr_sdk_spark.plans import pipeline as P
+    from fin_ocr_sdk_spark.plans.lineage import (assemble_output,
+                                                 emitted_spans,
+                                                 run_resumable_extract)
+    from fin_ocr_sdk_spark.streaming.video import demo
+
+    docs = spark.read.parquet(os.path.join(smoke_dir, "documents.parquet"))
+    media_dir = os.path.join(smoke_dir, "media.parquet")
+    media = spark.read.parquet(media_dir)
+    direct = _micr_set(extract_spans(docs, media).collect())
+    assert len(direct) == 16 * 4
+    out_dir = str(tmp_path / "lineage")
+    run_resumable_extract(spark, docs, media, out_dir)
+    resumable = _micr_set(
+        assemble_output(docs, emitted_spans(spark, out_dir)).collect())
+    streamed = _micr_set(demo(spark, media_dir)[0])
+    monkeypatch.setattr(P, "_choose_media_strategy", lambda m: "arrow")
+    arrow = _micr_set(extract_spans(docs, media).collect())
+    assert direct == arrow == resumable == streamed
+
+
+def test_shared_media_ref_same_spans_both_strategies(spark, smoke_dir,
+                                                     monkeypatch):
+    """Two documents referencing one media row get identical micr:*
+    spans, on both strategies (the image is scanned once per media row,
+    then joined to every document that references it)."""
+    import pyarrow as pa
+
+    from fin_ocr_sdk_spark.plans import pipeline as P
+    from fin_ocr_sdk_spark.sources.tables import SPAN_TYPE
+
+    ref = "img-00000003"
+    spans = [[{"kind": "text", "text": "memo", "media_ref": None,
+               "offset": 0},
+              {"kind": "image", "text": "", "media_ref": ref,
+               "offset": 1}],
+             [{"kind": "image", "text": "", "media_ref": ref,
+               "offset": 0}]]
+    docs = spark.createDataFrame(pa.table({
+        "doc_id": ["doc-a", "doc-b"],
+        "spans": pa.array(spans, type=pa.list_(SPAN_TYPE))}).to_pandas())
+    media = spark.read.parquet(os.path.join(smoke_dir, "media.parquet"))
+    results = []
+    for strategy in ("direct", "arrow"):
+        monkeypatch.setattr(P, "_choose_media_strategy",
+                            lambda m, s=strategy: s)
+        out = extract_spans(docs, media).toPandas()
+        micr = out[out["kind"].str.startswith("micr:")]
+        per_doc = {d: g.sort_values("order")[["kind", "text", "media_ref"]]
+                   .reset_index(drop=True)
+                   for d, g in micr.groupby("doc_id")}
+        assert len(per_doc["doc-a"]) == 4
+        pd.testing.assert_frame_equal(per_doc["doc-a"], per_doc["doc-b"])
+        results.append(per_doc["doc-a"])
+    pd.testing.assert_frame_equal(results[0], results[1])
