@@ -27,13 +27,16 @@ import os
 import sys
 from collections.abc import Callable
 
-import pandas as pd  # noqa: F401 — needed to resolve pandas_udf hints
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
+
+from fin_ocr_sdk_spark.sources import query_fixtures as _qfx  # noqa: E402
 
 SMOKE_DOCS = 16
 SFTEST_DOCS = 128
@@ -451,14 +454,38 @@ from fin_ocr_sdk_spark.functions import minhash as _mh  # noqa: E402
 
 _HASH_P = _mh.HASH_P
 _SIMHASH_MULTS = _mh.SIMHASH_MULTS
-_MINHASH_N = _mh.MINHASH_N
 _MINHASH_A = _mh.MINHASH_A
 _MINHASH_B = _mh.MINHASH_B
 _MINHASH_BANDS = _mh.MINHASH_BANDS
 _MINHASH_BUCKET_CAP = 50   # skew guard: a giant near-dup cluster's band
 _JACCARD_DF_CAP = 64       # skew guard: stopword-like hot shingles
 _poly_hashes = _mh.poly_hashes
-_word_shingles = _mh.word_shingles
+
+
+def _capped_pairs(df: DataFrame, keys: list, id_col: str,
+                  cap: int) -> DataFrame:
+    """Candidate pairs (a < b) of ids sharing a bucket (``keys``),
+    named after ``id_col``: ``doc_id`` gives ``doc_a``/``doc_b``.  One
+    row per shared bucket, so a pair in k buckets gives k rows; callers
+    that want a set call distinct().  Buckets holding more than ``cap``
+    ids are dropped: a hot bucket of k ids would emit k² pairs.
+
+    Skew-proof by construction: the bucket size is a window count over
+    the keys' exchange, so an over-cap bucket's rows are filtered out
+    before collect_list builds any list.  The count equals the size of
+    the list collect_list would build (both count the bucket's non-null
+    ids), and since ids are distinct per key in every caller (grams are
+    distinct per doc; a doc or vector lands once per band) it is the
+    bucket's document frequency.  One collect_list and a double explode
+    consume the input once, where a self-join would plan and run the
+    input's subtree once per side."""
+    a, b = id_col[:-2] + "a", id_col[:-2] + "b"
+    n = F.count(id_col).over(Window.partitionBy(*keys))
+    ids = (df.withColumn("_n", n).filter(F.col("_n") <= cap)
+           .groupBy(*keys).agg(F.collect_list(id_col).alias("ids")))
+    return (ids.select(F.explode("ids").alias(a), "ids")
+            .select(a, F.explode("ids").alias(b))
+            .filter(F.col(a) < F.col(b)))
 
 
 def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -468,23 +495,9 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     appearing in more than _JACCARD_DF_CAP documents are dropped before
     pairing — a hot stopword-like shingle in k docs would otherwise
     emit k² join rows (the classic skew blowup at corpus scale)."""
-    # Single evaluation of the shingle explode by construction (guide
-    # §2.4): the round-5 plan evaluated the explode subtree once per
-    # consumer (DF agg, semi-join probe, both self-join sides).
-    # Collecting each surviving gram's doc list in ONE aggregation and
-    # exploding the pairs out of it keeps one consumer above the
-    # explode and removes the self-join shuffle; grams are distinct per
-    # doc, so size(ids) is the same document frequency the cap checked,
-    # and the double explode is bounded by cap² rows per gram exactly
-    # like the capped self-join was.
-    grams = _shingles(spark, sf_dir)
-    grp = (grams.groupBy("gram")
-           .agg(F.collect_list("doc_id").alias("ids"))
-           .filter(F.size("ids") <= _JACCARD_DF_CAP))
-    return (grp.select(F.explode("ids").alias("doc_a"), "ids")
-            .select("doc_a", F.explode("ids").alias("doc_b"))
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .groupBy("doc_a", "doc_b")
+    pairs = _capped_pairs(_shingles(spark, sf_dir), ["gram"], "doc_id",
+                          _JACCARD_DF_CAP)
+    return (pairs.groupBy("doc_a", "doc_b")
             .agg(F.count(F.lit(1)).alias("shared_ngrams"))
             .filter(F.col("shared_ngrams") >= 3))
 
@@ -496,8 +509,6 @@ def _minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     or groupBy shuffle at all — minhash state is per-document.  Docs
     with fewer than 3 tokens (no shingles) emit nothing, matching the
     SQL twin's empty GROUP BY."""
-    import numpy as np
-    import pandas as pd
     from pyspark.sql.types import (IntegerType, LongType, StructField,
                                    StructType)
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -506,21 +517,8 @@ def _minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("band", IntegerType()),
         StructField("sig", LongType()),
     ])
-    d = _spread(d, "doc_id")  # the kernel below is the expensive part
-    def compute(batches):
-        for pdf in batches:
-            keep, sig = _mh.band_signatures(list(pdf["text"]))
-            if not keep:
-                continue
-            ids = pdf["doc_id"].to_numpy()[keep]
-            yield pd.DataFrame({
-                "doc_id": np.repeat(ids, _MINHASH_BANDS),
-                "band": np.tile(np.arange(_MINHASH_BANDS, dtype=np.int32),
-                                len(ids)),
-                "sig": sig.reshape(-1),
-            })
-
-    return d.mapInPandas(compute, schema)
+    # spread: the kernel is the expensive part
+    return _spread(d, "doc_id").mapInPandas(_mh.band_rows, schema)
 
 
 def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -530,24 +528,8 @@ def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup cluster would otherwise square inside its bucket).  The
     hash chain is portable polynomial arithmetic, so a DuckDB twin
     verifies the exact pair set."""
-    # Single kernel evaluation by construction (guide §2.4): the round-6
-    # before-plan showed the signature MapInPandas evaluated FOUR times
-    # (bucket-size agg, semi-join probe, both self-join sides — Spark
-    # plans each consumer's subtree independently).  Collecting each
-    # band bucket's member list in ONE aggregation and exploding the
-    # pairs out of it keeps exactly one consumer above the kernel and
-    # replaces the self-join shuffle outright; a doc appears at most
-    # once per (band, sig), so size(ids) is the same bucket cardinality
-    # the cap checked before, and the double explode is bounded by
-    # cap² rows per bucket exactly like the capped self-join was.
-    bands = _minhash_bands(spark, sf_dir)
-    grp = (bands.groupBy("band", "sig")
-           .agg(F.collect_list("doc_id").alias("ids"))
-           .filter(F.size("ids") <= _MINHASH_BUCKET_CAP))
-    return (grp.select(F.explode("ids").alias("doc_a"), "ids")
-            .select("doc_a", F.explode("ids").alias("doc_b"))
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b").distinct())
+    return _capped_pairs(_minhash_bands(spark, sf_dir), ["band", "sig"],
+                         "doc_id", _MINHASH_BUCKET_CAP).distinct()
 
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -752,61 +734,27 @@ def _cos_e4_to_seeds(w, ws):
     return np.floor(num / den * 10000 + 0.5).astype(np.int64)
 
 
-_BOILER_N_DOCS = 200
-_BOILER_DF_FRAC = 0.5   # span text in ≥50% of docs = template/boilerplate
-
-
-def _webdocs_path() -> str:
-    """Deterministic interleaved web-document corpus for the
-    main-content-extraction op (north rule: boilerplate strip): every
-    page carries template header/footer/nav spans plus unique prose
-    spans, mirroring real crawled pages where chrome repeats across a
-    site and content does not.  Built once, cached next to the other
-    fixtures (seed 7); schema = the input_hint span table."""
+def _cos_e4_rows(u: pd.Series, v: pd.Series) -> pd.Series:
+    """Row-wise floor(cos*10000+0.5) of two embedding columns, quantized
+    and computed like _cos_e4_to_seeds (same op order as the DuckDB
+    twins)."""
     import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    a, c = _quant_int64(list(u)), _quant_int64(list(v))
+    num = (a * c).sum(axis=1).astype(np.float64)     # exact < 2^53
+    den = (np.sqrt((a * a).sum(axis=1).astype(np.float64))
+           * np.sqrt((c * c).sum(axis=1).astype(np.float64)))
+    return pd.Series(np.floor(num / den * 10000 + 0.5).astype(np.int64))
 
-    from fin_ocr_sdk_spark.sources.tables import FIXTURE_ROOT
-    path = os.path.join(FIXTURE_ROOT, "webdocs_v1.parquet")
-    if os.path.exists(path):
-        return path
-    rng = np.random.default_rng(7)
-    words = ("market report quarterly revenue growth product launch "
-             "analysis summary update regional forecast outlook "
-             "margin segment detail commentary risk").split()
-    boiler_head = "ACME CORP INVESTOR RELATIONS HOME NEWS CONTACT"
-    boiler_foot = "copyright acme corp all rights reserved privacy terms"
-    boiler_nav = "subscribe to our newsletter follow us"
-    doc_ids, spans_col = [], []
-    for i in range(_BOILER_N_DOCS):
-        spans = [{"kind": "text", "text": boiler_head,
-                  "media_ref": "", "offset": 0}]
-        off = 1
-        for _ in range(int(rng.integers(3, 9))):
-            t = " ".join(rng.choice(words, int(rng.integers(4, 9))))
-            spans.append({"kind": "text", "text": t,
-                          "media_ref": "", "offset": off})
-            off += 1
-        if i % 3 != 0:  # nav block on 2/3 of pages — still boilerplate
-            spans.append({"kind": "text", "text": boiler_nav,
-                          "media_ref": "", "offset": off})
-            off += 1
-        spans.append({"kind": "text", "text": boiler_foot,
-                      "media_ref": "", "offset": off})
-        doc_ids.append(f"web-{i:05d}")
-        spans_col.append(spans)
-    span_t = pa.struct([("kind", pa.string()), ("text", pa.string()),
-                        ("media_ref", pa.string()),
-                        ("offset", pa.int32())])
-    os.makedirs(FIXTURE_ROOT, exist_ok=True)
-    tmp = path + ".tmp"
-    pq.write_table(pa.table({"doc_id": doc_ids,
-                             "spans": pa.array(spans_col,
-                                               type=pa.list_(span_t))}),
-                   tmp)
-    os.replace(tmp, path)
-    return path
+
+# Deterministic in fact, but marked otherwise so Catalyst evaluates it
+# once per row: the optimizer inlines a deterministic aliased column
+# into every filter and projection above it, and each inlined copy
+# becomes its own ArrowEvalPython, so embedding_near_dup's ">= threshold"
+# filter and its projection would each run the UDF over every pair.
+_cos_e4 = F.pandas_udf(_cos_e4_rows, LongType()).asNondeterministic()
+
+
+_BOILER_DF_FRAC = 0.5   # span text in ≥50% of docs = template/boilerplate
 
 
 def q_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -823,10 +771,10 @@ def q_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the document frequency per exact TEXT, so a rare span
     colliding with a boilerplate span cannot be dropped).  The final
     anti-join broadcasts the boiler text set; no UDF — pure Catalyst."""
-    docs = spark.read.parquet(_webdocs_path())
+    docs = spark.read.parquet(_qfx.webdocs_path())
     s = (docs.select("doc_id", F.posexplode("spans").alias("pos", "s"))
          .select("doc_id", "s.kind", "s.text", "s.media_ref", "s.offset"))
-    thresh = int(_BOILER_DF_FRAC * _BOILER_N_DOCS)
+    thresh = int(_BOILER_DF_FRAC * _qfx.BOILER_N_DOCS)
     cand_h = (s.select(F.xxhash64("text").alias("th"), "doc_id")
               .groupBy("th")
               .agg(F.count_distinct("doc_id").alias("df"))
@@ -906,19 +854,9 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = e.select("vec_id", F.col("embedding").alias("emb_v"))
     pairs = cand.join(F.broadcast(eq), "query_id").join(ev, "vec_id")
 
-    @F.pandas_udf(LongType())
-    def cos_e4(u: pd.Series, v: pd.Series) -> pd.Series:
-        import numpy as np
-        a, c = _quant_int64(list(u)), _quant_int64(list(v))
-        num = (a * c).sum(axis=1).astype(np.float64)
-        den = (np.sqrt((a * a).sum(axis=1).astype(np.float64))
-               * np.sqrt((c * c).sum(axis=1).astype(np.float64)))
-        return pd.Series(np.floor(num / den * 10000 + 0.5)
-                         .astype(np.int64))
-
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine_e4"),
                                                F.asc("vec_id"))
-    return (pairs.withColumn("cosine_e4", cos_e4("emb_q", "emb_v"))
+    return (pairs.withColumn("cosine_e4", _cos_e4("emb_q", "emb_v"))
             .withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk") <= 5)
             .select("query_id", F.col("vec_id").alias("neighbor_id"),
@@ -944,42 +882,16 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     < 2^53) and emitted as floor(c*10000+0.5) integer ten-thousandths,
     so the DuckDB twin is bit-identical: no bare round() on doubles
     (CLAUDE.md rule), no summation-order flakes."""
-    import numpy as np
-    from pyspark.sql.types import LongType
-
     e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # Single kernel evaluation by construction — same restructure as
-    # q_minhash_dedup: collect each (band, bucket) cell's member list
-    # in one aggregation, explode the capped pairs out of it (a vector
-    # appears at most once per cell, so size(ids) is the cell
-    # cardinality the cap checked before).
-    b = _lsh_bands_df(e, _NEAR_DUP_PLANES)
-    grp = (b.groupBy("band", "bucket")
-           .agg(F.collect_list("vec_id").alias("ids"))
-           .filter(F.size("ids") <= _EMB_BUCKET_CAP))
-    cand = (grp.select(F.explode("ids").alias("vec_a"), "ids")
-            .select("vec_a", F.explode("ids").alias("vec_b"))
-            .filter(F.col("vec_a") < F.col("vec_b"))
-            .select("vec_a", "vec_b").distinct())
+    cand = _capped_pairs(_lsh_bands_df(e, _NEAR_DUP_PLANES),
+                         ["band", "bucket"], "vec_id",
+                         _EMB_BUCKET_CAP).distinct()
     ea = e.select(F.col("vec_id").alias("vec_a"),
                   F.col("embedding").alias("emb_a"))
     eb = e.select(F.col("vec_id").alias("vec_b"),
                   F.col("embedding").alias("emb_b"))
     pairs = cand.join(ea, "vec_a").join(eb, "vec_b")
-
-    @F.pandas_udf(LongType())
-    def cos_e4(u: pd.Series, v: pd.Series) -> pd.Series:
-        a = np.floor(np.array(list(u), dtype=np.float64)
-                     * 1_000_000 + 0.5).astype(np.int64)
-        c = np.floor(np.array(list(v), dtype=np.float64)
-                     * 1_000_000 + 0.5).astype(np.int64)
-        num = (a * c).sum(axis=1).astype(np.float64)     # exact < 2^53
-        den = (np.sqrt((a * a).sum(axis=1).astype(np.float64))
-               * np.sqrt((c * c).sum(axis=1).astype(np.float64)))
-        return pd.Series(np.floor(num / den * 10000 + 0.5)
-                         .astype(np.int64))
-
-    return (pairs.withColumn("cosine_e4", cos_e4("emb_a", "emb_b"))
+    return (pairs.withColumn("cosine_e4", _cos_e4("emb_a", "emb_b"))
             .filter(F.col("cosine_e4") >= _NEAR_DUP_COSINE_E4)
             .select("vec_a", "vec_b", "cosine_e4"))
 
@@ -1068,59 +980,6 @@ def q_media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _spread(media, "media_ref").mapInPandas(meta, schema)
 
 
-_X9_N_ITEMS = 400
-
-
-def _x9_path() -> str:
-    """X9-shaped clearing-file fixture (the reference's X9 input model,
-    src/checkUtil.ts:11-16: payorBankRoutingNumber, payorBankCheckDigit,
-    onUs, auxiliaryOnUs).  Synthesized deterministically (seed 13) with
-    the field shapes real X9 records exercise: aux-on-us present/absent,
-    leading zeros in aux and check fields, embedded whitespace, and
-    onUs with and without the account/check '/' separator.  Every onUs
-    carries at most ONE '/' — x9ToMicr's JS replace("/","U") swaps only
-    the first occurrence, so this keeps regexp-replace-all composition
-    twins exact."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from fin_ocr_sdk_spark.sources.tables import FIXTURE_ROOT
-    path = os.path.join(FIXTURE_ROOT, "x9_items_v1.parquet")
-    if os.path.exists(path):
-        return path
-    rng = np.random.default_rng(13)
-    rows = {k: [] for k in ("item_id", "payor_bank_routing_number",
-                            "payor_bank_check_digit", "on_us",
-                            "auxiliary_on_us")}
-    for i in range(_X9_N_ITEMS):
-        routing = f"{rng.integers(10**7, 10**8):08d}"
-        cd = str(rng.integers(0, 10))
-        acct = str(rng.integers(1, 10**10))
-        chk = str(rng.integers(1, 10**4))
-        variant = i % 4
-        if variant == 0:          # plain personal check: no aux
-            aux, onus = "", f"{acct}/{chk}"
-        elif variant == 1:        # business check: aux serial present
-            aux, onus = str(rng.integers(1, 10**6)), f"{acct}/{chk}"
-        elif variant == 2:        # embedded space + zero-padded check
-            aux, onus = "", f"{acct[:3]} {acct[3:]}/00{chk}"
-        else:                     # zero-padded aux, onUs without '/'
-            aux, onus = f"00{rng.integers(1, 10**4)}", acct
-        rows["item_id"].append(i)
-        rows["payor_bank_routing_number"].append(routing)
-        rows["payor_bank_check_digit"].append(cd)
-        rows["on_us"].append(onus)
-        rows["auxiliary_on_us"].append(aux)
-    os.makedirs(FIXTURE_ROOT, exist_ok=True)
-    tmp = path + ".tmp"
-    pq.write_table(pa.table(
-        {k: (pa.array(v, type=pa.int64()) if k == "item_id" else v)
-         for k, v in rows.items()}), tmp)
-    os.replace(tmp, path)
-    return path
-
-
 def q_x9_to_micr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X9 → MICR → CheckInfo end-to-end (x9ToMicr src/checkUtil.ts:38-45
     composed into the MicrParser grammar src/checkUtil.ts:49-133) over
@@ -1136,7 +995,7 @@ def q_x9_to_micr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (LongType, StringType, StructField,
                                    StructType)
 
-    x9 = spark.read.parquet(_x9_path())
+    x9 = spark.read.parquet(_qfx.x9_path())
     micr_raw = F.concat(
         F.when(F.col("auxiliary_on_us") != "",
                F.concat(F.lit("U"), F.col("auxiliary_on_us"), F.lit("U"))
@@ -1253,67 +1112,6 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "lang", "bucket"))
 
 
-_PDF_N_DOCS = 120
-_HTML_N_DOCS = 150
-
-_GEN_WORDS = ("market report quarterly revenue growth product launch "
-              "analysis summary update regional forecast outlook margin "
-              "segment detail commentary risk capital liquidity").split()
-
-
-def _pdf_docs_path() -> str:
-    """Deterministic PDF corpus (seed 17) for the north rule's
-    PDF-parse leg: 1-3 pages each, sentences that exercise the string
-    escapes ``( ) \\`` and multi-line layout, every third document
-    stored with uncompressed content streams, every fourth written as
-    a PDF 1.5 file (object-stream page dicts, /Contents arrays, xref
-    stream), and every sixth (when not 1.5) using hex string literals
-    instead of ``(...)`` text strings.  The golden per-page text is
-    recorded AT COMPOSE TIME, so the extractor is checked against what
-    was written, not against itself."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from fin_ocr_sdk_spark.sources.pdf import (encode_pdf_15,
-                                               encode_simple_pdf)
-    from fin_ocr_sdk_spark.sources.tables import FIXTURE_ROOT
-    path = os.path.join(FIXTURE_ROOT, "pdf_docs_v3.parquet")
-    if os.path.exists(path):
-        return path
-    rng = np.random.default_rng(17)
-    ids, blobs, goldens = [], [], []
-    for i in range(_PDF_N_DOCS):
-        pages = []
-        for _ in range(int(rng.integers(1, 4))):
-            lines = []
-            for _ in range(int(rng.integers(2, 6))):
-                ws = " ".join(rng.choice(_GEN_WORDS,
-                                         int(rng.integers(4, 9))))
-                if rng.random() < 0.3:
-                    ws += " (note: Q%d)" % int(rng.integers(1, 5))
-                if rng.random() < 0.15:
-                    ws += r" ratio a\b"
-                lines.append(ws)
-            pages.append("\n".join(lines))
-        if i % 4 == 0:
-            blobs.append(encode_pdf_15(pages))
-        else:
-            blobs.append(encode_simple_pdf(pages, compress=(i % 3 != 0),
-                                           hex_strings=(i % 6 == 1)))
-        ids.append(f"pdf-{i:04d}")
-        goldens.append(pages)
-    os.makedirs(FIXTURE_ROOT, exist_ok=True)
-    tmp = path + ".tmp"
-    pq.write_table(pa.table({
-        "pdf_id": ids,
-        "pdf": pa.array(blobs, type=pa.binary()),
-        "golden_pages": pa.array(goldens, type=pa.list_(pa.string())),
-    }), tmp)
-    os.replace(tmp, path)
-    return path
-
-
 def q_pdf_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PDF text layer over opaque binary (north rule: PDF/layout
     parse): per-page text recovered from the content streams
@@ -1341,107 +1139,9 @@ def q_pdf_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
                     rows["text"].append(text)
             yield pd.DataFrame(rows)
 
-    docs = spark.read.parquet(_pdf_docs_path()).select("pdf_id", "pdf")
+    docs = (spark.read.parquet(_qfx.pdf_docs_path())
+            .select("pdf_id", "pdf"))
     return docs.mapInPandas(extract, schema)
-
-
-_HTML_CHROME = {
-    "nav": "<nav><ul><li>Home</li><li>Products</li><li>Contact</li>"
-           "</ul></nav>",
-    "header": "<header>ACME GROUP NEWSROOM</header>",
-    "footer": "<footer>copyright acme group all rights reserved"
-              "</footer>",
-    "aside": "<aside>related stories and links</aside>",
-    "ad": "<div class=\"ad-banner\">SUBSCRIBE NOW SPECIAL OFFER</div>",
-    "cookie": "<div id=\"cookie-notice\">we use cookies ok?</div>",
-    "script": "<script>window.track&&track('pv');</script>",
-}
-
-
-def _html_docs_path() -> str:
-    """Deterministic HTML corpus (seed 19) for the DOM-heuristic leg:
-    every page wraps known content paragraphs (with inline <b>/<i>/
-    entity markup) in a random sample of chrome blocks (nav, header,
-    footer, aside, class/id-keyword divs, scripts).  Every fifth page
-    is DIV-SOUP: no semantic tags or chrome class keywords anywhere —
-    chrome is plain <div> link lists, content is <div> paragraphs —
-    exercising the extractor's link-density fallback.  The golden main
-    text is derived from the content parts at compose time."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from fin_ocr_sdk_spark.sources.tables import FIXTURE_ROOT
-    path = os.path.join(FIXTURE_ROOT, "html_docs_v2.parquet")
-    if os.path.exists(path):
-        return path
-    rng = np.random.default_rng(19)
-    chrome_keys = sorted(_HTML_CHROME)
-    link_words = ("home about contact products archive careers press "
-                  "login signup terms privacy help search").split()
-    ids, htmls, goldens = [], [], []
-    for i in range(_HTML_N_DOCS):
-        title = " ".join(rng.choice(_GEN_WORDS, 3)).title()
-        paras = []
-        for _ in range(int(rng.integers(2, 6))):
-            words = [str(w) for w in
-                     rng.choice(_GEN_WORDS, int(rng.integers(6, 12)))]
-            paras.append(" ".join(words))
-        golden = "\n".join([title] + paras)
-
-        if i % 5 == 0:
-            # div-soup page: chrome = link-list divs (no semantic tags,
-            # no keyword classes), content = plain divs; one content
-            # paragraph may carry a single inline link (link density
-            # stays well under the 50% drop threshold)
-            def link_list() -> str:
-                n = int(rng.integers(3, 6))
-                items = rng.choice(link_words, n, replace=False)
-                return ("<div>" + " ".join(
-                    f'<a href="/{w}">{w}</a>' for w in items) + "</div>")
-            html_paras = []
-            for p in paras:
-                ws = p.split()
-                if rng.random() < 0.3:
-                    k = int(rng.integers(0, len(ws)))
-                    ws[k] = f'<a href="/x">{ws[k]}</a>'
-                html_paras.append("<div>" + " ".join(ws) + "</div>")
-            html = ("<html><head><title>meta title</title></head><body>"
-                    + link_list() + link_list()
-                    + f"<div><div>{title}</div>"
-                    + "".join(html_paras) + "</div>"
-                    + link_list() + "</body></html>")
-        else:
-            html_paras = []
-            for p in paras:
-                ws = p.split()
-                k = int(rng.integers(0, len(ws)))
-                deco = str(rng.choice(["b", "i", "em"]))
-                ws[k] = f"<{deco}>{ws[k]}</{deco}>"
-                sep = "&nbsp;" if rng.random() < 0.2 else " "
-                html_paras.append("<p>" + sep.join(ws) + "</p>")
-            pre = [ _HTML_CHROME[k] for k in
-                    rng.choice(chrome_keys, int(rng.integers(1, 4)),
-                               replace=False)]
-            post = [_HTML_CHROME[k] for k in
-                    rng.choice(chrome_keys, int(rng.integers(1, 4)),
-                               replace=False)]
-            html = ("<html><head><title>meta title</title>"
-                    "<style>p{margin:0}</style></head><body>"
-                    + "".join(pre)
-                    + f"<article><h1>{title}</h1>"
-                    + "".join(html_paras) + "</article>"
-                    + "".join(post) + "</body></html>")
-        ids.append(f"page-{i:04d}")
-        htmls.append(html)
-        goldens.append(golden)
-    os.makedirs(FIXTURE_ROOT, exist_ok=True)
-    tmp = path + ".tmp"
-    pq.write_table(pa.table({
-        "page_id": ids, "html": htmls, "golden_main": goldens,
-    }), tmp)
-    os.replace(tmp, path)
-    return path
 
 
 def q_html_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1468,7 +1168,8 @@ def q_html_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
                               for h in pdf["html"]],
             })
 
-    docs = spark.read.parquet(_html_docs_path()).select("page_id", "html")
+    docs = (spark.read.parquet(_qfx.html_docs_path())
+            .select("page_id", "html"))
     return docs.mapInPandas(extract, schema)
 
 
@@ -1896,7 +1597,7 @@ def _x9_oracle() -> str:
                    '\\s', '', 'g') AS micr,
                  regexp_replace(auxiliary_on_us, '\\s', '', 'g') AS aux,
                  regexp_replace(on_us, '\\s', '', 'g') AS onus
-          FROM read_parquet('{_x9_path()}'))
+          FROM read_parquet('{_qfx.x9_path()}'))
         SELECT item_id, micr,
                payor_bank_routing_number || payor_bank_check_digit
                    AS routing_number,
@@ -2279,20 +1980,20 @@ def oracle_sql() -> dict[str, str]:
                    CAST(generate_subscripts(golden_pages, 1) - 1
                         AS BIGINT) AS page,
                    unnest(golden_pages) AS text
-            FROM read_parquet('{_pdf_docs_path()}')
+            FROM read_parquet('{_qfx.pdf_docs_path()}')
         """,
         "html_main_content": f"""
             SELECT page_id, golden_main AS main_text
-            FROM read_parquet('{_html_docs_path()}')
+            FROM read_parquet('{_qfx.html_docs_path()}')
         """,
         "boilerplate_strip": f"""
             WITH s AS (
               SELECT doc_id, unnest(spans, recursive:=true)
-              FROM read_parquet('{_webdocs_path()}')),
+              FROM read_parquet('{_qfx.webdocs_path()}')),
             boiler AS (
               SELECT text FROM s GROUP BY text
               HAVING count(DISTINCT doc_id)
-                     >= {int(_BOILER_DF_FRAC * _BOILER_N_DOCS)})
+                     >= {int(_BOILER_DF_FRAC * _qfx.BOILER_N_DOCS)})
             SELECT doc_id, kind, text, media_ref,
                    CAST(row_number() OVER (PARTITION BY doc_id
                         ORDER BY "offset") - 1 AS BIGINT) AS "order"

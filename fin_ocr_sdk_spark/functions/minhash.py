@@ -1,5 +1,6 @@
-"""Portable MinHash/LSH band signatures — shared by the batch dedup
-query (``__spark_entry__.q_minhash_dedup``) and the streaming near-dup
+"""Portable MinHash/LSH band signatures and the one band kernel
+(``band_rows``) — shared by the batch dedup query
+(``__spark_entry__.q_minhash_dedup``) and the streaming near-dup
 operator (``streaming/neardup.py``), so both paths flag the same
 near-duplicate pairs and the DuckDB oracle arithmetic stays the single
 source of truth.
@@ -63,11 +64,6 @@ def poly_hashes(strs: list, mults) -> np.ndarray:
         terms = (codes * powt[exps]) % HASH_P
         h[nz, k] = np.add.reduceat(terms, starts_nz) % HASH_P
     return h
-
-
-def word_shingles(text: str) -> set:
-    toks = text.strip().lower().split()
-    return {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
 
 
 def band_signatures(texts: list) -> "tuple[list[int], np.ndarray]":
@@ -143,3 +139,23 @@ def band_signatures(texts: list) -> "tuple[list[int], np.ndarray]":
             s = (s * 31 + mhs[:, bi * 4 + j]) % HASH_P
         sig[:, bi] = s
     return keep, sig
+
+
+def band_rows(batches):
+    """mapInPandas kernel: (doc_id, text) batches → one
+    (doc_id, band, sig) row per band of every document that has at
+    least one shingle.  The batch ``minhash_dedup`` query and the
+    streaming near-dup operator both run it, so they see the same
+    signatures; ``doc_id`` keeps whatever type the input carries."""
+    import pandas as pd
+    for pdf in batches:
+        keep, sig = band_signatures(list(pdf["text"]))
+        if not keep:
+            continue
+        ids = pdf["doc_id"].to_numpy()[keep]
+        yield pd.DataFrame({
+            "doc_id": np.repeat(ids, MINHASH_BANDS),
+            "band": np.tile(np.arange(MINHASH_BANDS, dtype=np.int32),
+                            len(ids)),
+            "sig": sig.reshape(-1),
+        })

@@ -15,13 +15,10 @@ keyed by name (the reference's TranslatorsResult map).
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
 
 from ..config import Config
 from ..operators.classify import TemplateSet, TranslateResult, translate_line
 from ..operators.segment import Line
-
-VALID_NAMES = ("tesseract", "opencv")
 
 
 class OpencvEngine:
@@ -233,6 +230,3 @@ def search_check_number_if_missing(results: dict, full_page_engine,
         return results
     return {name: dataclasses.replace(info, check_number=check_num)
             for name, info in results.items()}
-
-
-Registry = Callable  # documentation alias

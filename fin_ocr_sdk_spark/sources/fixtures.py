@@ -182,11 +182,6 @@ def _encode_progressive(img: np.ndarray) -> bytes:
     return encode_jpeg_progressive(img, 92)
 
 
-def generate_fixture_rows(n_docs: int, seed: int = 42, lossy: bool = True
-                          ) -> tuple[list[dict], list[dict], list[dict]]:
-    return generate_fixture_rows_range(0, n_docs, seed, lossy)
-
-
 def generate_fixture_rows_range(start: int, count: int, seed: int = 42,
                                 lossy: bool = True
                                 ) -> tuple[list[dict], list[dict], list[dict]]:

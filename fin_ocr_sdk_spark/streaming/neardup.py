@@ -4,12 +4,12 @@ family as batch (exact + near) instead of exact only.  Not reference
 parity: the reference's only stream is the video loop
 (streaming/video.py); this is a training-data-pipeline operator.
 
-Design: band signatures are computed statelessly per document with the
-SAME portable minhash arithmetic as the batch path
-(functions/minhash.py — a doc pair flagged by the stream is exactly a
-pair the batch query would flag), then the stream is keyed by
-``(band, sig)`` with ``applyInPandasWithState``: the state of a band
-bucket is the anchor (first document ever seen with that signature).
+Design: band signatures are computed statelessly per document by the
+batch path's own kernel (``functions/minhash.band_rows`` — a doc pair
+flagged by the stream is exactly a pair the batch query would flag),
+then the stream is keyed by ``(band, sig)`` with
+``applyInPandasWithState``: the state of a band bucket is the anchor
+(first document ever seen with that signature).
 Each arriving document emits one row per band carrying that anchor, so
 ``anchor_doc_id != doc_id`` marks a near-dup candidate and the anchor
 tells which earlier document it collided with.
@@ -17,9 +17,9 @@ tells which earlier document it collided with.
 Scale shape: state is one int64 + sig per DISTINCT band signature —
 bounded by corpus novelty, not corpus size — and shards across
 executors by the (band, sig) key; a giant near-dup cluster keeps ONE
-anchor per band rather than squaring (the batch path needs the
-_MINHASH_BUCKET_CAP guard precisely because it materializes pairs;
-the stream never does).
+anchor per band rather than squaring (the batch path caps each
+bucket at _MINHASH_BUCKET_CAP in ``__spark_entry__._capped_pairs``
+precisely because it materializes pairs; the stream never does).
 """
 
 from __future__ import annotations
@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (IntegerType, LongType, StringType,
                                StructField, StructType)
+
+from ..functions.minhash import band_rows
 
 DOC_SCHEMA = StructType([
     StructField("doc_id", LongType()),
@@ -50,24 +52,6 @@ OUT_SCHEMA = StructType([
 STATE_SCHEMA = StructType([
     StructField("anchor", LongType()),
 ])
-
-
-def _band_rows(batches):
-    import numpy as np
-    import pandas as pd
-
-    from fin_ocr_sdk_spark.functions import minhash as mh
-    for pdf in batches:
-        keep, sig = mh.band_signatures(list(pdf["text"]))
-        if not keep:
-            continue
-        ids = pdf["doc_id"].to_numpy()[keep]
-        yield pd.DataFrame({
-            "doc_id": np.repeat(ids, mh.MINHASH_BANDS),
-            "band": np.tile(
-                np.arange(mh.MINHASH_BANDS, dtype=np.int32), len(ids)),
-            "sig": sig.reshape(-1),
-        })
 
 
 def _anchor_group(key, pdfs, state):
@@ -100,7 +84,7 @@ def neardup_stream(spark: SparkSession, input_dir: str,
     stream = (spark.readStream.schema(DOC_SCHEMA)
               .option("maxFilesPerTrigger", str(max_files_per_trigger))
               .parquet(input_dir))
-    bands = stream.mapInPandas(_band_rows, BAND_SCHEMA)
+    bands = stream.mapInPandas(band_rows, BAND_SCHEMA)
     from pyspark.sql.streaming.state import GroupStateTimeout
     return bands.groupBy("band", "sig").applyInPandasWithState(
         _anchor_group, OUT_SCHEMA, STATE_SCHEMA, output_mode,

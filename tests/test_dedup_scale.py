@@ -32,6 +32,21 @@ def _write_docs(path: str, texts: list[str]) -> str:
     return path
 
 
+def _plan_lines(df) -> list[str]:
+    """The physical plan before execution (one tree, no AQE final-plan
+    copy), top node first."""
+    return df._jdf.queryExecution().executedPlan().toString().splitlines()
+
+
+def _assert_capped_before_collect(lines: list[str], cap: int) -> None:
+    """The bucket-size cap filter is an input of the collect_list
+    aggregate (printed below it), so no over-cap list is ever built."""
+    agg_at = max(i for i, s in enumerate(lines) if "collect_list" in s)
+    cap_at = [i for i, s in enumerate(lines)
+              if "Filter" in s and f"<= {cap})" in s]
+    assert len(cap_at) == 1 and cap_at[0] > agg_at, "\n".join(lines)
+
+
 def test_jaccard_hot_shingle_capped(spark, tmp_path_factory):
     """One shingle in all 100 docs would emit 4950 join rows; the
     document-frequency cap drops it, leaving only the one genuine pair
@@ -40,7 +55,9 @@ def test_jaccard_hot_shingle_capped(spark, tmp_path_factory):
     texts = [f"{hot} filler{i} x{i} y{i} z{i} w{i}" for i in range(98)]
     texts += [f"{hot} alpha beta gamma delta unique{i}" for i in (0, 1)]
     d = _write_docs(str(tmp_path_factory.mktemp("jac")), texts)
-    rows = m.q_ngram_jaccard_pairs(spark, d).collect()
+    q = m.q_ngram_jaccard_pairs(spark, d)
+    _assert_capped_before_collect(_plan_lines(q), m._JACCARD_DF_CAP)
+    rows = q.collect()
     # the genuine pair shares 'quick fox alpha', 'fox alpha beta',
     # 'alpha beta gamma', 'beta gamma delta' (the hot 'the quick fox'
     # is capped away; 'gamma delta uniqueN' differs) -> 4 shared
@@ -57,8 +74,11 @@ def test_minhash_giant_cluster_capped(spark, tmp_path_factory):
     small = "completely different tiny cluster of near duplicate text here"
     texts = [big] * 60 + [small] * 3
     d = _write_docs(str(tmp_path_factory.mktemp("mh")), texts)
-    pairs = {(r.doc_a, r.doc_b)
-             for r in m.q_minhash_dedup(spark, d).collect()}
+    q = m.q_minhash_dedup(spark, d)
+    lines = _plan_lines(q)
+    _assert_capped_before_collect(lines, m._MINHASH_BUCKET_CAP)
+    assert sum("MapInPandas" in s for s in lines) == 1
+    pairs = {(r.doc_a, r.doc_b) for r in q.collect()}
     assert pairs == {("d0060", "d0061"), ("d0060", "d0062"),
                      ("d0061", "d0062")}
 
@@ -143,8 +163,13 @@ def test_embedding_giant_cluster_capped(spark, tmp_path_factory):
                       + rng.normal(scale=1e-4, size=(3, 16))
                       .astype(np.float32)])
     d = _write_vecs(str(tmp_path_factory.mktemp("embcap")), vecs)
-    pairs = {(r.vec_a, r.vec_b)
-             for r in m.q_embedding_near_dup(spark, d).collect()}
+    q = m.q_embedding_near_dup(spark, d)
+    lines = _plan_lines(q)
+    _assert_capped_before_collect(lines, m._EMB_BUCKET_CAP)
+    assert sum("MapInPandas" in s for s in lines) == 1
+    # the cosine UDF runs once per pair, not once per consumer
+    assert sum("ArrowEvalPython" in s for s in lines) == 1
+    pairs = {(r.vec_a, r.vec_b) for r in q.collect()}
     small_ids = {n_big, n_big + 1, n_big + 2}
     # the 60-vector cluster would contribute C(60,2)=1770 pairs; the
     # cap erases all of them (its cells exceed the cap in BOTH bands)
