@@ -1,7 +1,12 @@
 """Resumable extraction with per-partition lineage (north rule).
 
-Unit of work = one media part file (the same unit the scan stage
-parallelizes over).  Each completed unit appends a lineage row
+Unit of work = one media part file.  The media table must be an
+UNFILTERED file-backed table (a bare ``spark.read`` of its part files):
+only then does each part file hold exactly the table's rows, and the
+file list is the one the direct scan slices (``pipeline._media_files``).
+Any other media plan — filtered, derived (e.g. base64-decoded) or
+in-memory — raises ValueError before a span file is written.  Each
+completed unit appends a lineage row
 
     (partition_id, media_file, doc_count, span_count, checksum,
      run_id, wall_ms)
@@ -34,9 +39,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from .pipeline import (MEDIA_SCAN_SCHEMA, _direct_media_rows,
-                       _pin_worker_threads, broadcast_templates,
-                       explode_spans, interleave, scan_rows)
+from ..session import pin_worker_threads
+from .pipeline import (MEDIA_SCAN_SCHEMA, _direct_media_rows, _media_files,
+                       broadcast_templates, explode_spans, interleave,
+                       scan_rows)
 
 LINEAGE_SCHEMA = StructType([
     StructField("partition_id", StringType()),
@@ -62,7 +68,7 @@ def make_lineage_kernel(out_dir: str, run_id: str, spark: SparkSession):
     spans_dir = os.path.join(out_dir, "spans")
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _pin_worker_threads()
+        pin_worker_threads()
         import pyarrow as pa
         import pyarrow.parquet as papq
         from pyspark.sql.pandas.types import to_arrow_schema
@@ -136,21 +142,21 @@ def run_resumable_extract(spark: SparkSession, documents: DataFrame,
                           media: DataFrame, out_dir: str,
                           run_id: str | None = None) -> ExtractRunResult:
     """Scan every media file not yet committed to the lineage table;
-    idempotent and restart-safe.  Returns run stats."""
-    from .pipeline import media_manifest
+    idempotent and restart-safe.  Returns run stats.  Raises ValueError,
+    before anything is written, unless media is an unfiltered
+    file-backed table (see the module docstring)."""
+    files = _media_files(media)
+    if files is None:
+        raise ValueError(
+            "resumable extract requires an unfiltered file-backed media "
+            "table (a bare spark.read of its part files)")
     run_id = run_id or uuid.uuid4().hex[:12]
     os.makedirs(out_dir, exist_ok=True)
-    # file manifest AND committed-work diff both stay distributed: the
-    # manifest is the _metadata-derived listing (pipeline.media_manifest
-    # — executors stat, driver never holds the file list), and the diff
-    # is an ANTI-JOIN against the lineage table, never a python set —
-    # at 10^12-doc scale both sides have millions of rows.  On Iceberg
-    # the manifest is the snapshot's file list read as a table.
-    manifest = media_manifest(media)
-    if manifest is None:
-        raise ValueError("resumable extract requires file-backed media")
-    n_files = manifest.count()
-    files_df = manifest.select("path")
+    # the committed-work diff stays distributed: an ANTI-JOIN against
+    # the lineage table, never a python set of committed files
+    n_files = len(files)
+    files_df = spark.createDataFrame([(p,) for p, _ in files],
+                                     "path string")
     lineage = committed_lineage(spark, out_dir)
     if lineage is not None:
         files_df = files_df.join(

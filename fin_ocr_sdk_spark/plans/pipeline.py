@@ -2,10 +2,12 @@
 
 Dataflow (SURVEY.md §2.8):
 
-    media ── direct: (path, slice, n_slices) units; tasks read the
-       │             parquet parts themselves (bytes never cross the JVM)
-       │     arrow:  rows semi-joined on the image spans' media_ref,
-       │             byte-weighted repartition on media_ref
+    media ── direct (a bare file scan): (path, slice, n_slices) units;
+       │             tasks read the parquet parts themselves (bytes
+       │             never cross the JVM)
+       │     arrow (any other plan): rows semi-joined on the image
+       │             spans' media_ref, byte-weighted repartition on
+       │             media_ref
        ▼
     mapInPandas(make_scan_batches)  ← ALL image work, once per MEDIA row:
        │                              scan_rows = decode → deskew → band
@@ -29,8 +31,10 @@ from __future__ import annotations
 import itertools
 import math
 import os
+import re
 import warnings
 from collections.abc import Iterator
+from urllib.parse import unquote
 
 import pandas as pd
 from pyspark import Broadcast
@@ -38,6 +42,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (BinaryType, IntegerType, StringType,
                                StructField, StructType)
+
+from ..session import pin_worker_threads
 
 MEDIA_SCAN_SCHEMA = StructType([
     StructField("media_ref", StringType()),
@@ -47,18 +53,6 @@ MEDIA_SCAN_SCHEMA = StructType([
 ])
 
 SPAN_OUT_COLS = ("doc_id", "kind", "text", "media_ref", "order")
-
-
-def _pin_worker_threads() -> None:
-    """Pin BLAS/Arrow pools to one thread inside python workers.  Our
-    session builder exports these before the JVM starts, but the driver
-    contract may run the pipeline under a foreign SparkSession; setting
-    them at UDF entry (workers import numpy lazily, and OpenBLAS reads
-    the env at library load) keeps one-worker-per-core true anywhere."""
-    import os
-    for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS",
-                "MKL_NUM_THREADS", "NUMEXPR_NUM_THREADS"):
-        os.environ.setdefault(var, "1")
 
 
 def scan_rows(rows, templates) -> Iterator[tuple[str, int, str, str]]:
@@ -97,7 +91,7 @@ def make_scan_batches(spark: SparkSession, per_image, schema: StructType):
 
     def scan_fn_bc(batches: Iterator[pd.DataFrame]
                    ) -> Iterator[pd.DataFrame]:
-        _pin_worker_threads()
+        pin_worker_threads()
         for pdf in batches:
             yield pd.DataFrame(list(per_image(media_rows(pdf), bc.value)),
                                columns=columns)
@@ -241,8 +235,8 @@ def media_manifest(media: DataFrame) -> DataFrame | None:
     file-backed (in-memory relations).  ``_metadata`` DOES propagate
     through Projects, so derived-column plans still list their backing
     files — whether those files' BYTES match the plan's rows is the
-    strategy layer's question (:func:`_is_filter_over_file_scan`), not
-    the manifest's."""
+    strategy's question (:func:`_choose_media_strategy`), not the
+    manifest's."""
     try:
         return (media.select(
             F.regexp_replace(F.col("_metadata.file_path"),
@@ -251,139 +245,6 @@ def media_manifest(media: DataFrame) -> DataFrame | None:
             .distinct())
     except Exception:  # noqa: BLE001 — AnalysisException: no _metadata
         return None
-
-
-#: above this many part files the slice-unit manifest stays distributed
-#: (driver LPT striping over 10^6+ rows would make the driver the
-#: bottleneck); below it, the collect is metadata-scale and the
-#: size-descending LPT stripe measurably beats hash placement at small
-#: unit counts.
-_MANIFEST_DRIVER_CAP = 100_000
-
-
-def _slice_bytes_for(total: int, par: int) -> int:
-    """Slice size: ~8 units per core slot (stragglers bounded by one
-    slice, not one file — whole-file units measured a 20-30% makespan
-    tax), floored at 1 MB (don't shred small files) and capped at
-    64 MB (a slice's rows must fit worker memory at production part
-    sizes).  SPARK_GRAFT_SLICE_BYTES overrides when valid."""
-    slice_bytes = min(64 << 20, max(1 << 20, total // max(1, par * 8)))
-    env = os.environ.get("SPARK_GRAFT_SLICE_BYTES")
-    if env:
-        try:
-            override = int(env)
-        except ValueError:
-            warnings.warn(
-                f"ignoring non-numeric SPARK_GRAFT_SLICE_BYTES={env!r}",
-                stacklevel=2)
-        else:
-            if override > 0:
-                slice_bytes = override
-    return slice_bytes
-
-
-def _local_bare_manifest(media: DataFrame) -> "list[tuple[str, int]] | None":
-    """Zero-job manifest for the common fast path: a BARE local-file
-    scan's ``inputFiles()`` is exactly the table's file set (no filters
-    to re-apply), and local stat of ≤100k paths costs ~0.2 ms/1k files
-    on the driver — vs 1.5-3 s for the distinct-shuffle ``_metadata``
-    manifest job, which is pure fixed overhead on every extraction run
-    (it scales with executors on a real cluster, but so does the job it
-    delays).  Returns None whenever the plan is filtered/derived, any
-    path is non-local (object stores go through the distributed
-    manifest), the listing exceeds _MANIFEST_DRIVER_CAP, or a file
-    vanished between listing and stat."""
-    if not _is_bare_file_scan(media):
-        return None
-    try:
-        listing = media.inputFiles()
-    except Exception:  # noqa: BLE001
-        return None
-    if not listing or len(listing) > _MANIFEST_DRIVER_CAP:
-        return None
-    if not all(f.startswith("file:") for f in listing):
-        return None
-    import re as _re
-    from urllib.parse import unquote
-    try:
-        # inputFiles() returns percent-encoded URIs: decode after
-        # stripping the scheme so the stat target (and the path later
-        # read by the scan kernel) is the real filesystem name
-        return [(p, os.path.getsize(p))
-                for p in (unquote(_re.sub("^file:/+", "/", f))
-                          for f in listing)]
-    except OSError:
-        return None
-
-
-def _media_files_df(media: DataFrame) -> DataFrame | None:
-    spark = media.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    files: "list | None" = _local_bare_manifest(media)
-    if files is None:
-        manifest = media_manifest(media)
-        if manifest is None:
-            return None
-        # ONE probe job decides the path: limit(cap+1) collects the
-        # whole manifest when it fits (the common case pays exactly the
-        # one job it always paid); cap+1 rows back means the manifest
-        # is too big to stripe on the driver, and the explode + hash
-        # repartition path stays entirely distributed (at 10^6+ units
-        # hash placement balances by the law of large numbers, so LPT
-        # buys nothing worth a driver round-trip of that size).
-        rows = manifest.limit(_MANIFEST_DRIVER_CAP + 1).collect()
-        if not rows:
-            return None
-        if len(rows) > _MANIFEST_DRIVER_CAP:
-            total = int(manifest.agg(F.sum("size")).collect()[0][0])
-            return _media_files_df_distributed(manifest, total, par)
-        files = [(r["path"], r["size"]) for r in rows]
-    # metadata-scale file list (driver stat for bare local scans, the
-    # engine's distributed listing otherwise — never a driver stat loop
-    # against an object store).  Files split into sub-file row-slice
-    # units (workers derive the actual row range from the footer, so
-    # the driver never reads footers).  Size-descending order +
-    # round-robin repartition stripes big units across tasks (near-LPT
-    # balance without a custom partitioner); two waves per core slot
-    # amortize the fixed per-task python-runner cost.
-    total = sum(size for _, size in files)
-    slice_bytes = _slice_bytes_for(total, par)
-    units = []
-    for path, size in files:
-        nsl = max(1, -(-int(size) // slice_bytes))
-        per = size / nsl
-        units += [(path, k, nsl, per) for k in range(nsl)]
-    units.sort(key=lambda u: u[3], reverse=True)
-    nparts = max(1, min(len(units), par * 2))
-    return spark.createDataFrame(
-        [(p, k, n) for p, k, n, _ in units],
-        "path string, slice int, n_slices int").repartition(nparts)
-
-
-def _media_files_df_distributed(manifest: DataFrame, total: int,
-                                par: int) -> DataFrame:
-    """Slice-unit table for manifests too large to stripe on the
-    driver: each file row explodes into its slice indices
-    executor-side and units spread by hash repartition.  The driver's
-    involvement is bounded by the cap — the cap+1-row probe that chose
-    this path plus the 1-value size agg — and never grows with the
-    manifest.  Same (path, slice, n_slices) contract as the collected
-    path, so the scan strategy downstream is unchanged.  The integer
-    ``div`` ceiling below MUST stay bit-identical to the collected
-    path's ``-(-size // slice_bytes)`` — the parity test compares the
-    two paths' full unit tables."""
-    slice_bytes = _slice_bytes_for(total, par)
-    units = (manifest
-             .withColumn(
-                 "n_slices",
-                 F.expr(f"CAST(greatest(1, (size + {slice_bytes - 1}) "
-                        f"div {slice_bytes}) AS INT)"))
-             .select(
-                 "path", "n_slices",
-                 F.explode(F.sequence(
-                     F.lit(0), F.col("n_slices") - 1)).alias("slice"))
-             .select("path", "slice", "n_slices"))
-    return units.repartition(par * 2, "path", "slice")
 
 
 _RELATION_NODES = ("LogicalRelation", "DataSourceV2Relation",
@@ -411,8 +272,7 @@ def _warn_plan_sniff_failed(exc: Exception) -> None:
 def _is_bare_file_scan(df: DataFrame) -> bool:
     """True iff the DataFrame is an unmodified file-source relation (no
     Filter/Project/Join above the scan) — in that case the file list
-    returned by inputFiles() covers exactly the table's rows and the
-    direct-read path needs no corrective semi-join."""
+    returned by inputFiles() covers exactly the table's rows."""
     try:
         root = df._jdf.queryExecution().analyzed().getClass().getSimpleName()
         return root in _RELATION_NODES
@@ -421,115 +281,92 @@ def _is_bare_file_scan(df: DataFrame) -> bool:
         return False
 
 
-def _is_filter_over_file_scan(df: DataFrame) -> bool:
-    """True iff the plan is only Filters/aliases over a file relation.
-    Direct part-file reads are valid ONLY then: any Project / computed
-    column (e.g. base64-decoded media) means the rows in the files no
-    longer match the DataFrame's columns, so the scan kernel must not
-    read the files itself."""
-    try:
-        node = df._jdf.queryExecution().analyzed()
-        while True:
-            name = node.getClass().getSimpleName()
-            if name in _RELATION_NODES:
-                return True
-            if name in ("Filter", "SubqueryAlias"):
-                node = node.child()
-            else:
-                return False
-    except Exception as e:  # noqa: BLE001 — arrow path is always correct
-        _warn_plan_sniff_failed(e)
-        return False
-
-
-def _metadata_row_count(files: list[str]) -> int | None:
-    """Total row count straight from parquet footers — no data read.
-    At 100 TB this statistic comes from the Iceberg snapshot instead."""
-    try:
-        import pyarrow.parquet as papq
-        return sum(papq.ParquetFile(f.replace("file:", "")).metadata.num_rows
-                   for f in files)
-    except Exception:  # noqa: BLE001 — non-parquet source
-        return None
-
-
-_PROBE_FILES = 4
-
-
-def _survivor_fraction(media: DataFrame) -> float | None:
-    """Estimate the fraction of rows surviving the media plan's filters
-    from a BOUNDED sample of part files: ≤ _PROBE_FILES footers are read
-    (driver, metadata only) and the surviving-row count is taken with a
-    ``_metadata.file_path`` IN-filter, which the file source prunes to
-    exactly the sampled files — so the probe's cost never grows with
-    the table (a full-table ``media.count()`` here would scan every
-    filter column of a 100 TB table just to pick a strategy)."""
-    try:
-        sample = [r["p"] for r in
-                  (media.select(F.col("_metadata.file_path").alias("p"))
-                   .distinct().limit(_PROBE_FILES).collect())]
-        if not sample:
-            return None
-        total = _metadata_row_count(sample)
-        if not total:
-            return None
-        surviving = media.filter(
-            F.col("_metadata.file_path").isin(sample)).count()
-        return surviving / total
-    except Exception:  # noqa: BLE001 — no _metadata / non-parquet
-        return None
-
-
 def _choose_media_strategy(media: DataFrame) -> str:
-    """Pick the media scan strategy (see :func:`_per_media`):
+    """``direct`` iff media is a bare file scan, else ``arrow`` (see
+    :func:`_per_media`).  Only a bare scan's part files hold exactly
+    the DataFrame's rows: under a filter, direct reads would decode
+    rows the plan dropped; under a Project (e.g. base64-decoded media)
+    the files do not even hold the DataFrame's columns."""
+    return "direct" if _is_bare_file_scan(media) else "arrow"
 
-    - ``direct``       unfiltered file-backed table: read parts directly,
-                       no corrective semi-join needed
-    - ``direct+semi``  filtered but still mostly-selective: direct reads
-                       plus a semi-join to re-apply the relational filter
-    - ``arrow``        heavily filtered (<50% of sampled footer rows
-                       survive) or not file-backed: semi-join +
-                       byte-weighted repartition so only surviving rows
-                       are decoded
-    """
-    if not media.inputFiles():
-        return "arrow"
-    if _is_bare_file_scan(media):
-        return "direct"
-    if not _is_filter_over_file_scan(media):
-        return "arrow"  # derived columns: file bytes != DataFrame rows
-    frac = _survivor_fraction(media)  # bounded: ≤ _PROBE_FILES files
-    if frac is not None and frac < 0.5:
-        return "arrow"
-    return "direct+semi"
+
+def _media_files(media: DataFrame) -> "list[tuple[str, int]] | None":
+    """(path, size) of every part file of a bare file-scan media table:
+    the one file list of the direct scan (:func:`_media_files_df`) and
+    the resumable scan (``lineage.run_resumable_extract``).  None for
+    any other plan, or a scan that lists no files.
+
+    Local files are stat'ed on the driver (~0.2 ms per 1k files, no
+    Spark job); object-store paths go through one collect of
+    :func:`media_manifest` (executors stat).  ``inputFiles()`` returns
+    percent-encoded URIs, so paths are decoded after the scheme is
+    stripped: the stat target and the path the scan kernel reads are
+    the real filesystem name."""
+    if not _is_bare_file_scan(media):
+        return None
+    listing = media.inputFiles()
+    if not listing:
+        return None
+    if all(f.startswith("file:") for f in listing):
+        return [(p, os.path.getsize(p))
+                for p in (unquote(re.sub("^file:/+", "/", f))
+                          for f in listing)]
+    manifest = media_manifest(media)
+    if manifest is None:
+        return None
+    return [(r["path"], r["size"]) for r in manifest.collect()] or None
+
+
+def _media_files_df(media: DataFrame) -> DataFrame | None:
+    """The direct strategy's (path, slice, n_slices) work units, or
+    None when :func:`_media_files` has no file list.  Each file splits
+    into sub-file row-slice units (workers derive the actual row range
+    from the footer, so the driver never reads footers).  Slices are
+    ~8 units per core slot (stragglers bounded by one slice, not one
+    file — whole-file units measured a 20-30% makespan tax), floored at
+    1 MB (don't shred small files) and capped at 64 MB (a slice's rows
+    must fit worker memory at production part sizes).  Size-descending
+    order + round-robin repartition stripes big units across tasks
+    (near-LPT balance without a custom partitioner); two waves per core
+    slot amortize the fixed per-task python-runner cost."""
+    files = _media_files(media)
+    if files is None:
+        return None
+    spark = media.sparkSession
+    par = spark.sparkContext.defaultParallelism
+    total = sum(size for _, size in files)
+    slice_bytes = min(64 << 20, max(1 << 20, total // max(1, par * 8)))
+    units = []
+    for path, size in files:
+        nsl = max(1, -(-int(size) // slice_bytes))
+        per = size / nsl
+        units += [(path, k, nsl, per) for k in range(nsl)]
+    units.sort(key=lambda u: u[3], reverse=True)
+    nparts = max(1, min(len(units), par * 2))
+    return spark.createDataFrame(
+        [(p, k, n) for p, k, n, _ in units],
+        "path string, slice int, n_slices int").repartition(nparts)
 
 
 def _per_media(media: DataFrame, spans: DataFrame, per_image,
                schema: StructType) -> DataFrame:
     """``per_image`` (see :func:`make_scan_batches`) over each media
     row, keyed by media_ref, under the strategy
-    :func:`_choose_media_strategy` picks — never moving image bytes
-    through the engine when the plan allows otherwise:
+    :func:`_choose_media_strategy` picks:
 
-    1. *direct* (unfiltered file-backed media): plan over the media FILE
-       LIST; each scan task reads its parquet part directly with
-       pyarrow and emits only the per-image output.  When the media
-       plan carries filters, a semi-join on media_ref re-applies them
-       to the output (inputFiles() is pre-filter); skipped entirely for
-       a bare scan — no wasted ref-column pass.
-    2. *arrow* (heavily filtered or non-file media): the media rows the
-       documents' image spans reference (semi-join on media_ref),
-       byte-weighted repartition, then the same kernel — direct file
-       reads would decode every image only to drop most."""
+    1. *direct* (a bare file scan): plan over the media FILE LIST
+       (:func:`_media_files_df`); each scan task reads its parquet part
+       slice directly with pyarrow and emits only the per-image output,
+       so image bytes never move through the engine.
+    2. *arrow* (any other plan — filtered, derived, in-memory — or a
+       file scan that lists no files): the media rows the documents'
+       image spans reference (semi-join on media_ref), byte-weighted
+       repartition, then the same kernel."""
     kernel = make_scan_batches(media.sparkSession, per_image, schema)
-    strategy = _choose_media_strategy(media)
-    files_df = None if strategy == "arrow" else _media_files_df(media)
+    files_df = (_media_files_df(media)
+                if _choose_media_strategy(media) == "direct" else None)
     if files_df is not None:
-        per_media = files_df.mapInPandas(kernel, schema)
-        if strategy == "direct+semi":
-            per_media = per_media.join(media.select("media_ref"),
-                                       "media_ref", "semi")
-        return per_media
+        return files_df.mapInPandas(kernel, schema)
     refs = spans.filter(F.col("kind") == "image").select("media_ref")
     return (media.join(refs, "media_ref", "semi")
             .select("media_ref", "format", "image")

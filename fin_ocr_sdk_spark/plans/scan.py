@@ -258,7 +258,9 @@ def scan_check(image_bytes: bytes, fmt: str,
 
     Never raises for a bad image: a decode failure, a missing line or
     any exception from the later steps (e.g. a 1-row image) is an
-    ``ok=False`` result, so one image never fails its task."""
+    ``ok=False`` result, so one image never fails its task.  The error
+    text starts with its reason class: ``decode:``, ``no_line:`` or
+    ``internal:``."""
     if templates is None:
         templates = get_default_templates()
     try:
@@ -269,7 +271,7 @@ def scan_check(image_bytes: bytes, fmt: str,
         band = get_micr_band(gray, cfg)
         line = find_micr_line(band, templates, cfg)
         if line is None:
-            return ScanResult(ok=False, error="micr line not found")
+            return ScanResult(ok=False, error="no_line: micr line not found")
         tr = translate_line(line, templates, cfg.max_translator_choices)
         info = parse_micr(tr.value)
         if not info.check_number and full_page_engine is not None:

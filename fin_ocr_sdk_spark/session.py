@@ -20,6 +20,19 @@ def _worker_pythonpath() -> str:
     return os.pathsep.join(p for p in (_PKG_PARENT, existing) if p)
 
 
+def pin_worker_threads() -> None:
+    """One BLAS/OpenMP thread per process: the scan stage runs one
+    python worker per core, so nested BLAS threading only thrashes
+    caches.  ``get_spark`` sets these before the JVM starts, so workers
+    inherit them; the scan kernels set them again at UDF entry, because
+    the driver contract may run them under a foreign SparkSession
+    (workers import numpy lazily, and OpenBLAS reads the env at library
+    load)."""
+    for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS",
+                "MKL_NUM_THREADS", "NUMEXPR_NUM_THREADS"):
+        os.environ.setdefault(var, "1")
+
+
 def get_spark(app: str = "fin-ocr-sdk-spark", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     """Session defaults chosen for the 100 TB design point, scaled to
@@ -40,11 +53,7 @@ def get_spark(app: str = "fin-ocr-sdk-spark", master: str | None = None,
       the interpreter's ``zipimporter.invalidate_caches`` re-reads the
       archive eagerly, as CPython 3.11.7's does.
     """
-    # one BLAS thread per python worker: the scan stage runs one worker
-    # per core, so nested BLAS threading only thrashes caches
-    for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS",
-                "MKL_NUM_THREADS", "NUMEXPR_NUM_THREADS"):
-        os.environ.setdefault(var, "1")
+    pin_worker_threads()
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or f"local[{cpus}]"
     shuffle = shuffle_partitions or cpus

@@ -518,12 +518,8 @@ def extract_pdf_text(data: bytes) -> "list[str]":
     streams: dict[int, bytes] = {}
     stream_heads: dict[int, bytes] = {}
     page_content: list[list[int]] = []
-    # `known` feeds only the xref absent-object consistency check; it
-    # must see headers of ANY generation (incremental updates write
-    # "N M obj" with M > 0) or a valid updated file fails as corrupt.
-    # The extraction walk below still targets generation-0 headers.
-    known: set[int] = {int(m.group(1))
-                       for m in _OBJ_HEAD_ANY_GEN_RE.finditer(data)}
+    known: set[int] = set()
+    skipped: list[tuple[int, int]] = []   # stream bodies the walk skips
     # object walk honoring /Length: stream BYTES are sliced by the
     # declared length, never by searching for 'endstream'/'endobj' —
     # compressed output can legally contain either byte sequence, and
@@ -559,6 +555,7 @@ def extract_pdf_text(data: bytes) -> "list[str]":
                     raise ValueError("unterminated PDF stream")
                 raw = data[ds:tail]
                 pos = tail + len(b"endstream")
+            skipped.append((ds, pos))
             if b"/FlateDecode" in head:
                 try:
                     raw = zlib.decompress(raw)
@@ -584,6 +581,17 @@ def extract_pdf_text(data: bytes) -> "list[str]":
             break
     if not page_content:
         raise ValueError("no pages in PDF")
+    # `known` feeds only the xref absent-object consistency check; it
+    # must see headers of ANY generation (incremental updates write
+    # "N M obj" with M > 0) or a valid updated file fails as corrupt.
+    # The extraction walk above still targets generation-0 headers.
+    # Headers count only outside the stream bodies the walk skipped: an
+    # "N 0 obj" inside a stream's bytes is data, not an object.
+    start = 0
+    for lo, hi in skipped + [(len(data), len(data))]:
+        known.update(int(m.group(1)) for m in
+                     _OBJ_HEAD_ANY_GEN_RE.finditer(data, start, lo))
+        start = hi
     _check_xref_stream(data, streams, stream_heads, known)
     # /Contents array semantics: one page's streams form a single
     # content stream when concatenated with intervening whitespace

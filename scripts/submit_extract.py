@@ -30,7 +30,9 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     ap.add_argument("--resumable", action="store_true",
                     help="commit per-partition lineage and resume from "
-                         "any prior committed run under --out")
+                         "any prior committed run under --out; the media "
+                         "table must be unfiltered (a bare read of "
+                         "media.parquet, as this script does)")
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     args = ap.parse_args()
 

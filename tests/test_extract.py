@@ -242,3 +242,37 @@ def test_pdf_incremental_update_generation_not_flagged_absent():
     assert re.search(rb"2 0 obj", blob)
     bumped = blob.replace(b"2 0 obj", b"2 1 obj", 1)  # same byte length
     assert extract_pdf_text(bumped) == ["hello world", "second page"]
+
+
+def test_pdf_header_inside_stream_body_is_not_an_object():
+    """An "N 0 obj" inside a stream's bytes is data: it must not satisfy
+    the xref check for an object the xref stream declares but the file
+    lacks (object 6 below exists only as text in a content stream)."""
+    import zlib
+
+    def obj(num: int, body: bytes) -> bytes:
+        return str(num).encode() + b" 0 obj\n" + body + b"\nendobj\n"
+
+    def stream(head: bytes, payload: bytes) -> bytes:
+        return (b"<< " + head + b" /Length " + str(len(payload)).encode()
+                + b" >>\nstream\n" + payload + b"\nendstream")
+
+    out = bytearray(b"%PDF-1.5\n")
+    offsets = {}
+    for num, body in (
+            (1, b"<< /Type /Catalog /Pages 2 0 R >>"),
+            (2, b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>"),
+            (3, b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>"),
+            (4, stream(b"", b"BT (hello) Tj ET % 6 0 obj"))):
+        offsets[num] = len(out)
+        out += obj(num, body)
+    xref_at = len(out)
+    entries = b"\x00" + bytes(4) + b"\xff\xff"           # 0: free
+    for num in range(1, 7):                              # 6: absent
+        entries += (b"\x01" + offsets.get(num, xref_at).to_bytes(4, "big")
+                    + bytes(2))
+    out += obj(5, stream(b"/Type /XRef /Size 7 /W [1 4 2] /Root 1 0 R "
+                         b"/Filter /FlateDecode", zlib.compress(entries)))
+    out += b"startxref\n" + str(xref_at).encode() + b"\n%%EOF\n"
+    with pytest.raises(ValueError, match="object 6 absent"):
+        extract_pdf_text(bytes(out))

@@ -137,3 +137,46 @@ def test_lineage_scan_keeps_its_tasks(spark, smoke_dir, tmp_path):
     scan_at = next(i for i, s in enumerate(lines) if "MapInPandas" in s)
     assert "Exchange SinglePartition" in lines[scan_at - 1]
     assert not any("Coalesce" in s for s in lines[:scan_at])
+
+
+def _assert_refused(spark, docs, media, out_dir):
+    """run_resumable_extract raises ValueError and writes nothing."""
+    with pytest.raises(ValueError, match="unfiltered file-backed"):
+        run_resumable_extract(spark, docs, media, out_dir)
+    assert not os.path.exists(os.path.join(out_dir, "spans"))
+    assert committed_lineage(spark, out_dir) is None
+
+
+def test_resume_refuses_derived_media(spark, smoke_dir, tmp_path):
+    """Base64-on-parquet media (decode_base64_media over a parquet
+    table): the part files hold data-URL text, not the decoded image
+    and format columns, so whole-file reads cannot scan them."""
+    import base64
+
+    from fin_ocr_sdk_spark.sources.base64_source import decode_base64_media
+
+    raw = pd.read_parquet(os.path.join(smoke_dir, "media.parquet"))
+    b64_pq = str(tmp_path / "b64_media.parquet")
+    pd.DataFrame({
+        "media_ref": raw["media_ref"],
+        "image_b64": [
+            f"data:image/{fmt};base64," + base64.b64encode(img).decode()
+            for fmt, img in zip(raw["format"], raw["image"])],
+    }).to_parquet(b64_pq)
+    docs = spark.read.parquet(os.path.join(smoke_dir, "documents.parquet"))
+    media = decode_base64_media(spark.read.parquet(b64_pq))
+    _assert_refused(spark, docs, media, str(tmp_path / "out"))
+
+
+def test_resume_refuses_filtered_media(spark, smoke_dir, tmp_path):
+    """The 16 smoke rows packed into 2 files and filtered to 2 refs:
+    whole-file reads would scan and emit all 16 rows' spans."""
+    from pyspark.sql import functions as F
+
+    packed_dir = str(tmp_path / "packed_media")
+    (spark.read.parquet(os.path.join(smoke_dir, "media.parquet"))
+     .repartition(2).write.parquet(packed_dir))
+    docs = spark.read.parquet(os.path.join(smoke_dir, "documents.parquet"))
+    media = spark.read.parquet(packed_dir).filter(
+        F.col("media_ref").isin("img-00000000", "img-00000001"))
+    _assert_refused(spark, docs, media, str(tmp_path / "out"))

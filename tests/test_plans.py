@@ -153,6 +153,6 @@ def test_plan_sniff_failure_warns_once():
             assert P._is_bare_file_scan(Boom()) is False
         with w.catch_warnings():
             w.simplefilter("error")  # second failure must stay silent
-            assert P._is_filter_over_file_scan(Boom()) is False
+            assert P._is_bare_file_scan(Boom()) is False
     finally:
         P._SNIFF_WARNED = old

@@ -68,7 +68,7 @@ def test_tiny_images_are_scan_errors_not_exceptions(shape, fmt):
     data = codecs.encode_image(np.full(shape, 200, np.uint8), fmt)
     res = scan_check(data, fmt, get_default_templates())
     assert not res.ok
-    assert (res.error == "micr line not found"
+    assert (res.error == "no_line: micr line not found"
             or res.error.startswith("internal: ")), res.error
 
 

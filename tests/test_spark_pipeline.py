@@ -45,9 +45,9 @@ def test_no_micr_errors(spark, smoke_dir):
 
 
 def test_filtered_media_respected_by_direct_reads(spark, smoke_dir):
-    """Regression: the direct file-read strategy must honor relational
-    filters on the media DataFrame (inputFiles() is pre-filter, so the
-    semi-join on media_ref re-applies them)."""
+    """Regression: relational filters on the media DataFrame are
+    honored (inputFiles() is pre-filter, so a filtered plan takes the
+    arrow strategy instead of reading the part files directly)."""
     from pyspark.sql import functions as F
     docs = spark.read.parquet(os.path.join(smoke_dir, "documents.parquet"))
     media = (spark.read.parquet(os.path.join(smoke_dir, "media.parquet"))
@@ -67,75 +67,52 @@ def test_filtered_media_respected_by_direct_reads(spark, smoke_dir):
 
 def test_media_strategy_auto_selection(spark, smoke_dir, tmp_path):
     """The pipeline picks the media scan strategy from the media plan:
-    bare scan → direct (no corrective semi-join); lightly filtered →
-    direct + semi-join; heavily filtered WITHIN the surviving files →
-    arrow join path (so only surviving rows are ever decoded — no
-    full-file over-scan).  A filter that removes whole files stays on
-    the direct path: the post-filter manifest already skips them."""
+    direct for a bare file scan, arrow for anything else — filtered
+    (light, whole-file aligned or heavy within files), derived or
+    in-memory media."""
     from pyspark.sql import functions as F
 
     from fin_ocr_sdk_spark.plans.pipeline import _choose_media_strategy
     media = spark.read.parquet(os.path.join(smoke_dir, "media.parquet"))
     assert _choose_media_strategy(media) == "direct"
     light = media.filter(F.col("media_ref") >= "img-00000001")  # 15/16
-    assert _choose_media_strategy(light) == "direct+semi"
-    # whole-file elimination (1 row per smoke part file): direct reads
-    # of the 2 surviving files have zero over-scan — keep direct+semi
+    # whole-file elimination (1 row per smoke part file)
     aligned = media.filter(F.col("media_ref") < "img-00000002")  # 2/16
-    assert _choose_media_strategy(aligned) == "direct+semi"
-    # within-file selectivity: pack all 16 rows into 2 files, keep 2
-    # rows — the direct path would decode 8x the survivors → arrow
+    # within-file selectivity: all 16 rows packed into 2 files, keep 2
     packed_dir = str(tmp_path / "packed_media")
     media.repartition(2).write.parquet(packed_dir)
-    packed = spark.read.parquet(packed_dir)
-    heavy = packed.filter(F.col("media_ref").isin(
+    heavy = spark.read.parquet(packed_dir).filter(F.col("media_ref").isin(
         "img-00000000", "img-00000001"))
-    assert _choose_media_strategy(heavy) == "arrow"
+    derived = media.withColumn("format", F.lower("format"))
+    inmem = spark.createDataFrame(
+        [("img-x", "png", b"y")],
+        "media_ref string, format string, image binary")
+    for df in (light, aligned, heavy, derived, inmem):
+        assert _choose_media_strategy(df) == "arrow"
 
 
-def test_strategy_probe_reads_bounded_files(spark, smoke_dir):
-    """The survivor-fraction probe must never scan the whole table:
-    its count job reads at most _PROBE_FILES part files (the
-    _metadata.file_path IN-filter prunes the rest at the file index),
-    so choosing a strategy on a 100 TB table costs O(1) files."""
+def test_heavily_filtered_media_same_result_both_paths(spark, smoke_dir):
+    """A heavily filtered media table (2 of 16 rows) gives the golden
+    spans of the kept media and no micr:* spans for the dropped media;
+    every doc's order stays dense."""
     from pyspark.sql import functions as F
 
-    from fin_ocr_sdk_spark.plans import pipeline as P
-
-    media = (spark.read.parquet(os.path.join(smoke_dir, "media.parquet"))
-             .filter(F.col("media_ref") >= "img-00000001"))
-    sample = [r["p"] for r in
-              (media.select(F.col("_metadata.file_path").alias("p"))
-               .distinct().limit(P._PROBE_FILES).collect())]
-    assert 0 < len(sample) <= P._PROBE_FILES
-    probe = media.filter(F.col("_metadata.file_path").isin(sample))
-    probe.collect()
-    leaf = (probe._jdf.queryExecution().executedPlan()
-            .collectLeaves().apply(0))
-    n_files = leaf.metrics().get("numFiles").get().value()
-    assert n_files <= P._PROBE_FILES  # pruned: 4 of 16 smoke files
-
-
-def test_heavily_filtered_media_same_result_both_paths(spark, smoke_dir,
-                                                       monkeypatch):
-    """The auto strategy (direct+semi: the filter drops whole smoke
-    files) and the forced arrow strategy agree on a heavily filtered
-    media table."""
-    from pyspark.sql import functions as F
-
-    from fin_ocr_sdk_spark.plans import pipeline as P
     docs = spark.read.parquet(os.path.join(smoke_dir, "documents.parquet"))
+    kept = ("img-00000000", "img-00000001")
     media = (spark.read.parquet(os.path.join(smoke_dir, "media.parquet"))
              .filter(F.col("media_ref") < "img-00000002"))
     cols = ["doc_id", "kind", "text", "media_ref", "order"]
-    auto = (extract_spans(docs, media).toPandas()[cols]
-            .sort_values(["doc_id", "order"]).reset_index(drop=True))
-    assert P._choose_media_strategy(media) == "direct+semi"
-    monkeypatch.setattr(P, "_choose_media_strategy", lambda m: "arrow")
-    forced = (extract_spans(docs, media).toPandas()[cols]
-              .sort_values(["doc_id", "order"]).reset_index(drop=True))
-    pd.testing.assert_frame_equal(auto, forced)
-    assert (auto["kind"] == "micr:line").sum() == 2
+    got = (extract_spans(docs, media).toPandas()[cols]
+           .sort_values(["doc_id", "order"]).reset_index(drop=True))
+    exp = pd.read_parquet(os.path.join(smoke_dir, "expected_spans.parquet"))
+    exp = exp[~(exp["kind"].str.startswith("micr:")
+                & ~exp["media_ref"].isin(kept))]
+    exp = exp.sort_values(["doc_id", "order"]).reset_index(drop=True)
+    exp["order"] = exp.groupby("doc_id").cumcount()
+    got["order"] = got["order"].astype("int32")
+    exp["order"] = exp["order"].astype("int32")
+    pd.testing.assert_frame_equal(got, exp[cols])
+    assert (got["kind"] == "micr:line").sum() == 2
 
 
 def test_base64_media_source_end_to_end(spark, smoke_dir, tmp_path):
@@ -267,33 +244,6 @@ def test_media_manifest_shape(spark, smoke_dir):
     # in-memory relation: no _metadata -> None
     inmem = spark.createDataFrame([("x", b"y")], "media_ref string, image binary")
     assert media_manifest(inmem) is None
-
-
-def test_manifest_distributed_path_same_spans(spark, smoke_dir,
-                                              monkeypatch):
-    """Manifests past _MANIFEST_DRIVER_CAP build slice units entirely
-    executor-side (explode + hash repartition — no driver collect of
-    the file list).  Force that path with a cap of 0 and assert the
-    scan output is identical to the collected-LPT path."""
-    from fin_ocr_sdk_spark.plans import pipeline as P
-
-    docs = spark.read.parquet(os.path.join(smoke_dir, "documents.parquet"))
-    media = spark.read.parquet(os.path.join(smoke_dir, "media.parquet"))
-    base = (extract_spans(docs, media).toPandas()
-            .sort_values(["doc_id", "order"]).reset_index(drop=True))
-    monkeypatch.setattr(P, "_MANIFEST_DRIVER_CAP", 0)
-    # unit table contract holds on the distributed path
-    units = P._media_files_df(media).toPandas()
-    assert set(units.columns) == {"path", "slice", "n_slices"}
-    assert len(units) >= 16                      # >= one unit per file
-    assert (units.groupby("path")["n_slices"].nunique() == 1).all()
-    per_file = units.groupby("path")["slice"].agg(["min", "max", "count"])
-    assert (per_file["min"] == 0).all()
-    assert (per_file["max"] == per_file["count"] - 1).all()
-    got = (extract_spans(docs, media).toPandas()
-           .sort_values(["doc_id", "order"]).reset_index(drop=True))
-    cols = ["doc_id", "kind", "text", "media_ref", "order"]
-    pd.testing.assert_frame_equal(got[cols], base[cols])
 
 
 def test_tiny_images_yield_one_error_span_each(spark, tmp_path,
