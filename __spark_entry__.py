@@ -448,8 +448,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Portable hashing shared by the dedup family: polynomial fold over
 # code points mod a prime — computable identically in DuckDB SQL (see
 # the oracle twins), vectorized in NumPy in
-# fin_ocr_sdk_spark/functions/minhash.py (shared with the streaming
-# near-dup operator so batch and stream flag the same pairs).
+# fin_ocr_sdk_spark/functions/minhash.py.
 from fin_ocr_sdk_spark.functions import minhash as _mh  # noqa: E402
 
 _HASH_P = _mh.HASH_P

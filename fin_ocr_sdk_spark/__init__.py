@@ -6,12 +6,16 @@ analysis, multimodal plumbing) such an engine needs at 100 TB scale.
 
 Layout
 ------
-- ``functions``  pure scalar/string/geometry functions (MICR grammar, rects)
+- ``functions``  pure scalar/string/geometry functions (MICR grammar,
+                 rects, MinHash/SimHash arithmetic)
 - ``operators``  NumPy image kernels, segmentation, classification
 - ``sources``    image codecs, fixture synthesis, table IO
 - ``plans``      pipeline assembly, lineage/resume, partitioning strategy
-- ``streaming``  Structured Streaming analog of the reference's video loop
-- ``datapipe``   training-data pipeline ops (dedup / ANN / text quality)
+- ``streaming``  the video loop: Structured Streaming analog of the
+                 reference's frame-pull capture loop
+
+The training-data queries (dedup, ANN, text quality) are DataFrame
+plans in the driver module ``__spark_entry__``.
 
 Everything image-related runs inside vectorized pandas/Arrow UDFs over
 NumPy tensors — never per-row Python in the Spark hot path.

@@ -1,101 +1,23 @@
 """Engine configuration — reference: src/config.ts.
 
-A frozen-ish dataclass of the reference's ~40 scalar knobs with the same
-defaults and the same ``OCR_``-prefixed environment-variable mapping
-(snake-case env name → field).  On Spark the instance is broadcast to
-executors once per job (it is tiny and immutable in practice).
+The eight of the reference's scalar knobs that the scan reads, with the
+reference's defaults.  ``plans/scan.py`` holds one default instance as
+a module global, so each python worker builds it once at import; a
+caller may pass its own instance to the per-image entry points.
 """
 
 from __future__ import annotations
 
-import dataclasses
 from dataclasses import dataclass
 
 
 @dataclass
 class Config:
-    avg_char_height: int = 24
-    avg_char_width: int = 19
-    avg_space_between_chars: int = 7
-    clean_dimension: int = 2
     clean_height: int = 2
     clean_width: int = 2
-    font: str = "micr_e13b"
-    log_vertices_of_overlaps: bool = False
-    min_char_area: int = 240
-    min_char_area_fraction: float = 0.4
-    min_char_area_sum: int = 75
-    min_contour_area: int = 20
-    min_contour_height: int = 7
-    min_contour_width: int = 3
-    min_multi_contour_char_height: int = 16
-    min_multi_contour_char_width: int = 14
-    min_single_contour_char_height: int = 23
-    min_single_contour_char_width: int = 10
     max_char_height: int = 30
     max_char_width: int = 28
-    max_char_area: int = 30 * 28
-    max_contours_per_char: int = 3
     max_space_between_chars_of_word: int = 15
-    max_space_between_contours_of_same_char: int = 8
-    max_space_between_words: int = 200
     max_translator_choices: int = 3
-    show_matches: bool = False
-    tesseract_black_on_white: bool = False
-    tesseract_psm: str = "13"
-    translators: str = "opencv"  # tesseract engine is optional/external
-    y_line_pad: int = 5
-    debug_image_dir: str = ""
-    log_level: str = "info"
-    slow_request_ms: int = 0
-    hung_request_ms: int = 0
-    slow_or_hung_request_log_level: str = "debug"
     overlap_correction: bool = True
     overlap_padding: int = 5
-
-    @classmethod
-    def from_env(cls, env: dict[str, str]) -> "Config":
-        cfg = cls()
-        cfg.set_env(env)
-        return cfg
-
-    def set_env(self, env: dict[str, str]) -> None:
-        """Apply ``OCR_<SNAKE_NAME>`` environment overrides.
-
-        Unknown names and untypeable values raise, matching the
-        reference's strictness (src/config.ts:106-115).
-        """
-        prefix = "OCR_"
-        fields = {f.name: f for f in dataclasses.fields(self)}
-        for key, raw in env.items():
-            if not key.startswith(prefix) or len(key) <= len(prefix):
-                continue
-            name = key[len(prefix):].lower()
-            if name not in fields:
-                raise ValueError(f"'{key}' is an invalid environment variable name")
-            cur = getattr(self, name)
-            val: object = raw
-            if isinstance(cur, bool):
-                low = str(raw).lower()
-                if low == "true":
-                    val = True
-                elif low == "false":
-                    val = False
-                else:
-                    raise ValueError(
-                        f"'{key}' must have value 'true' or 'false' but found '{raw}'")
-            elif isinstance(cur, int) and not isinstance(cur, bool):
-                val = int(float(raw))
-            elif isinstance(cur, float):
-                val = float(raw)
-            setattr(self, name, val)
-
-
-def debug_requested(categories, category: str) -> bool:
-    """Util.debug (src/util.ts:53-58): a request's debug list enables a
-    category when it contains "*" or the category itself; a missing /
-    empty list disables everything.  As a Spark predicate this is
-    F.array_contains(debug, "*") | F.array_contains(debug, category)."""
-    if not categories:
-        return False
-    return "*" in categories or category in categories

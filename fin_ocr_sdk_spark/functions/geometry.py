@@ -116,19 +116,6 @@ def minmax_intersects(r1: MinMax, r2: MinMax) -> bool:
     return not (r1[0] > r2[1] or r1[1] < r2[0])
 
 
-def fraction_intersects(r1: MinMax, r2: MinMax) -> float:
-    """Fraction of interval r2 lying inside r1, in [0, 1]."""
-    if not minmax_intersects(r1, r2):
-        return 0.0
-    outside = 0.0
-    if r2[0] < r1[0]:
-        outside += r1[0] - r2[0]
-    if r2[1] > r1[1]:
-        outside += r2[1] - r1[1]
-    total = r2[1] - r2[0]
-    return (total - outside) / total
-
-
 def pad_minmax(mm: MinMax, pad: float, max_max: float) -> MinMax:
     return (max(0, mm[0] - pad), min(max_max, mm[1] + pad))
 

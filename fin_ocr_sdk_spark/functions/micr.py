@@ -55,10 +55,6 @@ def remove_spaces(s: str | None) -> str:
     return _WHITESPACE.sub("", s)
 
 
-def is_numeric(s: str) -> bool:
-    return re.fullmatch(r"-?\d+", s) is not None
-
-
 def normalize_special_symbols(text: str) -> str:
     """ABCD → TUAD alphabet fix, applied only when a 'C' is present.
 
@@ -172,28 +168,3 @@ def _tokens(line: str):
             if c2 in _MICR_ALPHABET:  # a digit
                 digits.append(c2)
         yield ("number", "".join(digits))
-
-
-def get_index_of_first_containing(strs: list[str], needle: str) -> int:
-    for i, s in enumerate(strs):
-        if needle in s:
-            return i
-    return -1
-
-
-def check_number_from_full_page(text: str) -> str | None:
-    """Fallback check-number search over full-page OCR text.
-
-    Reference: src/check.ts:162-188 — find the line containing "Check No";
-    on the NEXT line take parts[2] if numeric else parts[1].
-    """
-    lines = text.split("\n")
-    idx = get_index_of_first_containing(lines, "Check No")
-    if idx < 0 or idx + 1 >= len(lines):
-        return None
-    parts = lines[idx + 1].split(" ")
-    if len(parts) > 2 and is_numeric(parts[2]):
-        return parts[2]
-    if len(parts) > 1:
-        return parts[1]
-    return None

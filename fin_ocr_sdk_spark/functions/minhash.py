@@ -1,9 +1,7 @@
-"""Portable MinHash/LSH band signatures and the one band kernel
-(``band_rows``) — shared by the batch dedup query
-(``__spark_entry__.q_minhash_dedup``) and the streaming near-dup
-operator (``streaming/neardup.py``), so both paths flag the same
-near-duplicate pairs and the DuckDB oracle arithmetic stays the single
-source of truth.
+"""Portable MinHash/LSH band signatures and the band kernel
+(``band_rows``) of the batch dedup query
+(``__spark_entry__.q_minhash_dedup``), whose DuckDB oracle twin does the
+same arithmetic in SQL.
 
 All hashes are polynomial folds over code points mod a prime — plain
 integer arithmetic computable identically in SQL (the oracle twins in
@@ -144,9 +142,8 @@ def band_signatures(texts: list) -> "tuple[list[int], np.ndarray]":
 def band_rows(batches):
     """mapInPandas kernel: (doc_id, text) batches → one
     (doc_id, band, sig) row per band of every document that has at
-    least one shingle.  The batch ``minhash_dedup`` query and the
-    streaming near-dup operator both run it, so they see the same
-    signatures; ``doc_id`` keeps whatever type the input carries."""
+    least one shingle; ``doc_id`` keeps whatever type the input
+    carries."""
     import pandas as pd
     for pdf in batches:
         keep, sig = band_signatures(list(pdf["text"]))

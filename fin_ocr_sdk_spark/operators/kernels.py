@@ -5,7 +5,6 @@ OpenCV's documented math so behavior matches the reference pipeline
 (/root/reference/src/image.ts) on equivalent inputs:
 
   grayscale           src/image.ts:236-247  (no-op on 1-channel)
-  bitwise_not         src/image.ts:227-234
   gaussian_blur       src/image.ts:258-267  (sigma derived from ksize)
   otsu threshold      src/image.ts:269-278  (THRESH_BINARY_INV+OTSU)
   adaptive threshold  src/image.ts:280-290  (GAUSSIAN_C, INV, block 19, C 1)
@@ -45,10 +44,6 @@ def grayscale(img: np.ndarray) -> np.ndarray:
         return img
     w = np.array([0.299, 0.587, 0.114])
     return np.clip(np.round(img[..., :3].astype(np.float64) @ w), 0, 255).astype(np.uint8)
-
-
-def bitwise_not(img: np.ndarray) -> np.ndarray:
-    return (255 - img.astype(np.int16)).astype(np.uint8)
 
 
 # -------------------------------------------------------- gaussian blur
@@ -942,14 +937,3 @@ def _run_lengths(mask: np.ndarray, axis: int) -> np.ndarray:
 def is_white_background(img: np.ndarray, sample_rate: int = 10) -> bool:
     """Mean of every-`sample_rate`-th pixel > 128 (src/check.ts:246-264)."""
     return float(img[::sample_rate, ::sample_rate].mean()) > 128
-
-
-def crop_fraction(img: np.ndarray,
-                  begin_h: float = 0.0, end_h: float = 1.0,
-                  begin_w: float = 0.0, end_w: float = 1.0) -> np.ndarray:
-    """Fractional crop (src/image.ts:184-205); default args keep all.
-    The MICR path uses begin_h=0.60 (keep the bottom 40% band)."""
-    h, w = img.shape[:2]
-    y0, y1 = int(round(h * begin_h)), int(round(h * end_h))
-    x0, x1 = int(round(w * begin_w)), int(round(w * end_w))
-    return img[y0:y1, x0:x1]

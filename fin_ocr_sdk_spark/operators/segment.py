@@ -23,7 +23,7 @@ JS Math.round (half-up) is used for score/size rounding parity.
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 

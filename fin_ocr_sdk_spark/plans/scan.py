@@ -23,7 +23,7 @@ from ..config import Config
 from ..functions.micr import CheckInfo, parse_micr
 from ..operators import kernels as K
 from ..operators.classify import TemplateSet, translate_line
-from ..operators.segment import Line, find_micr_line_info, jround
+from ..operators.segment import Line, find_micr_line_info
 from ..sources import codecs
 
 _DEFAULT_CFG = Config()
@@ -247,14 +247,12 @@ def perform_overlap_correction(line: Line, cfg: Config) -> np.ndarray:
 
 def scan_check(image_bytes: bytes, fmt: str,
                templates: TemplateSet | None = None,
-               cfg: Config = _DEFAULT_CFG,
-               full_page_engine=None) -> ScanResult:
-    """Full Check.scan for one image (src/check.ts:88-114), opencv
-    engine only (the tesseract engine is external and default-off).
-    ``full_page_engine`` (anything with translate_image(gray) -> str)
-    enables the full-page check-number fallback (src/check.ts:129-177);
-    None — the default, and this environment's reality — keeps the
-    reference's disabled-translator behavior.
+               cfg: Config = _DEFAULT_CFG) -> ScanResult:
+    """Full Check.scan for one image (src/check.ts:88-114) with the
+    template-matching translator only: the reference's optional
+    tesseract translator and its full-page check-number fallback
+    (src/check.ts:129-177) are not built, so a line without a check
+    number keeps an empty ``check_number``.
 
     Never raises for a bad image: a decode failure, a missing line or
     any exception from the later steps (e.g. a 1-row image) is an
@@ -274,10 +272,6 @@ def scan_check(image_bytes: bytes, fmt: str,
             return ScanResult(ok=False, error="no_line: micr line not found")
         tr = translate_line(line, templates, cfg.max_translator_choices)
         info = parse_micr(tr.value)
-        if not info.check_number and full_page_engine is not None:
-            from .translators import search_check_number_if_missing
-            info = search_check_number_if_missing(
-                {"opencv": info}, full_page_engine, gray)["opencv"]
     except Exception as e:  # noqa: BLE001 — the per-image boundary
         return ScanResult(ok=False,
                           error=f"internal: {type(e).__name__}: {e}")

@@ -196,34 +196,6 @@ def test_embedding_near_dup_banding_recall(spark, tmp_path_factory):
     assert rows[(0, 1)] == int(np.floor(num / den * 10000 + 0.5))
 
 
-def test_streaming_stateful_dedup(spark, tmp_path):
-    """applyInPandasWithState exact-dedup across micro-batches: state
-    carries between batches within a run AND across runs through the
-    checkpoint; only first occurrences are emitted."""
-    from fin_ocr_sdk_spark.streaming.dedup import run_dedup_drain
-
-    ingest = tmp_path / "ingest"
-    ingest.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-
-    def write_part(name, rows):
-        _write_stream_part(ingest, name, rows)  # pins arrival order
-
-    write_part("part-000.parquet", [(1, "alpha"), (2, "beta"),
-                                    (3, "alpha")])
-    write_part("part-001.parquet", [(4, "beta"), (5, "gamma")])
-    rows = run_dedup_drain(spark, str(ingest), ckpt,
-                           max_files_per_trigger=1)
-    assert sorted(r["doc_id"] for r in rows) == [1, 2, 5]
-
-    # resume: a new file with one dup and one new text; the checkpoint
-    # restores state so 'alpha' stays suppressed
-    write_part("part-002.parquet", [(6, "alpha"), (7, "delta")])
-    rows2 = run_dedup_drain(spark, str(ingest), ckpt,
-                            max_files_per_trigger=1)
-    assert sorted(r["doc_id"] for r in rows2) == [7]
-
-
 def test_boilerplate_strip_semantics(spark):
     """Main-content extraction: template header/footer/nav spans (>=50%
     document frequency) are stripped, unique prose survives with a
@@ -236,145 +208,6 @@ def test_boilerplate_strip_semantics(spark):
     assert len(out) > 0
     one = out[out.doc_id == "web-00000"].sort_values("order")
     assert list(one["order"]) == list(range(len(one)))
-
-
-# ------------------------------------------------- streaming near-dup
-
-_ND_BASE = ("the quick brown fox jumps over the lazy dog while seventeen "
-            "astronauts measure gravity near the old stone bridge at dawn")
-_ND_NEAR = _ND_BASE + " quietly"   # 3 of 4 bands collide (verified below)
-_ND_OTHER = ("completely different words about spark partitions and "
-             "shuffle boundaries in large scale distributed aggregation "
-             "pipelines today")
-
-
-def _write_stream_part(ingest, name, rows):
-    """Write an ingest part with a strictly increasing mtime derived
-    from its part number: Spark's FileStreamSource orders files by
-    modification time, and parts written within one clock tick would
-    otherwise arrive in ARBITRARY order — the tests pin arrival order
-    because first-arrival-wins is exactly the semantics under test."""
-    import time
-    path = str(ingest / name)
-    pq.write_table(pa.table({
-        "doc_id": pa.array([r[0] for r in rows], type=pa.int64()),
-        "text": [r[1] for r in rows],
-    }), path)
-    t = time.time() + 100 * int(name.split("-")[1].split(".")[0])
-    os.utime(path, (t, t))
-
-
-def test_streaming_neardup_cross_batch_and_resume(spark, tmp_path):
-    """Minhash-band state across micro-batches: a document arriving in
-    a later batch (and a later RUN, through the checkpoint) is flagged
-    against the anchor that first registered the band signature — the
-    streaming twin of q_minhash_dedup, same portable hashes."""
-    from fin_ocr_sdk_spark.functions.minhash import band_signatures
-    from fin_ocr_sdk_spark.streaming.neardup import run_neardup_drain
-
-    # precondition pinning the corpus: near shares >=1 band with base,
-    # other shares none (all-deterministic portable hashes)
-    _, sig = band_signatures([_ND_BASE, _ND_NEAR, _ND_OTHER])
-    assert (sig[0] == sig[1]).sum() >= 1
-    assert (sig[0] == sig[2]).sum() == 0
-
-    ingest = tmp_path / "ingest"
-    ingest.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    _write_stream_part(ingest, "part-000.parquet", [(1, _ND_BASE),
-                                                    (2, _ND_OTHER)])
-    _write_stream_part(ingest, "part-001.parquet", [(3, _ND_NEAR)])
-    rows = {r["doc_id"]: r for r in
-            run_neardup_drain(spark, str(ingest), ckpt,
-                              max_files_per_trigger=1)}
-    assert not rows[1]["is_near_dup"]          # first occurrence
-    assert not rows[2]["is_near_dup"]          # unrelated
-    assert rows[3]["is_near_dup"]              # cross-BATCH near-dup
-    assert rows[3]["anchor_doc_id"] == 1
-
-    # resume: a new run over a grown dir; checkpoint restores the
-    # band-anchor state so the new near-dup anchors to doc 1
-    _write_stream_part(ingest, "part-002.parquet",
-                       [(4, _ND_BASE), (5, "fresh unrelated text with "
-                                           "enough words for shingles")])
-    rows2 = {r["doc_id"]: r for r in
-             run_neardup_drain(spark, str(ingest), ckpt,
-                               max_files_per_trigger=1)}
-    assert set(rows2) == {4, 5}                # old batches not reread
-    assert rows2[4]["is_near_dup"]             # cross-RUN near-dup
-    assert rows2[4]["anchor_doc_id"] == 1
-    assert not rows2[5]["is_near_dup"]
-
-
-def test_streaming_neardup_matches_batch_pairs(spark, tmp_path):
-    """Batch/stream parity: every (anchor, doc) pair the stream flags
-    is a pair the batch q_minhash_dedup emits on the same corpus."""
-    from fin_ocr_sdk_spark.streaming.neardup import run_neardup_drain
-
-    texts = [_ND_BASE, _ND_OTHER, _ND_NEAR, _ND_BASE + " tonight"]
-    ingest = tmp_path / "ingest"
-    ingest.mkdir()
-    _write_stream_part(ingest, "part-000.parquet",
-                       list(enumerate(texts)))
-    streamed = run_neardup_drain(spark, str(ingest), str(tmp_path / "ck"),
-                                 max_files_per_trigger=1)
-    stream_pairs = {(r["anchor_doc_id"], r["doc_id"]) for r in streamed
-                    if r["is_near_dup"]}
-
-    batch_dir = str(tmp_path / "batch")
-    os.makedirs(batch_dir)
-    pq.write_table(pa.table({
-        "doc_id": pa.array(range(len(texts)), type=pa.int64()),
-        "text": texts,
-    }), os.path.join(batch_dir, "documents.parquet"))
-    batch_pairs = {(r.doc_a, r.doc_b) for r in
-                   m.q_minhash_dedup(spark, batch_dir).collect()}
-    assert stream_pairs  # corpus constructed to contain near-dups
-    assert stream_pairs <= batch_pairs
-    # every batch-flagged doc_b is flagged by the stream too
-    assert {b for _, b in batch_pairs} == {b for _, b in stream_pairs}
-
-
-def test_streaming_dedup_parquet_sink_resume(spark, tmp_path):
-    """Production file sink for the stateful dedup: append-mode parquet
-    output, no driver collect; a second run over a grown ingest dir
-    resumes from the checkpoint and appends only new first
-    occurrences."""
-    from fin_ocr_sdk_spark.streaming.dedup import run_dedup_to_parquet
-
-    ingest = tmp_path / "ingest"
-    ingest.mkdir()
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    _write_stream_part(ingest, "part-000.parquet",
-                       [(1, "alpha"), (2, "beta"), (3, "alpha")])
-    _write_stream_part(ingest, "part-001.parquet",
-                       [(4, "beta"), (5, "gamma")])
-    run_dedup_to_parquet(spark, str(ingest), out_dir, ckpt,
-                         max_files_per_trigger=1)
-    got = spark.read.parquet(out_dir)
-    assert sorted(r.doc_id for r in got.collect()) == [1, 2, 5]
-
-    _write_stream_part(ingest, "part-002.parquet",
-                       [(6, "alpha"), (7, "delta")])
-    run_dedup_to_parquet(spark, str(ingest), out_dir, ckpt,
-                         max_files_per_trigger=1)
-    got2 = spark.read.parquet(out_dir)
-    assert sorted(r.doc_id for r in got2.collect()) == [1, 2, 5, 7]
-
-
-def test_streaming_dedup_null_text(spark, tmp_path):
-    """NULL text rows share one sentinel digest (first occurrence kept)
-    and do NOT collide with a document whose text is literally 'None'."""
-    from fin_ocr_sdk_spark.streaming.dedup import run_dedup_drain
-
-    ingest = tmp_path / "ingest"
-    ingest.mkdir()
-    _write_stream_part(ingest, "part-000.parquet",
-                       [(1, None), (2, "None"), (3, None)])
-    rows = run_dedup_drain(spark, str(ingest), str(tmp_path / "ck"),
-                           max_files_per_trigger=1)
-    assert sorted(r["doc_id"] for r in rows) == [1, 2]
 
 
 def test_ann_recall_floor(spark):
@@ -403,24 +236,3 @@ def test_lsh_neardup_recall_floor(spark, tmp_path_factory):
              for r in m.q_embedding_near_dup(spark, d).collect()}
     planted = {(i, i + 20) for i in range(20)}
     assert planted <= pairs                   # recall 1.0 on planted set
-
-
-def test_streaming_neardup_parquet_sink(spark, tmp_path):
-    """Append-mode parquet sink for the streaming near-dup: the match
-    rows land in the table without a driver collect, and the per-doc
-    verdict derived from them matches the drain helper's."""
-    from fin_ocr_sdk_spark.streaming.neardup import run_neardup_to_parquet
-
-    ingest = tmp_path / "ingest"
-    ingest.mkdir()
-    out_dir = str(tmp_path / "out")
-    _write_stream_part(ingest, "part-000.parquet", [(1, _ND_BASE),
-                                                    (2, _ND_OTHER)])
-    _write_stream_part(ingest, "part-001.parquet", [(3, _ND_NEAR)])
-    run_neardup_to_parquet(spark, str(ingest), out_dir,
-                           str(tmp_path / "ck"), max_files_per_trigger=1)
-    rows = spark.read.parquet(out_dir).collect()
-    flagged = {r.doc_id for r in rows if r.anchor_doc_id != r.doc_id}
-    assert flagged == {3}
-    anchors = {r.anchor_doc_id for r in rows if r.doc_id == 3}
-    assert 1 in anchors

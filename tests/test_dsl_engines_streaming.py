@@ -1,187 +1,14 @@
-"""Scanner action DSL, translator registry, supervised correction, and
-the Structured-Streaming video-loop analog."""
-
-import os
-import shutil
+"""Persisted template corrections and the Structured-Streaming
+video-loop analog."""
 
 import numpy as np
 import pytest
 
-from fin_ocr_sdk_spark.config import Config
-from fin_ocr_sdk_spark.operators import kernels as K
-from fin_ocr_sdk_spark.operators.templates import render_glyph
 from fin_ocr_sdk_spark.plans.classify_learn import learn_char
 from fin_ocr_sdk_spark.plans.scan import get_default_templates
-from fin_ocr_sdk_spark.plans.scanner_dsl import (DigitStripScanner, Scanner)
-from fin_ocr_sdk_spark.plans.translators import (TesseractEngine,
-                                                 build_engines,
-                                                 translate_all)
 
 
-# ------------------------------------------------------------ DSL
-
-def test_scanner_validation_errors():
-    with pytest.raises(ValueError, match="not a valid action type"):
-        Scanner([{"type": "sharpen"}])
-    with pytest.raises(ValueError, match="unknown property"):
-        Scanner([{"type": "blur", "radius": 3}])
-    # valid specs construct fine; types are case-insensitive at scan
-    Scanner([{"type": "gray"}, {"type": "blur", "dimension": 7}])
-
-
-def test_scanner_executes_pipeline():
-    img = np.full((60, 80), 220, dtype=np.uint8)
-    img[20:40, 10:70] = 30
-    s = Scanner([{"type": "gray"}, {"type": "blur", "dimension": 3},
-                 {"type": "threshold"}])
-    out = s.scan(img)
-    assert out.shape == img.shape
-    assert out[30, 40] == 255  # dark block became ink
-    assert out[5, 5] == 0
-
-
-def test_scanner_crop_and_invert():
-    img = np.arange(100, dtype=np.uint8).reshape(10, 10)
-    s = Scanner([{"type": "crop", "beginHeight": 0.5},
-                 {"type": "invert"}])
-    out = s.scan(img)
-    assert out.shape == (5, 10)
-    assert out[0, 0] == 255 - 50
-
-
-def test_digit_strip_scanner():
-    """CardScanner analog: a strip of digits on paper, no MICR line."""
-    strip = np.full((80, 400), 235, dtype=np.uint8)
-    x = 20
-    for ch in "40123":
-        g = render_glyph(ch)
-        strip[26:26 + g.shape[0], x:x + g.shape[1]][g > 0] = 20
-        x += g.shape[1] + 8
-    scanner = DigitStripScanner()
-    assert scanner.scan(strip) == "40123"
-
-
-# ----------------------------------------------------- registry
-
-def test_registry_selects_and_rejects():
-    engines = build_engines(Config(translators="opencv"))
-    assert list(engines) == ["opencv"]
-    with pytest.raises(ValueError, match="Invalid translator name"):
-        build_engines(Config(translators="opencv,magic"))
-    if shutil.which("tesseract") is None:  # this environment
-        with pytest.raises(ImportError, match="tesseract binary"):
-            build_engines(Config(translators="tesseract,opencv"))
-        with pytest.raises(ImportError):
-            TesseractEngine()
-    else:  # binary installed: registry constructs the live engine
-        engines = build_engines(Config(translators="tesseract,opencv"))
-        assert list(engines) == ["tesseract", "opencv"]
-
-
-def _make_line(micr_text="U2154U T031100649T 4400000084U"):
-    from fin_ocr_sdk_spark.operators.segment import find_micr_line_info
-    from fin_ocr_sdk_spark.plans.scan import get_micr_band
-    from fin_ocr_sdk_spark.sources.fixtures import CheckSpec, compose_check
-    rng = np.random.default_rng(3)
-    spec = CheckSpec(micr_text=micr_text, skew=0.0, fmt="png",
-                     dark_header=False, noise=False)
-    img = compose_check(spec, rng)
-    band = get_micr_band(K.grayscale(img))
-    binary = K.adaptive_threshold_gaussian_inv(K.gaussian_blur(band, 3),
-                                               19, 1)
-    tmpl = get_default_templates()
-    zt, zn = tmpl.zero()
-    li = find_micr_line_info(binary, zt, zn, Config())
-    assert li is not None
-    return li[0], spec.micr_text.replace(" ", "")
-
-
-def test_translate_all_fan_out():
-    line, expect = _make_line()
-    engines = build_engines(Config(translators="opencv"))
-    results = translate_all(engines, line)
-    assert set(results) == {"opencv"}
-    assert results["opencv"].value == expect
-
-
-class _FakeFullPage:
-    """Protocol double for TesseractFullPageEngine (translate_image)."""
-
-    def __init__(self, text):
-        self.text = text
-        self.calls = 0
-
-    def translate_image(self, gray):
-        self.calls += 1
-        return self.text
-
-
-def test_full_page_check_number_fallback():
-    """src/check.ts:129-177: a MICR line without a check-number field
-    routes through full-page OCR when the engine is present; absent
-    engine keeps today's behavior; found-on-MICR lines are untouched."""
-    from fin_ocr_sdk_spark.plans.scan import scan_check
-    from fin_ocr_sdk_spark.plans.translators import (
-        build_full_page_engine, search_check_number_if_missing)
-    from fin_ocr_sdk_spark.sources import codecs
-    from fin_ocr_sdk_spark.sources.fixtures import CheckSpec, compose_check
-
-    rng = np.random.default_rng(3)
-    spec = CheckSpec(micr_text="T031100649T 4400000084U", skew=0.0,
-                     fmt="png", dark_header=False, noise=False)
-    data = codecs.encode_image(compose_check(spec, rng), "png")
-    tmpl = get_default_templates()
-
-    base = scan_check(data, "png", tmpl)
-    assert base.ok and base.check_info.check_number == ""
-
-    fake = _FakeFullPage("HEADER\nblah Check No blah\nDate 1234 x\nrest")
-    res = scan_check(data, "png", tmpl, full_page_engine=fake)
-    assert res.check_info.check_number == "1234"
-    assert fake.calls == 1
-
-    # "Check No" absent in the page text -> unchanged
-    res2 = scan_check(data, "png", tmpl,
-                      full_page_engine=_FakeFullPage("no match here"))
-    assert res2.check_info.check_number == ""
-
-    # check number already on the MICR line -> engine never invoked
-    spec2 = CheckSpec(micr_text="U2154U T031100649T 4400000084U",
-                      skew=0.0, fmt="png", dark_header=False, noise=False)
-    data2 = codecs.encode_image(compose_check(spec2, rng), "png")
-    fake2 = _FakeFullPage("Check No\nDate 9999")
-    res3 = scan_check(data2, "png", tmpl, full_page_engine=fake2)
-    assert res3.check_info.check_number == "2154"
-    assert fake2.calls == 0
-
-    # registry: full-page engine needs tesseract enabled AND importable
-    assert build_full_page_engine(Config(translators="opencv")) is None
-    assert build_full_page_engine(
-        Config(translators="tesseract,opencv")) is None  # no binary here
-    # map semantics: fills every container lacking a number
-    from fin_ocr_sdk_spark.functions.micr import CheckInfo
-    infos = {"a": CheckInfo("1", "2", "", "x"),
-             "b": CheckInfo("1", "2", "", "x")}
-    out = search_check_number_if_missing(
-        infos, _FakeFullPage("Check No\nDate 77"), object())
-    assert {i.check_number for i in out.values()} == {"77"}
-
-
-def test_supervised_correction_learns_template():
-    line, expect = _make_line()
-    engines = build_engines(Config(translators="opencv"))
-    eng = engines["opencv"]
-    n_before = len(eng.templates.values)
-    # claim the actual differs at position 0 → engine must learn + emit it
-    actual = "D" + expect[1:]
-    res = eng.translate(line, correct=True, actual=actual)
-    assert res.value == actual
-    assert len(eng.templates.values) == n_before + 1
-    assert eng.templates.values[-1] == "D"
-    # length mismatch disables correction (reference contract)
-    res2 = eng.translate(line, correct=True, actual="123")
-    assert res2.value == expect
-
+# -------------------------------------------------- corrections
 
 def test_learn_char_pure():
     tmpl = get_default_templates()
@@ -255,67 +82,3 @@ def test_streaming_drain(nothing, tmp_path):
         assert not any(r["kind"] == "micr:error" for r in results)
     finally:
         spark.stop()
-
-
-# ------------------------------------------- tesseract adapter
-
-_FAKE_TESSERACT = r"""#!/bin/sh
-# fake tesseract: rejects the micr_e13b model (forcing the documented
-# eng fallback), then emits a fixed two-word TSV line
-lang=""
-seen_l=0
-for a in "$@"; do
-  if [ "$seen_l" = "1" ]; then lang="$a"; seen_l=0; fi
-  [ "$a" = "-l" ] && seen_l=1
-done
-if [ "$lang" != "eng" ]; then
-  echo "Failed loading language '$lang'" >&2
-  exit 1
-fi
-printf 'level\tpage_num\tblock_num\tpar_num\tline_num\tword_num\tleft\ttop\twidth\theight\tconf\ttext\n'
-printf '1\t1\t0\t0\t0\t0\t0\t0\t40\t20\t-1\t\n'
-printf '5\t1\t1\t1\t1\t1\t0\t0\t18\t18\t91.5\tCheck\n'
-printf '5\t1\t1\t1\t1\t2\t20\t0\t18\t18\t88.5\tNo\n'
-"""
-
-
-@pytest.fixture()
-def fake_tesseract(tmp_path, monkeypatch):
-    binary = tmp_path / "tesseract"
-    binary.write_text(_FAKE_TESSERACT)
-    binary.chmod(0o755)
-    monkeypatch.setenv("PATH", f"{tmp_path}:{os.environ['PATH']}")
-    return str(binary)
-
-
-def test_tesseract_adapter_tsv_parse_and_lang_fallback(fake_tesseract):
-    """The CLI adapter end-to-end minus the binary itself: TIFF
-    round-trip in, TSV word rows out, mean confidence, and the
-    micr_e13b → eng traineddata fallback."""
-    from fin_ocr_sdk_spark.plans.translators import (
-        TesseractEngine, TesseractFullPageEngine, _run_tesseract)
-
-    gray = np.full((24, 60), 255, dtype=np.uint8)
-    text, score = _run_tesseract(gray, "13", "micr_e13b")
-    assert text == "Check No"
-    assert score == pytest.approx((91.5 + 88.5) / 2)
-    assert TesseractFullPageEngine().translate_image(gray) == "Check No"
-    line, _ = _make_line()
-    res = TesseractEngine(Config(tesseract_black_on_white=True)
-                          ).translate(line)
-    assert res.value == "Check No" and res.char_choices == []
-
-
-@pytest.mark.skipif(shutil.which("tesseract") is None,
-                    reason="no tesseract binary installed")
-def test_tesseract_live_binary():
-    """Runs only where a real tesseract is installed: PSM 3 full-page
-    OCR of a rendered check image returns text without error."""
-    from fin_ocr_sdk_spark.plans.translators import _run_tesseract
-    from fin_ocr_sdk_spark.sources.fixtures import CheckSpec, compose_check
-    rng = np.random.default_rng(3)
-    spec = CheckSpec(micr_text="T031100649T", skew=0.0, fmt="png",
-                     dark_header=False, noise=False)
-    img = K.grayscale(compose_check(spec, rng))
-    text, score = _run_tesseract(img, "3", "eng")
-    assert isinstance(text, str) and score >= 0.0

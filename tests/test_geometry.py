@@ -2,19 +2,12 @@
 
 - 16 degree-direction cases from the reference's in-source self-test
   (src/util.ts:570-598)
-- fractionIntersects / xDistance from test/util.test.ts:6-14
-- z-score categorizer cases from test/categorizer.test.ts:6-22
+- xDistance from test/util.test.ts:6-14
 """
 
 import pytest
 
 from fin_ocr_sdk_spark.functions import geometry as G
-from fin_ocr_sdk_spark.functions.categorize import (
-    StaticCategorizer,
-    ZScoreCategorizer,
-    average,
-    std_pop,
-)
 
 DEGREE_CASES = [
     ("right", [(0, 0), (50, 0), (100, 0)], 0),
@@ -39,12 +32,6 @@ DEGREE_CASES = [
 @pytest.mark.parametrize("name,points,expected", DEGREE_CASES)
 def test_compute_degree(name, points, expected):
     assert round(G.get_degree(points)) == expected
-
-
-def test_fraction_intersects():
-    assert G.fraction_intersects((0, 100), (50, 150)) == 0.5
-    assert G.fraction_intersects((0, 100), (200, 300)) == 0.0
-    assert G.fraction_intersects((0, 100), (10, 20)) == 1.0
 
 
 def test_x_distance():
@@ -92,25 +79,3 @@ def test_degree_helpers():
     assert G.degree_delta(350, 10) == 20
     assert G.degree_average(0, 90) == 45
     assert G.degree_average(350, 10) == 0  # wraparound: midpoint rotated 180
-
-
-def test_zscore_categorizer():
-    # test/categorizer.test.ts: [1, 5,6,...,10] → 1:S, 5:M, 10:L
-    eles = [1, 5, 6, 5, 6, 5, 6, 5, 6, 5, 6, 10]
-    c = ZScoreCategorizer(eles)
-    assert c.get_num_category(1) == "S"
-    assert c.get_num_category(5) == "M"
-    assert c.get_num_category(10) == "L"
-
-
-def test_static_categorizer():
-    c = StaticCategorizer(10, 20)
-    assert c.get_num_category(5) == "S"
-    assert c.get_num_category(15) == "M"
-    assert c.get_num_category(25) == "L"
-
-
-def test_population_std():
-    # population (divisor N), not sample
-    assert std_pop([2, 4, 4, 4, 5, 5, 7, 9]) == 2.0
-    assert average([]) == 0.0

@@ -29,11 +29,6 @@ def test_grayscale_channel_order_is_rgb():
     assert int(K.grayscale(blue)[0, 0]) == round(0.114 * 255)  # 29
 
 
-def test_bitwise_not():
-    img = np.array([[0, 255, 128]], dtype=np.uint8)
-    assert (K.bitwise_not(img) == [[255, 0, 127]]).all()
-
-
 def test_gaussian_blur_preserves_constant():
     img = np.full((10, 10), 77, dtype=np.uint8)
     assert (K.gaussian_blur(img, 3) == 77).all()
@@ -282,10 +277,3 @@ def test_hv_thin():
 def test_is_white_background():
     assert K.is_white_background(np.full((50, 50), 200, dtype=np.uint8))
     assert not K.is_white_background(np.full((50, 50), 50, dtype=np.uint8))
-
-
-def test_crop_fraction_bottom_band():
-    img = np.arange(100, dtype=np.uint8).reshape(10, 10)
-    band = K.crop_fraction(img, begin_h=0.60)
-    assert band.shape == (4, 10)
-    assert band[0, 0] == 60

@@ -9,9 +9,6 @@ import pytest
 
 from fin_ocr_sdk_spark.functions.micr import (
     CheckInfo,
-    check_number_from_full_page,
-    get_index_of_first_containing,
-    is_numeric,
     normalize_special_symbols,
     parse_micr,
     remove_leading_zeros,
@@ -90,33 +87,12 @@ def test_scalar_helpers():
     assert remove_leading_zeros("0") == ""
     assert remove_leading_zeros(None) == ""
     assert remove_spaces(" a b\tc ") == "abc"
-    assert is_numeric("-123") and is_numeric("0") and not is_numeric("12a")
-    assert get_index_of_first_containing(["x", "abc", "bcd"], "bc") == 1
-    assert get_index_of_first_containing(["x"], "zz") == -1
-
-
-def test_check_number_from_full_page():
-    text = "Header\nAcme Check No blah\nFoo 123 456\ntail"
-    assert check_number_from_full_page(text) == "456"
-    text2 = "Check No\nFoo 123 abc"
-    assert check_number_from_full_page(text2) == "123"
-    assert check_number_from_full_page("nothing here") is None
 
 
 def test_checkinfo_is_frozen_dataclass():
     info = CheckInfo("1", "2", "3", "m")
     with pytest.raises(Exception):
         info.routing_number = "x"  # type: ignore[misc]
-
-
-def test_debug_category_predicate():
-    """Util.debug (src/util.ts:53-58): '*' wildcard or exact category."""
-    from fin_ocr_sdk_spark.config import debug_requested
-    assert debug_requested(None, "images") is False
-    assert debug_requested([], "images") is False
-    assert debug_requested(["*"], "anything") is True
-    assert debug_requested(["images", "timing"], "timing") is True
-    assert debug_requested(["images"], "timing") is False
 
 
 def test_x9_fixture_variants_compose_and_parse():

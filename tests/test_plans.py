@@ -156,3 +156,87 @@ def test_plan_sniff_failure_warns_once():
             assert P._is_bare_file_scan(Boom()) is False
     finally:
         P._SNIFF_WARNED = old
+
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_PKG = "fin_ocr_sdk_spark"
+
+# Modules no import statement reaches, each with its reason:
+_NAMED_ROOTS = (
+    # started by name through the spark.python.daemon.module conf
+    # string that session.get_spark sets
+    "fin_ocr_sdk_spark._worker_daemon",
+    # public API with no driver caller: the video-loop analog and the
+    # base64/data-URL media source
+    "fin_ocr_sdk_spark.streaming.video",
+    "fin_ocr_sdk_spark.sources.base64_source",
+)
+
+
+def _package_modules() -> dict[str, str]:
+    """Dotted module name -> source path for every package module."""
+    mods = {}
+    for root, _, files in os.walk(os.path.join(_REPO, _PKG)):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            rel = os.path.relpath(os.path.join(root, f), _REPO)
+            name = rel[:-3].replace(os.sep, ".")
+            mods[name.removesuffix(".__init__")] = os.path.join(root, f)
+    return mods
+
+
+def _imported_modules(path: str, module: str, mods) -> set[str]:
+    """Package modules one file imports, at module level or inside a
+    function: ``import a.b``, ``from a import b`` (b a module or a
+    name) and relative ``from ..a import b``."""
+    import ast
+
+    is_pkg = path.endswith("__init__.py")
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            out.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                parts = module.split(".")
+                anchor = parts[:len(parts) - node.level + is_pkg]
+                base = ".".join(anchor + ([base] if base else []))
+            out.add(base)
+            out.update(f"{base}.{a.name}" for a in node.names)
+    return _with_packages(out) & set(mods)
+
+
+def _with_packages(names) -> set[str]:
+    """Importing a.b.c also runs the packages a and a.b."""
+    out = set()
+    for name in names:
+        parts = name.split(".")
+        out.update(".".join(parts[:i]) for i in range(1, len(parts) + 1))
+    return out
+
+
+def test_every_package_module_is_reached():
+    """Every package module is imported, transitively, by the driver
+    module or a script, or is one of the named roots: a module only
+    tests import is dead code."""
+    import glob
+
+    mods = _package_modules()
+    roots = [os.path.join(_REPO, "__spark_entry__.py")]
+    roots += sorted(glob.glob(os.path.join(_REPO, "scripts", "*.py")))
+    todo = []
+    for path in roots:
+        todo += _imported_modules(path, "__main__", mods)
+    todo += _with_packages(_NAMED_ROOTS)
+    reached = set()
+    while todo:
+        name = todo.pop()
+        if name in reached:
+            continue
+        reached.add(name)
+        todo += _imported_modules(mods[name], name, mods)
+    assert sorted(set(mods) - reached) == []
