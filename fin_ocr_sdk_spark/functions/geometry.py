@@ -89,21 +89,11 @@ def enlarge_rect(rect: Rect, size_wh: tuple[int, int], pad: int = 0) -> Rect:
     return (x, y, w, h)
 
 
-def rect_touches_border(
-    rect: Rect, size_wh: tuple[int, int], borders: list[str] | None = None
-) -> bool:
-    borders = borders or ["top", "bottom", "right", "left"]
+def rect_touches_border(rect: Rect, size_wh: tuple[int, int]) -> bool:
+    """True iff the rect reaches any of the four image borders."""
     w, h = size_wh
-    for b in borders:
-        if b == "top" and rect[1] <= 0:
-            return True
-        if b == "bottom" and rect[1] + rect[3] >= h:
-            return True
-        if b == "left" and rect[0] <= 0:
-            return True
-        if b == "right" and rect[0] + rect[2] >= w:
-            return True
-    return False
+    return (rect[1] <= 0 or rect[1] + rect[3] >= h
+            or rect[0] <= 0 or rect[0] + rect[2] >= w)
 
 
 # ------------------------------------------------------------ intervals

@@ -21,6 +21,9 @@ import numpy as np
 from . import kernels as K
 from .segment import Char, Line, jround
 
+# src/config.ts:39 maxTranslatorChoices: choices kept per character
+MAX_TRANSLATOR_CHOICES = 3
+
 
 @dataclass(frozen=True)
 class TemplateSet:
@@ -78,8 +81,7 @@ class TranslateResult:
     char_choices: list[list[tuple[str, int]]]  # per char, top-k (value, score)
 
 
-def translate_line(line: Line, templates: TemplateSet,
-                   max_choices: int = 3) -> TranslateResult:
+def translate_line(line: Line, templates: TemplateSet) -> TranslateResult:
     """Per-line classification (src/opencvTranslator.ts:124-159): line
     value = concat of per-char best values in x-order; line score =
     round(mean of best scores)."""
@@ -96,7 +98,8 @@ def translate_line(line: Line, templates: TemplateSet,
     total = 0
     out_value = []
     for i in range(len(chars)):
-        top = [(values[j], int(scores[i, j])) for j in order[i, :max_choices]]
+        top = [(values[j], int(scores[i, j]))
+               for j in order[i, :MAX_TRANSLATOR_CHOICES]]
         choices.append(top)
         out_value.append(top[0][0])
         total += top[0][1]

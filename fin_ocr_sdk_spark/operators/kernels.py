@@ -48,10 +48,11 @@ def grayscale(img: np.ndarray) -> np.ndarray:
 
 # -------------------------------------------------------- gaussian blur
 
-def _gaussian_kernel_1d(ksize: int, sigma: float = 0.0) -> np.ndarray:
-    """OpenCV getGaussianKernel: sigma<=0 -> 0.3*((k-1)*0.5-1)+0.8; for
-    k in {1,3,5,7} with sigma<=0 OpenCV uses fixed binomial-like kernels."""
-    if sigma <= 0 and ksize in (1, 3, 5, 7):
+def _gaussian_kernel_1d(ksize: int) -> np.ndarray:
+    """OpenCV getGaussianKernel with sigma 0 (derived from ksize):
+    sigma = 0.3*((k-1)*0.5-1)+0.8, except that for k in {1,3,5,7}
+    OpenCV uses fixed binomial-like kernels."""
+    if ksize in (1, 3, 5, 7):
         fixed = {
             1: [1.0],
             3: [0.25, 0.5, 0.25],
@@ -59,51 +60,19 @@ def _gaussian_kernel_1d(ksize: int, sigma: float = 0.0) -> np.ndarray:
             7: [0.03125, 0.109375, 0.21875, 0.28125, 0.21875, 0.109375, 0.03125],
         }
         return np.array(fixed[ksize])
-    if sigma <= 0:
-        sigma = 0.3 * ((ksize - 1) * 0.5 - 1) + 0.8
+    sigma = 0.3 * ((ksize - 1) * 0.5 - 1) + 0.8
     x = np.arange(ksize) - (ksize - 1) * 0.5
     k = np.exp(-(x * x) / (2 * sigma * sigma))
     return k / k.sum()
-
-
-def _reflect101_pad(img: np.ndarray, py: int, px: int) -> np.ndarray:
-    """BORDER_REFLECT_101 (OpenCV default): gfedcb|abcdefgh|gfedcba."""
-    return np.pad(img, ((py, py), (px, px)), mode="reflect")
-
-
-def _sep_filter(img: np.ndarray, ky: np.ndarray, kx: np.ndarray) -> np.ndarray:
-    """Separable correlation with reflect-101 borders.
-
-    float32 with in-place accumulation: the scan stage runs many workers
-    per host, so memory traffic (not FLOPs) is the binding resource —
-    float64 + per-tap temporaries measurably throttles 32-way scans.
-    """
-    ry, rx = len(ky) // 2, len(kx) // 2
-    padded = _reflect101_pad(img.astype(np.float32), ry, rx)
-    h, w = img.shape
-    kxf = kx.astype(np.float32)
-    kyf = ky.astype(np.float32)
-    tmp = np.zeros((padded.shape[0], w), dtype=np.float32)
-    scratch = np.empty_like(tmp)
-    for i in range(len(kxf)):
-        np.multiply(padded[:, i:i + w], kxf[i], out=scratch)
-        tmp += scratch
-    out = np.zeros((h, w), dtype=np.float32)
-    scratch2 = np.empty_like(out)
-    for i in range(len(kyf)):
-        np.multiply(tmp[i:i + h, :], kyf[i], out=scratch2)
-        out += scratch2
-    return out
 
 
 def _sep_filter_u8(img: np.ndarray, k: np.ndarray) -> np.ndarray:
     """Separable correlation for uint8 images in 8.8 fixed point.
 
     Weights are scaled to 256ths (renormalized so the row accumulator
-    cannot overflow uint16); each axis pass rounds back to uint8.  The
-    result differs from the float path by at most one gray level, and
-    the memory traffic — the binding resource with a scan worker per
-    core — is less than half of the float32 path's.
+    cannot overflow uint16); each axis pass rounds back to uint8, which
+    keeps the memory traffic — the binding resource with a scan worker
+    per core — at uint8/uint16 width.
     """
     w = np.round(k * 256.0).astype(np.uint16)
     w = np.maximum(w, 1)
@@ -151,11 +120,10 @@ def _sep_filter_u8(img: np.ndarray, k: np.ndarray) -> np.ndarray:
     return one_axis(one_axis(img, True), False)
 
 
-def gaussian_blur(img: np.ndarray, ksize: int = 3, sigma: float = 0.0) -> np.ndarray:
-    k = _gaussian_kernel_1d(ksize, sigma)
-    if img.dtype == np.uint8:
-        return _sep_filter_u8(img, k)
-    return np.clip(np.round(_sep_filter(img, k, k)), 0, 255).astype(np.uint8)
+def gaussian_blur(img: np.ndarray, ksize: int = 3) -> np.ndarray:
+    """GaussianBlur with sigma derived from ksize, over a uint8 image
+    (every decoder and image kernel here yields uint8)."""
+    return _sep_filter_u8(img, _gaussian_kernel_1d(ksize))
 
 
 # ------------------------------------------------------------ threshold
@@ -178,34 +146,31 @@ def otsu_threshold(img: np.ndarray) -> int:
     return int(np.argmax(between))
 
 
-def threshold_binary_inv(img: np.ndarray, thresh: float, maxval: int = 255) -> np.ndarray:
-    """THRESH_BINARY_INV: dst = (src > thresh) ? 0 : maxval."""
-    return np.where(img > thresh, 0, maxval).astype(np.uint8)
+def threshold_binary_inv(img: np.ndarray, thresh: float) -> np.ndarray:
+    """THRESH_BINARY_INV: dst = (src > thresh) ? 0 : 255."""
+    return np.where(img > thresh, 0, 255).astype(np.uint8)
 
 
 def otsu_binary_inv(img: np.ndarray) -> np.ndarray:
     return threshold_binary_inv(img, otsu_threshold(img))
 
 
-def adaptive_threshold_gaussian_inv(
-    img: np.ndarray, block_size: int = 19, c: float = 1.0, maxval: int = 255
-) -> np.ndarray:
-    """ADAPTIVE_THRESH_GAUSSIAN_C + THRESH_BINARY_INV.
+# the reference's adaptiveThreshold arguments (src/image.ts:280-290)
+_ADAPTIVE_BLOCK = 19
+_ADAPTIVE_C = 1
 
-    dst = (src > gaussian_local_mean - C) ? 0 : maxval.  The gaussian
+
+def adaptive_threshold_gaussian_inv(img: np.ndarray) -> np.ndarray:
+    """ADAPTIVE_THRESH_GAUSSIAN_C + THRESH_BINARY_INV, block 19, C 1.
+
+    dst = (src > gaussian_local_mean - C) ? 0 : 255.  The gaussian
     window uses sigma = 0.3*((block-1)*0.5-1)+0.8 per OpenCV.  This is
-    the binarization that flips black-on-white ink to 255-on-0.
-
-    The local mean runs in 8.8 fixed point (see _sep_filter_u8): at
-    most one gray level from the float path, immaterial next to the
-    C offset, and half the memory traffic on the hot scan stage.
+    the binarization that flips black-on-white ink to 255-on-0.  The
+    local mean runs in 8.8 fixed point (see _sep_filter_u8).
     """
-    k = _gaussian_kernel_1d(block_size, 0.0)
-    if img.dtype == np.uint8:
-        mean = _sep_filter_u8(img, k).astype(np.int16)
-    else:
-        mean = _sep_filter(img, k, k)
-    return np.where(img > mean - c, 0, maxval).astype(np.uint8)
+    mean = _sep_filter_u8(img, _gaussian_kernel_1d(_ADAPTIVE_BLOCK))
+    return np.where(img > mean.astype(np.int16) - _ADAPTIVE_C,
+                    0, 255).astype(np.uint8)
 
 
 # ----------------------------------------------------------- morphology
@@ -234,20 +199,12 @@ def _window_reduce(img: np.ndarray, kw: int, kh: int, is_min: bool,
     return out
 
 
-def erode(img: np.ndarray, width: int = 2, height: int = 2,
-          iterations: int = 1) -> np.ndarray:
-    out = img
-    for _ in range(iterations):
-        out = _window_reduce(out, width, height, is_min=True, pad_val=255)
-    return out
+def erode(img: np.ndarray, width: int = 2, height: int = 2) -> np.ndarray:
+    return _window_reduce(img, width, height, is_min=True, pad_val=255)
 
 
-def dilate(img: np.ndarray, width: int = 2, height: int = 2,
-           iterations: int = 1) -> np.ndarray:
-    out = img
-    for _ in range(iterations):
-        out = _window_reduce(out, width, height, is_min=False, pad_val=0)
-    return out
+def dilate(img: np.ndarray, width: int = 2, height: int = 2) -> np.ndarray:
+    return _window_reduce(img, width, height, is_min=False, pad_val=0)
 
 
 # --------------------------------------------------------------- resize
@@ -409,8 +366,10 @@ def _rotate_shear(img: np.ndarray, angle_deg: float, y0: int, y1: int
     return np.clip(np.round(out3, out=out3), 0, 255).astype(np.uint8)
 
 
-def _cubic_weights(t: np.ndarray, a: float = -0.75) -> tuple[np.ndarray, ...]:
-    """BiCubic convolution weights for offsets -1, 0, 1, 2 at fraction t."""
+def _cubic_weights(t: np.ndarray) -> tuple[np.ndarray, ...]:
+    """BiCubic convolution weights for offsets -1, 0, 1, 2 at fraction t,
+    with OpenCV's a = -0.75."""
+    a = -0.75
     t2, t3 = t * t, t * t * t
     w0 = a * (t3 - 2 * t2 + t)
     w1 = (a + 2) * t3 - (a + 3) * t2 + 1
@@ -559,8 +518,8 @@ class _LazyLabels:
     labeling.  Most find_regions consumers only read rects/areas (now
     aggregated from the run table), so the cumsum paint of the full
     label image runs only when some Region actually indexes pixels
-    (mask / points_in_rect / minmax_x_in_yrange) — and then once,
-    cached for all Regions of the call."""
+    (mask / minmax_x_in_yrange) — and then once, cached for all
+    Regions of the call."""
 
     __slots__ = ("_paint", "_arr", "shape")
 
@@ -605,25 +564,6 @@ class Region:
         """Boolean mask of this component, cropped to its rect."""
         x, y, w, h = self.rect
         return self.labels[y:y + h, x:x + w] == self.label
-
-    def points_in_rect(self, rect: tuple[int, int, int, int]
-                       ) -> tuple[int, int, int, int] | None:
-        """Bounding rect of this component's pixels inside `rect`
-        (inclusive min/max semantics, matching contour.getRectV1 /
-        image.getRect).  None if no pixels fall inside."""
-        x, y, w, h = rect
-        x0, y0 = max(0, x), max(0, y)
-        x1 = min(self.labels.shape[1], x + w + 1)
-        y1 = min(self.labels.shape[0], y + h + 1)
-        if x1 <= x0 or y1 <= y0:
-            return None
-        sub = self.labels[y0:y1, x0:x1] == self.label
-        if not sub.any():
-            return None
-        ys, xs = np.nonzero(sub)
-        mn_x, mx_x = int(xs.min()) + x0, int(xs.max()) + x0
-        mn_y, mx_y = int(ys.min()) + y0, int(ys.max()) + y0
-        return (mn_x, mn_y, max(mx_x - mn_x, 1), max(mx_y - mn_y, 1))
 
     def minmax_x_in_yrange(self, y_min: int, y_max: int) -> tuple[int, int] | None:
         """Min and max x of component pixels with y in [y_min, y_max]."""
@@ -739,7 +679,7 @@ def _label_runs(binary: np.ndarray):
             (rows, x0s, x1s, final.astype(np.int64)))
 
 
-def find_regions(binary: np.ndarray, sort_by_x: bool = True) -> list[Region]:
+def find_regions(binary: np.ndarray) -> list[Region]:
     """Connected components → Region list, sorted left-to-right and
     re-indexed (the reference's getContours contract,
     src/image.ts:416-446).  Bounding rects and pixel counts are
@@ -769,49 +709,10 @@ def find_regions(binary: np.ndarray, sort_by_x: bool = True) -> list[Region]:
         regions.append(Region(
             idx=-1, rect=rect, area=rect[2] * rect[3],
             area2=float(n_px[i]), label=lab, labels=labels))
-    if sort_by_x:
-        regions.sort(key=lambda r: r.rect[0])
+    regions.sort(key=lambda r: r.rect[0])
     for i, r in enumerate(regions):
         r.idx = i
     return regions
-
-
-def filter_regions(
-    regions: list[Region],
-    min_width: float | None = None,
-    min_height: float | None = None,
-    min_area: float | None = None,
-    max_width: float | None = None,
-    max_height: float | None = None,
-    max_area: float | None = None,
-    borders: list[str] | None = None,
-    size_wh: tuple[int, int] | None = None,
-) -> list[Region]:
-    """Predicate filter over regions (reference Contour.filter,
-    src/contour.ts:63-98).  min/max area test uses area2 (polygon/pixel
-    area), width/height use the bounding rect.  Relationally this is a
-    plain WHERE clause — see the `contour_filter` SQL twin."""
-    out = []
-    for r in regions:
-        x, y, w, h = r.rect
-        if borders and size_wh is not None:
-            from ..functions.geometry import rect_touches_border
-            if rect_touches_border(r.rect, size_wh, borders):
-                continue
-        if min_width and w < min_width:
-            continue
-        if min_height and h < min_height:
-            continue
-        if max_width and w > max_width:
-            continue
-        if max_height and h > max_height:
-            continue
-        if min_area and r.area2 < min_area:
-            continue
-        if max_area and r.area2 > max_area:
-            continue
-        out.append(r)
-    return out
 
 
 # ------------------------------------------- overlap-correction kernels
@@ -896,15 +797,16 @@ def clear_by_vertical_thickness(img: np.ndarray, threshold: int,
 
 
 def hv_thin(img: np.ndarray, min_h: int, min_v: int,
-            rect: tuple[int, int, int, int], max_iterations: int = 100) -> None:
+            rect: tuple[int, int, int, int]) -> None:
     """Iteratively unset pixels whose horizontal run < min_h AND vertical
-    run < min_v, within rect, in place (src/image.ts:1124-1184).
+    run < min_v, within rect, in place, for at most 100 passes
+    (src/image.ts:1124-1184).
 
     Run lengths computed via cumulative-sum trick per iteration.
     """
     x, y, w, h = rect
     y1, x1 = min(y + h, img.shape[0]), min(x + w, img.shape[1])
-    for _ in range(max_iterations):
+    for _ in range(100):
         sub = img[y:y1, x:x1] > 128
         if not sub.any():
             break
@@ -934,6 +836,6 @@ def _run_lengths(mask: np.ndarray, axis: int) -> np.ndarray:
 
 # ----------------------------------------------------------- sampling
 
-def is_white_background(img: np.ndarray, sample_rate: int = 10) -> bool:
-    """Mean of every-`sample_rate`-th pixel > 128 (src/check.ts:246-264)."""
-    return float(img[::sample_rate, ::sample_rate].mean()) > 128
+def is_white_background(img: np.ndarray) -> bool:
+    """Mean of every 10th pixel > 128 (src/check.ts:246-264)."""
+    return float(img[::10, ::10].mean()) > 128

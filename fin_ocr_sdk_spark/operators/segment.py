@@ -27,9 +27,15 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from ..config import Config
 from ..functions import geometry as G
 from . import kernels as K
+
+# src/config.ts defaults (maxCharHeight :32, maxCharWidth :33,
+# maxSpaceBetweenCharsOfWord :36): the neighbor-estimate box of
+# Char.contains and the CharIterator's word-gap bound
+MAX_CHAR_HEIGHT = 30
+MAX_CHAR_WIDTH = 28
+MAX_SPACE_BETWEEN_CHARS_OF_WORD = 15
 
 
 def jround(x: float) -> int:
@@ -67,9 +73,6 @@ class Cont:
 
     def y_range(self) -> tuple[int, int]:
         return (self.rect[1], self.rect[1] + self.rect[3])
-
-    def is_small(self) -> bool:
-        return self.size == "S"
 
     def is_medium(self) -> bool:
         return self.size == "M"
@@ -123,12 +126,10 @@ class Char:
     3 near-a-neighbor (overlap), 4 noise (dropped)."""
 
     def __init__(self, idx: int, contours: list[Cont],
-                 rect: tuple[int, int, int, int], cfg: Config):
+                 rect: tuple[int, int, int, int]):
         self.idx = idx
         self.contours = contours
         self.rect = rect
-        self.cfg = cfg
-        self.has_large_contour = any(c.is_large() for c in contours)
         self.type = 4
 
     def set_type(self, t: int, adjust_char: "Char | None" = None) -> None:
@@ -139,8 +140,8 @@ class Char:
     def _estimate_rect(self, right: bool, containment: bool
                        ) -> tuple[int, int, int, int]:
         pad = 5 if containment else 0
-        width = self.cfg.max_char_width if containment else self.rect[2]
-        height = self.cfg.max_char_height if containment else self.rect[3]
+        width = MAX_CHAR_WIDTH if containment else self.rect[2]
+        height = MAX_CHAR_HEIGHT if containment else self.rect[3]
         if right:
             x = self.rect[0] + self.rect[2] - pad
         else:
@@ -182,18 +183,14 @@ class Char:
 class Line:
     """A single MICR text line built from contours (src/line.ts:73-153)."""
 
-    def __init__(self, idx: int, image: np.ndarray, initial: Cont,
-                 all_contours: list[Cont], cfg: Config,
-                 min_char_area: float | None = None,
-                 min_char_height: float | None = None,
-                 max_char_area: float | None = None):
-        self.idx = idx
+    def __init__(self, image: np.ndarray, initial: Cont,
+                 all_contours: list[Cont], min_char_area: float,
+                 min_char_height: float, max_char_area: float):
         self.image = image  # binary band (255=ink)
-        self.cfg = cfg
         self.initial = initial
-        self.min_char_area = min_char_area or initial.area * 0.5
-        self.min_char_height = min_char_height or initial.height * 0.75
-        self.max_char_area = max_char_area or initial.area * 1.5
+        self.min_char_area = min_char_area
+        self.min_char_height = min_char_height
+        self.max_char_area = max_char_area
         self.max_char_width = initial.width
         self.max_char_height = initial.height
         self.containment_padding = initial.rect[3] * 0.25
@@ -204,7 +201,6 @@ class Line:
         self.overlap = False
         self.min_dist_between = float("inf")
         self.contours: list[Cont] = []
-        self.roots = [initial.rect]
         self.chars: list[Char] | None = None
         self.rect: tuple[int, int, int, int] | None = None
         self._init(all_contours)
@@ -376,16 +372,11 @@ class Line:
         (src/line.ts:371-467); order-dependent — lag() cannot express it."""
         if not chars:
             return chars
-        # JS parity (line.ts:375 'this.roots || getDefaultRoots'): only
-        # an UNSET roots list falls back — an empty array is truthy in
-        # JS, so [] would NOT fall back there and must not here either
-        roots = (self.roots if self.roots is not None
-                 else default_roots(self, chars))
+        # the seed's rect is the one root, so the reference's
+        # getDefaultRoots fallback (line.ts:327-352, 375) never runs
         for c in chars:
-            for root in roots:
-                if G.rect_contains(root, c.rect):
-                    c.set_type(1)
-                    break
+            if G.rect_contains(self.initial.rect, c.rect):
+                c.set_type(1)
         # type 2, both directions
         for seq, right in ((chars, True), (list(reversed(chars)), False)):
             lc: Char | None = None
@@ -452,7 +443,6 @@ class CharIterator:
 
     def __init__(self, line: Line):
         self.line = line
-        self.cfg = line.cfg
         self.contour_idx = 0
         self.char_idx = 0
         self.prev_char: Char | None = None
@@ -471,7 +461,7 @@ class CharIterator:
                 width_count += 1
                 if pc is not None:
                     dist = G.x_distance(pc.rect, c.rect)
-                    if dist <= self.cfg.max_space_between_chars_of_word:
+                    if dist <= MAX_SPACE_BETWEEN_CHARS_OF_WORD:
                         self.min_dist_between = min(dist, self.min_dist_between)
                         self.max_dist_between = max(dist, self.max_dist_between)
                         dist_total += dist
@@ -492,7 +482,7 @@ class CharIterator:
                 if c is None:
                     break
                 if c.is_medium():
-                    self.next_single = Char(-1, [c], c.rect, self.cfg)
+                    self.next_single = Char(-1, [c], c.rect)
                     self.char_stack.append(self.next_single)
                     break
                 buf.append(c)
@@ -552,7 +542,7 @@ class CharIterator:
         if buf and self._large_enough_for_char(buf):
             used.extend(buf)
             rect = G.bounding_rect_of_rects([c.rect for c in buf])
-            return Char(-1, buf, rect, self.cfg)
+            return Char(-1, buf, rect)
         return None
 
     def _projected_char_rect(self, rect, right: bool):
@@ -569,41 +559,17 @@ class CharIterator:
         return rect[2] * rect[3] > self.line.min_char_area
 
 
-def default_roots(line: "Line", chars: list[Char]) -> list:
-    """Default type-1 roots when a line has none (src/line.ts:327-352
-    getDefaultRoots): among chars within the configured max char box,
-    classify each against ALL templates and seed from the single
-    best-scoring char (first-in-order wins ties, as in the reference's
-    strict `>` comparison).  Oversized chars are skipped; if none
-    qualify, the first char is the root (reference initializes
-    bestChar = chars[0])."""
-    if not chars:
-        raise ValueError("empty character array")
-    from ..plans.scan import get_default_templates
-    from .classify import ncc_scores_batch, stack_char_crops
-    templates = get_default_templates()
-    kept = [c for c in chars
-            if c.rect[3] <= line.cfg.max_char_height
-            and c.rect[2] <= line.cfg.max_char_width]
-    best_char = chars[0]
-    if kept:
-        scores = ncc_scores_batch(stack_char_crops(line, kept), templates)
-        per_char = scores.max(axis=1)
-        best_idx = int(per_char.argmax())
-        if per_char[best_idx] > 0:
-            best_char = kept[best_idx]
-    return [best_char.rect]
-
-
 # -------------------------------------------------------- seed search
+
+# the seed search stops at the first contour scoring this high
+# (src/check.ts:297-346)
+SEED_STOP_SCORE = 90
+
 
 def find_micr_line_info(
     band: np.ndarray,
     zero_template: np.ndarray,
     zero_norm: float,
-    cfg: Config,
-    stop_score: int = 90,
-    count: int = 1,
     templates=None,
 ) -> tuple[Line, Cont] | None:
     """Seed search + line construction (src/check.ts:297-346):
@@ -615,10 +581,9 @@ def find_micr_line_info(
     src/check.ts:322-325) and a full template set is provided, re-seed
     from the best-scoring contour across ALL glyph templates, applying
     getDefaultRoots' idea (src/line.ts:327-352) at the seed stage."""
-    h, w = band.shape
-    regions = K.find_regions(band)
-    regions = K.filter_regions(regions, max_width=w * 0.9)
-    conts = regions_to_conts(regions)
+    w = band.shape[1]
+    conts = regions_to_conts([r for r in K.find_regions(band)
+                              if r.rect[2] <= w * 0.9])
     conts.sort(key=lambda c: -c.rect[1])
     best_score = 0
     best: Cont | None = None
@@ -629,7 +594,7 @@ def find_micr_line_info(
         if score > best_score:
             best_score = score
             best = c
-            if best_score >= stop_score:
+            if best_score >= SEED_STOP_SCORE:
                 break
     if best is None and templates is not None:
         from .classify import ncc_scores_batch
@@ -641,7 +606,7 @@ def find_micr_line_info(
             if score > best_score:
                 best_score = score
                 best = c
-                if best_score >= stop_score:
+                if best_score >= SEED_STOP_SCORE:
                     break
     if best is None:
         return None
@@ -651,7 +616,7 @@ def find_micr_line_info(
             and c.width >= best.width * 0.08]
     if best not in kept:
         return None
-    line = Line(count, band, best, kept, cfg,
+    line = Line(band, best, kept,
                 min_char_area=best.area * 0.47,
                 max_char_area=best.area * 1.25,
                 min_char_height=best.height * 0.9)

@@ -11,7 +11,8 @@ components each, mirroring real E-13B symbol topology.
 
 Glyphs are defined on small cell grids (digits 5x7, symbols 7x7) and
 scaled by ``SCALE`` (4) to pixel rasters: digits ~20x28, symbols 28x28 —
-inside the reference's char-size envelope (Config: avg 19x24, max 28x30).
+inside the reference's char-size envelope (src/config.ts:14-15 avg
+19x24, :32-33 max 28x30).
 
 Template construction replicates the reference init pipeline: render a
 glyph *sheet*, Otsu-inverse threshold, find regions left-to-right,
@@ -96,25 +97,25 @@ def glyph_bitmap(value: str) -> np.ndarray:
     return np.array([[c == "1" for c in r] for r in rows], dtype=bool)
 
 
-def render_glyph(value: str, scale: int = SCALE, ink: int = 255,
-                 paper: int = 0) -> np.ndarray:
-    """Rasterize one glyph at `scale` px per cell (white-on-black by
-    default, i.e. post-threshold polarity)."""
+def render_glyph(value: str) -> np.ndarray:
+    """Rasterize one glyph at ``SCALE`` px per cell, white-on-black (the
+    post-threshold polarity)."""
     bm = glyph_bitmap(value)
-    img = np.where(bm, ink, paper).astype(np.uint8)
-    return np.kron(img, np.ones((scale, scale), dtype=np.uint8))
+    img = np.where(bm, 255, 0).astype(np.uint8)
+    return np.kron(img, np.ones((SCALE, SCALE), dtype=np.uint8))
 
 
 def num_contours(value: str) -> int:
     return 3 if value in _SYMBOLS else 1
 
 
-def render_reference_sheet(scale: int = SCALE, gap: int = 8,
-                           pad: int = 6) -> np.ndarray:
+def render_reference_sheet() -> np.ndarray:
     """The analog of micr_ref.tif: all 14 glyphs left-to-right on one
-    row, black-on-white (the loader Otsu-inverts it like the reference
-    does at src/opencvTranslator.ts:61-62)."""
-    glyphs = [render_glyph(v, scale) for v in GLYPH_VALUES]
+    row, 8 px apart inside a 6 px margin, black-on-white (the loader
+    Otsu-inverts it like the reference does at
+    src/opencvTranslator.ts:61-62)."""
+    gap, pad = 8, 6
+    glyphs = [render_glyph(v) for v in GLYPH_VALUES]
     height = max(g.shape[0] for g in glyphs)
     width = sum(g.shape[1] for g in glyphs) + gap * (len(glyphs) - 1)
     sheet = np.zeros((height + 2 * pad, width + 2 * pad), dtype=np.uint8)
@@ -125,7 +126,7 @@ def render_reference_sheet(scale: int = SCALE, gap: int = 8,
     return (255 - sheet).astype(np.uint8)  # black ink on white paper
 
 
-def build_templates(sheet: np.ndarray | None = None) -> dict[str, dict]:
+def build_templates() -> dict[str, dict]:
     """Extract 36x36 match templates from the reference sheet, exactly
     like the reference's loadReferenceImage: gray → Otsu-inv → regions
     sorted by x → consume numContours regions per descriptor → crop the
@@ -133,9 +134,7 @@ def build_templates(sheet: np.ndarray | None = None) -> dict[str, dict]:
 
     Returns {value: {"glyph": (36,36) uint8, "num_contours": int}}.
     """
-    if sheet is None:
-        sheet = render_reference_sheet()
-    binary = K.otsu_binary_inv(K.grayscale(sheet))
+    binary = K.otsu_binary_inv(K.grayscale(render_reference_sheet()))
     regions = K.find_regions(binary)
     out: dict[str, dict] = {}
     ci = 0
@@ -161,13 +160,12 @@ def build_templates(sheet: np.ndarray | None = None) -> dict[str, dict]:
     return out
 
 
-def template_tensor(templates: dict[str, dict] | None = None
-                    ) -> tuple[np.ndarray, list[str], np.ndarray]:
+def template_tensor() -> tuple[np.ndarray, list[str], np.ndarray]:
     """Stack templates into a (T, 36, 36) float64 tensor for batched
     normalized cross-correlation, plus the value list and per-template
     L2 norms.  This is the broadcast-side of the template-match
     'join' (SURVEY §2.3)."""
-    templates = templates or build_templates()
+    templates = build_templates()
     # preserve reference element order: single-contour eles then multi
     singles = [v for v in templates if templates[v]["num_contours"] == 1]
     multis = [v for v in templates if templates[v]["num_contours"] > 1]

@@ -80,15 +80,14 @@ def make_lineage_kernel(out_dir: str, run_id: str, spark: SparkSession):
                                     "run_id", "wall_ms")}
             for path in pdf["path"]:
                 t0 = time.time()
-                local = path.replace("file:", "")
                 # images stream by record batch (a 1 GB part never
                 # becomes a 1 GB Arrow table); only the text spans stay
-                out = list(scan_rows(_direct_media_rows(local, 0, 1),
+                out = list(scan_rows(_direct_media_rows(path, 0, 1),
                                      bc.value))
                 h = hashlib.sha256()
                 for ref, _, kind, text in out:
                     h.update(f"{ref}\x00{kind}\x00{text}\x01".encode())
-                pid = _partition_id(local)
+                pid = _partition_id(path)
                 span_path = os.path.join(spans_dir, f"{pid}.parquet")
                 tmp_path = span_path + f".tmp-{run_id}"
                 papq.write_table(pa.Table.from_pylist(
@@ -96,7 +95,7 @@ def make_lineage_kernel(out_dir: str, run_id: str, spark: SparkSession):
                     schema=arrow_schema), tmp_path)
                 os.replace(tmp_path, span_path)  # atomic on posix
                 rows["partition_id"].append(pid)
-                rows["media_file"].append(local)
+                rows["media_file"].append(path)
                 # every image yields exactly one sub_order-1 span
                 rows["doc_count"].append(sum(r[1] == 1 for r in out))
                 rows["span_count"].append(len(out))

@@ -176,7 +176,7 @@ def _direct_media_rows(path: str, sl: int, nsl: int) -> Iterator[tuple]:
     # (ncpus wide) would put 32x32 threads on the host
     pa.set_cpu_count(1)
     pa.set_io_thread_count(1)
-    pf = papq.ParquetFile(path.replace("file:", ""))
+    pf = papq.ParquetFile(path)
     nrows = pf.metadata.num_rows
     lo = nrows * int(sl) // int(nsl)
     hi = nrows * (int(sl) + 1) // int(nsl)

@@ -19,14 +19,22 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from ..config import Config
 from ..functions.micr import CheckInfo, parse_micr
 from ..operators import kernels as K
 from ..operators.classify import TemplateSet, translate_line
 from ..operators.segment import Line, find_micr_line_info
 from ..sources import codecs
 
-_DEFAULT_CFG = Config()
+# src/config.ts defaults: cleanHeight :18 and cleanWidth :19 (the
+# clean's rect kernel), overlapPadding :51 (the correction's ROI pad).
+# overlapCorrection (:50) defaults to true: the correction always runs.
+CLEAN_HEIGHT = 2
+CLEAN_WIDTH = 2
+OVERLAP_PADDING = 5
+# getMicrLine keeps the bottom 40% of the deskewed image
+CROP_BEGIN_H = 0.60
+# skew_angle's shortlist pass runs on a 2x-strided image
+SKEW_DOWNSCALE = 2
 
 
 @dataclass
@@ -84,21 +92,21 @@ def _refine_skew_candidate(gray: np.ndarray,
     return best
 
 
-def skew_angle(gray: np.ndarray, downscale: int = 2) -> float:
+def skew_angle(gray: np.ndarray) -> float:
     """Skew estimate (src/image.ts:591-607 + findSkewContourV3):
     blur(7) → Otsu-inv → dilate 25x1 → among contours with w>120,
     10<h<100, not border-touching, pick min areaFitRatio (rect area /
     filled area — most rectangle-like) → min-area-rect angle with the
     V1 correction (src/contour.ts:130-141).
 
-    Scale deviation: estimation runs on a `downscale`-strided image
+    Scale deviation: estimation runs on a ``SKEW_DOWNSCALE``-strided image
     (thresholds scaled to match) — the min-area-rect angle of a long
     bar is scale-invariant to well under the correction tolerance, and
     the full-resolution pass is the scan stage's single largest memory
     load at high worker concurrency.  Rotation itself stays full-res.
     """
     from ..functions.geometry import rect_touches_border
-    ds = downscale if min(gray.shape) >= 128 * downscale else 1
+    ds = SKEW_DOWNSCALE if min(gray.shape) >= 128 * SKEW_DOWNSCALE else 1
     small = gray[::ds, ::ds] if ds > 1 else gray
     img = K.gaussian_blur(small, 7)
     img = K.otsu_binary_inv(img)
@@ -167,8 +175,7 @@ def skew_angle(gray: np.ndarray, downscale: int = 2) -> float:
     return _mask_angle(eligible[0][1].mask())
 
 
-def get_micr_band(gray: np.ndarray, cfg: Config = _DEFAULT_CFG,
-                  crop_begin_h: float = 0.60) -> np.ndarray:
+def get_micr_band(gray: np.ndarray) -> np.ndarray:
     """Front half of getMicrLine: deskew, clean, crop the bottom band.
 
     The fractional crop is this engine's partition-pruning analog — all
@@ -181,35 +188,33 @@ def get_micr_band(gray: np.ndarray, cfg: Config = _DEFAULT_CFG,
     border moves the sampled mean negligibly)."""
     angle = skew_angle(gray)
     h = gray.shape[0]
-    y0 = int(round(h * crop_begin_h))
+    y0 = int(round(h * CROP_BEGIN_H))
     halo = 4
     yh = max(0, y0 - halo)
     band = K.rotate(gray, angle, out_rows=(yh, h))
-    cw, chh = cfg.clean_width, cfg.clean_height
     if K.is_white_background(gray):
-        band = K.erode(band, cw, chh)
-        band = K.dilate(band, cw, chh)
+        band = K.erode(band, CLEAN_WIDTH, CLEAN_HEIGHT)
+        band = K.dilate(band, CLEAN_WIDTH, CLEAN_HEIGHT)
     else:
-        band = K.dilate(band, cw, chh)
-        band = K.erode(band, cw, chh)
+        band = K.dilate(band, CLEAN_WIDTH, CLEAN_HEIGHT)
+        band = K.erode(band, CLEAN_WIDTH, CLEAN_HEIGHT)
     return band[y0 - yh:]
 
 
-def find_micr_line(band_gray: np.ndarray, templates: TemplateSet,
-                   cfg: Config = _DEFAULT_CFG) -> Line | None:
-    """Back half: binarize, build the line, optionally run overlap
-    correction and a second pass (src/check.ts:266-295)."""
-    img = K.gaussian_blur(band_gray, 3)
-    img = K.adaptive_threshold_gaussian_inv(img, block_size=19, c=1)
+def find_micr_line(band_gray: np.ndarray, templates: TemplateSet
+                   ) -> Line | None:
+    """Back half: binarize, build the line; a line that overlaps a
+    stroke gets the overlap correction and a second pass
+    (src/check.ts:266-295)."""
+    img = K.adaptive_threshold_gaussian_inv(K.gaussian_blur(band_gray, 3))
     zero_t, zero_n = templates.zero()
-    li = find_micr_line_info(img, zero_t, zero_n, cfg, count=1,
-                             templates=templates)
+    li = find_micr_line_info(img, zero_t, zero_n, templates=templates)
     if li is None:
         return None
     line, _ = li
-    if line.overlap and cfg.overlap_correction:
-        corrected = perform_overlap_correction(line, cfg)
-        li2 = find_micr_line_info(corrected, zero_t, zero_n, cfg, count=2,
+    if line.overlap:
+        corrected = perform_overlap_correction(line)
+        li2 = find_micr_line_info(corrected, zero_t, zero_n,
                                   templates=templates)
         if li2 is None:
             return None
@@ -217,7 +222,7 @@ def find_micr_line(band_gray: np.ndarray, templates: TemplateSet,
     return line
 
 
-def perform_overlap_correction(line: Line, cfg: Config) -> np.ndarray:
+def perform_overlap_correction(line: Line) -> np.ndarray:
     """Overlap correction (src/line.ts:582-607): crop the line ROI with
     padding, then for top-touching contours (1) follow-and-clear the
     intruding stroke with the curve walker (src/curve.ts via
@@ -226,16 +231,16 @@ def perform_overlap_correction(line: Line, cfg: Config) -> np.ndarray:
     reference's exact stage order."""
     from ..functions.geometry import enlarge_rect
     from ..operators.curves import curves_clear
-    pad = cfg.overlap_padding
     h, w = line.image.shape
-    rect = enlarge_rect(line.get_bounding_rect(), (w, h), pad=pad)
+    rect = enlarge_rect(line.get_bounding_rect(), (w, h),
+                        pad=OVERLAP_PADDING)
     x, y, rw, rh = rect
     img = line.image[y:y + rh, x:x + rw].copy()
     regions = K.find_regions(img)
     for r in regions:
         if r.rect[1] == 0:
-            curves_clear(img, lambda px, py: py < pad, r.rect)
-    K.clear_padding(img, pad)
+            curves_clear(img, lambda px, py: py < OVERLAP_PADDING, r.rect)
+    K.clear_padding(img, OVERLAP_PADDING)
     for r in regions:
         if r.rect[1] == 0:
             K.clear_by_vertical_thickness(
@@ -245,20 +250,19 @@ def perform_overlap_correction(line: Line, cfg: Config) -> np.ndarray:
     return img
 
 
-def scan_check(image_bytes: bytes, fmt: str,
-               templates: TemplateSet | None = None,
-               cfg: Config = _DEFAULT_CFG) -> ScanResult:
+def scan_check(image_bytes: bytes | None, fmt: str,
+               templates: TemplateSet | None = None) -> ScanResult:
     """Full Check.scan for one image (src/check.ts:88-114) with the
     template-matching translator only: the reference's optional
     tesseract translator and its full-page check-number fallback
     (src/check.ts:129-177) are not built, so a line without a check
     number keeps an empty ``check_number``.
 
-    Never raises for a bad image: a decode failure, a missing line or
-    any exception from the later steps (e.g. a 1-row image) is an
-    ``ok=False`` result, so one image never fails its task.  The error
-    text starts with its reason class: ``decode:``, ``no_line:`` or
-    ``internal:``."""
+    Never raises for a bad image: a decode failure (a missing payload
+    included), a missing line or any exception from the later steps
+    (e.g. a 1-row image) is an ``ok=False`` result, so one image never
+    fails its task.  The error text starts with its reason class:
+    ``decode:``, ``no_line:`` or ``internal:``."""
     if templates is None:
         templates = get_default_templates()
     try:
@@ -266,11 +270,11 @@ def scan_check(image_bytes: bytes, fmt: str,
     except (ValueError, NotImplementedError) as e:
         return ScanResult(ok=False, error=f"decode: {e}")
     try:
-        band = get_micr_band(gray, cfg)
-        line = find_micr_line(band, templates, cfg)
+        band = get_micr_band(gray)
+        line = find_micr_line(band, templates)
         if line is None:
             return ScanResult(ok=False, error="no_line: micr line not found")
-        tr = translate_line(line, templates, cfg.max_translator_choices)
+        tr = translate_line(line, templates)
         info = parse_micr(tr.value)
     except Exception as e:  # noqa: BLE001 — the per-image boundary
         return ScanResult(ok=False,

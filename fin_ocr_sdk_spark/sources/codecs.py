@@ -288,11 +288,15 @@ def decode_payload(buffer: "bytes | str", fmt: str | None = None) -> bytes:
     return base64.b64decode(buffer)
 
 
-def decode_image(data: "bytes | str", fmt: str | None = None) -> np.ndarray:
+def decode_image(data: "bytes | str | None", fmt: str | None = None
+                 ) -> np.ndarray:
     """Decode to 2-D uint8 grayscale.  Format sniffed from magic bytes
     when not given (the reference trusts the caller's format string).
     Base64 / data-URL strings are accepted like the reference's
-    request buffers (see decode_payload)."""
+    request buffers (see decode_payload).  A missing payload (a NULL
+    ``image`` cell) is a ValueError like any other undecodable input."""
+    if data is None:
+        raise ValueError("missing image payload")
     if isinstance(data, str):
         data = decode_payload(data)
     if fmt is not None:

@@ -29,7 +29,7 @@ from dataclasses import dataclass
 import numpy as np
 
 from ..operators import kernels as K
-from ..operators.templates import SCALE, render_glyph
+from ..operators.templates import render_glyph
 from . import codecs
 
 CANVAS_H = 400
@@ -85,7 +85,7 @@ def render_micr_line(text: str, rng: np.random.Generator,
     """Rasterize a MICR string (ink=255 mask); spaces become word gaps."""
     glyphs: list[np.ndarray | None] = []
     for ch in text:
-        glyphs.append(None if ch == " " else render_glyph(ch, SCALE))
+        glyphs.append(None if ch == " " else render_glyph(ch))
     height = max(g.shape[0] for g in glyphs if g is not None)
     width = 0
     for i, g in enumerate(glyphs):

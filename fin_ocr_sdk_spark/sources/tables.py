@@ -165,7 +165,6 @@ def _write_micr_cases(out_dir: str) -> None:
 
 def _intermediate_chunk(args: tuple[int, int, int]) -> tuple[list, list]:
     start, count, seed = args
-    from ..config import Config
     from ..operators import kernels as K
     from ..operators.classify import (ncc_scores_batch, stack_char_crops)
     from ..operators.segment import find_micr_line_info
@@ -173,7 +172,6 @@ def _intermediate_chunk(args: tuple[int, int, int]) -> tuple[list, list]:
     from .fixtures import compose_check, make_spec
     templates = get_default_templates()
     zt, zn = templates.zero()
-    cfg = Config()
     contours: list = []
     scores: list = []
     for i in range(start, start + count):
@@ -181,10 +179,9 @@ def _intermediate_chunk(args: tuple[int, int, int]) -> tuple[list, list]:
         spec = make_spec(i, rng)
         gray = K.grayscale(compose_check(spec, rng))
         doc_id = f"doc-{i:08d}"
-        band = get_micr_band(gray, cfg)
-        binary = K.adaptive_threshold_gaussian_inv(
-            K.gaussian_blur(band, 3), 19, 1)
-        li = find_micr_line_info(binary, zt, zn, cfg)
+        band = get_micr_band(gray)
+        binary = K.adaptive_threshold_gaussian_inv(K.gaussian_blur(band, 3))
+        li = find_micr_line_info(binary, zt, zn)
         if li is None:
             continue
         line, _ = li

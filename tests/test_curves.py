@@ -4,7 +4,6 @@ clear_by_boundary polygon kernel."""
 import numpy as np
 import pytest
 
-from fin_ocr_sdk_spark.config import Config
 from fin_ocr_sdk_spark.operators import kernels as K
 from fin_ocr_sdk_spark.operators.curves import curves_clear
 from fin_ocr_sdk_spark.plans.scan import get_default_templates, scan_check
@@ -75,10 +74,8 @@ def _check_with_curved_signature() -> np.ndarray:
 
 
 def test_curved_signature_overlap_extracts(templates):
-    cfg = Config()
-    assert cfg.overlap_correction
     res = scan_check(
         codecs.encode_image(_check_with_curved_signature(), "png"),
-        "png", templates, cfg)
+        "png", templates)
     assert res.ok, res.error
     assert res.micr_value == "U2154UT031100649T4400000084U"

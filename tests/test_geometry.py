@@ -68,9 +68,11 @@ def test_enlarge_rect():
 
 
 def test_rect_touches_border():
-    assert G.rect_touches_border((0, 5, 2, 2), (10, 10), ["left"])
-    assert not G.rect_touches_border((1, 5, 2, 2), (10, 10), ["left"])
-    assert G.rect_touches_border((5, 8, 2, 2), (10, 10), ["bottom"])
+    assert G.rect_touches_border((0, 5, 2, 2), (10, 10))  # left
+    assert G.rect_touches_border((5, 0, 2, 2), (10, 10))  # top
+    assert G.rect_touches_border((8, 5, 2, 2), (10, 10))  # right
+    assert G.rect_touches_border((5, 8, 2, 2), (10, 10))  # bottom
+    assert not G.rect_touches_border((1, 1, 8, 8), (10, 10))
 
 
 def test_degree_helpers():

@@ -4,16 +4,19 @@ Two recovery mechanisms, mirroring the reference:
 - projection recovery (pncc, src/line.ts:183-216): a merged
   stroke+glyph contour fails y-containment, gets clipped back to the
   expected char rect via gap projections → line.overlap=True
-- overlap correction (src/line.ts:582-607, gated by
-  cfg.overlap_correction): clear padding + thin-vertical runs + h/v
-  thinning on the line ROI, then a second segmentation pass
+- overlap correction (src/line.ts:582-607, on by default in the
+  reference and always on here): clear padding + thin-vertical runs +
+  h/v thinning on the line ROI, then a second segmentation pass
 """
 
 import numpy as np
 import pytest
 
-from fin_ocr_sdk_spark.config import Config
-from fin_ocr_sdk_spark.plans.scan import get_default_templates, scan_check
+from fin_ocr_sdk_spark.operators import kernels as K
+from fin_ocr_sdk_spark.operators.classify import translate_line
+from fin_ocr_sdk_spark.operators.segment import find_micr_line_info
+from fin_ocr_sdk_spark.plans.scan import (get_default_templates,
+                                          get_micr_band, scan_check)
 from fin_ocr_sdk_spark.sources import codecs
 from fin_ocr_sdk_spark.sources.fixtures import CheckSpec, compose_check
 
@@ -39,20 +42,20 @@ def templates():
 
 
 def test_projection_recovery_without_correction(templates):
-    cfg = Config()
-    cfg.overlap_correction = False
-    res = scan_check(codecs.encode_image(_check_with_stroke(), "png"),
-                     "png", templates, cfg)
-    assert res.ok
-    assert res.overlap  # pncc recovered clipped contours
-    assert res.micr_value == MICR.replace(" ", "")
+    """The first segmentation pass alone, before any correction:
+    pncc recovers the clipped contours and the full line reads."""
+    band = get_micr_band(K.grayscale(_check_with_stroke()))
+    binary = K.adaptive_threshold_gaussian_inv(K.gaussian_blur(band, 3))
+    zero_t, zero_n = templates.zero()
+    line, _ = find_micr_line_info(binary, zero_t, zero_n,
+                                  templates=templates)
+    assert line.overlap  # pncc recovered clipped contours
+    assert translate_line(line, templates).value == MICR.replace(" ", "")
 
 
 def test_overlap_correction_second_pass(templates):
-    cfg = Config()
-    assert cfg.overlap_correction  # default on, like the reference
     res = scan_check(codecs.encode_image(_check_with_stroke(), "png"),
-                     "png", templates, cfg)
+                     "png", templates)
     assert res.ok
     # the reported flag is the SECOND pass's (clean) overlap state,
     # matching the reference's post-correction response

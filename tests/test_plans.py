@@ -240,3 +240,97 @@ def test_every_package_module_is_reached():
         reached.add(name)
         todo += _imported_modules(mods[name], name, mods)
     assert sorted(set(mods) - reached) == []
+
+
+# The per-image scan: its defaulted parameters are the only values a
+# caller could still set on it.
+_SCAN_PATH = ("plans/scan.py", "operators/segment.py",
+              "operators/classify.py", "operators/kernels.py",
+              "operators/templates.py")
+
+# Defaulted parameters no non-test call passes, each with its reason.
+_UNSET_ALLOWED: dict[str, str] = {}
+
+
+def _defaulted_params(path: str) -> list[tuple[str, str, int | None]]:
+    """(callee name, parameter, positional index or None) of every
+    defaulted parameter of a module-level function or a method; an
+    ``__init__`` is called by its class name, and ``self``/``cls`` are
+    not counted in the positional index."""
+    import ast
+
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    funcs = []
+    for node in tree.body:
+        if isinstance(node, ast.FunctionDef):
+            funcs.append((node.name, node, 0))
+        elif isinstance(node, ast.ClassDef):
+            funcs += [(node.name if m.name == "__init__" else m.name, m, 1)
+                      for m in node.body if isinstance(m, ast.FunctionDef)]
+    out = []
+    for name, fn, skip in funcs:
+        a = fn.args
+        pos = a.posonlyargs + a.args
+        for i, p in enumerate(pos[len(pos) - len(a.defaults):],
+                              start=len(pos) - len(a.defaults)):
+            out.append((name, p.arg, i - skip))
+        out += [(name, p.arg, None)
+                for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                if d is not None]
+    return out
+
+
+def _passed_params(paths) -> set[tuple[str, str | int]]:
+    """(callee name, keyword or positional index) of every argument
+    passed by a call in ``paths``; a ``*args`` or ``**kwargs`` splat
+    passes every index or keyword (``"*"``/``"**"``)."""
+    import ast
+
+    out = set()
+    for path in paths:
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = node.func
+            name = (fn.id if isinstance(fn, ast.Name)
+                    else fn.attr if isinstance(fn, ast.Attribute) else None)
+            if name is None:
+                continue
+            for i, arg in enumerate(node.args):
+                out.add((name, "*" if isinstance(arg, ast.Starred) else i))
+            for kw in node.keywords:
+                out.add((name, kw.arg or "**"))
+    return out
+
+
+def test_scan_path_has_no_unset_parameters():
+    """Every defaulted parameter of the scan path is passed, by keyword
+    or by position, by some call outside the tests: a value no caller
+    sets is a constant, not a parameter."""
+    import glob
+
+    callers = [os.path.join(_REPO, "__spark_entry__.py"),
+               os.path.join(_REPO, "bench.py")]
+    callers += glob.glob(os.path.join(_REPO, _PKG, "**", "*.py"),
+                         recursive=True)
+    callers += glob.glob(os.path.join(_REPO, "scripts", "*.py"))
+    callers += [p for p in glob.glob(os.path.join(_REPO, "perfbench", "**",
+                                                  "*.py"), recursive=True)
+                if os.sep + "tests" + os.sep not in p]
+    passed = _passed_params(callers)
+    unset = []
+    for rel in _SCAN_PATH:
+        for name, param, idx in _defaulted_params(
+                os.path.join(_REPO, _PKG, rel)):
+            ways = {(name, param), (name, "**")}
+            if idx is not None:
+                ways |= {(name, idx), (name, "*")}
+            if ways & passed:
+                continue
+            key = f"{rel[:-3].replace('/', '.')}.{name}({param})"
+            if key not in _UNSET_ALLOWED:
+                unset.append(key)
+    assert not unset, "never passed: " + ", ".join(unset)

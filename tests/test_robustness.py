@@ -86,3 +86,11 @@ def test_scan_step_exception_becomes_internal_error(monkeypatch):
     assert res.error == "internal: RuntimeError: boom"
     # decode failures keep their own text
     assert scan_check(b"\x89PNGjunk", "png").error.startswith("decode: ")
+
+
+def test_missing_payload_is_decode_error():
+    """A NULL image cell reaches the scan as None: a decode error, not
+    a TypeError outside the decode boundary."""
+    res = scan_check(None, "png", get_default_templates())
+    assert not res.ok
+    assert res.error == "decode: missing image payload"

@@ -109,7 +109,6 @@ def test_seed_fallback_when_zero_template_degraded(templates):
     'degraded/absent zero' case where the reference gives up,
     src/check.ts:322-325), the seed search re-runs across ALL templates
     and the line is still found and read exactly."""
-    from fin_ocr_sdk_spark.config import Config
     from fin_ocr_sdk_spark.operators import kernels as K
     from fin_ocr_sdk_spark.operators.segment import find_micr_line_info
     from fin_ocr_sdk_spark.plans.scan import get_micr_band
@@ -119,46 +118,14 @@ def test_seed_fallback_when_zero_template_degraded(templates):
                      dark_header=False, noise=False)
     gray = K.grayscale(compose_check(spec, rng))
     band = get_micr_band(gray)
-    img = K.adaptive_threshold_gaussian_inv(K.gaussian_blur(band, 3), 19, 1)
+    img = K.adaptive_threshold_gaussian_inv(K.gaussian_blur(band, 3))
     dead_zero = np.zeros((36, 36))
-    assert find_micr_line_info(img, dead_zero, 0.0, Config()) is None
-    li = find_micr_line_info(img, dead_zero, 0.0, Config(),
-                             templates=templates)
+    assert find_micr_line_info(img, dead_zero, 0.0) is None
+    li = find_micr_line_info(img, dead_zero, 0.0, templates=templates)
     assert li is not None
     from fin_ocr_sdk_spark.operators.classify import translate_line
-    assert (translate_line(li[0], templates, 3).value
+    assert (translate_line(li[0], templates).value
             == GOLDEN_SAMPLE.replace(" ", ""))
-
-
-def test_default_roots_from_best_char(templates):
-    """line.ts:327-352 parity: an unset/empty roots list seeds type-1
-    from the best-classifying char; oversized chars are skipped."""
-    from fin_ocr_sdk_spark.config import Config
-    from fin_ocr_sdk_spark.operators import kernels as K
-    from fin_ocr_sdk_spark.operators.classify import ncc_scores_batch, \
-        stack_char_crops
-    from fin_ocr_sdk_spark.operators.segment import (default_roots,
-                                                     find_micr_line_info)
-    from fin_ocr_sdk_spark.plans.scan import get_micr_band
-
-    rng = np.random.default_rng(3)
-    spec = CheckSpec(micr_text=GOLDEN_SAMPLE, skew=0.0, fmt="png",
-                     dark_header=False, noise=False)
-    gray = K.grayscale(compose_check(spec, rng))
-    band = get_micr_band(gray)
-    img = K.adaptive_threshold_gaussian_inv(K.gaussian_blur(band, 3), 19, 1)
-    zt, zn = templates.zero()
-    line, _ = find_micr_line_info(img, zt, zn, Config())
-    chars = line.get_chars()
-    roots = default_roots(line, chars)
-    kept = [c for c in chars
-            if c.rect[3] <= line.cfg.max_char_height
-            and c.rect[2] <= line.cfg.max_char_width]
-    scores = ncc_scores_batch(stack_char_crops(line, kept), templates)
-    assert roots == [kept[int(scores.max(axis=1).argmax())].rect]
-    # falsy-roots parity: empty list triggers the default path
-    line.roots = []
-    assert line._set_types(chars) is chars or True  # must not raise
 
 
 def test_decode_failure_is_reported(templates):

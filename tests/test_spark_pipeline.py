@@ -385,3 +385,48 @@ def test_shared_media_ref_same_spans_both_strategies(spark, smoke_dir,
         pd.testing.assert_frame_equal(per_doc["doc-a"], per_doc["doc-b"])
         results.append(per_doc["doc-a"])
     pd.testing.assert_frame_equal(results[0], results[1])
+
+
+def test_null_image_is_one_decode_error(spark, smoke_dir, tmp_path):
+    """A NULL ``image`` cell yields one ``decode:`` micr:error span, and
+    the other images their golden spans, on both media strategies
+    (an in-memory table takes the arrow path, a parquet part the direct
+    path); preprocess_only and the resumable scan report it the same
+    way instead of failing their task."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from fin_ocr_sdk_spark.plans import pipeline as P
+    from fin_ocr_sdk_spark.plans.lineage import (emitted_spans,
+                                                 run_resumable_extract)
+
+    docs = spark.read.parquet(os.path.join(smoke_dir, "documents.parquet"))
+    rows = (pd.read_parquet(os.path.join(smoke_dir, "media.parquet"),
+                            columns=["media_ref", "format", "image"])
+            .sort_values("media_ref").head(4).reset_index(drop=True))
+    null_ref = rows.loc[1, "media_ref"]
+    rows.loc[1, "image"] = None
+    good = set(rows["media_ref"]) - {null_ref}
+    exp = pd.read_parquet(os.path.join(smoke_dir, "expected_spans.parquet"))
+    want = _micr_set(exp[exp["media_ref"].isin(good)].to_dict("records"))
+    part = str(tmp_path / "media.parquet")
+    pq.write_table(pa.Table.from_pandas(rows, preserve_index=False), part)
+    schema = "media_ref string, format string, image binary"
+    in_memory = spark.createDataFrame(rows, schema)
+    on_disk = spark.read.parquet(part)
+    for media, strategy in ((in_memory, "arrow"), (on_disk, "direct")):
+        assert P._choose_media_strategy(media) == strategy
+        got = _micr_set(extract_spans(docs, media).collect())
+        errors = [s for s in got if s[1] == "micr:error"]
+        assert errors == [(null_ref, "micr:error",
+                           "decode: missing image payload")]
+        assert got - set(errors) == want
+        pre = preprocess_only(docs, media).toPandas().set_index("media_ref")
+        assert pre.loc[null_ref, "overlap"] == (
+            "error: decode: missing image payload")
+        assert (pre.drop(null_ref)["overlap"] == "false").all()
+    out_dir = str(tmp_path / "lineage")
+    run_resumable_extract(spark, docs, on_disk, out_dir)
+    emitted = emitted_spans(spark, out_dir).toPandas()
+    assert _micr_set(emitted.to_dict("records")) == want | {
+        (null_ref, "micr:error", "decode: missing image payload")}
