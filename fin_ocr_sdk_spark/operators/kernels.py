@@ -12,18 +12,25 @@ OpenCV's documented math so behavior matches the reference pipeline
   resize (INTER_AREA) src/image.ts:211-225
   rotate              src/image.ts:714-727  (INTER_CUBIC, BORDER_REPLICATE)
   min-area rect       src/contour.ts:130-141 (for skew angle)
-  connected regions   src/image.ts:416-446  (RETR_EXTERNAL analog)
+  connected regions   src/image.ts:416-446  (RETR_EXTERNAL analog,
+                      over run tables; dilate kw x 1 as widen_runs)
   clear_padding       src/image.ts:1102-1122
   clear_by_vertical_thickness src/image.ts:1077-1100
   hv_thin             src/image.ts:1124-1184
 
 Convention: images are 2-D uint8 arrays indexed [y, x]; binary images
 use 255 = set (ink), 0 = clear, i.e. white-on-black after thresholding
-(the reference's post-adaptive-threshold polarity).
+(the reference's post-adaptive-threshold polarity).  Binary stages
+that feed only components (labeling, the skew path's dilate) pass RUN
+TABLES instead of images — see "connected components" below.
+Thresholds, run extraction, widening and labeling are whole-array
+numpy with no python loop per run; the rotation's shears loop only
+over their integer-shift runs (a few dozen block operations each).
 """
 
 from __future__ import annotations
 
+import functools
 import math
 from dataclasses import dataclass, field
 
@@ -66,37 +73,70 @@ def _gaussian_kernel_1d(ksize: int) -> np.ndarray:
     return k / k.sum()
 
 
-def _sep_filter_u8(img: np.ndarray, k: np.ndarray) -> np.ndarray:
-    """Separable correlation for uint8 images in 8.8 fixed point.
-
-    Weights are scaled to 256ths (renormalized so the row accumulator
-    cannot overflow uint16); each axis pass rounds back to uint8, which
-    keeps the memory traffic — the binding resource with a scan worker
-    per core — at uint8/uint16 width.
+@functools.lru_cache(maxsize=None)
+def _fixed_point_taps(ksize: int) -> tuple[np.ndarray, int, bool]:
+    """(uint16 weights in 256ths, their sum, symmetric?) of the ksize
+    gaussian, renormalized so the row accumulator cannot overflow
+    uint16.  The overflow trim can break symmetry (it decrements one
+    of the taps), so callers pair mirror taps only when ``symmetric``.
     """
-    w = np.round(k * 256.0).astype(np.uint16)
+    w = np.round(_gaussian_kernel_1d(ksize) * 256.0).astype(np.uint16)
     w = np.maximum(w, 1)
     while int(w.sum()) * 255 > 65535:
         w[int(np.argmax(w))] -= 1
-    half = int(w.sum()) // 2
-    r = len(w) // 2
+    return w, int(w.sum()), bool(np.all(w == w[::-1]))
+
+
+def _reflect_pad(src: np.ndarray, r: int, horizontal: bool) -> np.ndarray:
+    """``np.pad(src, r, mode="reflect")`` along one axis: reflect-101,
+    periodic with period 2(n-1) once r >= n.  One center copy plus two
+    r-wide border gathers, without np.pad's per-call overhead (the
+    skew refines blur many small crops)."""
+    n = src.shape[1] if horizontal else src.shape[0]
+    period = max(1, 2 * (n - 1))
+
+    def fold(i: int) -> int:
+        j = i % period
+        return j if j < n else period - j
+
+    lo = [fold(i) for i in range(-r, 0)]
+    hi = [fold(i) for i in range(n, n + r)]
+    if horizontal:
+        out = np.empty((src.shape[0], n + 2 * r), dtype=src.dtype)
+        out[:, r:r + n] = src
+        out[:, :r] = src[:, lo]
+        out[:, r + n:] = src[:, hi]
+    else:
+        out = np.empty((n + 2 * r, src.shape[1]), dtype=src.dtype)
+        out[r:r + n] = src
+        out[:r] = src[lo]
+        out[r + n:] = src[hi]
+    return out
+
+
+def _sep_filter_u8(img: np.ndarray, ksize: int) -> np.ndarray:
+    """Separable gaussian correlation for uint8 images in 8.8 fixed
+    point (weights from :func:`_fixed_point_taps`).
+
+    Each axis pass rounds back to uint8, which keeps the memory traffic
+    — the binding resource with a scan worker per core — at
+    uint8/uint16 width.
+    """
+    w, total, sym = _fixed_point_taps(ksize)
+    n = len(w)
+    r = n // 2
     h, width = img.shape
 
     # symmetric taps pair up: (sl_i + sl_j) * w_i == sl_i*w_i + sl_j*w_j
     # when w_i == w_j, and uint16 sums commute exactly (no intermediate
     # overflow: 2*w_i <= sum(w) <= 257 so 510*w_i < 2^16), so pairing
-    # halves the multiplies with a bit-identical result.  The overflow
-    # trim above can break symmetry (it decrements one of the taps);
-    # pair only while the mirror weights still match.
-    sym = bool(np.all(w == w[::-1]))
-
+    # halves the multiplies with a bit-identical result
     def one_axis(src: np.ndarray, horizontal: bool) -> np.ndarray:
-        pad = ((0, 0), (r, r)) if horizontal else ((r, r), (0, 0))
-        padded = np.pad(src, pad, mode="reflect")
-        acc = np.zeros(src.shape, dtype=np.uint16)
+        padded = _reflect_pad(src, r, horizontal)
+        # the rounding half goes in first: uint16 adds commute exactly
+        acc = np.full(src.shape, total // 2, dtype=np.uint16)
         scratch = np.empty(src.shape, dtype=np.uint16)
         pair_sum = np.empty(src.shape, dtype=np.uint16)
-        n = len(w)
 
         def tap(i):
             return (padded[:, i:i + width] if horizontal
@@ -113,8 +153,7 @@ def _sep_filter_u8(img: np.ndarray, k: np.ndarray) -> np.ndarray:
         for i in taps:
             np.multiply(tap(i), w[i], out=scratch, dtype=np.uint16)
             acc += scratch
-        acc += half
-        np.floor_divide(acc, int(w.sum()), out=acc)
+        np.floor_divide(acc, total, out=acc)
         return acc.astype(np.uint8)
 
     return one_axis(one_axis(img, True), False)
@@ -123,7 +162,7 @@ def _sep_filter_u8(img: np.ndarray, k: np.ndarray) -> np.ndarray:
 def gaussian_blur(img: np.ndarray, ksize: int = 3) -> np.ndarray:
     """GaussianBlur with sigma derived from ksize, over a uint8 image
     (every decoder and image kernel here yields uint8)."""
-    return _sep_filter_u8(img, _gaussian_kernel_1d(ksize))
+    return _sep_filter_u8(img, ksize)
 
 
 # ------------------------------------------------------------ threshold
@@ -146,18 +185,25 @@ def otsu_threshold(img: np.ndarray) -> int:
     return int(np.argmax(between))
 
 
+def _set_255(mask: np.ndarray) -> np.ndarray:
+    """A boolean mask as a 0/255 uint8 image, in the mask's buffer."""
+    out = mask.view(np.uint8)
+    out *= 255
+    return out
+
+
 def threshold_binary_inv(img: np.ndarray, thresh: float) -> np.ndarray:
     """THRESH_BINARY_INV: dst = (src > thresh) ? 0 : 255."""
-    return np.where(img > thresh, 0, 255).astype(np.uint8)
+    return _set_255(img <= thresh)
 
 
 def otsu_binary_inv(img: np.ndarray) -> np.ndarray:
     return threshold_binary_inv(img, otsu_threshold(img))
 
 
-# the reference's adaptiveThreshold arguments (src/image.ts:280-290)
+# the reference's adaptiveThreshold block size (src/image.ts:280-290);
+# its C is 1, folded into the comparison below
 _ADAPTIVE_BLOCK = 19
-_ADAPTIVE_C = 1
 
 
 def adaptive_threshold_gaussian_inv(img: np.ndarray) -> np.ndarray:
@@ -168,9 +214,9 @@ def adaptive_threshold_gaussian_inv(img: np.ndarray) -> np.ndarray:
     the binarization that flips black-on-white ink to 255-on-0.  The
     local mean runs in 8.8 fixed point (see _sep_filter_u8).
     """
-    mean = _sep_filter_u8(img, _gaussian_kernel_1d(_ADAPTIVE_BLOCK))
-    return np.where(img > mean.astype(np.int16) - _ADAPTIVE_C,
-                    0, 255).astype(np.uint8)
+    mean = _sep_filter_u8(img, _ADAPTIVE_BLOCK)
+    # for integers, not (src > mean - 1) is src < mean
+    return _set_255(img < mean)
 
 
 # ----------------------------------------------------------- morphology
@@ -290,8 +336,10 @@ def _shear_rows_cubic(img: np.ndarray, shifts: np.ndarray) -> np.ndarray:
     lut = _cubic_lut()
     q = np.rint(t * _CUBIC_LEVELS).astype(np.int64)
     margin = int(max(abs(k.min()), abs(k.max()))) + 2
-    padded = np.pad(img.astype(np.float32), ((0, 0), (margin, margin)),
-                    mode="edge")
+    padded = np.empty((h, w + 2 * margin), dtype=np.float32)  # edge pad
+    padded[:, margin:margin + w] = img
+    padded[:, :margin] = img[:, :1]
+    padded[:, margin + w:] = img[:, -1:]
     out = np.empty((h, w), dtype=np.float32)
     # rows sharing an integer shift form contiguous runs (the rotation
     # caller passes a*(ys - cy), monotonic in y; the cut logic only
@@ -313,6 +361,11 @@ def _shear_rows_cubic(img: np.ndarray, shifts: np.ndarray) -> np.ndarray:
 
 def _rotate_shear(img: np.ndarray, angle_deg: float, y0: int, y1: int
                   ) -> np.ndarray:
+    """Output rows [y0, y1) of the Paeth 3-shear rotation: x-shear the
+    source rows pass 2 reads, y-shear through a skewed buffer (one
+    block copy per integer-shift column run, then four whole-band
+    taps), x-shear the band.  Each pass adds its four cubic taps in
+    tap order in float32; rounding happens once, at the end."""
     h, w = img.shape
     cx, cy = w // 2, h // 2
     th = math.radians(angle_deg)
@@ -332,38 +385,35 @@ def _rotate_shear(img: np.ndarray, angle_deg: float, y0: int, y1: int
     hi = min(h, y1 + int(k.max()) + 2)
     ys_p1 = np.arange(lo, hi, dtype=np.float32)
     g1 = _shear_rows_cubic(img[lo:hi], a * (ys_p1 - cy))
-    # pass 2: y-shear, only output rows [y0, y1).  sy is monotonic in
-    # x, so columns sharing a k value form CONTIGUOUS runs and each
-    # (run, j) term reads a contiguous row block of g1 — plain slices
-    # replace the flat element gather (same values, same j-order adds,
-    # so the output is bit-identical; the gather's per-element index
-    # arithmetic was the rotation's single largest cost).
+    # pass 2: y-shear, only output rows [y0, y1).  Output (y, c) reads
+    # g1 rows y + k[c] + j - 1, j = 0..3 (replicate clamp against the
+    # FULL image; clamped rows stay inside [lo, hi) by construction).
+    # sy is monotonic in x, so columns sharing a k value form
+    # contiguous runs: each run's nb + 3 source rows are copied ONCE
+    # into a skewed buffer sk[i, c] = g1 row y0 + k[c] - 1 + i, and
+    # tap j is then the whole-band slice sk[j:j + nb]; each output
+    # pixel sums its four float32 products in j order.
     lut = _cubic_lut()
     q = np.rint(t * _CUBIC_LEVELS).astype(np.int32)
     wy = lut[q]  # (w, 4)
     nb = y1 - y0
-    cuts = np.nonzero(np.diff(k))[0] + 1
-    c0s = np.concatenate([[0], cuts])
-    c1s = np.concatenate([cuts, [w]])
-    out2 = np.empty((nb, w), dtype=np.float32)
-    for c0, c1 in zip(c0s, c1s):
-        kv = int(k[c0])
-        acc = np.zeros((nb, c1 - c0), dtype=np.float32)
-        for j in range(4):
-            r0 = y0 + kv + j - 1
-            if 0 <= r0 and r0 + nb <= h:
-                blk = g1[r0 - lo:r0 - lo + nb, c0:c1]
-            else:
-                # replicate clamp against the FULL image bounds; the
-                # clamped row stays inside [lo, hi) by construction
-                ridx = np.clip(np.arange(r0, r0 + nb), 0, h - 1) - lo
-                blk = g1[ridx, c0:c1]
-            acc += blk * wy[c0:c1, j]
-        out2[:, c0:c1] = acc
+    sk = np.empty((nb + 3, w), dtype=np.float32)
+    cuts = np.flatnonzero(np.diff(k)) + 1
+    for c0, c1 in zip([0, *cuts.tolist()], [*cuts.tolist(), w]):
+        r0 = y0 + int(k[c0]) - 1
+        if 0 <= r0 and r0 + nb + 3 <= h:
+            sk[:, c0:c1] = g1[r0 - lo:r0 - lo + nb + 3, c0:c1]
+        else:
+            ridx = np.clip(np.arange(r0, r0 + nb + 3), 0, h - 1) - lo
+            sk[:, c0:c1] = g1[ridx, c0:c1]
+    out2 = sk[0:nb] * wy[:, 0]
+    for j in range(1, 4):
+        out2 += sk[j:j + nb] * wy[:, j]
     # pass 3: x-shear on the band
     ys2 = np.arange(y0, y1, dtype=np.float32)
     out3 = _shear_rows_cubic(out2, a * (ys2 - cy))
-    return np.clip(np.round(out3, out=out3), 0, 255).astype(np.uint8)
+    np.round(out3, out=out3)
+    return np.clip(out3, 0, 255, out=out3).astype(np.uint8)
 
 
 def _cubic_weights(t: np.ndarray) -> tuple[np.ndarray, ...]:
@@ -432,11 +482,13 @@ def convex_hull(points: np.ndarray) -> np.ndarray:
     """Andrew's monotone chain; points (N,2) float; returns CCW hull.
     Scalar 2-D cross products over python tuples — much faster than
     np.cross per comparison."""
-    pts = np.unique(np.asarray(points, dtype=np.float64), axis=0)
+    pts = np.asarray(points, dtype=np.float64)
+    pts = pts[np.lexsort((pts[:, 1], pts[:, 0]))]
+    if len(pts) > 1:    # drop repeats: np.unique(axis=0), minus its cost
+        pts = pts[np.append(True, (pts[1:] != pts[:-1]).any(axis=1))]
     if len(pts) <= 2:
         return pts
-    order = np.lexsort((pts[:, 1], pts[:, 0]))
-    tup = [(float(x), float(y)) for x, y in pts[order]]
+    tup = list(map(tuple, pts.tolist()))
 
     def half(seq):
         chain: list[tuple[float, float]] = []
@@ -512,42 +564,109 @@ def skew_angle_from_rect(width: float, height: float, angle: float) -> float:
 
 
 # ------------------------------------------------ connected components
+#
+# Binary stages pass RUN TABLES, not images: a run table is three
+# parallel int arrays (rows, x0s, x1s) listing every maximal horizontal
+# run of set pixels, [x0, x1) with x1 exclusive, in row-major order.
+# Runs are a small fraction of pixels, and every step below is a
+# whole-array numpy op over them — no python loop per run.
 
-class _LazyLabels:
-    """Deferred label-image paint, shared by every Region of one
-    labeling.  Most find_regions consumers only read rects/areas (now
-    aggregated from the run table), so the cumsum paint of the full
-    label image runs only when some Region actually indexes pixels
-    (mask / minmax_x_in_yrange) — and then once, cached for all
-    Regions of the call."""
+Runs = tuple[np.ndarray, np.ndarray, np.ndarray]
 
-    __slots__ = ("_paint", "_arr", "shape")
 
-    def __init__(self, paint, shape):
-        self._paint = paint
-        self._arr = None
-        self.shape = shape
+def runs_of(mask: np.ndarray) -> Runs:
+    """Run table of the set (non-zero) pixels of a 2-D mask, from one
+    transition scan: each row is framed by a clear column on both
+    sides, so over the flattened frame the transitions alternate
+    start, end, start, ... and no run crosses a row."""
+    h, w = mask.shape
+    stride = w + 2
+    framed = np.zeros((h, stride), dtype=bool)
+    framed[:, 1:w + 1] = mask
+    flat = framed.ravel()
+    t = np.flatnonzero(flat[1:] != flat[:-1]) + 1
+    starts, ends = t[0::2], t[1::2]
+    rows = starts // stride
+    base = rows * stride + 1
+    return rows, starts - base, ends - base
 
-    def materialize(self) -> np.ndarray:
-        if self._arr is None:
-            self._arr = self._paint()
-        return self._arr
 
-    def __getitem__(self, key):
-        return self.materialize()[key]
+def widen_runs(runs: Runs, kw: int, width: int) -> Runs:
+    """The run table of ``dilate(img, kw, 1)`` given the run table of
+    ``img`` (``width`` columns).  With OpenCV's anchor kw//2 and a
+    zero-padded border, a run [x0, x1) dilates to
+    [x0 - (kw-1-kw//2), x1 + kw//2) clipped to the image; runs of one
+    row that now overlap or touch merge.  Widening keeps x0s and x1s
+    non-decreasing within a row, so a merged run starts where the row
+    changes or a gap opens, and ends at its last member's x1."""
+    rows, x0s, x1s = runs
+    if len(rows) == 0:
+        return runs
+    ax = kw // 2
+    x0w = np.maximum(x0s - (kw - 1 - ax), 0)
+    x1w = np.minimum(x1s + ax, width)
+    first = np.ones(len(rows), dtype=bool)
+    first[1:] = (rows[1:] != rows[:-1]) | (x0w[1:] > x1w[:-1])
+    starts = np.flatnonzero(first)
+    last = np.append(starts[1:], len(rows)) - 1
+    return rows[starts], x0w[starts], x1w[last]
+
+
+def _label_run_table(runs: Runs, width: int) -> tuple[np.ndarray, int]:
+    """8-connected component label (1..count) of every run.
+
+    Neighbours: runs of the previous row touching [a0, a1) — [b0, b1)
+    with b1 >= a0 and b0 <= a1 (diagonal contact included) — form one
+    contiguous index range, found for all runs at once with two
+    searchsorted calls over the row-major start/end keys.  Components
+    then come from min-hooking (each edge hooks the larger root onto
+    the smaller, ``np.minimum.at``) plus pointer jumping, repeated until
+    no edge joins two roots.  A root only ever hooks onto a smaller
+    index, so every component ends rooted at its first run in
+    row-major order, and dense labels ranked by root are the order of
+    first appearance."""
+    rows, x0s, x1s = runs
+    n = len(rows)
+    stride = width + 2           # keys of different rows never interleave
+    start_key = rows * stride + x0s
+    end_key = rows * stride + x1s
+    above = (rows - 1) * stride
+    lo = np.searchsorted(end_key, above + x0s, side="left")
+    hi = np.searchsorted(start_key, above + x1s, side="right")
+    deg = np.maximum(hi - lo, 0)
+    src = np.repeat(np.arange(n), deg)
+    offs = np.cumsum(deg) - deg
+    dst = np.repeat(lo - offs, deg) + np.arange(len(src))
+    parent = np.arange(n)
+    while True:
+        ps, pd = parent[src], parent[dst]
+        join = ps != pd
+        if not join.any():
+            break
+        np.minimum.at(parent, np.maximum(ps[join], pd[join]),
+                      np.minimum(ps[join], pd[join]))
+        while True:
+            up = parent[parent]
+            if np.array_equal(up, parent):
+                break
+            parent = up
+    is_root = parent == np.arange(n)
+    dense = np.cumsum(is_root)
+    return dense[parent], int(dense[-1]) if n else 0
 
 
 @dataclass
 class Region:
     """One connected component of set pixels — the analog of the
-    reference's Contour (external contour + bounding rect + areas)."""
+    reference's Contour (external contour + bounding rect + areas).
+    Carries its own runs (row-major), so pixel queries read O(runs)."""
 
     idx: int
     rect: tuple[int, int, int, int]  # x, y, w, h
     area: int  # rect area (w*h) — reference Contour.area
     area2: float  # component pixel count — analog of cv.contourArea
-    label: int
-    labels: np.ndarray = field(repr=False)  # shared labeled image
+    label: int  # rank of the component's first run in row-major order
+    runs: Runs = field(repr=False)
 
     @property
     def width(self) -> int:
@@ -560,155 +679,60 @@ class Region:
     def y_range(self) -> tuple[int, int]:
         return (self.rect[1], self.rect[1] + self.rect[3])
 
-    def mask(self) -> np.ndarray:
-        """Boolean mask of this component, cropped to its rect."""
-        x, y, w, h = self.rect
-        return self.labels[y:y + h, x:x + w] == self.label
+    def row_extents(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """(ys, first_x, last_x) of every row of the component, last_x
+        inclusive.  Runs are row-major, so a row's first run holds its
+        minimum x and its last run its maximum."""
+        rows, x0s, x1s = self.runs
+        first = np.flatnonzero(np.diff(rows, prepend=-1))
+        last = np.append(first[1:], len(rows)) - 1
+        return rows[first], x0s[first], x1s[last] - 1
 
     def minmax_x_in_yrange(self, y_min: int, y_max: int) -> tuple[int, int] | None:
         """Min and max x of component pixels with y in [y_min, y_max]."""
-        y0 = max(0, y_min)
-        y1 = min(self.labels.shape[0], y_max + 1)
-        if y1 <= y0:
+        rows, x0s, x1s = self.runs
+        i0 = int(np.searchsorted(rows, y_min, side="left"))
+        i1 = int(np.searchsorted(rows, y_max, side="right"))
+        if i1 <= i0:
             return None
-        sub = self.labels[y0:y1, :] == self.label
-        if not sub.any():
-            return None
-        xs = np.nonzero(sub)[1]
-        return (int(xs.min()), int(xs.max()))
-
-
-def _label_runs(binary: np.ndarray):
-    """8-connected component labeling of set (non-zero) pixels.
-
-    Row-run union-find, O(runs) — ALL runs are extracted in one
-    vectorized diff over the row-padded flat mask (no per-row python),
-    matched against the previous row's runs with a two-pointer sweep,
-    and painted back via a cumsum delta.  Returns (labels, count, runs)
-    where labels is a LAZY int32 image (0 = background, 1..count =
-    components; the paint runs on first pixel access — see
-    :class:`_LazyLabels`), and runs = (rows, x0s, x1s, final) describes
-    every horizontal run (x1 exclusive) with its dense component label
-    — the run table lets :func:`find_regions` build bounding rects
-    without re-scanning pixels.
-    """
-    h, w = binary.shape
-    # pad a False column after each row so runs cannot cross rows
-    padded = np.zeros((h, w + 1), dtype=np.int8)
-    padded[:, :w] = binary > 0
-    flat = padded.ravel()
-    d = np.diff(flat)
-    starts = np.nonzero(d == 1)[0] + 1
-    ends = np.nonzero(d == -1)[0] + 1
-    if flat[0]:
-        starts = np.concatenate([[0], starts])
-    n = len(starts)
-    if n == 0:
-        empty = np.zeros(0, dtype=np.int64)
-        zeros = _LazyLabels(
-            lambda: np.zeros((h, w), dtype=np.int32), (h, w))
-        return zeros, 0, (empty, empty, empty, empty)
-    stride = w + 1
-    rows = starts // stride
-    x0s = starts - rows * stride
-    x1s = ends - rows * stride  # exclusive
-
-    parent = np.arange(n + 1, dtype=np.int64)  # union-find over run ids
-
-    def find(i: int) -> int:
-        while parent[i] != i:
-            parent[i] = parent[parent[i]]
-            i = parent[i]
-        return i
-
-    run_lab = np.zeros(n, dtype=np.int64)
-    next_label = 0
-    idx = 0
-    prev_lo = prev_hi = 0
-    prev_row = -2
-    rows_l = rows.tolist()
-    x0_l = x0s.tolist()
-    x1_l = x1s.tolist()
-    while idx < n:
-        y = rows_l[idx]
-        hi = idx
-        while hi < n and rows_l[hi] == y:
-            hi += 1
-        plo, phi = (prev_lo, prev_hi) if y - 1 == prev_row else (0, 0)
-        p = plo
-        for k in range(idx, hi):
-            a0 = x0_l[k]
-            a1 = x1_l[k]
-            # 8-connectivity: prev run [b0,b1) touches [a0,a1) iff
-            # b0 <= a1 and b1 >= a0 (x1 exclusive: diagonal contact)
-            while p < phi and x1_l[p] < a0:
-                p += 1
-            lab = 0
-            q = p
-            while q < phi and x0_l[q] <= a1:
-                plab = find(run_lab[q])
-                if lab == 0:
-                    lab = plab
-                elif plab != lab:
-                    ra, rb = (lab, plab) if lab < plab else (plab, lab)
-                    parent[rb] = ra
-                    lab = ra
-                q += 1
-            if lab == 0:
-                next_label += 1
-                lab = next_label
-            run_lab[k] = lab
-        prev_lo, prev_hi, prev_row = idx, hi, y
-        idx = hi
-    # resolve run labels to roots, then to dense 1..count — label order
-    # follows first (row-major) appearance, as before
-    roots = np.array([find(int(lb)) for lb in run_lab], dtype=np.int64)
-    uniq = np.unique(roots)
-    remap = np.zeros(int(uniq.max()) + 1, dtype=np.int32)
-    remap[uniq] = np.arange(1, len(uniq) + 1)
-    final = remap[roots]
-    def paint() -> np.ndarray:
-        # paint via cumsum deltas (runs are disjoint in the flat space)
-        delta = np.zeros(h * stride + 1, dtype=np.int32)
-        np.add.at(delta, starts, final)
-        np.add.at(delta, ends, -final)
-        return (np.cumsum(delta[:-1]).reshape(h, stride)[:, :w]
-                .astype(np.int32))
-
-    return (_LazyLabels(paint, (h, w)), len(uniq),
-            (rows, x0s, x1s, final.astype(np.int64)))
+        return (int(x0s[i0:i1].min()), int(x1s[i0:i1].max()) - 1)
 
 
 def find_regions(binary: np.ndarray) -> list[Region]:
-    """Connected components → Region list, sorted left-to-right and
-    re-indexed (the reference's getContours contract,
-    src/image.ts:416-446).  Bounding rects and pixel counts are
-    aggregated from the labeler's RUN table (min/max/sum per label via
-    one reduceat each) — runs are a small fraction of pixels, so this
-    replaces the previous full-image nonzero + argsort pass with
-    identical integer results."""
-    labels, count, (rows, x0s, x1s, final) = _label_runs(binary)
+    """Connected components of a binary image's set pixels → Region
+    list (see :func:`regions_of_runs`)."""
+    return regions_of_runs(runs_of(binary), binary.shape[1])
+
+
+def regions_of_runs(runs: Runs, width: int) -> list[Region]:
+    """8-connected components of a run table (``width`` columns) →
+    Region list, sorted left-to-right (stable, so ties keep label
+    order) and re-indexed — the reference's getContours contract
+    (src/image.ts:416-446).  Rects and pixel counts are per-label
+    min/max/sum reductions over the runs grouped by label."""
+    final, count = _label_run_table(runs, width)
     if count == 0:
         return []
+    rows, x0s, x1s = runs
     order = np.argsort(final, kind="stable")
-    f_s = final[order]
     rows_s, x0_s, x1_s = rows[order], x0s[order], x1s[order]
-    lens_s = x1_s - x0_s
-    bounds = np.searchsorted(f_s, np.arange(1, count + 2))
+    bounds = np.searchsorted(final[order], np.arange(1, count + 2))
     seg = bounds[:-1]
-    min_x = np.minimum.reduceat(x0_s, seg)
-    max_x = np.maximum.reduceat(x1_s, seg) - 1   # x1 exclusive
-    min_y = np.minimum.reduceat(rows_s, seg)
-    max_y = np.maximum.reduceat(rows_s, seg)
-    n_px = np.add.reduceat(lens_s, seg)
+    min_x = np.minimum.reduceat(x0_s, seg).tolist()
+    max_x = np.maximum.reduceat(x1_s, seg).tolist()   # exclusive
+    min_y = rows_s[seg].tolist()                       # row-major
+    max_y = rows_s[bounds[1:] - 1].tolist()
+    n_px = np.add.reduceat(x1_s - x0_s, seg).tolist()
+    b = bounds.tolist()
     regions: list[Region] = []
-    for lab in range(1, count + 1):
-        i = lab - 1
-        rect = (int(min_x[i]), int(min_y[i]),
-                int(max_x[i] - min_x[i] + 1), int(max_y[i] - min_y[i] + 1))
+    for i in range(count):
+        rect = (min_x[i], min_y[i], max_x[i] - min_x[i],
+                max_y[i] - min_y[i] + 1)
+        sl = slice(b[i], b[i + 1])
         regions.append(Region(
             idx=-1, rect=rect, area=rect[2] * rect[3],
-            area2=float(n_px[i]), label=lab, labels=labels))
+            area2=float(n_px[i]), label=i + 1,
+            runs=(rows_s[sl], x0_s[sl], x1_s[sl])))
     regions.sort(key=lambda r: r.rect[0])
     for i, r in enumerate(regions):
         r.idx = i

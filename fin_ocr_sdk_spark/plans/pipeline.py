@@ -29,6 +29,7 @@ the final per-doc renumber.
 from __future__ import annotations
 
 import itertools
+import json
 import math
 import os
 import re
@@ -325,10 +326,14 @@ def _media_files_df(media: DataFrame) -> DataFrame | None:
     ~8 units per core slot (stragglers bounded by one slice, not one
     file — whole-file units measured a 20-30% makespan tax), floored at
     1 MB (don't shred small files) and capped at 64 MB (a slice's rows
-    must fit worker memory at production part sizes).  Size-descending
-    order + round-robin repartition stripes big units across tasks
-    (near-LPT balance without a custom partitioner); two waves per core
-    slot amortize the fixed per-task python-runner cost."""
+    must fit worker memory at production part sizes).
+
+    Units are placed LPT-style (largest first, dealt round-robin) into
+    ``nparts`` partitions, two waves per core slot to amortize the
+    fixed per-task python-runner cost.  The placement is planned, not
+    shuffled: ``spark.range(nparts)`` yields one row per partition,
+    which looks its stripe up in a JSON literal of the unit table and
+    explodes it — no exchange, no extra stage."""
     files = _media_files(media)
     if files is None:
         return None
@@ -343,9 +348,14 @@ def _media_files_df(media: DataFrame) -> DataFrame | None:
         units += [(path, k, nsl, per) for k in range(nsl)]
     units.sort(key=lambda u: u[3], reverse=True)
     nparts = max(1, min(len(units), par * 2))
-    return spark.createDataFrame(
-        [(p, k, n) for p, k, n, _ in units],
-        "path string, slice int, n_slices int").repartition(nparts)
+    stripes = [[{"path": p, "slice": k, "n_slices": n}
+                for p, k, n, _ in units[i::nparts]] for i in range(nparts)]
+    table = F.from_json(
+        F.lit(json.dumps(stripes)),
+        "array<array<struct<path:string,slice:int,n_slices:int>>>")
+    return (spark.range(nparts, numPartitions=nparts)
+            .select(F.inline(F.element_at(table, F.col("id").cast("int")
+                                          + 1))))
 
 
 def _per_media(media: DataFrame, spans: DataFrame, per_image,

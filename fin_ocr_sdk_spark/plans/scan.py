@@ -49,22 +49,33 @@ class ScanResult:
     char_choices: list = field(default_factory=list)
 
 
-def _mask_angle(mask: np.ndarray) -> float:
-    """Min-area-rect angle of one component mask with the V1 correction
+def _region_angle(region: K.Region) -> float:
+    """Min-area-rect angle of one component with the V1 correction
     (src/contour.ts:130-141).  Hull of a filled region == hull of its
     per-row x extremes: feed O(rows) points into the calipers instead
-    of O(pixels)."""
-    rows = np.nonzero(mask.any(axis=1))[0]
-    if len(rows) == 0:
-        return 0.0
-    first = np.argmax(mask[rows], axis=1)
-    last = mask.shape[1] - 1 - np.argmax(mask[rows, ::-1], axis=1)
+    of O(pixels).  Points are relative to the region's rect corner —
+    the calipers' float rounding depends on the translation."""
+    ys, first, last = region.row_extents()
+    rx, ry = region.rect[0], region.rect[1]
+    ys = ys - ry
     pts = np.concatenate([
-        np.column_stack([first, rows]),
-        np.column_stack([last, rows]),
+        np.column_stack([first - rx, ys]),
+        np.column_stack([last - rx, ys]),
     ]).astype(float)
     mw, mh, ang = K.min_area_rect(pts)
     return K.skew_angle_from_rect(mw, mh, ang)
+
+
+def _skew_regions(gray: np.ndarray, kw: int) -> list[K.Region]:
+    """The skew detector's components: blur(7) → Otsu-inv → dilate kw x 1
+    → regions, fused on the run table — the Otsu set pixels
+    (blurred <= t) go straight to runs, and the dilate widens the runs
+    (:func:`K.widen_runs`), so neither the binary nor the dilated image
+    is built."""
+    blurred = K.gaussian_blur(gray, 7)
+    runs = K.runs_of(blurred <= K.otsu_threshold(blurred))
+    w = gray.shape[1]
+    return K.regions_of_runs(K.widen_runs(runs, kw, w), w)
 
 
 def _refine_skew_candidate(gray: np.ndarray,
@@ -80,11 +91,9 @@ def _refine_skew_candidate(gray: np.ndarray,
     y0 = max(0, y * ds - ds)
     x1 = min(gray.shape[1], (x + rw) * ds + ds)
     y1 = min(gray.shape[0], (y + rh) * ds + ds)
-    crop = K.gaussian_blur(gray[y0:y1, x0:x1], 7)
-    cbin = K.dilate(K.otsu_binary_inv(crop), 25, 1)
     target = (x * ds - x0, y * ds - y0, rw * ds, rh * ds)
     best, ov_best = None, 0
-    for r in K.find_regions(cbin):
+    for r in _skew_regions(gray[y0:y1, x0:x1], 25):
         ic = get_intersecting_rect(r.rect, target)
         ov = ic[2] * ic[3] if ic else 0
         if ov > ov_best:
@@ -97,7 +106,11 @@ def skew_angle(gray: np.ndarray) -> float:
     blur(7) → Otsu-inv → dilate 25x1 → among contours with w>120,
     10<h<100, not border-touching, pick min areaFitRatio (rect area /
     filled area — most rectangle-like) → min-area-rect angle with the
-    V1 correction (src/contour.ts:130-141).
+    V1 correction (src/contour.ts:130-141).  The blur → Otsu → dilate
+    → contours chain runs fused on run tables (:func:`_skew_regions`)
+    and the angle reads each component's per-row extremes
+    (:func:`_region_angle`); results are bit-identical to the
+    materialized chain.
 
     Scale deviation: estimation runs on a ``SKEW_DOWNSCALE``-strided image
     (thresholds scaled to match) — the min-area-rect angle of a long
@@ -108,12 +121,9 @@ def skew_angle(gray: np.ndarray) -> float:
     from ..functions.geometry import rect_touches_border
     ds = SKEW_DOWNSCALE if min(gray.shape) >= 128 * SKEW_DOWNSCALE else 1
     small = gray[::ds, ::ds] if ds > 1 else gray
-    img = K.gaussian_blur(small, 7)
-    img = K.otsu_binary_inv(img)
-    img = K.dilate(img, max(2, 25 // ds), 1)
-    h, w = img.shape
+    h, w = small.shape
     eligible = []
-    for r in K.find_regions(img):
+    for r in _skew_regions(small, max(2, 25 // ds)):
         rx, ry, rw, rh = r.rect
         # scaled thresholds with a half-pixel allowance for the strided
         # sampling (full-res h<100 ⇒ half-res h ≤ ceil(99/2) = 50)
@@ -161,7 +171,7 @@ def skew_angle(gray: np.ndarray) -> float:
             # every line is thin
             if not (rw > 120 and rh < 100):
                 continue
-            votes.append((_mask_angle(fr.mask()), rw))
+            votes.append((_region_angle(fr), rw))
         if not votes:
             return 0.0
         votes.sort()
@@ -172,7 +182,7 @@ def skew_angle(gray: np.ndarray) -> float:
             if acc >= half:
                 return ang
         return votes[-1][0]
-    return _mask_angle(eligible[0][1].mask())
+    return _region_angle(eligible[0][1])
 
 
 def get_micr_band(gray: np.ndarray) -> np.ndarray:

@@ -207,26 +207,58 @@ def encode_tiff(img: np.ndarray) -> bytes:
     return header + pixels + ifd
 
 
+_TIFF_TYPES = {1: "B", 3: "H", 4: "I"}  # BYTE, SHORT, LONG
+
+
 def decode_tiff(data: bytes) -> np.ndarray:
+    """Uncompressed 8-bit grayscale TIFF, any strip layout, either byte
+    order.  Multi-strip files read the StripOffsets/StripByteCounts
+    arrays (stored out of line once they exceed 4 bytes) and join the
+    strips; other sample layouts (RGB, 16-bit, bilevel) raise
+    ValueError rather than decode to a wrong gray image."""
     if data[:2] not in (b"II", b"MM"):
         raise ValueError("not a TIFF")
-    le = data[:2] == b"II"
-    e = "<" if le else ">"
+    e = "<" if data[:2] == b"II" else ">"
     (ifd_offset,) = struct.unpack(f"{e}I", data[4:8])
     (n,) = struct.unpack(f"{e}H", data[ifd_offset:ifd_offset + 2])
-    tags: dict[int, int] = {}
+    entries: dict[int, tuple[int, int, int]] = {}
     for i in range(n):
         off = ifd_offset + 2 + i * 12
-        tag, typ, count, value = struct.unpack(f"{e}HHII", data[off:off + 12])
-        if typ == 3:  # SHORT packed in first 2 bytes of value field
-            (value,) = struct.unpack(f"{e}H", data[off + 8:off + 10])
-        tags[tag] = value
-    w, h = tags[256], tags[257]
-    if tags.get(259, 1) != 1:
+        tag, typ, count = struct.unpack(f"{e}HHI", data[off:off + 8])
+        entries[tag] = (typ, count, off + 8)
+
+    def values(tag: int, default: int | None = None) -> list[int]:
+        if tag not in entries:
+            if default is None:
+                raise ValueError(f"TIFF tag {tag} missing")
+            return [default]
+        typ, count, at = entries[tag]
+        code = _TIFF_TYPES.get(typ)
+        if code is None:
+            raise ValueError(f"TIFF tag {tag} has unsupported type {typ}")
+        size = struct.calcsize(code) * count
+        if size > 4:  # stored out of line at the offset in the field
+            (at,) = struct.unpack(f"{e}I", data[at:at + 4])
+        if at + size > len(data):
+            raise ValueError(f"TIFF tag {tag} runs past the file")
+        return list(struct.unpack(f"{e}{count}{code}", data[at:at + size]))
+
+    w, h = values(256)[0], values(257)[0]
+    if values(259, 1)[0] != 1:
         raise ValueError("compressed TIFF unsupported")
-    off = tags[273]
-    img = np.frombuffer(data[off:off + w * h], dtype=np.uint8).reshape(h, w)
-    if tags.get(262, 1) == 0:  # WhiteIsZero
+    spp = values(277, 1)[0]
+    bits = values(258, 1)
+    if spp != 1 or bits != [8]:
+        raise ValueError(f"unsupported TIFF sample layout: {spp} samples "
+                         f"of {bits} bits (8-bit gray only)")
+    offsets = values(273)
+    if len(offsets) == 1:
+        pixels = data[offsets[0]:offsets[0] + w * h]
+    else:
+        counts = values(279)
+        pixels = b"".join(data[o:o + c] for o, c in zip(offsets, counts))
+    img = np.frombuffer(pixels[:w * h], dtype=np.uint8).reshape(h, w)
+    if values(262, 1)[0] == 0:  # WhiteIsZero
         img = 255 - img
     return img.copy()
 

@@ -307,3 +307,89 @@ def test_bmp_without_final_row_padding(bpp, w):
     np.testing.assert_array_equal(codecs.decode_bmp(data), img)
     with pytest.raises(ValueError):
         codecs.decode_bmp(stripped[:-1])
+
+
+def _tiff(img: np.ndarray, order: str, strip_rows: int, offset_type: int,
+          spp: int = 1, bits: int = 8) -> bytes:
+    """An uncompressed TIFF of ``img`` (h, w) or (h, w, spp) written in
+    strips of ``strip_rows`` rows, StripOffsets/StripByteCounts of
+    ``offset_type`` (3 SHORT, 4 LONG) — the layouts third-party
+    writers emit and :func:`codecs.encode_tiff` never does."""
+    e = "<" if order == "II" else ">"
+    h, w = img.shape[:2]
+    strips = [img[y:y + strip_rows].tobytes()
+              for y in range(0, h, strip_rows)]
+    code = "H" if offset_type == 3 else "I"
+    n_entries = 9
+    ifd_at = 8
+    arrays_at = ifd_at + 2 + 12 * n_entries + 4
+    arr_size = struct.calcsize(code) * len(strips)
+    out_of_line = arr_size > 4
+    pixels_at = arrays_at + (2 * arr_size if out_of_line else 0)
+    offsets, at = [], pixels_at
+    for s in strips:
+        offsets.append(at)
+        at += len(s)
+
+    def field(typ, values):
+        c = "H" if typ == 3 else "I"
+        raw = struct.pack(f"{e}{len(values)}{c}", *values)
+        return raw if len(raw) > 4 else raw.ljust(4, b"\0")
+
+    def entry(tag, typ, values, out_at=None):
+        payload = (struct.pack(f"{e}I", out_at) if out_at is not None
+                   else field(typ, values))
+        return struct.pack(f"{e}HHI", tag, typ, len(values)) + payload
+
+    counts = [len(s) for s in strips]
+    off_at = arrays_at if out_of_line else None
+    cnt_at = arrays_at + arr_size if out_of_line else None
+    ifd = b"".join([
+        struct.pack(f"{e}H", n_entries),
+        entry(256, 3, [w]), entry(257, 3, [h]),
+        entry(258, 3, [bits]), entry(259, 3, [1]),
+        entry(262, 3, [1 if spp == 1 else 2]),
+        entry(273, offset_type, offsets, off_at),
+        entry(277, 3, [spp]), entry(278, 3, [strip_rows]),
+        entry(279, offset_type, counts, cnt_at),
+        struct.pack(f"{e}I", 0)])
+    arrays = (struct.pack(f"{e}{len(offsets)}{code}", *offsets)
+              + struct.pack(f"{e}{len(counts)}{code}", *counts)
+              if out_of_line else b"")
+    return (order.encode() + struct.pack(f"{e}HI", 42, ifd_at) + ifd
+            + arrays + b"".join(strips))
+
+
+@pytest.mark.parametrize("order", ["II", "MM"])
+@pytest.mark.parametrize("offset_type", [3, 4])
+@pytest.mark.parametrize("strip_rows", [3, 4, 6])
+def test_tiff_strip_layouts_decode_exactly(order, offset_type, strip_rows):
+    """8x6 gray in 2 strips (the offsets table is out of line, and used
+    to be read as pixels), 2 uneven strips, and one strip."""
+    img = np.arange(48, dtype=np.uint8).reshape(6, 8) * 5
+    data = _tiff(img, order, strip_rows, offset_type)
+    assert np.array_equal(codecs.decode_tiff(data), img)
+    assert np.array_equal(codecs.decode_image(data, "tiff"), img)
+
+
+def test_tiff_single_strip_round_trip_unchanged():
+    rng = np.random.default_rng(5)
+    for shape in ((1, 1), (6, 8), (37, 61)):
+        img = rng.integers(0, 256, shape, dtype=np.uint8)
+        assert np.array_equal(codecs.decode_tiff(codecs.encode_tiff(img)),
+                              img)
+
+
+@pytest.mark.parametrize("spp,bits", [(3, 8), (1, 16), (1, 1)])
+def test_tiff_non_gray_layouts_are_decode_errors(spp, bits):
+    """RGB, 16-bit and bilevel TIFFs are refused, and scan as one
+    ``decode:`` error instead of a garbage gray image."""
+    from fin_ocr_sdk_spark.plans.scan import scan_check
+    rng = np.random.default_rng(9)
+    shape = (6, 8, spp) if spp > 1 else (6, 8)
+    img = rng.integers(0, 256, shape, dtype=np.uint8)
+    data = _tiff(img, "II", 6, 4, spp=spp, bits=bits)
+    with pytest.raises(ValueError, match="sample layout"):
+        codecs.decode_tiff(data)
+    res = scan_check(data, "tiff")
+    assert not res.ok and res.error.startswith("decode: "), res.error

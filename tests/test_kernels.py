@@ -228,6 +228,142 @@ def test_region_point_queries():
     assert r.minmax_x_in_yrange(2, 4) == (3, 6)
 
 
+# ------------------------------------------- run-table parity vs BFS
+
+def _bfs_components(img: np.ndarray) -> list[np.ndarray]:
+    """Reference 8-connected labeling: scan row-major, flood each new
+    set pixel's component breadth-first.  Returns one boolean mask per
+    component, in order of first pixel (= label order)."""
+    h, w = img.shape
+    seen = np.zeros((h, w), dtype=bool)
+    comps = []
+    for y in range(h):
+        for x in range(w):
+            if not img[y, x] or seen[y, x]:
+                continue
+            mask = np.zeros((h, w), dtype=bool)
+            seen[y, x] = mask[y, x] = True
+            queue = [(y, x)]
+            while queue:
+                cy, cx = queue.pop()
+                for dy in (-1, 0, 1):
+                    for dx in (-1, 0, 1):
+                        ny, nx = cy + dy, cx + dx
+                        if (0 <= ny < h and 0 <= nx < w and img[ny, nx]
+                                and not seen[ny, nx]):
+                            seen[ny, nx] = mask[ny, nx] = True
+                            queue.append((ny, nx))
+            comps.append(mask)
+    return comps
+
+
+def _bfs_regions(img: np.ndarray) -> list[tuple]:
+    """(rect, area2, label) per component, sorted by x with ties in
+    label order — find_regions' contract."""
+    out = []
+    for label, m in enumerate(_bfs_components(img), start=1):
+        ys, xs = np.nonzero(m)
+        rect = (int(xs.min()), int(ys.min()), int(xs.max() - xs.min() + 1),
+                int(ys.max() - ys.min() + 1))
+        out.append((rect, float(m.sum()), label))
+    return sorted(out, key=lambda t: t[0][0])
+
+
+def _serpentine(h: int, w: int) -> np.ndarray:
+    img = np.zeros((h, w), dtype=np.uint8)
+    img[::4, 1:-1] = 255
+    for k, y in enumerate(range(0, h - 4, 4)):
+        x = w - 2 if k % 2 == 0 else 1
+        img[y:y + 5, x] = 255
+    return img
+
+
+def _comb(h: int, w: int) -> np.ndarray:
+    img = np.zeros((h, w), dtype=np.uint8)
+    img[h - 1, :] = 255          # the teeth only meet on the last row
+    img[:, ::2] = 255
+    return img
+
+
+def _parity_images() -> list[np.ndarray]:
+    rng = np.random.default_rng(11)
+    imgs = []
+    for density in (0.05, 0.2, 0.4, 0.55, 0.8):
+        for shape in ((17, 23), (40, 9), (1, 31), (29, 1)):
+            imgs.append(np.where(rng.random(shape) < density, 255,
+                                 0).astype(np.uint8))
+    checker = np.zeros((12, 12), dtype=np.uint8)
+    checker[::2, ::2] = checker[1::2, 1::2] = 255    # diagonal contacts
+    anti = np.zeros((9, 9), dtype=np.uint8)
+    anti[np.arange(9), 8 - np.arange(9)] = 255       # anti-diagonal line
+    single = np.zeros((5, 7), dtype=np.uint8)
+    single[2, 3] = 255
+    imgs += [np.zeros((6, 8), np.uint8), np.full((6, 8), 255, np.uint8),
+             single, np.full((1, 1), 255, np.uint8),
+             np.zeros((1, 1), np.uint8), checker, anti,
+             _serpentine(25, 18), _comb(11, 15), _comb(11, 15)[::-1]]
+    return imgs
+
+
+def test_find_regions_matches_bfs_labeler():
+    for img in _parity_images():
+        got = [(r.rect, r.area2, r.label) for r in K.find_regions(img)]
+        assert got == _bfs_regions(img), img.shape
+        assert [r.idx for r in K.find_regions(img)] == list(range(len(got)))
+
+
+def test_region_row_queries_match_bfs_masks():
+    for img in _parity_images():
+        comps = _bfs_components(img)
+        for r in K.find_regions(img):
+            m = comps[r.label - 1]
+            ys, first, last = r.row_extents()
+            rows = np.flatnonzero(m.any(axis=1))
+            assert ys.tolist() == rows.tolist()
+            assert first.tolist() == [int(np.flatnonzero(m[y])[0])
+                                      for y in rows]
+            assert last.tolist() == [int(np.flatnonzero(m[y])[-1])
+                                     for y in rows]
+            for y_min, y_max in ((-3, 0), (0, 2), (2, 2), (1, 40),
+                                 (5, 3), (img.shape[0], 99)):
+                sub = m[max(0, y_min):max(0, y_max + 1)]
+                xs = np.nonzero(sub)[1]
+                want = (int(xs.min()), int(xs.max())) if len(xs) else None
+                assert r.minmax_x_in_yrange(y_min, y_max) == want
+
+
+def test_runs_of_round_trips():
+    for img in _parity_images():
+        rows, x0s, x1s = K.runs_of(img)
+        back = np.zeros(img.shape, dtype=np.uint8)
+        for y, a, b in zip(rows, x0s, x1s):
+            assert a < b and (a == 0 or not img[y, a - 1])
+            assert b == img.shape[1] or not img[y, b]
+            back[y, a:b] = 255
+        assert np.array_equal(back, np.where(img > 0, 255, 0))
+
+
+@pytest.mark.parametrize("kw", [2, 12, 25])
+def test_widen_runs_equals_dilate(kw):
+    """Widened-and-merged runs are the run table of dilate(kw, 1),
+    including runs clipped at the left and right borders."""
+    rng = np.random.default_rng(kw)
+    imgs = _parity_images()
+    edge = np.zeros((3, 40), dtype=np.uint8)
+    edge[0, 0] = edge[1, 39] = edge[2, [0, 39]] = 255
+    imgs += [edge, np.where(rng.random((30, 70)) < 0.03, 255,
+                            0).astype(np.uint8)]
+    for img in imgs:
+        w = img.shape[1]
+        got = K.widen_runs(K.runs_of(img), kw, w)
+        want = K.runs_of(K.dilate(img, kw, 1))
+        for g, e in zip(got, want):
+            assert g.tolist() == e.tolist(), (kw, img.shape)
+        assert ([(r.rect, r.area2) for r in K.regions_of_runs(got, w)]
+                == [(r.rect, r.area2)
+                    for r in K.find_regions(K.dilate(img, kw, 1))])
+
+
 def test_clear_padding():
     img = np.full((10, 10), 255, dtype=np.uint8)
     K.clear_padding(img, 2)

@@ -101,6 +101,55 @@ def test_preprocess_direct_plan_never_exchanges_image_bytes(smoke):
     assert "image#" not in plan
 
 
+def _subtree(lines: list[str], at: int) -> list[str]:
+    """The lines of the plan node printed at ``lines[at]`` and every
+    node below it (deeper indentation)."""
+    def depth(s):
+        return len(s) - len(s.lstrip(" :+-*()0123456789"))
+    out = [lines[at]]
+    for s in lines[at + 1:]:
+        if depth(s) <= depth(lines[at]):
+            break
+        out.append(s)
+    return out
+
+
+def test_direct_units_are_planned_not_shuffled(smoke, spark, tmp_path):
+    """The direct strategy's work units reach the scan kernel already
+    LPT-striped into their partitions: no Exchange below MapInPandas,
+    per-partition unit counts differ by at most 1, and partition i
+    holds units i, i + nparts, ... of the size-descending list."""
+    import pyarrow.parquet as papq
+
+    from fin_ocr_sdk_spark.plans import pipeline as P
+    docs, _ = smoke
+    table = papq.read_table(os.path.join(fixture_dir("smoke", 16),
+                                         "media.parquet"))
+    media_dir = tmp_path / "media11"
+    media_dir.mkdir()
+    cuts = [0, 2, 4, 6, 8, 10, 11, 12, 13, 14, 15, 16]   # 11 part files
+    for k, (a, b) in enumerate(zip(cuts, cuts[1:])):
+        papq.write_table(table.slice(a, b - a),
+                         str(media_dir / f"part-{k:05d}.parquet"))
+    media11 = spark.read.parquet(str(media_dir))
+    lines = _plan(extract_spans(docs, media11)).splitlines()
+    scan_at = next(i for i, s in enumerate(lines) if "MapInPandas" in s)
+    below = "\n".join(_subtree(lines, scan_at))
+    assert "Exchange" not in below
+    assert "Range" in below
+
+    units = P._media_files_df(media11)
+    parts = units.rdd.glom().map(
+        lambda rows: [(r.path, r.slice, r.n_slices) for r in rows]).collect()
+    counts = [len(p) for p in parts]
+    assert sum(counts) == 11 and max(counts) - min(counts) <= 1
+    files = sorted(P._media_files(media11), key=lambda f: -f[1])
+    nparts = len(parts)
+    for i, part in enumerate(parts):
+        assert [u[0] for u in part] == [p for p, _ in files[i::nparts]]
+        assert all(u[1:] == (0, 1) for u in part)
+
+
 def test_overlapping_row_groups_pruning(tmp_path):
     """Slice reads must touch only the row groups overlapping the
     slice's row range (the round-5 read-amplification finding) and the
