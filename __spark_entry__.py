@@ -906,50 +906,46 @@ def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     width/height with the identical floor(x+0.5) arithmetic — a decoder
     or resampler that produces the wrong raster shape fails the hash.
     (Pixel-level resize math is golden-tested in test_kernels; no SQL
-    engine can decode PNGs to check pixels.)"""
-    import pandas as pd
+    engine can decode PNGs to check pixels.)  Runs through the
+    pipeline's one media scan: the images never cross the JVM."""
     from pyspark.sql.types import (IntegerType, StringType, StructField,
                                    StructType)
+
+    from fin_ocr_sdk_spark.plans.pipeline import scan_media
     schema = StructType([
         StructField("media_ref", StringType()),
         StructField("out_w", IntegerType()),
         StructField("out_h", IntegerType()),
     ])
 
-    def thumbs(it):
+    def thumb_dims(rows, templates):
         import numpy as np
 
         from fin_ocr_sdk_spark.operators import kernels as K
         from fin_ocr_sdk_spark.sources import codecs
-        for pdf in it:
-            if not len(pdf):
-                continue
-            rows = {k: [] for k in ("media_ref", "out_w", "out_h")}
-            for ref, fmt, img in zip(pdf["media_ref"], pdf["format"],
-                                     pdf["image"]):
-                arr = codecs.decode_image(bytes(img), fmt)
-                h, w = arr.shape
-                scale = _THUMB_MAX_DIM / max(w, h)
-                ow = int(np.floor(w * scale + 0.5))
-                oh = int(np.floor(h * scale + 0.5))
-                out = K.resize_area(arr, (ow, oh))
-                rows["media_ref"].append(ref)
-                rows["out_w"].append(out.shape[1])
-                rows["out_h"].append(out.shape[0])
-            yield pd.DataFrame(rows)
+        for ref, fmt, img in rows:
+            arr = codecs.decode_image(img, fmt)
+            h, w = arr.shape
+            scale = _THUMB_MAX_DIM / max(w, h)
+            out = K.resize_area(arr, (int(np.floor(w * scale + 0.5)),
+                                      int(np.floor(h * scale + 0.5))))
+            yield ref, out.shape[1], out.shape[0]
 
-    media = _fxdf(spark, "media").select("media_ref", "format", "image")
-    return _spread(media, "media_ref").mapInPandas(thumbs, schema)
+    return scan_media(_fxdf(spark, "media"), thumb_dims, schema)
 
 
 def q_media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal plumbing: typed metadata over opaque binary media —
     dimensions DECODED from the bytes inside a vectorized UDF, then
     verified against the fixture's compose-time golden width/height
-    columns by the DuckDB twin (which never parses the binary)."""
-    import pandas as pd
+    columns by the DuckDB twin (which never parses the binary).  Runs
+    through the pipeline's one media scan, which reads only
+    (media_ref, format, image): the dimensions come from the bytes
+    alone."""
     from pyspark.sql.types import (IntegerType, StringType, StructField,
                                    StructType)
+
+    from fin_ocr_sdk_spark.plans.pipeline import scan_media
     schema = StructType([
         StructField("media_ref", StringType()),
         StructField("format", StringType()),
@@ -958,25 +954,13 @@ def q_media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("n_bytes", IntegerType()),
     ])
 
-    def meta(it):
+    def dims(rows, templates):
         from fin_ocr_sdk_spark.sources import codecs
-        for pdf in it:
-            rows = {k: [] for k in
-                    ("media_ref", "format", "width", "height", "n_bytes")}
-            for ref, fmt, img in zip(pdf["media_ref"], pdf["format"],
-                                     pdf["image"]):
-                arr = codecs.decode_image(bytes(img), fmt)
-                rows["media_ref"].append(ref)
-                rows["format"].append(fmt)
-                rows["width"].append(arr.shape[1])
-                rows["height"].append(arr.shape[0])
-                rows["n_bytes"].append(len(img))
-            yield pd.DataFrame(rows)
+        for ref, fmt, img in rows:
+            h, w = codecs.decode_image(img, fmt).shape
+            yield ref, fmt, w, h, len(img)
 
-    # prune the golden width/height columns: the UDF must derive
-    # dimensions from the bytes alone (that is what the oracle checks)
-    media = _fxdf(spark, "media").select("media_ref", "format", "image")
-    return _spread(media, "media_ref").mapInPandas(meta, schema)
+    return scan_media(_fxdf(spark, "media"), dims, schema)
 
 
 def q_x9_to_micr(spark: SparkSession, sf_dir: str) -> DataFrame:

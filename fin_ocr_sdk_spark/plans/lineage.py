@@ -14,11 +14,14 @@ completed unit appends a lineage row
 and its emitted spans land in their own parquet file named by the
 partition id.  A span file is visible ONLY through its lineage row, so
 a run killed mid-flight leaves at most orphan span files that the
-reader never picks up — re-running skips every committed partition via
-an anti-join on the lineage table and scans only the remainder.  (On a
-real deployment both tables are Iceberg and the span+lineage append is
-one atomic snapshot commit; the parquet stand-in keeps the same
-protocol with lineage-last ordering.)
+reader never picks up.  Re-running diffs the committed work on the
+driver: the pending files are the media file list (which
+``_media_files`` already holds there) minus the lineage table's
+``media_file`` values, and only those are scanned, as whole-file units
+striped by the direct scan's unit planner (``pipeline._planned_units``).
+(On a real deployment both tables are Iceberg and the span+lineage
+append is one atomic snapshot commit; the parquet stand-in keeps the
+same protocol with lineage-last ordering.)
 
 The reference has no notion of this — it is request-scoped
 (src/context.ts) — but the slow/hung-request accounting it does keep
@@ -41,8 +44,8 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..session import pin_worker_threads
 from .pipeline import (MEDIA_SCAN_SCHEMA, _direct_media_rows, _media_files,
-                       broadcast_templates, explode_spans, interleave,
-                       scan_rows)
+                       _planned_units, broadcast_templates, explode_spans,
+                       interleave, scan_rows)
 
 LINEAGE_SCHEMA = StructType([
     StructField("partition_id", StringType()),
@@ -60,10 +63,11 @@ def _partition_id(media_file: str) -> str:
 
 
 def make_lineage_kernel(out_dir: str, run_id: str, spark: SparkSession):
-    """mapInPandas kernel over (path): scan one whole media file, write
-    its emitted spans to <out>/spans/<partition_id>.parquet, return the
-    lineage row.  The span write happens BEFORE the lineage row is
-    returned (lineage-last commit protocol)."""
+    """mapInPandas kernel over whole-file units (path, 0, 1): scan
+    each media file, write its emitted spans to
+    <out>/spans/<partition_id>.parquet, return the lineage row.  The
+    span write happens BEFORE the lineage row is returned (lineage-last
+    commit protocol)."""
     bc = broadcast_templates(spark)
     spans_dir = os.path.join(out_dir, "spans")
 
@@ -123,20 +127,6 @@ def committed_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
     return spark.read.parquet(path)
 
 
-def scan_lineage(spark: SparkSession, files_df: DataFrame, n_files: int,
-                 out_dir: str, run_id: str) -> DataFrame:
-    """Scan the ``n_files`` media files listed in ``files_df.path``,
-    writing their span files; returns their lineage rows in ONE
-    partition.  repartition(1), not coalesce(1): coalesce would fold
-    the scan into a single task, while the shuffle keeps the scan's
-    ``nparts`` tasks and runs the lineage write as a later stage."""
-    nparts = max(1, min(n_files, spark.sparkContext.defaultParallelism * 2))
-    kernel = make_lineage_kernel(out_dir, run_id, spark=spark)
-    return (files_df.repartition(nparts)
-            .mapInPandas(kernel, LINEAGE_SCHEMA)
-            .repartition(1))
-
-
 def run_resumable_extract(spark: SparkSession, documents: DataFrame,
                           media: DataFrame, out_dir: str,
                           run_id: str | None = None) -> ExtractRunResult:
@@ -151,29 +141,28 @@ def run_resumable_extract(spark: SparkSession, documents: DataFrame,
             "table (a bare spark.read of its part files)")
     run_id = run_id or uuid.uuid4().hex[:12]
     os.makedirs(out_dir, exist_ok=True)
-    # the committed-work diff stays distributed: an ANTI-JOIN against
-    # the lineage table, never a python set of committed files
-    n_files = len(files)
-    files_df = spark.createDataFrame([(p,) for p, _ in files],
-                                     "path string")
     lineage = committed_lineage(spark, out_dir)
-    if lineage is not None:
-        files_df = files_df.join(
-            lineage.select(F.col("media_file").alias("path")).distinct(),
-            "path", "anti")
-    n_pending = files_df.count()
-    if n_pending:
+    done = (set() if lineage is None else
+            {r[0] for r in lineage.select("media_file").distinct().collect()})
+    pending = [(p, 0, 1, size) for p, size in files if p not in done]
+    if pending:
         # lineage-last: the append below only happens after every span
-        # file in this run has been atomically renamed into place
-        (scan_lineage(spark, files_df, n_pending, out_dir, run_id)
+        # file in this run has been atomically renamed into place.
+        # repartition(1), not coalesce(1): coalesce would fold the scan
+        # into a single task, while the shuffle keeps the scan's tasks
+        # and runs the lineage write as a later stage
+        (_planned_units(spark, pending)
+         .mapInPandas(make_lineage_kernel(out_dir, run_id, spark),
+                      LINEAGE_SCHEMA)
+         .repartition(1)
          .write.mode("append").parquet(os.path.join(out_dir, "lineage")))
     lineage = committed_lineage(spark, out_dir)
     assert lineage is not None
     agg = lineage.agg(F.sum("doc_count"), F.sum("span_count")).first()
     return ExtractRunResult(
         run_id=run_id,
-        scanned_files=n_pending,
-        skipped_files=n_files - n_pending,
+        scanned_files=len(pending),
+        skipped_files=len(files) - len(pending),
         doc_count=int(agg[0] or 0),
         span_count=int(agg[1] or 0),
     )

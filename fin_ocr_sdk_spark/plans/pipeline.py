@@ -2,17 +2,17 @@
 
 Dataflow (SURVEY.md §2.8):
 
-    media ── direct (a bare file scan): (path, slice, n_slices) units;
-       │             tasks read the parquet parts themselves (bytes
-       │             never cross the JVM)
-       │     arrow (any other plan): rows semi-joined on the image
-       │             spans' media_ref, byte-weighted repartition on
-       │             media_ref
+    media ── direct (a bare file scan): (path, slice, n_slices) units,
+       │             LPT-striped by _planned_units (no exchange); tasks
+       │             read the parquet parts themselves (bytes never
+       │             cross the JVM)
+       │     arrow (any other plan): every media row, byte-weighted
+       │             repartition on media_ref
        ▼
-    mapInPandas(make_scan_batches)  ← ALL image work, once per MEDIA row:
-       │                              scan_rows = decode → deskew → band
-       │                              → segment → classify → grammar;
-       │                              templates broadcast once per worker
+    scan_media: mapInPandas(make_scan_batches)  ← ALL image work, once
+       │         per MEDIA row; extraction's per_image is scan_rows =
+       │         decode → deskew → band → segment → classify → grammar;
+       │         templates broadcast once per worker
        ▼
     per-media micr:* spans (media_ref, sub_order, kind, text)
        ▼
@@ -20,9 +20,14 @@ Dataflow (SURVEY.md §2.8):
        ▼
     window renumber within doc → (doc_id, kind, text, media_ref, order)
 
-Everything relational stays in Catalyst (joins/filters/windows); the
-opaque per-image kernels are the only Python.  Zero cross-document
-dataflow → linear scale-out; the only shuffles are the media join and
+scan_media is the one plan of every per-image job: extract_spans,
+preprocess_only, the driver's media queries and the video stream pass
+their per-image generator to it.  The resumable scan
+(plans/lineage.py) plans its whole-file units with the same
+_planned_units.  Everything relational stays in Catalyst
+(joins/filters/windows); the opaque per-image kernels are the only
+Python.  Zero cross-document dataflow → linear scale-out; the only
+shuffles are the join of the image spans to the per-media spans and
 the final per-doc renumber.
 """
 
@@ -112,15 +117,18 @@ def media_rows(pdf: pd.DataFrame) -> Iterator[tuple]:
         for unit in zip(pdf["path"], pdf["slice"], pdf["n_slices"]))
 
 
-def byte_weighted_partitions(df: DataFrame, bytes_col: str = "image",
-                             target_bytes: int = 64 << 20) -> int:
+_PARTITION_BYTES = 64 << 20
+
+
+def byte_weighted_partitions(df: DataFrame) -> int:
     """Partition count sized by total payload bytes, not row count — the
     skew axis for media tables is bytes/row (SURVEY §4).  Fast path:
     sum of part-file sizes from the distributed manifest (media bytes
     dominate a media table and are stored pre-encoded/incompressible,
     so file size ≈ payload size); executors stat, the driver never
     loops over files.  Fallback for non-file sources: one column-length
-    agg.  At 100 TB this statistic comes from table metadata instead.
+    agg over ``image``.  At 100 TB this statistic comes from table
+    metadata instead.  Partitions target 64 MB of payload each.
     Floored at the cluster's default parallelism so small inputs still
     use every core (the byte count dominates once input >> cluster)."""
     total = 0
@@ -129,9 +137,9 @@ def byte_weighted_partitions(df: DataFrame, bytes_col: str = "image",
         total = (manifest.agg(F.sum("size").alias("s")).first()["s"]
                  or 0)
     if total == 0:
-        total = df.select(F.sum(F.length(F.col(bytes_col)))).first()[0] or 0
+        total = df.select(F.sum(F.length(F.col("image")))).first()[0] or 0
     floor = df.sparkSession.sparkContext.defaultParallelism
-    return max(floor, math.ceil(total / target_bytes))
+    return max(floor, math.ceil(total / _PARTITION_BYTES))
 
 
 def explode_spans(documents: DataFrame) -> DataFrame:
@@ -232,13 +240,17 @@ def media_manifest(media: DataFrame) -> DataFrame | None:
     One row per part file that still has surviving rows (a filtered
     media plan lists only files worth scanning).  On Iceberg this is
     the snapshot's manifest read as a table.  Paths are canonical local
-    (``file:`` URI prefix stripped).  Returns None when media is not
-    file-backed (in-memory relations).  ``_metadata`` DOES propagate
+    (``file:`` URI prefix stripped).  Returns None when media lists no
+    files (in-memory relations, a stream's micro-batch), without
+    trying the ``_metadata`` select: Spark logs that failed analysis at
+    ERROR with a full stack trace.  ``_metadata`` DOES propagate
     through Projects, so derived-column plans still list their backing
     files — whether those files' BYTES match the plan's rows is the
     strategy's question (:func:`_choose_media_strategy`), not the
     manifest's."""
     try:
+        if not media.inputFiles():
+            return None
         return (media.select(
             F.regexp_replace(F.col("_metadata.file_path"),
                              "^file:/+", "/").alias("path"),
@@ -284,7 +296,7 @@ def _is_bare_file_scan(df: DataFrame) -> bool:
 
 def _choose_media_strategy(media: DataFrame) -> str:
     """``direct`` iff media is a bare file scan, else ``arrow`` (see
-    :func:`_per_media`).  Only a bare scan's part files hold exactly
+    :func:`scan_media`).  Only a bare scan's part files hold exactly
     the DataFrame's rows: under a filter, direct reads would decode
     rows the plan dropped; under a Project (e.g. base64-decoded media)
     the files do not even hold the DataFrame's columns."""
@@ -293,7 +305,7 @@ def _choose_media_strategy(media: DataFrame) -> str:
 
 def _media_files(media: DataFrame) -> "list[tuple[str, int]] | None":
     """(path, size) of every part file of a bare file-scan media table:
-    the one file list of the direct scan (:func:`_media_files_df`) and
+    the one file list of the direct scan (:func:`_slice_units`) and
     the resumable scan (``lineage.run_resumable_extract``).  None for
     any other plan, or a scan that lists no files.
 
@@ -318,15 +330,32 @@ def _media_files(media: DataFrame) -> "list[tuple[str, int]] | None":
     return [(r["path"], r["size"]) for r in manifest.collect()] or None
 
 
-def _media_files_df(media: DataFrame) -> DataFrame | None:
-    """The direct strategy's (path, slice, n_slices) work units, or
-    None when :func:`_media_files` has no file list.  Each file splits
-    into sub-file row-slice units (workers derive the actual row range
-    from the footer, so the driver never reads footers).  Slices are
-    ~8 units per core slot (stragglers bounded by one slice, not one
-    file — whole-file units measured a 20-30% makespan tax), floored at
-    1 MB (don't shred small files) and capped at 64 MB (a slice's rows
-    must fit worker memory at production part sizes).
+def _slice_units(media: DataFrame) -> "list[tuple] | None":
+    """The direct strategy's (path, slice, n_slices, bytes) work units,
+    or None when :func:`_media_files` has no file list.  Each file
+    splits into sub-file row-slice units (workers derive the actual row
+    range from the footer, so the driver never reads footers).  Slices
+    are ~8 units per core slot (stragglers bounded by one slice, not
+    one file — whole-file units measured a 20-30% makespan tax),
+    floored at 1 MB (don't shred small files) and capped at 64 MB (a
+    slice's rows must fit worker memory at production part sizes)."""
+    files = _media_files(media)
+    if files is None:
+        return None
+    par = media.sparkSession.sparkContext.defaultParallelism
+    total = sum(size for _, size in files)
+    slice_bytes = min(64 << 20, max(1 << 20, total // max(1, par * 8)))
+    units = []
+    for path, size in files:
+        nsl = max(1, -(-int(size) // slice_bytes))
+        units += [(path, k, nsl, size / nsl) for k in range(nsl)]
+    return units
+
+
+def _planned_units(spark: SparkSession, units: list) -> DataFrame:
+    """(path, slice, n_slices) rows of the (path, slice, n_slices,
+    bytes) ``units``, one scan partition per stripe — the unit planner
+    of the direct scan and the resumable scan.
 
     Units are placed LPT-style (largest first, dealt round-robin) into
     ``nparts`` partitions, two waves per core slot to amortize the
@@ -334,20 +363,9 @@ def _media_files_df(media: DataFrame) -> DataFrame | None:
     shuffled: ``spark.range(nparts)`` yields one row per partition,
     which looks its stripe up in a JSON literal of the unit table and
     explodes it — no exchange, no extra stage."""
-    files = _media_files(media)
-    if files is None:
-        return None
-    spark = media.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    total = sum(size for _, size in files)
-    slice_bytes = min(64 << 20, max(1 << 20, total // max(1, par * 8)))
-    units = []
-    for path, size in files:
-        nsl = max(1, -(-int(size) // slice_bytes))
-        per = size / nsl
-        units += [(path, k, nsl, per) for k in range(nsl)]
-    units.sort(key=lambda u: u[3], reverse=True)
-    nparts = max(1, min(len(units), par * 2))
+    units = sorted(units, key=lambda u: u[3], reverse=True)
+    nparts = max(1, min(len(units),
+                        spark.sparkContext.defaultParallelism * 2))
     stripes = [[{"path": p, "slice": k, "n_slices": n}
                 for p, k, n, _ in units[i::nparts]] for i in range(nparts)]
     table = F.from_json(
@@ -358,28 +376,32 @@ def _media_files_df(media: DataFrame) -> DataFrame | None:
                                           + 1))))
 
 
-def _per_media(media: DataFrame, spans: DataFrame, per_image,
-               schema: StructType) -> DataFrame:
-    """``per_image`` (see :func:`make_scan_batches`) over each media
-    row, keyed by media_ref, under the strategy
-    :func:`_choose_media_strategy` picks:
+def scan_media(media: DataFrame, per_image, schema: StructType
+               ) -> DataFrame:
+    """``per_image`` (see :func:`make_scan_batches`) over every media
+    row, as ``schema`` rows — the one plan of every per-image job —
+    under the strategy :func:`_choose_media_strategy` picks:
 
     1. *direct* (a bare file scan): plan over the media FILE LIST
-       (:func:`_media_files_df`); each scan task reads its parquet part
-       slice directly with pyarrow and emits only the per-image output,
-       so image bytes never move through the engine.
-    2. *arrow* (any other plan — filtered, derived, in-memory — or a
-       file scan that lists no files): the media rows the documents'
-       image spans reference (semi-join on media_ref), byte-weighted
-       repartition, then the same kernel."""
-    kernel = make_scan_batches(media.sparkSession, per_image, schema)
-    files_df = (_media_files_df(media)
-                if _choose_media_strategy(media) == "direct" else None)
-    if files_df is not None:
-        return files_df.mapInPandas(kernel, schema)
-    refs = spans.filter(F.col("kind") == "image").select("media_ref")
-    return (media.join(refs, "media_ref", "semi")
-            .select("media_ref", "format", "image")
+       (:func:`_slice_units` → :func:`_planned_units`); each scan task
+       reads its parquet part slice directly with pyarrow and emits
+       only the per-image output, so image bytes never move through
+       the engine.
+    2. *arrow* (any other plan — filtered, derived, in-memory, a
+       stream's micro-batch — or a file scan that lists no files): the
+       media rows, byte-weighted repartition on media_ref, then the
+       same kernel.
+
+    Media rows no document references are scanned too; joining the
+    output to the documents' image spans (:func:`interleave`) drops
+    them."""
+    spark = media.sparkSession
+    kernel = make_scan_batches(spark, per_image, schema)
+    units = (_slice_units(media)
+             if _choose_media_strategy(media) == "direct" else None)
+    if units is not None:
+        return _planned_units(spark, units).mapInPandas(kernel, schema)
+    return (media.select("media_ref", "format", "image")
             .repartition(byte_weighted_partitions(media), "media_ref")
             .mapInPandas(kernel, schema))
 
@@ -407,11 +429,10 @@ def interleave(spans: DataFrame, per_media: DataFrame) -> DataFrame:
 def extract_spans(documents: DataFrame, media: DataFrame) -> DataFrame:
     """Full pipeline: interleaved documents + media → output span table
     under the (kind, text, media_ref, order) invariant.  Every media row
-    is scanned once (:func:`_per_media`); the relational join to
+    is scanned once (:func:`scan_media`); the relational join to
     per-document span metadata happens on the (tiny) OCR output."""
-    spans = explode_spans(documents)
-    return interleave(spans, _per_media(media, spans, scan_rows,
-                                        MEDIA_SCAN_SCHEMA))
+    return interleave(explode_spans(documents),
+                      scan_media(media, scan_rows, MEDIA_SCAN_SCHEMA))
 
 
 PREPROCESS_SCHEMA = StructType([
@@ -453,7 +474,7 @@ def preprocess_only(documents: DataFrame, media: DataFrame) -> DataFrame:
     mode may be slower, but it must not be the one entry point that
     ships image bytes through the JVM over a full corpus."""
     spans = explode_spans(documents)
-    per_media = _per_media(media, spans, preprocess_rows, PREPROCESS_SCHEMA)
+    per_media = scan_media(media, preprocess_rows, PREPROCESS_SCHEMA)
     return (spans.filter(F.col("kind") == "image")
             .select("doc_id", "media_ref")
             .join(per_media, "media_ref")

@@ -296,41 +296,19 @@ def encode_image(img: np.ndarray, fmt: str) -> bytes:
     raise ValueError(f"unknown image format '{fmt}'; supported: {FORMATS}")
 
 
-_DATA_URL_RE = None
-
-
-def decode_payload(buffer: "bytes | str", fmt: str | None = None) -> bytes:
-    """Accept the reference's request payload forms (src/image.ts:89
-    \"If buffer is a string, it is base64\"; src/check.ts:198
-    platform.base64.decode): raw bytes pass through; strings are
-    base64-decoded, with an optional data-URL prefix whose MIME type is
-    honored when no explicit format is given.  Returns raw image bytes
-    (pair with the possibly-updated format via sniffing in
-    decode_image)."""
-    if isinstance(buffer, (bytes, bytearray, memoryview)):
-        return bytes(buffer)
-    import base64
-    import re
-    global _DATA_URL_RE
-    if _DATA_URL_RE is None:
-        _DATA_URL_RE = re.compile(r"^data:(image/[\w.+-]+);base64,")
-    m = _DATA_URL_RE.match(buffer)
-    if m:
-        buffer = buffer[m.end():]
-    return base64.b64decode(buffer)
-
-
-def decode_image(data: "bytes | str | None", fmt: str | None = None
+def decode_image(data: "bytes | None", fmt: str | None = None
                  ) -> np.ndarray:
-    """Decode to 2-D uint8 grayscale.  Format sniffed from magic bytes
-    when not given (the reference trusts the caller's format string).
-    Base64 / data-URL strings are accepted like the reference's
-    request buffers (see decode_payload).  A missing payload (a NULL
-    ``image`` cell) is a ValueError like any other undecodable input."""
+    """Decode binary image bytes to 2-D uint8 grayscale.  Format
+    sniffed from magic bytes when not given (the reference trusts the
+    caller's format string).  Base64 / data-URL media decode in
+    Catalyst before the scan (``sources/base64_source``).  A missing
+    payload (a NULL ``image`` cell) or a non-binary one is a ValueError
+    like any other undecodable input."""
     if data is None:
         raise ValueError("missing image payload")
-    if isinstance(data, str):
-        data = decode_payload(data)
+    if not isinstance(data, (bytes, bytearray, memoryview)):
+        raise ValueError(
+            f"image payload must be binary, not {type(data).__name__}")
     if fmt is not None:
         fmt = normalize_format(fmt)
     if fmt is None:

@@ -620,7 +620,6 @@ def _decode_scan(data: bytes, pos: int, frame: dict, scan: list,
     # to stay in sync but their coefficients are discarded
     luma_comp, luma_dc_id, luma_ac_id = scan[0]
     lh, lv = luma_comp["h"], luma_comp["v"]
-    luma_quant = quants[luma_comp["tq"]].reshape(-1).astype(np.float64)
     luma_blocks = np.zeros((n_mcus * lh * lv, 64), dtype=np.float64)
     lb = 0
 
@@ -710,29 +709,45 @@ def _decode_scan(data: bytes, pos: int, frame: dict, scan: list,
                     lb += 1
             preds[si] = pred
 
-    # dequantize + IDCT, vectorized over all luma blocks
-    coef = (luma_blocks * luma_quant).reshape(-1, 8, 8)
+    # MCU-ordered blocks (my, mx, by, bx) → row-major block grid
+    raster = (luma_blocks.reshape(mcus_y, mcus_x, lv, lh, 64)
+              .transpose(0, 2, 1, 3, 4).reshape(-1, 64))
+    return _luma_plane(frame, luma_comp, quants, raster,
+                       mcus_y * lv, mcus_x * lh)
+
+
+def _luma_plane(frame: dict, luma: dict, quants: dict, raster: np.ndarray,
+                bh: int, bw: int) -> np.ndarray:
+    """The decoded luma plane from its coefficient blocks — the tail
+    of both decoders.  ``raster`` holds the ``bh`` x ``bw`` block grid
+    (MCU-aligned) in row-major block order, each block's 64
+    coefficients in natural (not zigzag) order.  Dequantize + IDCT all
+    blocks at once, reassemble the plane with one transpose, crop to
+    the component's ceil-scaled dims and nearest-upsample subsampled
+    luma to the frame."""
+    if luma["tq"] not in quants:
+        raise ValueError("missing quantization table")
+    quant = quants[luma["tq"]].reshape(-1).astype(np.float64)
+    coef = (raster * quant).reshape(-1, 8, 8)
     # D.T @ C @ D as two batched matmuls (see encode_jpeg: einsum's
     # 3-operand path is interpreted and dominated the whole decode)
     spatial = _DCT_T.T @ coef @ _DCT_T
     pix = np.clip(np.round(spatial) + 128, 0, 255).astype(np.uint8)
-
-    # reassemble luma plane from MCU-ordered blocks: block b sits at
-    # MCU (my, mx), sub-block (by, bx) — one transpose instead of a
-    # python loop over every block
-    plane_w, plane_h = mcus_x * lh * 8, mcus_y * lv * 8
-    plane = (pix.reshape(mcus_y, mcus_x, lv, lh, 8, 8)
-             .transpose(0, 2, 4, 1, 3, 5)
-             .reshape(plane_h, plane_w))
+    plane = (pix.reshape(bh, bw, 8, 8)
+             .transpose(0, 2, 1, 3)
+             .reshape(bh * 8, bw * 8))
+    hmax = max(c["h"] for c in frame["comps"])
+    vmax = max(c["v"] for c in frame["comps"])
     # luma plane covers the CEIL-scaled frame dims (T.81 A.1.1: comp
     # dims are ceil(x * h_i / hmax)); floor here silently shorted the
     # plane by one row/col for subsampled-luma frames
-    out_h = (frame["h"] * lv + vmax - 1) // vmax
-    out_w = (frame["w"] * lh + hmax - 1) // hmax
+    out_h = (frame["h"] * luma["v"] + vmax - 1) // vmax
+    out_w = (frame["w"] * luma["h"] + hmax - 1) // hmax
     out = plane[:out_h, :out_w]
-    if lh != hmax or lv != vmax:  # subsampled luma (rare) — nearest up
-        out = np.repeat(np.repeat(out, vmax // lv, axis=0),
-                        hmax // lh, axis=1)[:frame["h"], :frame["w"]]
+    if luma["h"] != hmax or luma["v"] != vmax:  # subsampled luma (rare)
+        out = np.repeat(np.repeat(out, vmax // luma["v"], axis=0),
+                        hmax // luma["h"], axis=1)[:frame["h"],
+                                                   :frame["w"]]
     return out.copy()
 
 
@@ -1123,12 +1138,8 @@ def _decode_prog_scan(data: bytes, pos: int, frame: dict, scan: list,
 
 def _finish_progressive(frame: dict, quants: dict,
                         prog: dict) -> np.ndarray:
-    """Dequantize + IDCT the accumulated luma coefficients — the same
-    vectorized tail as the baseline path, with blocks in row-major
-    (block_y, block_x) order instead of MCU order."""
-    luma = frame["comps"][0]
-    if luma["tq"] not in quants:
-        raise ValueError("missing quantization table")
+    """The accumulated luma coefficients (row-major blocks, zigzag
+    order) through the shared :func:`_luma_plane` tail."""
     from itertools import chain
     blocks = prog["blocks"]
     # fromiter over a chained flat iterator is ~3x np.array on a nested
@@ -1137,22 +1148,5 @@ def _finish_progressive(frame: dict, quants: dict,
                          count=len(blocks) * 64).reshape(-1, 64)
     raster = np.empty_like(zz_arr)
     raster[:, _ZIGZAG] = zz_arr
-    quant = quants[luma["tq"]].reshape(-1).astype(np.float64)
-    coef = (raster * quant).reshape(-1, 8, 8)
-    spatial = _DCT_T.T @ coef @ _DCT_T
-    pix = np.clip(np.round(spatial) + 128, 0, 255).astype(np.uint8)
-    bh, bw = prog["bh"], prog["bw"]
-    plane = (pix.reshape(bh, bw, 8, 8)
-             .transpose(0, 2, 1, 3)
-             .reshape(bh * 8, bw * 8))
-    hmax = max(c["h"] for c in frame["comps"])
-    vmax = max(c["v"] for c in frame["comps"])
-    # ceil scaling per T.81 A.1.1 — same fix as the baseline tail
-    out_h = (frame["h"] * luma["v"] + vmax - 1) // vmax
-    out_w = (frame["w"] * luma["h"] + hmax - 1) // hmax
-    out = plane[:out_h, :out_w]
-    if luma["h"] != hmax or luma["v"] != vmax:
-        out = np.repeat(np.repeat(out, vmax // luma["v"], axis=0),
-                        hmax // luma["h"], axis=1)[:frame["h"],
-                                                   :frame["w"]]
-    return out.copy()
+    return _luma_plane(frame, frame["comps"][0], quants, raster,
+                       prog["bh"], prog["bw"])

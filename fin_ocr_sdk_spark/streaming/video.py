@@ -10,8 +10,12 @@ Spark mapping:
   - frame source   → file-stream of media parquet parts (new part files
                      appear as frames arrive; maxFilesPerTrigger=1 keeps
                      the at-most-one-in-flight property)
-  - per-frame scan → foreachBatch running the SAME per-image step
-                     (pipeline.scan_rows) as the batch pipeline
+  - per-frame scan → foreachBatch planning the micro-batch through the
+                     batch pipeline's one media scan
+                     (pipeline.scan_media with scan_rows): the scan
+                     runs in executor tasks with the broadcast
+                     template pack, and only the emitted spans reach
+                     the driver
   - stop-on-false  → the batch callback calls query.stop() when the
                      caller's callback returns False
 """
@@ -45,11 +49,7 @@ def start_scan_stream(
     ``text`` (pipeline.MEDIA_SCAN_SCHEMA).  Returning False stops the
     query (the reference's callback contract).  `available_now=True`
     drains what exists then stops — the test/demo trigger."""
-    from ..plans.pipeline import MEDIA_SCAN_SCHEMA, media_rows, scan_rows
-    from ..plans.scan import get_default_templates
-
-    templates = get_default_templates()
-    keys = MEDIA_SCAN_SCHEMA.fieldNames()
+    from ..plans.pipeline import MEDIA_SCAN_SCHEMA, scan_media, scan_rows
 
     stream = (spark.readStream.schema(MEDIA_SCHEMA)
               .option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -60,9 +60,8 @@ def start_scan_stream(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if stop_flag["stop"]:
             return
-        pdf = batch_df.select("media_ref", "format", "image").toPandas()
-        rows = [dict(zip(keys, r))
-                for r in scan_rows(media_rows(pdf), templates)]
+        rows = [r.asDict() for r in
+                scan_media(batch_df, scan_rows, MEDIA_SCAN_SCHEMA).collect()]
         if not on_results(rows, batch_id):
             stop_flag["stop"] = True
 

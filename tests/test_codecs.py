@@ -393,3 +393,218 @@ def test_tiff_non_gray_layouts_are_decode_errors(spp, bits):
         codecs.decode_tiff(data)
     res = scan_check(data, "tiff")
     assert not res.ok and res.error.startswith("decode: "), res.error
+
+
+# ------------------------------------------- multi-component JPEG streams
+
+def _zz_blocks(plane: np.ndarray, quant: np.ndarray) -> list:
+    """[by][bx] -> 64 zigzag-ordered quantized coefficients of a plane
+    whose sides are multiples of 8."""
+    from fin_ocr_sdk_spark.sources import jpeg as J
+    ph, pw = plane.shape
+    blocks = (plane.reshape(ph // 8, 8, pw // 8, 8).transpose(0, 2, 1, 3)
+              .reshape(-1, 8, 8).astype(np.float64) - 128.0)
+    q = np.round(J._DCT_T @ blocks @ J._DCT_T.T / quant).astype(np.int64)
+    return q.reshape(ph // 8, pw // 8, 64)[:, :, J._ZIGZAG].tolist()
+
+
+def _entropy(units: list, restart: int, put_unit, new_state) -> bytes:
+    """Entropy-coded ``units``, a new bit writer and coder state every
+    ``restart`` units (0: never), segments joined by RSTn markers."""
+    from fin_ocr_sdk_spark.sources import jpeg as J
+    step = restart or max(1, len(units))
+    segs = []
+    for k in range(0, len(units), step):
+        bw = J._BitWriter()
+        st = new_state(bw)
+        for u in units[k:k + step]:
+            put_unit(bw, st, u)
+        if hasattr(st, "finish"):
+            st.finish()
+        segs.append(bw.flush())
+    return b"".join(seg + (bytes([0xFF, 0xD0 + i % 8])
+                           if i < len(segs) - 1 else b"")
+                    for i, seg in enumerate(segs))
+
+
+def _put_dc(bw, codes: dict, diff: int) -> None:
+    size = abs(diff).bit_length()
+    bw.put(*codes[size])
+    if size:
+        bw.put(diff if diff > 0 else diff + (1 << size) - 1, size)
+
+
+def _put_ac(bw, codes: dict, blk: list) -> None:
+    last = max([k for k in range(1, 64) if blk[k]], default=0)
+    run = 0
+    for k in range(1, last + 1):
+        v = blk[k]
+        if v == 0:
+            run += 1
+            continue
+        while run > 15:
+            bw.put(*codes[0xF0])
+            run -= 16
+        size = abs(v).bit_length()
+        bw.put(*codes[(run << 4) | size])
+        bw.put(v if v > 0 else v + (1 << size) - 1, size)
+        run = 0
+    if last < 63:
+        bw.put(*codes[0x00])
+
+
+def _jpeg_stream(w: int, h: int, sampling: list, progressive: bool = False,
+                 restart: int = 0, seed: int = 0
+                 ) -> "tuple[bytes, np.ndarray]":
+    """A ``w`` x ``h`` JPEG whose components have the (h, v) sampling
+    factors in ``sampling`` (component 0 is luma) and seeded content,
+    plus the luma plane it encodes.  Baseline: one interleaved scan.
+    Progressive: an interleaved DC scan, then one full-band AC scan
+    per component, so both forms carry the same coefficients."""
+    from fin_ocr_sdk_spark.sources import jpeg as J
+    rng = np.random.default_rng(seed)
+    hmax = max(s[0] for s in sampling)
+    vmax = max(s[1] for s in sampling)
+    mx_n, my_n = -(-w // (8 * hmax)), -(-h // (8 * vmax))
+    quant = J._scaled_quant(85)
+    planes = []
+    for ch, cv in sampling:
+        yy, xx = np.mgrid[0:my_n * cv * 8, 0:mx_n * ch * 8]
+        f = rng.uniform(0.02, 0.2, 2)
+        planes.append(np.clip(128 + 60 * np.sin(xx * f[0]) * np.cos(yy * f[1])
+                              + rng.normal(0, 12, xx.shape),
+                              0, 255).astype(np.uint8))
+    comps = [_zz_blocks(p, quant) for p in planes]
+    dc = J._build_codes(J._DC_LUMA_BITS, J._DC_LUMA_VALS)
+    mcus = [(my, mx) for my in range(my_n) for mx in range(mx_n)]
+
+    def mcu_blocks(c, my, mx):
+        ch, cv = sampling[c]
+        return [comps[c][my * cv + j][mx * ch + i]
+                for j in range(cv) for i in range(ch)]
+
+    def put_mcu(with_ac):
+        def put(bw, preds, m):
+            for c in range(len(sampling)):
+                for blk in mcu_blocks(c, *m):
+                    _put_dc(bw, dc, blk[0] - preds[c])
+                    preds[c] = blk[0]
+                    if with_ac:
+                        _put_ac(bw, ac, blk)
+        return put
+
+    new_preds = lambda bw: [0] * len(sampling)  # noqa: E731
+    every = list(range(len(sampling)))
+    if progressive:
+        ac_bits, ac_vals = J._PROG_AC_BITS, J._PROG_AC_VALS
+        ac = J._build_codes(ac_bits, ac_vals)
+        scans = [(every, (0, 0), _entropy(mcus, restart, put_mcu(False),
+                                          new_preds))]
+        for c, (ch, cv) in enumerate(sampling):
+            cw, chh = -(-w * ch // hmax), -(-h * cv // vmax)
+            units = [comps[c][by][bx] for by in range(-(-chh // 8))
+                     for bx in range(-(-cw // 8))]
+            scans.append(([c], (1, 63), _entropy(
+                units, restart,
+                lambda bw, sc, blk: sc.first_block(blk, range(1, 64), 0),
+                lambda bw: J._ProgACScan(bw, ac))))
+    else:
+        ac_bits, ac_vals = J._AC_LUMA_BITS, J._AC_LUMA_VALS
+        ac = J._build_codes(ac_bits, ac_vals)
+        scans = [(every, (0, 63), _entropy(mcus, restart, put_mcu(True),
+                                           new_preds))]
+    parts = [b"\xff\xd8",
+             b"\xff\xdb" + struct.pack(">H", 67) + b"\x00"
+             + bytes(int(x) for x in quant.reshape(-1)[J._ZIGZAG]),
+             (b"\xff\xc2" if progressive else b"\xff\xc0")
+             + struct.pack(">HBHHB", 8 + 3 * len(sampling), 8, h, w,
+                           len(sampling))
+             + b"".join(bytes([c + 1, (ch << 4) | cv, 0])
+                        for c, (ch, cv) in enumerate(sampling)),
+             J._dht_segment(0x00, J._DC_LUMA_BITS, J._DC_LUMA_VALS),
+             J._dht_segment(0x10, ac_bits, ac_vals)]
+    if restart:
+        parts.append(b"\xff\xdd" + struct.pack(">HH", 4, restart))
+    for cs, (ss, se), entropy in scans:
+        parts += [b"\xff\xda" + struct.pack(">HB", 6 + 2 * len(cs), len(cs))
+                  + b"".join(bytes([c + 1, 0x00]) for c in cs)
+                  + bytes([ss, se, 0]), entropy]
+    parts.append(b"\xff\xd9")
+    return b"".join(parts), planes[0]
+
+
+def _seeded_gray(w: int, h: int, seed: int) -> np.ndarray:
+    rng = np.random.default_rng(seed)
+    yy, xx = np.mgrid[0:h, 0:w]
+    img = (128 + 70 * np.sin(xx / 5.0) * np.cos(yy / 7.0)
+           + rng.normal(0, 20, (h, w)))
+    return np.clip(img, 0, 255).astype(np.uint8)
+
+
+_S420 = [(2, 2), (1, 1), (1, 1)]      # 4:2:0
+_SUB_LUMA = [(1, 1), (2, 2), (1, 1)]  # luma below the frame's max factors
+_SUB_LUMA_V = [(1, 2), (2, 1)]        # luma subsampled horizontally only
+
+# sha256[:16] of (shape, pixels) for each decode, recorded before the
+# baseline and progressive decoders shared one luma tail
+_JPEG_DIGESTS = {
+    "base_gray_37x53": "b82145e1fc175a35",
+    "base_gray_64x48": "1dce90a525898272",
+    "base_420_45x29": "2411f9e35f816540",
+    "base_420_dri_45x29": "4dfdc8732d0df605",
+    "base_sub_luma_45x29": "b53e9283e5fed4fe",
+    "base_sub_luma_v_33x19": "8ee6b07def77b23d",
+}
+
+
+def _jpeg_case(name: str, progressive: bool) -> bytes:
+    from fin_ocr_sdk_spark.sources.jpeg import encode_jpeg_progressive
+    gray = {"base_gray_37x53": (37, 53, 1, 85),
+            "base_gray_64x48": (64, 48, 2, 60)}
+    if name in gray:
+        w, h, seed, q = gray[name]
+        enc = encode_jpeg_progressive if progressive else encode_jpeg
+        return enc(_seeded_gray(w, h, seed), q)
+    args = {"base_420_45x29": (45, 29, _S420, 0, 3),
+            "base_420_dri_45x29": (45, 29, _S420, 2, 4),
+            "base_sub_luma_45x29": (45, 29, _SUB_LUMA, 0, 5),
+            "base_sub_luma_v_33x19": (33, 19, _SUB_LUMA_V, 0, 6)}[name]
+    w, h, sampling, restart, seed = args
+    if progressive and restart:
+        restart += 1        # block-unit restarts, a different interval
+    return _jpeg_stream(w, h, sampling, progressive, restart, seed)[0]
+
+
+@pytest.mark.parametrize("progressive", [False, True])
+@pytest.mark.parametrize("name", sorted(_JPEG_DIGESTS))
+def test_jpeg_luma_tail_digests(name, progressive):
+    """Both decoders' output is pinned: 1- and 3-component frames,
+    4:2:0, subsampled luma (nearest upsampling) and DRI restarts.  The
+    progressive streams carry the baseline's coefficients (a full-band
+    AC scan per component, or the 6-scan grayscale script), so each
+    case has one digest."""
+    import hashlib
+    out = decode_jpeg(_jpeg_case(name, progressive))
+    digest = hashlib.sha256(repr(out.shape).encode()
+                            + out.tobytes()).hexdigest()[:16]
+    assert digest == _JPEG_DIGESTS[name]
+
+
+@pytest.mark.parametrize("sampling", [_S420, _SUB_LUMA, _SUB_LUMA_V])
+def test_jpeg_multi_component_luma_is_the_encoded_plane(sampling):
+    """The decoded luma of a multi-component frame is the encoded luma
+    plane (to quantization error), cropped or nearest-upsampled to the
+    frame, for baseline and progressive streams alike."""
+    hmax = max(s[0] for s in sampling)
+    vmax = max(s[1] for s in sampling)
+    lh, lv = sampling[0]
+    for restart in (0, 2):
+        data, luma = _jpeg_stream(45, 29, sampling, restart=restart, seed=9)
+        base = decode_jpeg(data)
+        prog = decode_jpeg(_jpeg_stream(45, 29, sampling, True, restart,
+                                        seed=9)[0])
+        assert base.shape == (29, 45)
+        assert np.array_equal(base, prog)
+        want = np.repeat(np.repeat(luma, vmax // lv, 0), hmax // lh, 1)
+        err = np.abs(base.astype(int) - want[:29, :45])
+        assert err.mean() < 8

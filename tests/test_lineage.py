@@ -77,9 +77,10 @@ def test_resume_from_partial_run(spark, smoke_dir, tmp_path_factory):
 
 
 def test_resume_many_files(spark, smoke_dir, tmp_path_factory):
-    """Scale-shape check for the anti-join resume: 200 media part files,
-    a partial first run, then a resumed full run — no driver-side set
-    diff, counts exact, all committed spans visible."""
+    """Scale-shape check for the resume: 200 media part files, a
+    partial first run, then a resumed full run — the driver-side diff
+    of the file list against the committed lineage skips exactly the
+    committed files, and all committed spans are visible."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -122,21 +123,69 @@ def test_checksum_is_deterministic(spark, smoke_dir, tmp_path_factory):
     assert (la["partition_id"] == lb["partition_id"]).all()
 
 
-def test_lineage_scan_keeps_its_tasks(spark, smoke_dir, tmp_path):
-    """The lineage rows meet in one partition through a shuffle: no
-    Coalesce directly above the MapInPandas scan, which would fold the
-    scan into a single task."""
-    from fin_ocr_sdk_spark.plans.lineage import scan_lineage
-    from fin_ocr_sdk_spark.plans.pipeline import media_manifest
+def _subtree(lines: list[str], at: int) -> list[str]:
+    """The plan node printed at ``lines[at]`` and every node below it
+    (an executed adaptive plan prints its final and initial plans, so
+    the lines after a node are not all below it)."""
+    def depth(s):
+        return len(s) - len(s.lstrip(" :+-*()0123456789"))
+    out = [lines[at]]
+    for s in lines[at + 1:]:
+        if depth(s) <= depth(lines[at]):
+            break
+        out.append(s)
+    return out
 
-    media = spark.read.parquet(os.path.join(smoke_dir, "media.parquet"))
-    files = media_manifest(media).select("path")
-    df = scan_lineage(spark, files, 16, str(tmp_path), "plan")
-    assert df.rdd.getNumPartitions() == 1
-    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+
+def test_lineage_scan_keeps_its_tasks(spark, smoke_dir, tmp_path,
+                                      monkeypatch):
+    """The pending files reach the commit kernel as whole-file units
+    planned by the direct scan's planner: no Exchange below MapInPandas
+    and per-partition file counts differ by at most 1.  The lineage
+    rows meet in one partition through a shuffle: no Coalesce above
+    the scan, which would fold it into a single task."""
+    import pyarrow.parquet as papq
+    from pyspark.sql import DataFrameWriter
+
+    from fin_ocr_sdk_spark.plans import lineage as L
+
+    table = papq.read_table(os.path.join(smoke_dir, "media.parquet"))
+    media_dir = tmp_path / "media11"
+    media_dir.mkdir()
+    cuts = [0, 2, 4, 6, 8, 10, 11, 12, 13, 14, 15, 16]   # 11 part files
+    for k, (a, b) in enumerate(zip(cuts, cuts[1:])):
+        papq.write_table(table.slice(a, b - a),
+                         str(media_dir / f"part-{k:05d}.parquet"))
+    planned, written = [], []
+    real_planned, real_parquet = L._planned_units, DataFrameWriter.parquet
+
+    def spy_planned(spark_, units):
+        planned.append(real_planned(spark_, units))
+        return planned[-1]
+
+    def spy_parquet(self, path, *args, **kwargs):
+        if path.endswith("lineage"):
+            written.append(self._df)
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(L, "_planned_units", spy_planned)
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy_parquet)
+    docs = spark.read.parquet(os.path.join(smoke_dir, "documents.parquet"))
+    res = run_resumable_extract(spark, docs,
+                                spark.read.parquet(str(media_dir)),
+                                str(tmp_path / "out"))
+    assert (res.scanned_files, res.doc_count) == (11, 16)
+    (units,), (lineage,) = planned, written
+    counts = units.rdd.glom().map(len).collect()
+    assert sum(counts) == 11 and max(counts) - min(counts) <= 1
+    assert lineage.rdd.getNumPartitions() == 1
+    lines = lineage._jdf.queryExecution().executedPlan().toString() \
+        .splitlines()
     scan_at = next(i for i, s in enumerate(lines) if "MapInPandas" in s)
     assert "Exchange SinglePartition" in lines[scan_at - 1]
     assert not any("Coalesce" in s for s in lines[:scan_at])
+    below = "\n".join(_subtree(lines, scan_at))
+    assert "Exchange" not in below and "Range" in below
 
 
 def _assert_refused(spark, docs, media, out_dir):

@@ -45,9 +45,9 @@ def test_direct_plan_never_exchanges_image_bytes(smoke):
 
 
 def test_arrow_plan_byte_weighted_exchange(smoke, monkeypatch):
-    """The fallback arrow strategy semi-joins media on the image spans'
-    media_ref and hash-partitions on media_ref with the byte-weighted
-    partition count before the scan kernel."""
+    """The fallback arrow strategy hash-partitions the media rows on
+    media_ref with the byte-weighted partition count before the scan
+    kernel."""
     from fin_ocr_sdk_spark.plans import pipeline as P
     docs, media = smoke
     monkeypatch.setattr(P, "_choose_media_strategy", lambda m: "arrow")
@@ -55,7 +55,6 @@ def test_arrow_plan_byte_weighted_exchange(smoke, monkeypatch):
     scan_at = next(i for i, s in enumerate(lines) if "MapInPandas" in s)
     below = "\n".join(lines[scan_at:])
     assert "hashpartitioning(media_ref" in below
-    assert "LeftSemi" in below
     assert "image#" in lines[scan_at]  # this path does carry bytes
 
 
@@ -138,7 +137,7 @@ def test_direct_units_are_planned_not_shuffled(smoke, spark, tmp_path):
     assert "Exchange" not in below
     assert "Range" in below
 
-    units = P._media_files_df(media11)
+    units = P._planned_units(spark, P._slice_units(media11))
     parts = units.rdd.glom().map(
         lambda rows: [(r.path, r.slice, r.n_slices) for r in rows]).collect()
     counts = [len(p) for p in parts]
@@ -148,6 +147,20 @@ def test_direct_units_are_planned_not_shuffled(smoke, spark, tmp_path):
     for i, part in enumerate(parts):
         assert [u[0] for u in part] == [p for p, _ in files[i::nparts]]
         assert all(u[1:] == (0, 1) for u in part)
+
+
+@pytest.mark.parametrize("query", ["media_resize", "media_metadata"])
+def test_media_query_plans_read_no_image_bytes(spark, query):
+    """The media queries run through the pipeline's one media scan over
+    the bare media table: the image column never enters the plan, and
+    nothing is shuffled below the scan kernel."""
+    import __spark_entry__ as m
+    lines = _plan(m.queries()[query](spark, "")).splitlines()
+    assert "image#" not in "\n".join(lines)
+    scan_at = next(i for i, s in enumerate(lines) if "MapInPandas" in s)
+    below = "\n".join(_subtree(lines, scan_at))
+    assert "Exchange" not in below
+    assert "Range" in below
 
 
 def test_overlapping_row_groups_pruning(tmp_path):

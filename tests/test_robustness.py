@@ -33,10 +33,10 @@ def test_salt_pepper_on_band(density):
     assert res.micr_value == MICR.replace(" ", "")
 
 
-def test_byte_weighted_partitions_metadata_path():
+def test_byte_weighted_partitions_metadata_path(monkeypatch):
     """The statistic comes from parquet footers (no data read) and is
     floored at default parallelism."""
-    from fin_ocr_sdk_spark.plans.pipeline import byte_weighted_partitions
+    from fin_ocr_sdk_spark.plans import pipeline as P
     from fin_ocr_sdk_spark.session import get_spark
     from fin_ocr_sdk_spark.sources.tables import fixture_dir
     d = fixture_dir("smoke", 16)
@@ -46,12 +46,12 @@ def test_byte_weighted_partitions_metadata_path():
         media = spark.read.parquet(os.path.join(d, "media.parquet"))
         # tiny target → count driven by uncompressed bytes (~8 MB for
         # 16 docs at 1280x400)
-        n_small_target = byte_weighted_partitions(media, "image",
-                                                  target_bytes=1 << 20)
+        monkeypatch.setattr(P, "_PARTITION_BYTES", 1 << 20)
+        n_small_target = P.byte_weighted_partitions(media)
         assert n_small_target >= 4  # ~5 MB of stored image bytes / 1 MB
         # huge target → floored at defaultParallelism (4)
-        n_floor = byte_weighted_partitions(media, "image",
-                                           target_bytes=1 << 40)
+        monkeypatch.setattr(P, "_PARTITION_BYTES", 1 << 40)
+        n_floor = P.byte_weighted_partitions(media)
         assert n_floor == spark.sparkContext.defaultParallelism
     finally:
         spark.stop()

@@ -163,21 +163,6 @@ def test_base64_media_source_end_to_end(spark, smoke_dir, tmp_path):
     assert _choose_media_strategy(kept) == "arrow"
 
 
-def test_decode_payload_forms():
-    import base64
-
-    import numpy as np
-
-    from fin_ocr_sdk_spark.sources import codecs
-    img = np.full((9, 11), 77, np.uint8)
-    data = codecs.encode_png(img)
-    assert codecs.decode_payload(data) == data
-    assert codecs.decode_payload(base64.b64encode(data).decode()) == data
-    url = "data:image/png;base64," + base64.b64encode(data).decode()
-    assert codecs.decode_payload(url) == data
-    assert (codecs.decode_image(url) == img).all()  # str accepted + sniffed
-
-
 def test_preprocess_only(spark, smoke_dir):
     docs = spark.read.parquet(os.path.join(smoke_dir, "documents.parquet"))
     media = spark.read.parquet(os.path.join(smoke_dir, "media.parquet"))
@@ -214,10 +199,11 @@ def test_entry_contract(spark):
     assert len(qs) >= 20
 
 
-def test_media_manifest_shape(spark, smoke_dir):
+def test_media_manifest_shape(spark, smoke_dir, monkeypatch):
     """media_manifest: canonical local paths (no file: URI), one row
     per part file with its size from the engine's listing; None for
-    non-file-backed plans (derived columns project _metadata away)."""
+    plans that list no files, without attempting the _metadata select
+    (Spark would log its failed analysis at ERROR)."""
     import pandas as pd  # noqa: F811
     from pyspark.sql import functions as F
 
@@ -241,9 +227,19 @@ def test_media_manifest_shape(spark, smoke_dir):
     derived = media.select(F.col("media_ref"),
                            F.base64("image").alias("payload"))
     assert len(media_manifest(derived).toPandas()) == 16
-    # in-memory relation: no _metadata -> None
+    # in-memory relation: no files -> None, and no select attempted
     inmem = spark.createDataFrame([("x", b"y")], "media_ref string, image binary")
+    selects = []
+    frame_cls = type(inmem)    # the concrete class, not the base API
+    real_select = frame_cls.select
+
+    def spy(self, *cols):
+        selects.append(cols)
+        return real_select(self, *cols)
+
+    monkeypatch.setattr(frame_cls, "select", spy)
     assert media_manifest(inmem) is None
+    assert selects == []
 
 
 def test_tiny_images_yield_one_error_span_each(spark, tmp_path,
@@ -311,7 +307,7 @@ def test_scan_kernel_local_equals_map_in_pandas(spark, smoke_dir):
     local = pd.concat(kernel(iter([pd.read_parquet(
         path, columns=["media_ref", "format", "image"])])))
     media = spark.read.parquet(path)
-    direct = (P._media_files_df(media)
+    direct = (P._planned_units(spark, P._slice_units(media))
               .mapInPandas(kernel, P.MEDIA_SCAN_SCHEMA).toPandas())
     arrow = (media.select("media_ref", "format", "image")
              .mapInPandas(kernel, P.MEDIA_SCAN_SCHEMA).toPandas())
@@ -324,6 +320,27 @@ def test_scan_kernel_local_equals_map_in_pandas(spark, smoke_dir):
     assert len(local) == 16 * 4
     pd.testing.assert_frame_equal(norm(direct), norm(local))
     pd.testing.assert_frame_equal(norm(arrow), norm(local))
+
+
+@pytest.mark.parametrize("query", ["media_resize", "media_metadata"])
+def test_media_query_matches_its_oracle(spark, query):
+    """The media queries equal their DuckDB oracles under the contract
+    check's canonical form (scripts/validate_contract.canon)."""
+    import importlib.util
+
+    import duckdb
+
+    import __spark_entry__ as m
+    spec = importlib.util.spec_from_file_location(
+        "validate_contract", os.path.join(os.path.dirname(m.__file__),
+                                          "scripts", "validate_contract.py"))
+    vc = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(vc)
+    got = vc.canon(m.queries()[query](spark, "").toPandas())
+    with duckdb.connect() as con:
+        exp = vc.canon(con.execute(m.oracle_sql()[query]).fetchdf())
+    assert len(got) == m.SFTEST_DOCS
+    pd.testing.assert_frame_equal(got, exp)
 
 
 def test_every_extraction_path_same_micr_spans(spark, smoke_dir, tmp_path,
@@ -430,3 +447,17 @@ def test_null_image_is_one_decode_error(spark, smoke_dir, tmp_path):
     emitted = emitted_spans(spark, out_dir).toPandas()
     assert _micr_set(emitted.to_dict("records")) == want | {
         (null_ref, "micr:error", "decode: missing image payload")}
+    # a string image column (base64 text, not bytes) on the direct path:
+    # one decode error span per image, no failed task
+    text_part = str(tmp_path / "text_media.parquet")
+    pq.write_table(pa.table({
+        "media_ref": list(rows["media_ref"]),
+        "format": list(rows["format"]),
+        "image": ["iVBORw0KGgo=" for _ in range(len(rows))],
+    }), text_part)
+    text_media = spark.read.parquet(text_part)
+    assert P._choose_media_strategy(text_media) == "direct"
+    got = _micr_set(extract_spans(docs, text_media).collect())
+    assert got == {(r, "micr:error",
+                    "decode: image payload must be binary, not str")
+                   for r in rows["media_ref"]}
