@@ -67,18 +67,32 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _spread(df: DataFrame, key: str) -> DataFrame:
-    """Scale-adaptive parallelism floor for expensive downstream work
-    (guide §2.5/§4): a single-row-group parquet file scans as ONE task
-    no matter how many cores the cluster has — Spark splits files by
-    byte ranges but a row group belongs to exactly one split — so an
-    opaque Python kernel downstream of such a scan serializes on one
-    core.  When the scan yields fewer partitions than the cluster's
-    parallelism, hash-repartition by the row key (deterministic under
-    task retry, unlike round-robin of a non-deterministic input —
-    guide §2.5); when the input is already wide (the 100 TB case:
-    thousands of files/row groups) this is a NO-OP, so nothing here is
-    tuned to local mode.  The shuffle moves only the projected columns
-    the caller kept."""
+    """Parallelism floor for an opaque Python kernel, set by input
+    bytes (guide §2.5/§4).  A single-row-group parquet file scans as
+    ONE task however many cores the cluster has — Spark splits files
+    by byte ranges, but a row group belongs to exactly one split — so
+    the kernel downstream would serialize on one core.
+
+    The rule: when the local files ``df`` reads hold at least one
+    minimum work unit (``pipeline.MIN_UNIT_BYTES``, 1 MB — the same
+    floor below which the direct media scan never slices a file) and
+    the scan yields fewer partitions than the cluster's parallelism,
+    hash-repartition by the row key (deterministic under task retry,
+    unlike round-robin of a non-deterministic input — guide §2.5).
+    Below the unit the input is returned as is, and ``df.rdd`` is never
+    built: there an exchange stage plus a Python worker per core cost
+    more than the kernel's whole run (4-core host, 64-190 KB tables:
+    minhash_dedup 0.76 -> 0.53 s unspread, peak RSS -19%; at sf0.1's
+    0.6-0.8 MB tables spreading was a wash).  Inputs that list no local files (object
+    stores, in-memory rows) and wide inputs (the 100 TB case:
+    thousands of files/row groups, where the partition check is a
+    no-op) keep the partition rule, so nothing here depends on the
+    cluster.  The shuffle moves only the projected columns the caller
+    kept."""
+    from fin_ocr_sdk_spark.plans.pipeline import MIN_UNIT_BYTES, local_files
+    files = local_files(df.inputFiles())
+    if files is not None and sum(s for _, s in files) < MIN_UNIT_BYTES:
+        return df
     par = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= par:
         return df

@@ -119,25 +119,24 @@ def media_rows(pdf: pd.DataFrame) -> Iterator[tuple]:
 
 _PARTITION_BYTES = 64 << 20
 
+# the minimum work unit: a direct-scan slice is never smaller
+# (_slice_units), and a python-kernel query spreads its input over the
+# cluster only when the input fills one (__spark_entry__._spread)
+MIN_UNIT_BYTES = 1 << 20
+
 
 def byte_weighted_partitions(df: DataFrame) -> int:
     """Partition count sized by total payload bytes, not row count — the
-    skew axis for media tables is bytes/row (SURVEY §4).  Fast path:
-    sum of part-file sizes from the distributed manifest (media bytes
-    dominate a media table and are stored pre-encoded/incompressible,
-    so file size ≈ payload size); executors stat, the driver never
-    loops over files.  Fallback for non-file sources: one column-length
-    agg over ``image``.  At 100 TB this statistic comes from table
-    metadata instead.  Partitions target 64 MB of payload each.
-    Floored at the cluster's default parallelism so small inputs still
-    use every core (the byte count dominates once input >> cluster)."""
-    total = 0
-    manifest = media_manifest(df)
-    if manifest is not None:
-        total = (manifest.agg(F.sum("size").alias("s")).first()["s"]
-                 or 0)
-    if total == 0:
-        total = df.select(F.sum(F.length(F.col("image")))).first()[0] or 0
+    skew axis for media tables is bytes/row (SURVEY §4).  The bytes are
+    the sizes of the files the plan lists (:func:`_listed_files`;
+    media bytes dominate a media table and are stored
+    pre-encoded/incompressible, so file size ≈ payload size): local
+    files are stat'ed on the driver, no Spark job.  A plan that lists
+    no files (in-memory rows, a stream's micro-batch) gets the floor.
+    Partitions target 64 MB of payload each, floored at the cluster's
+    default parallelism so small inputs still use every core (the byte
+    count dominates once input >> cluster)."""
+    total = sum(size for _, size in _listed_files(df) or ())
     floor = df.sparkSession.sparkContext.defaultParallelism
     return max(floor, math.ceil(total / _PARTITION_BYTES))
 
@@ -303,31 +302,47 @@ def _choose_media_strategy(media: DataFrame) -> str:
     return "direct" if _is_bare_file_scan(media) else "arrow"
 
 
+def local_files(listing: "list[str]") -> "list[tuple[str, int]] | None":
+    """(path, size) of every file of an ``inputFiles()`` listing, stat'ed
+    on the driver (~0.2 ms per 1k files, no Spark job), or None unless
+    the listing is non-empty and every entry is a local ``file:`` URI.
+    ``inputFiles()`` returns percent-encoded URIs, so paths are decoded
+    after the scheme is stripped: the stat target and the path a scan
+    kernel reads are the real filesystem name."""
+    if not listing or not all(f.startswith("file:") for f in listing):
+        return None
+    return [(p, os.path.getsize(p))
+            for p in (unquote(re.sub("^file:/+", "/", f))
+                      for f in listing)]
+
+
+def _listed_files(df: DataFrame) -> "list[tuple[str, int]] | None":
+    """(path, size) of every file ``df``'s plan reads — the one file
+    list behind :func:`_media_files` and
+    :func:`byte_weighted_partitions`.  None when the plan lists no
+    files.  Local files come from :func:`local_files`; object-store
+    paths go through one collect of :func:`media_manifest` (executors
+    stat)."""
+    listing = df.inputFiles()
+    if not listing:
+        return None
+    files = local_files(listing)
+    if files is not None:
+        return files
+    manifest = media_manifest(df)
+    if manifest is None:
+        return None
+    return [(r["path"], r["size"]) for r in manifest.collect()] or None
+
+
 def _media_files(media: DataFrame) -> "list[tuple[str, int]] | None":
     """(path, size) of every part file of a bare file-scan media table:
     the one file list of the direct scan (:func:`_slice_units`) and
     the resumable scan (``lineage.run_resumable_extract``).  None for
-    any other plan, or a scan that lists no files.
-
-    Local files are stat'ed on the driver (~0.2 ms per 1k files, no
-    Spark job); object-store paths go through one collect of
-    :func:`media_manifest` (executors stat).  ``inputFiles()`` returns
-    percent-encoded URIs, so paths are decoded after the scheme is
-    stripped: the stat target and the path the scan kernel reads are
-    the real filesystem name."""
+    any other plan, or a scan that lists no files."""
     if not _is_bare_file_scan(media):
         return None
-    listing = media.inputFiles()
-    if not listing:
-        return None
-    if all(f.startswith("file:") for f in listing):
-        return [(p, os.path.getsize(p))
-                for p in (unquote(re.sub("^file:/+", "/", f))
-                          for f in listing)]
-    manifest = media_manifest(media)
-    if manifest is None:
-        return None
-    return [(r["path"], r["size"]) for r in manifest.collect()] or None
+    return _listed_files(media)
 
 
 def _slice_units(media: DataFrame) -> "list[tuple] | None":
@@ -337,14 +352,16 @@ def _slice_units(media: DataFrame) -> "list[tuple] | None":
     range from the footer, so the driver never reads footers).  Slices
     are ~8 units per core slot (stragglers bounded by one slice, not
     one file — whole-file units measured a 20-30% makespan tax),
-    floored at 1 MB (don't shred small files) and capped at 64 MB (a
-    slice's rows must fit worker memory at production part sizes)."""
+    floored at ``MIN_UNIT_BYTES`` (don't shred small files) and capped
+    at 64 MB (a slice's rows must fit worker memory at production part
+    sizes)."""
     files = _media_files(media)
     if files is None:
         return None
     par = media.sparkSession.sparkContext.defaultParallelism
     total = sum(size for _, size in files)
-    slice_bytes = min(64 << 20, max(1 << 20, total // max(1, par * 8)))
+    slice_bytes = min(64 << 20,
+                      max(MIN_UNIT_BYTES, total // max(1, par * 8)))
     units = []
     for path, size in files:
         nsl = max(1, -(-int(size) // slice_bytes))

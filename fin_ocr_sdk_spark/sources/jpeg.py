@@ -609,17 +609,23 @@ def _decode_scan(data: bytes, pos: int, frame: dict, scan: list,
                  restart_interval: int) -> np.ndarray:
     segments, _ = _split_entropy(data, pos)
 
-    hmax = max(c["h"] for c in frame["comps"])
-    vmax = max(c["v"] for c in frame["comps"])
-    mcu_w, mcu_h = 8 * hmax, 8 * vmax
-    mcus_x = (frame["w"] + mcu_w - 1) // mcu_w
-    mcus_y = (frame["h"] + mcu_h - 1) // mcu_h
-    n_mcus = mcus_x * mcus_y
-
     # luminance = first scan component; chroma blocks are entropy-decoded
     # to stay in sync but their coefficients are discarded
     luma_comp, luma_dc_id, luma_ac_id = scan[0]
-    lh, lv = luma_comp["h"], luma_comp["v"]
+    interleaved = len(scan) > 1
+    if not interleaved:
+        # non-interleaved scan (T.81 A.2.2): every MCU is ONE block, in
+        # raster order over the component's own block grid, whatever
+        # its sampling factors
+        mcus_x, mcus_y = _comp_block_dims(frame, luma_comp)
+        lh = lv = 1
+    else:
+        hmax = max(c["h"] for c in frame["comps"])
+        vmax = max(c["v"] for c in frame["comps"])
+        mcus_x = (frame["w"] + 8 * hmax - 1) // (8 * hmax)
+        mcus_y = (frame["h"] + 8 * vmax - 1) // (8 * vmax)
+        lh, lv = luma_comp["h"], luma_comp["v"]
+    n_mcus = mcus_x * mcus_y
     luma_blocks = np.zeros((n_mcus * lh * lv, 64), dtype=np.float64)
     lb = 0
 
@@ -628,7 +634,8 @@ def _decode_scan(data: bytes, pos: int, frame: dict, scan: list,
     # and per-MCU re-derivation measurably dominate at 10k+ MCUs
     plan = [(huff_dc[dc_id].len16, huff_dc[dc_id].sym16,
              huff_ac[ac_id].len16, huff_ac[ac_id].sym16,
-             comp["h"] * comp["v"], comp is luma_comp)
+             comp["h"] * comp["v"] if interleaved else 1,
+             comp is luma_comp)
             for comp, dc_id, ac_id in scan]
     zigzag = _ZIGZAG
     # MSB-first bit reader over 0xFF00-unstuffed entropy data, inlined

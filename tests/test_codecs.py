@@ -608,3 +608,23 @@ def test_jpeg_multi_component_luma_is_the_encoded_plane(sampling):
         want = np.repeat(np.repeat(luma, vmax // lv, 0), hmax // lh, 1)
         err = np.abs(base.astype(int) - want[:29, :45])
         assert err.mean() < 8
+
+
+@pytest.mark.parametrize("w, h", [(37, 53), (320, 200)])
+def test_jpeg_non_interleaved_scan_is_one_block_per_mcu(w, h):
+    """A single-component scan's MCU is one 8x8 block in raster order
+    over the component's own block grid (T.81 A.2.2), whatever the
+    SOF's sampling factors: patching a grayscale stream's sampling byte
+    from 0x11 to 0x22 must not change the decode."""
+    img = _seeded_gray(w, h, 7)
+    data = encode_jpeg(img, 92)
+    sof = data.index(b"\xff\xc0")
+    assert data[sof + 11] == 0x11     # component 1: H=1, V=1
+    patched = bytearray(data)
+    patched[sof + 11] = 0x22
+    base = decode_jpeg(data)
+    out = decode_jpeg(bytes(patched))
+    assert out.shape == img.shape
+    err = np.abs(base.astype(int) - img).mean()
+    assert np.abs(out.astype(int) - img).mean() == err
+    assert err < 4

@@ -12,6 +12,7 @@ import pyarrow.parquet as pq
 import pytest
 
 import __spark_entry__ as m
+from fin_ocr_sdk_spark.plans.pipeline import MIN_UNIT_BYTES
 
 
 @pytest.fixture(scope="module")
@@ -81,6 +82,65 @@ def test_minhash_giant_cluster_capped(spark, tmp_path_factory):
     pairs = {(r.doc_a, r.doc_b) for r in q.collect()}
     assert pairs == {("d0060", "d0061"), ("d0060", "d0062"),
                      ("d0061", "d0062")}
+
+
+def _spread_exchange_below_kernel(q) -> bool:
+    """True iff the plan hash-partitions doc_id below the query's
+    document kernel (the lowest MapInPandas)."""
+    lines = _plan_lines(q)
+    at = max(i for i, s in enumerate(lines) if "MapInPandas" in s)
+    return any("hashpartitioning(doc_id" in s for s in lines[at + 1:])
+
+
+def _write_big_docs(path: str) -> str:
+    """A single-row-group documents table of >= 1 MB on disk (random
+    hex words: snappy cannot shrink them below the unit)."""
+    rng = np.random.default_rng(5)
+    texts = [" ".join(rng.bytes(8).hex() for _ in range(120))
+             for _ in range(800)]
+    _write_docs(path, texts)
+    size = os.path.getsize(os.path.join(path, "documents.parquet"))
+    assert size >= MIN_UNIT_BYTES
+    assert pq.ParquetFile(os.path.join(
+        path, "documents.parquet")).metadata.num_row_groups == 1
+    return path
+
+
+@pytest.mark.parametrize("query", ["q_minhash_dedup", "q_simhash"])
+def test_sub_unit_input_is_not_spread(spark, tmp_path_factory, query):
+    """A documents table below one minimum work unit (1 MB) runs its
+    python kernel over the scan as is: no doc_id exchange below it.
+    At >= 1 MB the single-row-group scan (one partition at local[4])
+    is still spread."""
+    small = _write_docs(str(tmp_path_factory.mktemp("small")),
+                        [f"doc {i} text words here" for i in range(200)])
+    assert not _spread_exchange_below_kernel(getattr(m, query)(spark, small))
+    big = _write_big_docs(str(tmp_path_factory.mktemp("big")))
+    assert _spread_exchange_below_kernel(getattr(m, query)(spark, big))
+
+
+def test_spread_never_builds_the_rdd_below_the_unit(spark, tmp_path_factory,
+                                                    monkeypatch):
+    """Below the unit _spread returns its input without the
+    ``df.rdd`` partition probe (an RDD conversion per call); at or
+    above it the probe decides."""
+    small = m._t(spark, _write_docs(str(tmp_path_factory.mktemp("s")),
+                                    ["a b c"] * 10), "documents")
+    big = m._t(spark, _write_big_docs(str(tmp_path_factory.mktemp("b"))),
+               "documents")
+    frame_cls = type(small)    # the concrete class, not the base API
+    real_rdd = frame_cls.rdd      # a cached_property
+    probes = []
+
+    def spy(self):
+        probes.append(self)
+        return real_rdd.func(self)
+
+    monkeypatch.setattr(frame_cls, "rdd", property(spy))
+    assert m._spread(small, "doc_id") is small
+    assert probes == []
+    assert m._spread(big, "doc_id") is not big
+    assert len(probes) == 1
 
 
 def test_simhash_matches_reference_arithmetic(spark, tmp_path_factory):

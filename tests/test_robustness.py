@@ -34,18 +34,23 @@ def test_salt_pepper_on_band(density):
 
 
 def test_byte_weighted_partitions_metadata_path(monkeypatch):
-    """The statistic comes from parquet footers (no data read) and is
-    floored at default parallelism."""
+    """The byte count is the driver's stat of the listed part files —
+    no manifest job, no read of the image column — floored at default
+    parallelism; a plan that lists no files gets the floor."""
     from fin_ocr_sdk_spark.plans import pipeline as P
     from fin_ocr_sdk_spark.session import get_spark
     from fin_ocr_sdk_spark.sources.tables import fixture_dir
     d = fixture_dir("smoke", 16)
     spark = get_spark("pytest-bwp", master="local[4]")
     spark.sparkContext.setLogLevel("ERROR")
+
+    def no_job(*_a, **_k):
+        raise AssertionError("sized through a Spark job")
+
     try:
         media = spark.read.parquet(os.path.join(d, "media.parquet"))
-        # tiny target → count driven by uncompressed bytes (~8 MB for
-        # 16 docs at 1280x400)
+        monkeypatch.setattr(P, "media_manifest", no_job)
+        # tiny target → count driven by the stored bytes
         monkeypatch.setattr(P, "_PARTITION_BYTES", 1 << 20)
         n_small_target = P.byte_weighted_partitions(media)
         assert n_small_target >= 4  # ~5 MB of stored image bytes / 1 MB
@@ -53,6 +58,15 @@ def test_byte_weighted_partitions_metadata_path(monkeypatch):
         monkeypatch.setattr(P, "_PARTITION_BYTES", 1 << 40)
         n_floor = P.byte_weighted_partitions(media)
         assert n_floor == spark.sparkContext.defaultParallelism
+        # no file list (in-memory rows, a stream micro-batch): the floor,
+        # without a select over the image column
+        monkeypatch.setattr(P, "_PARTITION_BYTES", 1)
+        inmem = spark.createDataFrame([("x", "png", b"y" * 64)],
+                                      "media_ref string, format string, "
+                                      "image binary")
+        monkeypatch.setattr(type(inmem), "select", no_job)
+        assert (P.byte_weighted_partitions(inmem)
+                == spark.sparkContext.defaultParallelism)
     finally:
         spark.stop()
 
