@@ -51,19 +51,90 @@ def _fx(table: str) -> str:
     return os.path.join(_fixtures(), f"{table}.parquet")
 
 
+# SQL confs that change the schema Spark's parquet inference returns
+_INFER_CONFS = ("spark.sql.parquet.binaryAsString",
+                "spark.sql.parquet.int96AsTimestamp",
+                "spark.sql.parquet.inferTimestampNTZ.enabled",
+                "spark.sql.legacy.parquet.nanosAsLong",
+                "spark.sql.parquet.mergeSchema",
+                "spark.sql.caseSensitive")
+# absolute path -> (cache key, schema Spark inferred for it)
+_SCHEMAS: dict = {}
+
+
+def _file_stamps(path: str) -> tuple | None:
+    """(relative name, st_mtime_ns, st_size) of every file under a
+    local path, or None when there is none or a stat fails."""
+    try:
+        if os.path.isfile(path):
+            st = os.stat(path)
+            return (("", st.st_mtime_ns, st.st_size),)
+        out = []
+        for d, _, names in os.walk(path):
+            for n in names:
+                st = os.stat(os.path.join(d, n))
+                out.append((os.path.relpath(os.path.join(d, n), path),
+                            st.st_mtime_ns, st.st_size))
+    except OSError:
+        return None
+    return tuple(sorted(out)) or None
+
+
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring each table's schema once
+    per session.  Every query reads its tables through here.
+
+    Without a schema, Spark infers one by reading the parquet footers
+    in a Spark job (``SchemaMergeUtils.mergeSchemasInParallel``), even
+    for a single file: ~0.1 s per read warm on a 4-core host, 10 of
+    the 40 jobs of a timed perfbench ``train_queries`` suite.  The first read of a
+    table lets Spark infer as usual and remembers the result; a later
+    read of the same files passes it to ``spark.read.schema(...)``,
+    which plans the same relation (same ``inputFiles()``, still a bare
+    file scan) and runs no job (0.02 s).  The schema always comes from
+    Spark's own inference, never from the footers read here, so
+    Spark's type mapping is never re-implemented.
+
+    The cache key is the session (``applicationId`` plus the SQL confs
+    that steer inference), the absolute path, and ``(name,
+    st_mtime_ns, st_size)`` of every file under it, so a rewritten
+    table is inferred again.  A path that cannot be stat'ed on the
+    driver (another filesystem, a glob, a missing path) is read with
+    plain ``spark.read.parquet``."""
+    scheme, _, rest = path.partition(":")
+    if rest and "/" not in scheme:  # a URI: only file: is local
+        local = "/" + rest.lstrip("/") if scheme == "file" else None
+    else:  # a bare path names a file on the default filesystem
+        fs = spark.sparkContext._jsc.hadoopConfiguration().get(
+            "fs.defaultFS", "file:///")
+        local = path if fs.startswith("file:") else None
+    local = local and os.path.abspath(local)
+    stamps = local and _file_stamps(local)
+    if not stamps:
+        return spark.read.parquet(path)
+    key = (spark.sparkContext.applicationId,
+           tuple(spark.conf.get(c, None) for c in _INFER_CONFS), stamps)
+    hit = _SCHEMAS.get(local)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[local] = (key, df.schema)
+    return df
+
+
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: interleaved docs + media → OCR-augmented span table."""
     from fin_ocr_sdk_spark.plans.pipeline import extract_spans
     d = _fixtures("smoke", SMOKE_DOCS)
-    docs = spark.read.parquet(os.path.join(d, "documents.parquet"))
-    media = spark.read.parquet(os.path.join(d, "media.parquet"))
+    docs = _read(spark, os.path.join(d, "documents.parquet"))
+    media = _read(spark, os.path.join(d, "media.parquet"))
     return extract_spans(docs, media)
 
 
 # ------------------------------------------------------------ helpers
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return _read(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def _spread(df: DataFrame, key: str) -> DataFrame:
@@ -100,7 +171,7 @@ def _spread(df: DataFrame, key: str) -> DataFrame:
 
 
 def _fxdf(spark: SparkSession, table: str) -> DataFrame:
-    return spark.read.parquet(_fx(table))
+    return _read(spark, _fx(table))
 
 
 # template order for deterministic tie-breaks (single-contour eles
@@ -616,8 +687,10 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                                    StructType)
 
     e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qrows = (e.filter(F.col("vec_id") < 8)
-             .orderBy("vec_id").collect())
+    # ordered on the driver: a global orderBy would add a sampling
+    # job and a sort job for 8 rows
+    qrows = sorted(e.filter(F.col("vec_id") < 8).collect(),
+                   key=lambda r: r.vec_id)
     q_ids = np.array([r.vec_id for r in qrows], dtype=np.int64)
     q_mat = np.array([r.embedding for r in qrows], dtype=np.float64)
     q_norm = np.linalg.norm(q_mat, axis=1)
@@ -784,7 +857,7 @@ def q_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the document frequency per exact TEXT, so a rare span
     colliding with a boilerplate span cannot be dropped).  The final
     anti-join broadcasts the boiler text set; no UDF — pure Catalyst."""
-    docs = spark.read.parquet(_qfx.webdocs_path())
+    docs = _read(spark, _qfx.webdocs_path())
     s = (docs.select("doc_id", F.posexplode("spans").alias("pos", "s"))
          .select("doc_id", "s.kind", "s.text", "s.media_ref", "s.offset"))
     thresh = int(_BOILER_DF_FRAC * _qfx.BOILER_N_DOCS)
@@ -992,7 +1065,7 @@ def q_x9_to_micr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (LongType, StringType, StructField,
                                    StructType)
 
-    x9 = spark.read.parquet(_qfx.x9_path())
+    x9 = _read(spark, _qfx.x9_path())
     micr_raw = F.concat(
         F.when(F.col("auxiliary_on_us") != "",
                F.concat(F.lit("U"), F.col("auxiliary_on_us"), F.lit("U"))
@@ -1136,7 +1209,7 @@ def q_pdf_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
                     rows["text"].append(text)
             yield pd.DataFrame(rows)
 
-    docs = (spark.read.parquet(_qfx.pdf_docs_path())
+    docs = (_read(spark, _qfx.pdf_docs_path())
             .select("pdf_id", "pdf"))
     return docs.mapInPandas(extract, schema)
 
@@ -1165,7 +1238,7 @@ def q_html_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
                               for h in pdf["html"]],
             })
 
-    docs = (spark.read.parquet(_qfx.html_docs_path())
+    docs = (_read(spark, _qfx.html_docs_path())
             .select("page_id", "html"))
     return docs.mapInPandas(extract, schema)
 

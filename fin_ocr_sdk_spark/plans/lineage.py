@@ -124,7 +124,8 @@ def committed_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
     path = os.path.join(out_dir, "lineage")
     if not os.path.isdir(path) or not os.listdir(path):
         return None
-    return spark.read.parquet(path)
+    # the schema is known: a bare read would infer it in a Spark job
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(path)
 
 
 def run_resumable_extract(spark: SparkSession, documents: DataFrame,

@@ -123,6 +123,32 @@ def test_checksum_is_deterministic(spark, smoke_dir, tmp_path_factory):
     assert (la["partition_id"] == lb["partition_id"]).all()
 
 
+def test_resume_runs_no_lineage_inference_job(spark, smoke_dir, tmp_path):
+    """The lineage table is read with ``LINEAGE_SCHEMA``: a resume over
+    committed work and the committed-span read start no
+    schema-inference job (a stage named ``parquet at ...``)."""
+    docs = spark.read.parquet(os.path.join(smoke_dir, "documents.parquet"))
+    media = spark.read.parquet(os.path.join(smoke_dir, "media.parquet"))
+    out_dir = str(tmp_path / "out")
+    first = run_resumable_extract(spark, docs, media, out_dir)
+    sc = spark.sparkContext
+    sc.setJobGroup("resume-noop", "resume-noop")
+    try:
+        again = run_resumable_extract(spark, docs, media, out_dir)
+        n_spans = emitted_spans(spark, out_dir).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    stages = [st.getStageInfo(s) for j in st.getJobIdsForGroup("resume-noop")
+              for s in st.getJobInfo(j).stageIds]
+    names = [s.name for s in stages if s is not None]
+    assert (again.scanned_files, again.skipped_files) == (
+        0, first.scanned_files)
+    assert n_spans == again.span_count == first.span_count
+    assert names and not any(n.startswith("parquet at") for n in names)
+
+
 def _subtree(lines: list[str], at: int) -> list[str]:
     """The plan node printed at ``lines[at]`` and every node below it
     (an executed adaptive plan prints its final and initial plans, so
