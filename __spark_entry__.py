@@ -194,40 +194,34 @@ def _tpl_order_col():
 
 def q_micr_extract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fin_ocr_sdk_spark.plans.pipeline import extract_spans
-    docs = _fxdf(spark, "documents")
-    media = _fxdf(spark, "media")
-    out = extract_spans(docs, media)
-    return out.select("doc_id", "kind", "text", "media_ref",
-                      F.col("order").cast("int").alias("order"))
+    return extract_spans(_fxdf(spark, "documents"), _fxdf(spark, "media"))
 
 
-def q_micr_parse_cases(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MICR grammar over the golden case table via a vectorized pandas
-    UDF (the state machine is not SQL-expressible; oracle reads the
-    golden columns)."""
-    import pandas as pd
+def _parse_micr(df: DataFrame, line_col: str) -> DataFrame:
+    """``df`` plus the routing/account/check numbers the MicrParser
+    grammar (src/checkUtil.ts:49-133, ``functions.micr.parse_micr``)
+    reads from ``line_col``, in one Arrow pass (the state machine is
+    not SQL-expressible)."""
     from pyspark.sql.types import StringType, StructField, StructType
-
-    schema = StructType([
-        StructField("case_id", StringType()),
-        StructField("routing_number", StringType()),
-        StructField("account_number", StringType()),
-        StructField("check_number", StringType()),
-    ])
+    fields = ("routing_number", "account_number", "check_number")
+    schema = StructType(df.schema.fields
+                        + [StructField(f, StringType()) for f in fields])
 
     def parse_batches(it):
         from fin_ocr_sdk_spark.functions.micr import parse_micr
         for pdf in it:
-            infos = [parse_micr(line) for line in pdf["micr_line"]]
-            yield pd.DataFrame({
-                "case_id": pdf["case_id"],
-                "routing_number": [i.routing_number for i in infos],
-                "account_number": [i.account_number for i in infos],
-                "check_number": [i.check_number for i in infos],
-            })
+            infos = [parse_micr(line) for line in pdf[line_col]]
+            yield pdf.assign(**{f: [getattr(i, f) for i in infos]
+                                for f in fields})
 
-    cases = _fxdf(spark, "micr_cases")
-    return cases.mapInPandas(parse_batches, schema)
+    return df.mapInPandas(parse_batches, schema)
+
+
+def q_micr_parse_cases(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MICR grammar over the golden case table (the oracle reads the
+    golden columns)."""
+    cases = _fxdf(spark, "micr_cases").select("case_id", "micr_line")
+    return _parse_micr(cases, "micr_line").drop("micr_line")
 
 
 def q_contour_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -674,25 +668,43 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", h.alias("fingerprint"))
 
 
+_ANN_QUERIES = 8   # query vectors of the ANN queries: vec_id < 8
+
+
+def _first_vectors(e: DataFrame, k: int):
+    """(ids, float64 matrix) of the vectors with vec_id < k, ordered by
+    vec_id on the driver: a global orderBy would add a sampling job and
+    a sort job for k rows."""
+    import numpy as np
+    rows = sorted(e.filter(F.col("vec_id") < k).collect(),
+                  key=lambda r: r.vec_id)
+    return (np.array([r.vec_id for r in rows], dtype=np.int64),
+            np.array([r.embedding for r in rows], dtype=np.float64))
+
+
+def _top5(scored: DataFrame, score: str) -> DataFrame:
+    """The 5 rows per query_id first by (score desc, vec_id asc), with
+    their rank ``rk`` (the SQL twin is _top5_sql)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score),
+                                               F.asc("vec_id"))
+    return (scored.withColumn("rk", F.row_number().over(w))
+            .filter(F.col("rk") <= 5))
+
+
 def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k: the exact baseline of similarity
-    search.  Query set = vec_id < 8, collected to the driver (tiny) and
-    closed over as a NumPy matrix; similarities computed as one matmul
-    per Arrow batch inside mapInPandas (Catalyst's higher-order lambdas
-    are interpreted per element — 20x+ slower); top-5 per query via a
-    window over the (n_queries x n_vectors) score rows."""
+    search.  Query set = vec_id < _ANN_QUERIES, collected to the driver
+    (tiny) and closed over as a NumPy matrix; similarities computed as
+    one matmul per Arrow batch inside mapInPandas (Catalyst's
+    higher-order lambdas are interpreted per element — 20x+ slower);
+    top-5 per query via a window over the batch winners."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import (DoubleType, LongType, StructField,
                                    StructType)
 
     e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # ordered on the driver: a global orderBy would add a sampling
-    # job and a sort job for 8 rows
-    qrows = sorted(e.filter(F.col("vec_id") < 8).collect(),
-                   key=lambda r: r.vec_id)
-    q_ids = np.array([r.vec_id for r in qrows], dtype=np.int64)
-    q_mat = np.array([r.embedding for r in qrows], dtype=np.float64)
+    q_ids, q_mat = _first_vectors(e, _ANN_QUERIES)
     q_norm = np.linalg.norm(q_mat, axis=1)
 
     schema = StructType([
@@ -707,48 +719,76 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ids = pdf["vec_id"].to_numpy()
             norms = np.linalg.norm(vecs, axis=1)
             sims = (vecs @ q_mat.T) / np.outer(norms, q_norm)  # (N, Q)
-            n, qn = sims.shape
             # Partial top-k per batch (guide §2.3: aggregate before you
             # shuffle): the global top-5 per query is a subset of each
             # batch's top-5 per query under the SAME total order
             # (sim desc, vec_id asc), so emitting only batch winners
             # cuts the exchange feeding the final window by ~N/k while
-            # the window's result is unchanged.  Self-matches are
-            # excluded HERE, before the cut — a self row occupying a
-            # batch slot could otherwise push a global-top-5 row out.
-            out = {"query_id": [], "vec_id": [], "sim": []}
-            for j in range(qn):
-                valid = np.flatnonzero(ids != q_ids[j])
-                order = valid[np.lexsort((ids[valid], -sims[valid, j]))]
-                top = order[:5]
-                out["query_id"].append(np.full(len(top), q_ids[j]))
-                out["vec_id"].append(ids[top])
-                out["sim"].append(sims[top, j])
-            yield pd.DataFrame({k: np.concatenate(v) if v else
-                                np.array([], dtype=np.int64)
-                                for k, v in out.items()})
+            # the window's result is unchanged.  Self-matches (``own``)
+            # sort last and are dropped HERE, before the cut — a self
+            # row occupying a batch slot could otherwise push a
+            # global-top-5 row out.
+            own = ids[:, None] == q_ids
+            top = np.lexsort((np.broadcast_to(ids[:, None], sims.shape),
+                              -sims, own), axis=0)[:5].T       # (Q, <=5)
+            col = np.arange(len(q_ids))[:, None]
+            keep = ~own[top, col]
+            yield pd.DataFrame({
+                "query_id": np.broadcast_to(q_ids[:, None], top.shape)[keep],
+                "vec_id": ids[top][keep],
+                "sim": sims[top, col][keep]})
 
-    scored = (_spread(e, "vec_id").mapInPandas(score, schema)
-              .filter(F.col("vec_id") != F.col("query_id")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"),
-                                               F.asc("vec_id"))
-    return (scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= 5)
+    scored = _spread(e, "vec_id").mapInPandas(score, schema)
+    return (_top5(scored, "sim")
             .select("query_id", F.col("vec_id").alias("neighbor_id"),
                     F.round("sim", 4).alias("cosine")))
 
 
-def _lsh_bands_df(e: DataFrame, n_planes: int = 8) -> DataFrame:
+def _quant_int64(mat):
+    """Integer millionths, floor(x*1e6+0.5): the one quantizer of the
+    embedding queries (the SQL twin is the ``qv`` CTE).  Dot products
+    of quantized 64-dim vectors are exact in int64 and below 2^53."""
+    import numpy as np
+    return np.floor(np.asarray(mat, dtype=np.float64)
+                    * 1_000_000 + 0.5).astype(np.int64)
+
+
+def _cos_e4_of(num, a, b):
+    """floor(cos*10000+0.5) of quantized vectors ``a`` and ``b`` (rows,
+    or shapes that broadcast to ``num``) from their integer dot products
+    ``num``: the op order of _cos_e4_sql (num / (|a|*|b|) * 10000 + 0.5)
+    on exact integer sums, so the e4 integers are bit-identical."""
+    import numpy as np
+    na, nb = (np.sqrt((x * x).sum(axis=-1).astype(np.float64))
+              for x in (a, b))
+    return np.floor(num.astype(np.float64) / (na * nb) * 10000
+                    + 0.5).astype(np.int64)
+
+
+def _cos_e4_rows(u: pd.Series, v: pd.Series) -> pd.Series:
+    """Row-wise _cos_e4_of of two embedding columns."""
+    a, c = _quant_int64(list(u)), _quant_int64(list(v))
+    return pd.Series(_cos_e4_of((a * c).sum(axis=1), a, c))
+
+
+# Deterministic in fact, but marked otherwise so Catalyst evaluates it
+# once per row: the optimizer inlines a deterministic aliased column
+# into every filter and projection above it, and each inlined copy
+# becomes its own ArrowEvalPython, so embedding_near_dup's ">= threshold"
+# filter and its projection would each run the UDF over every pair.
+_cos_e4 = F.pandas_udf(_cos_e4_rows, LongType()).asNondeterministic()
+
+
+def _lsh_bands_df(e: DataFrame, n_planes: int) -> DataFrame:
     """(vec_id, band, bucket) banded random-hyperplane LSH.  The
     pseudo-hyperplane is ±1 per (dim, plane) from a deterministic
-    integer mix; components are quantized to integer millionths with
-    the repo's floor(x*1e6+0.5) rule so the signed projection is EXACT
-    integer arithmetic — bit-identical in the DuckDB twin regardless of
-    floating summation order.  One int64 matmul per Arrow batch
-    (replaces the round-1 interpreted per-element lambda chain).
-    Planes are grouped 8-per-band: two vectors are candidates when ANY
-    band bucket matches, so more planes tighten each bucket (smaller
-    n_b² blow-up) while banding preserves recall."""
+    integer mix; components are quantized (_quant_int64) so the signed
+    projection is EXACT integer arithmetic — bit-identical in the
+    DuckDB twin (_lsh_band_ctes) regardless of floating summation
+    order.  One int64 matmul per Arrow batch.  Planes are grouped
+    8-per-band: two vectors are candidates when ANY band bucket
+    matches, so more planes tighten each bucket (smaller n_b² blow-up)
+    while banding preserves recall; 8 planes are one band."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
@@ -765,79 +805,32 @@ def _lsh_bands_df(e: DataFrame, n_planes: int = 8) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            v = np.array(list(pdf["embedding"]), dtype=np.float64)
-            w = np.floor(v * 1_000_000 + 0.5).astype(np.int64)
-            d = w.shape[1]
-            i = np.arange(d)[:, None]
+            w = _quant_int64(list(pdf["embedding"]))
+            i = np.arange(w.shape[1])[:, None]
             b = np.arange(n_planes)[None, :]
             s = np.where(((i * 2654435761 + b * 40503) % 97) < 48, 1, -1
                          ).astype(np.int64)
-            proj = w @ s                             # (N, planes) exact
-            bits = (proj > 0).astype(np.int64)
+            bits = (w @ s > 0).astype(np.int64)      # (N, planes) exact
             n = len(pdf)
-            ids = pdf["vec_id"].to_numpy()
-            out = {"vec_id": np.repeat(ids, n_bands),
-                   "band": np.tile(np.arange(n_bands, dtype=np.int64), n),
-                   "bucket": (bits.reshape(n, n_bands, 8)
-                              * pows).sum(axis=2).reshape(-1)}
-            yield pd.DataFrame(out)
+            yield pd.DataFrame({
+                "vec_id": np.repeat(pdf["vec_id"].to_numpy(), n_bands),
+                "band": np.tile(np.arange(n_bands, dtype=np.int64), n),
+                "bucket": (bits.reshape(n, n_bands, 8)
+                           * pows).sum(axis=2).reshape(-1)})
 
     return (_spread(e.select("vec_id", "embedding"), "vec_id")
             .mapInPandas(compute, schema))
 
 
-def _lsh_buckets_df(e: DataFrame) -> DataFrame:
-    """(vec_id, bucket) single-band 8-plane LSH (the ANN query's view;
-    band 0 of _lsh_bands_df, same plane formula)."""
-    return (_lsh_bands_df(e, 8)
-            .filter(F.col("band") == 0).select("vec_id", "bucket"))
-
-
 def q_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale path for ANN: the LSH bucket id per vector (see
-    _lsh_buckets_df)."""
-    return _lsh_buckets_df(_t(spark, sf_dir, "embeddings"))
+    """Scale path for ANN: the single-band 8-plane LSH bucket id per
+    vector (see _lsh_bands_df)."""
+    return (_lsh_bands_df(_t(spark, sf_dir, "embeddings"), 8)
+            .select("vec_id", "bucket"))
 
 
 _IVF_K = 8        # coarse centroids (seed vectors vec_id < _IVF_K)
 _IVF_NPROBE = 2   # cells searched per query
-
-
-def _quant_int64(mat):
-    import numpy as np
-    return np.floor(np.asarray(mat, dtype=np.float64)
-                    * 1_000_000 + 0.5).astype(np.int64)
-
-
-def _cos_e4_to_seeds(w, ws):
-    """floor(cos*10000+0.5) of quantized int64 vectors — same op order
-    as the DuckDB twin (num / (da*db) * 10000 + 0.5), every term exact
-    (integer sums < 2^53), so the e4 integers are bit-identical."""
-    import numpy as np
-    num = (w @ ws.T).astype(np.float64)
-    den = np.outer(np.sqrt((w * w).sum(axis=1).astype(np.float64)),
-                   np.sqrt((ws * ws).sum(axis=1).astype(np.float64)))
-    return np.floor(num / den * 10000 + 0.5).astype(np.int64)
-
-
-def _cos_e4_rows(u: pd.Series, v: pd.Series) -> pd.Series:
-    """Row-wise floor(cos*10000+0.5) of two embedding columns, quantized
-    and computed like _cos_e4_to_seeds (same op order as the DuckDB
-    twins)."""
-    import numpy as np
-    a, c = _quant_int64(list(u)), _quant_int64(list(v))
-    num = (a * c).sum(axis=1).astype(np.float64)     # exact < 2^53
-    den = (np.sqrt((a * a).sum(axis=1).astype(np.float64))
-           * np.sqrt((c * c).sum(axis=1).astype(np.float64)))
-    return pd.Series(np.floor(num / den * 10000 + 0.5).astype(np.int64))
-
-
-# Deterministic in fact, but marked otherwise so Catalyst evaluates it
-# once per row: the optimizer inlines a deterministic aliased column
-# into every filter and projection above it, and each inlined copy
-# becomes its own ArrowEvalPython, so embedding_near_dup's ">= threshold"
-# filter and its projection would each run the UDF over every pair.
-_cos_e4 = F.pandas_udf(_cos_e4_rows, LongType()).asNondeterministic()
 
 
 _BOILER_DF_FRAC = 0.5   # span text in ≥50% of docs = template/boilerplate
@@ -896,10 +889,8 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import LongType, StructField, StructType
 
     e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    seeds = (e.filter(F.col("vec_id") < _IVF_K).orderBy("vec_id")
-             .collect())
-    seed_ids = np.array([r.vec_id for r in seeds], dtype=np.int64)
-    ws = _quant_int64([r.embedding for r in seeds])
+    seed_ids, seed_vecs = _first_vectors(e, _IVF_K)
+    ws = _quant_int64(seed_vecs)
 
     assign_schema = StructType([
         StructField("vec_id", LongType()),
@@ -911,7 +902,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             if not len(pdf):
                 continue
             w = _quant_int64(list(pdf["embedding"]))
-            e4 = _cos_e4_to_seeds(w, ws)
+            e4 = _cos_e4_of(w @ ws.T, w[:, None], ws)
             # argmax picks the FIRST max → lowest centroid id on ties,
             # mirroring the twin's ORDER BY cos DESC, centroid_id ASC
             yield pd.DataFrame({
@@ -921,16 +912,14 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     assignments = _spread(e, "vec_id").mapInPandas(assign, assign_schema)
 
-    # probe table: 8x8 integer cosines on the driver (seeds only)
-    e4s = _cos_e4_to_seeds(ws, ws)
-    probe_rows = []
-    for qi, q in enumerate(seed_ids):
-        order = sorted(range(len(seed_ids)),
-                       key=lambda j: (-e4s[qi, j], seed_ids[j]))
-        probe_rows += [(int(q), int(seed_ids[j]))
-                       for j in order[:_IVF_NPROBE]]
-    probes = spark.createDataFrame(probe_rows,
-                                   "query_id long, centroid_id long")
+    # probe table: each seed's _IVF_NPROBE nearest seeds by (e4 desc,
+    # centroid id asc), computed on the driver (seeds only)
+    e4s = _cos_e4_of(ws @ ws.T, ws[:, None], ws)
+    near = np.lexsort((np.broadcast_to(seed_ids, e4s.shape), -e4s),
+                      axis=1)[:, :_IVF_NPROBE]
+    probes = spark.createDataFrame(
+        [(int(q), int(seed_ids[j])) for q, js in zip(seed_ids, near)
+         for j in js], "query_id long, centroid_id long")
 
     cand = (probes.join(assignments, "centroid_id")
             .filter(F.col("vec_id") != F.col("query_id"))
@@ -939,12 +928,8 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                   F.col("embedding").alias("emb_q"))
     ev = e.select("vec_id", F.col("embedding").alias("emb_v"))
     pairs = cand.join(F.broadcast(eq), "query_id").join(ev, "vec_id")
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_e4"),
-                                               F.asc("vec_id"))
-    return (pairs.withColumn("cosine_e4", _cos_e4("emb_q", "emb_v"))
-            .withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= 5)
+    return (_top5(pairs.withColumn("cosine_e4", _cos_e4("emb_q", "emb_v")),
+                  "cosine_e4")
             .select("query_id", F.col("vec_id").alias("neighbor_id"),
                     F.col("rk").cast("long").alias("rk"), "cosine_e4"))
 
@@ -1061,10 +1046,6 @@ def q_x9_to_micr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the X9 columns (split onUs at '/', zero-strip the check
     number), so the whole compose→tokenize→assign chain is checked
     against an independent derivation, not against itself."""
-    import pandas as pd
-    from pyspark.sql.types import (LongType, StringType, StructField,
-                                   StructType)
-
     x9 = _read(spark, _qfx.x9_path())
     micr_raw = F.concat(
         F.when(F.col("auxiliary_on_us") != "",
@@ -1078,28 +1059,7 @@ def q_x9_to_micr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.regexp_replace(F.col("on_us"), "^([^/]*)/", "$1U"))
     composed = x9.select(
         "item_id", F.regexp_replace(micr_raw, "\\s", "").alias("micr"))
-
-    schema = StructType([
-        StructField("item_id", LongType()),
-        StructField("micr", StringType()),
-        StructField("routing_number", StringType()),
-        StructField("account_number", StringType()),
-        StructField("check_number", StringType()),
-    ])
-
-    def parse_batches(it):
-        from fin_ocr_sdk_spark.functions.micr import parse_micr
-        for pdf in it:
-            infos = [parse_micr(s) for s in pdf["micr"]]
-            yield pd.DataFrame({
-                "item_id": pdf["item_id"],
-                "micr": pdf["micr"],
-                "routing_number": [i.routing_number for i in infos],
-                "account_number": [i.account_number for i in infos],
-                "check_number": [i.check_number for i in infos],
-            })
-
-    return composed.mapInPandas(parse_batches, schema)
+    return _parse_micr(composed, "micr")
 
 
 #: recall@5 floor (integer ten-thousandths) the IVF scale path must
@@ -1128,9 +1088,8 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivf = (q_ann_ivf_topk(spark, sf_dir)
            .select(F.lit("ivf").alias("method"), "query_id",
                    "neighbor_id"))
-    e = _t(spark, sf_dir, "embeddings")
-    bk = _lsh_buckets_df(e)
-    qb = (bk.filter(F.col("vec_id") < 8)
+    bk = q_ann_lsh_buckets(spark, sf_dir)
+    qb = (bk.filter(F.col("vec_id") < _ANN_QUERIES)
           .select(F.col("vec_id").alias("query_id"), "bucket"))
     lsh = (qb.join(bk, "bucket")
            .filter(F.col("vec_id") != F.col("query_id"))
@@ -1507,63 +1466,103 @@ def _minhash_oracle() -> str:
     """
 
 
-def _lsh_bucket_ctes() -> str:
-    """Shared bucket CTEs (x, p, bk) — exact integer arithmetic
-    mirroring _lsh_buckets_df."""
+# ---- embedding twins: one SQL definition per computation of the
+# ---- Python kernels above, composed by the five embedding oracles
+
+_QV_CTE = """qv AS (
+          SELECT vec_id,
+                 [CAST(floor(v::DOUBLE * 1000000 + 0.5) AS BIGINT)
+                  FOR v IN embedding] AS w
+          FROM embeddings)"""
+
+
+def _cos_e4_sql(a: str, b: str) -> str:
+    """Twin of _cos_e4_of over two quantized ``qv`` lists: the dot
+    products are exact integers below 2^53, so list_dot_product's
+    summation order cannot change them."""
+    dot = "list_dot_product({}::DOUBLE[], {}::DOUBLE[])".format
+    return (f"CAST(floor({dot(a, b)} / (sqrt({dot(a, a)})"
+            f" * sqrt({dot(b, b)})) * 10000 + 0.5) AS BIGINT)")
+
+
+def _top5_sql(src: str, score: str) -> str:
+    """Twin of _top5: the rows of ``src`` ranked 1..5 per query_id by
+    (score desc, neighbor_id asc), with their rank ``rk``."""
+    return f"""SELECT * FROM (
+            SELECT *, row_number() OVER (PARTITION BY query_id
+                ORDER BY {score} DESC, neighbor_id ASC) AS rk
+            FROM {src}) t
+          WHERE rk <= 5"""
+
+
+def _lsh_band_ctes(n_planes: int) -> str:
+    """CTEs x, p and bands (vec_id, band, bucket): _lsh_bands_df's
+    plane signs and bands over the quantized ``qv`` lists, in exact
+    integer arithmetic."""
     projs = ",\n                 ".join(
-        "sum(CAST(floor(v::DOUBLE * 1000000 + 0.5) AS BIGINT) * "
-        f"(CASE WHEN ((i - 1) * 2654435761 + {b * 40503}) % 97 < 48"
-        f" THEN 1 ELSE -1 END)) AS p{b}"
-        for b in range(8))
-    bucket = " + ".join(
-        f"(CASE WHEN p{b} > 0 THEN {1 << b} ELSE 0 END)"
-        for b in range(8))
-    return f"""
-        x AS (
-          SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-                 unnest(embedding) AS v
-          FROM embeddings),
-        p AS (SELECT vec_id,
-                 {projs}
-              FROM x GROUP BY vec_id),
-        bk AS (SELECT vec_id, CAST({bucket} AS BIGINT) AS bucket FROM p)
-    """
-
-
-def _ann_lsh_oracle() -> str:
-    return f"""
-        WITH {_lsh_bucket_ctes()}
-        SELECT vec_id, bucket FROM bk
-    """
-
-
-def _near_dup_oracle() -> str:
-    """Twin of q_embedding_near_dup: 16-plane 2-band LSH with the
-    _EMB_BUCKET_CAP guard, then the exact integer-quantized cosine —
-    int64 dot products are < 2^53 so list_dot_product over the
-    quantized DOUBLE lists is exact regardless of summation order,
-    and floor(c*10000+0.5) matches the Spark UDF bit-for-bit."""
-    projs = ",\n                 ".join(
-        "sum(CAST(floor(v::DOUBLE * 1000000 + 0.5) AS BIGINT) * "
-        f"(CASE WHEN ((i - 1) * 2654435761 + {b * 40503}) % 97 < 48"
-        f" THEN 1 ELSE -1 END)) AS p{b}"
-        for b in range(_NEAR_DUP_PLANES))
-    band_rows = "\n          UNION ALL\n".join(
-        f"          SELECT vec_id, CAST({k} AS BIGINT) AS band, CAST("
+        f"sum(v * (CASE WHEN ((i - 1) * 2654435761 + {b * 40503}) % 97"
+        f" < 48 THEN 1 ELSE -1 END)) AS p{b}" for b in range(n_planes))
+    bands = "\n          UNION ALL ".join(
+        f"SELECT vec_id, CAST({k} AS BIGINT) AS band, CAST("
         + " + ".join(f"(CASE WHEN p{k * 8 + j} > 0 THEN {1 << j} ELSE 0"
-                     f" END)" for j in range(8))
+                     " END)" for j in range(8))
         + " AS BIGINT) AS bucket FROM p"
-        for k in range(_NEAR_DUP_PLANES // 8))
-    return f"""
-        WITH x AS (
-          SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-                 unnest(embedding) AS v
-          FROM embeddings),
+        for k in range(n_planes // 8))
+    return f"""x AS (
+          SELECT vec_id, generate_subscripts(w, 1) AS i, unnest(w) AS v
+          FROM qv),
         p AS (SELECT vec_id,
                  {projs}
               FROM x GROUP BY vec_id),
         bands AS (
-{band_rows}),
+          {bands})"""
+
+
+def _nearest_seeds_sql(id_col: str, src: str, n: int) -> str:
+    """The ``n`` seeds nearest each ``id_col`` row of ``src`` (which has
+    a quantized ``w``) by (e4 cosine desc, centroid_id asc)."""
+    return f"""SELECT {id_col}, centroid_id FROM (
+            SELECT a.{id_col}, s.centroid_id,
+                   row_number() OVER (PARTITION BY a.{id_col}
+                       ORDER BY {_cos_e4_sql("a.w", "s.w")} DESC,
+                                s.centroid_id ASC) AS rk
+            FROM {src} a CROSS JOIN seeds s) t
+          WHERE rk <= {n}"""
+
+
+# q_ann_cosine_topk: exact cosine of the raw vectors, top 5 per query
+_BF_CTES = f"""bfs AS (
+          SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
+                 list_cosine_similarity(
+                     e.embedding::DOUBLE[], q.embedding::DOUBLE[]) AS sim
+          FROM embeddings e, embeddings q
+          WHERE q.vec_id < {_ANN_QUERIES} AND e.vec_id <> q.vec_id),
+        bf AS ({_top5_sql("bfs", "sim")})"""
+
+# q_ann_ivf_topk over qv: seed centroids vec_id < _IVF_K, nearest-cell
+# assignment, _IVF_NPROBE probes per query, top 5 in the probed cells
+_IVF_CTES = f"""seeds AS (SELECT vec_id AS centroid_id, w FROM qv
+                  WHERE vec_id < {_IVF_K}),
+        assign AS ({_nearest_seeds_sql("vec_id", "qv", 1)}),
+        probes AS ({_nearest_seeds_sql(
+            "query_id", "(SELECT centroid_id AS query_id, w FROM seeds)",
+            _IVF_NPROBE)}),
+        ivfs AS (
+          SELECT p.query_id, a.vec_id AS neighbor_id,
+                 {_cos_e4_sql("wq.w", "wv.w")} AS cosine_e4
+          FROM probes p JOIN assign a USING (centroid_id)
+          JOIN qv wq ON p.query_id = wq.vec_id
+          JOIN qv wv ON a.vec_id = wv.vec_id
+          WHERE a.vec_id <> p.query_id),
+        ivf AS ({_top5_sql("ivfs", "cosine_e4")})"""
+
+
+def _near_dup_oracle() -> str:
+    """Twin of q_embedding_near_dup: 16-plane 2-band LSH with the
+    _EMB_BUCKET_CAP guard, then the exact e4 cosine."""
+    return f"""
+        WITH {_QV_CTE},
+        {_lsh_band_ctes(_NEAR_DUP_PLANES)},
         small AS (SELECT band, bucket FROM bands
                   GROUP BY band, bucket
                   HAVING count(*) <= {_EMB_BUCKET_CAP}),
@@ -1574,76 +1573,13 @@ def _near_dup_oracle() -> str:
           FROM capped a JOIN capped b
             ON a.band = b.band AND a.bucket = b.bucket
                AND a.vec_id < b.vec_id),
-        qv AS (
-          SELECT vec_id,
-                 [CAST(floor(v::DOUBLE * 1000000 + 0.5) AS BIGINT)
-                  FOR v IN embedding] AS w
-          FROM embeddings),
         scored AS (
-          SELECT vec_a, vec_b,
-                 CAST(floor(
-                   list_dot_product(wa.w::DOUBLE[], wb.w::DOUBLE[])
-                   / (sqrt(list_dot_product(wa.w::DOUBLE[],
-                                            wa.w::DOUBLE[]))
-                      * sqrt(list_dot_product(wb.w::DOUBLE[],
-                                              wb.w::DOUBLE[])))
-                   * 10000 + 0.5) AS BIGINT) AS cosine_e4
+          SELECT vec_a, vec_b, {_cos_e4_sql("wa.w", "wb.w")} AS cosine_e4
           FROM cand
           JOIN qv wa ON vec_a = wa.vec_id
           JOIN qv wb ON vec_b = wb.vec_id)
         SELECT vec_a, vec_b, cosine_e4 FROM scored
         WHERE cosine_e4 >= {_NEAR_DUP_COSINE_E4}
-    """
-
-
-def _ann_ivf_oracle() -> str:
-    """Twin of q_ann_ivf_topk: identical quantized integer cosine
-    (exact — see _near_dup_oracle), seed centroids vec_id < _IVF_K,
-    nearest-cell assignment and _IVF_NPROBE probes with the same
-    (cos DESC, centroid_id ASC) tie-break, top-5 per query."""
-    cos = ("CAST(floor(list_dot_product({a}::DOUBLE[], {b}::DOUBLE[])"
-           " / (sqrt(list_dot_product({a}::DOUBLE[], {a}::DOUBLE[]))"
-           " * sqrt(list_dot_product({b}::DOUBLE[], {b}::DOUBLE[])))"
-           " * 10000 + 0.5) AS BIGINT)")
-    return f"""
-        WITH qv AS (
-          SELECT vec_id,
-                 [CAST(floor(v::DOUBLE * 1000000 + 0.5) AS BIGINT)
-                  FOR v IN embedding] AS w
-          FROM embeddings),
-        seeds AS (SELECT vec_id AS centroid_id, w FROM qv
-                  WHERE vec_id < {_IVF_K}),
-        assign AS (
-          SELECT vec_id, centroid_id FROM (
-            SELECT v.vec_id, s.centroid_id,
-                   row_number() OVER (PARTITION BY v.vec_id
-                       ORDER BY {cos.format(a="v.w", b="s.w")} DESC,
-                                s.centroid_id ASC) AS rk
-            FROM qv v CROSS JOIN seeds s) t
-          WHERE rk = 1),
-        probes AS (
-          SELECT query_id, centroid_id FROM (
-            SELECT q.centroid_id AS query_id, s.centroid_id,
-                   row_number() OVER (PARTITION BY q.centroid_id
-                       ORDER BY {cos.format(a="q.w", b="s.w")} DESC,
-                                s.centroid_id ASC) AS rk
-            FROM seeds q CROSS JOIN seeds s) t
-          WHERE rk <= {_IVF_NPROBE}),
-        cand AS (
-          SELECT p.query_id, a.vec_id
-          FROM probes p JOIN assign a USING (centroid_id)
-          WHERE a.vec_id <> p.query_id),
-        scored AS (
-          SELECT c.query_id, c.vec_id AS neighbor_id,
-                 {cos.format(a="wq.w", b="wv.w")} AS cosine_e4
-          FROM cand c
-          JOIN qv wq ON c.query_id = wq.vec_id
-          JOIN qv wv ON c.vec_id = wv.vec_id)
-        SELECT query_id, neighbor_id, rk, cosine_e4 FROM (
-          SELECT *, row_number() OVER (PARTITION BY query_id
-                    ORDER BY cosine_e4 DESC, neighbor_id ASC) AS rk
-          FROM scored) t
-        WHERE rk <= 5
     """
 
 
@@ -1681,87 +1617,29 @@ def _x9_oracle() -> str:
 
 
 def _ann_recall_oracle() -> str:
-    """Twin of q_ann_recall: brute-force top-5, IVF top-5 (identical
-    CTE chain to _ann_ivf_oracle) and single-band LSH candidates
-    (identical to _ann_lsh_oracle) composed into per-query recall@5
+    """Twin of q_ann_recall: the brute-force top-5, the IVF top-5 and
+    the single-band LSH candidates composed into per-query recall@5
     counts, all in one flat WITH."""
-    cos = ("CAST(floor(list_dot_product({a}::DOUBLE[], {b}::DOUBLE[])"
-           " / (sqrt(list_dot_product({a}::DOUBLE[], {a}::DOUBLE[]))"
-           " * sqrt(list_dot_product({b}::DOUBLE[], {b}::DOUBLE[])))"
-           " * 10000 + 0.5) AS BIGINT)")
     return f"""
-        WITH bfq AS (
-          SELECT vec_id AS query_id, embedding AS qv
-          FROM embeddings WHERE vec_id < 8),
-        bfs AS (
-          SELECT q.query_id, e.vec_id AS neighbor_id,
-                 list_cosine_similarity(
-                     e.embedding::DOUBLE[], q.qv::DOUBLE[]) AS sim
-          FROM embeddings e, bfq q WHERE e.vec_id <> q.query_id),
-        bf AS (
-          SELECT query_id, neighbor_id FROM (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY sim DESC, neighbor_id ASC) rk
-            FROM bfs) t
-          WHERE rk <= 5),
-        qv AS (
-          SELECT vec_id,
-                 [CAST(floor(v::DOUBLE * 1000000 + 0.5) AS BIGINT)
-                  FOR v IN embedding] AS w
-          FROM embeddings),
-        seeds AS (SELECT vec_id AS centroid_id, w FROM qv
-                  WHERE vec_id < {_IVF_K}),
-        assign AS (
-          SELECT vec_id, centroid_id FROM (
-            SELECT v.vec_id, s.centroid_id,
-                   row_number() OVER (PARTITION BY v.vec_id
-                       ORDER BY {cos.format(a="v.w", b="s.w")} DESC,
-                                s.centroid_id ASC) AS rk
-            FROM qv v CROSS JOIN seeds s) t
-          WHERE rk = 1),
-        probes AS (
-          SELECT query_id, centroid_id FROM (
-            SELECT q.centroid_id AS query_id, s.centroid_id,
-                   row_number() OVER (PARTITION BY q.centroid_id
-                       ORDER BY {cos.format(a="q.w", b="s.w")} DESC,
-                                s.centroid_id ASC) AS rk
-            FROM seeds q CROSS JOIN seeds s) t
-          WHERE rk <= {_IVF_NPROBE}),
-        candv AS (
-          SELECT p.query_id, a.vec_id
-          FROM probes p JOIN assign a USING (centroid_id)
-          WHERE a.vec_id <> p.query_id),
-        ivfs AS (
-          SELECT c.query_id, c.vec_id AS neighbor_id,
-                 {cos.format(a="wq.w", b="wv.w")} AS cosine_e4
-          FROM candv c
-          JOIN qv wq ON c.query_id = wq.vec_id
-          JOIN qv wv ON c.vec_id = wv.vec_id),
-        ivf AS (
-          SELECT query_id, neighbor_id FROM (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                      ORDER BY cosine_e4 DESC, neighbor_id ASC) AS rk
-            FROM ivfs) t
-          WHERE rk <= 5),
-        {_lsh_bucket_ctes()},
-        qb AS (SELECT vec_id AS query_id, bucket FROM bk
-               WHERE vec_id < 8),
+        WITH {_QV_CTE},
+        {_BF_CTES},
+        {_IVF_CTES},
+        {_lsh_band_ctes(8)},
         lshc AS (
-          SELECT DISTINCT qb.query_id, bk.vec_id AS neighbor_id
-          FROM qb JOIN bk ON qb.bucket = bk.bucket
-          WHERE bk.vec_id <> qb.query_id),
-        rec AS (
-          SELECT 'ivf' AS method, b.query_id,
-                 CAST(2000 * count(i.neighbor_id) AS BIGINT) AS recall_e4
-          FROM bf b LEFT JOIN ivf i
-            ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
-          GROUP BY b.query_id
+          SELECT DISTINCT q.vec_id AS query_id, b.vec_id AS neighbor_id
+          FROM bands q JOIN bands b ON q.bucket = b.bucket
+          WHERE q.vec_id < {_ANN_QUERIES} AND b.vec_id <> q.vec_id),
+        cand AS (
+          SELECT 'ivf' AS method, query_id, neighbor_id FROM ivf
           UNION ALL
-          SELECT 'lsh_candidates' AS method, b.query_id,
-                 CAST(2000 * count(l.neighbor_id) AS BIGINT) AS recall_e4
-          FROM bf b LEFT JOIN lshc l
-            ON b.query_id = l.query_id AND b.neighbor_id = l.neighbor_id
-          GROUP BY b.query_id)
+          SELECT 'lsh_candidates', query_id, neighbor_id FROM lshc),
+        rec AS (
+          SELECT m.method, b.query_id,
+                 CAST(2000 * count(c.neighbor_id) AS BIGINT) AS recall_e4
+          FROM bf b CROSS JOIN (VALUES ('ivf'), ('lsh_candidates')) m(method)
+          LEFT JOIN cand c ON c.method = m.method
+            AND b.query_id = c.query_id AND b.neighbor_id = c.neighbor_id
+          GROUP BY m.method, b.query_id)
         SELECT method, query_id, recall_e4 FROM rec
         WHERE method <> 'ivf' OR recall_e4 >= {_ANN_RECALL_FLOOR_E4}
     """
@@ -2023,25 +1901,20 @@ def oracle_sql() -> dict[str, str]:
                    AS fingerprint
             FROM documents
         """,
-        "ann_cosine_topk": """
-            WITH q AS (
-              SELECT vec_id AS query_id, embedding AS qv
-              FROM embeddings WHERE vec_id < 8),
-            scored AS (
-              SELECT q.query_id, e.vec_id AS neighbor_id,
-                     list_cosine_similarity(
-                         e.embedding::DOUBLE[], q.qv::DOUBLE[]) AS sim
-              FROM embeddings e, q WHERE e.vec_id <> q.query_id)
-            SELECT query_id, neighbor_id, round(sim, 4) AS cosine FROM (
-              SELECT *, row_number() OVER (PARTITION BY query_id
-                  ORDER BY sim DESC, neighbor_id ASC) rk
-              FROM scored) t
-            WHERE rk <= 5
+        "ann_cosine_topk": f"""
+            WITH {_BF_CTES}
+            SELECT query_id, neighbor_id, round(sim, 4) AS cosine FROM bf
         """,
         "simhash": _simhash_oracle(),
         "minhash_dedup": _minhash_oracle(),
-        "ann_lsh_buckets": _ann_lsh_oracle(),
-        "ann_ivf_topk": _ann_ivf_oracle(),
+        "ann_lsh_buckets": f"""
+            WITH {_QV_CTE}, {_lsh_band_ctes(8)}
+            SELECT vec_id, bucket FROM bands
+        """,
+        "ann_ivf_topk": f"""
+            WITH {_QV_CTE}, {_IVF_CTES}
+            SELECT query_id, neighbor_id, rk, cosine_e4 FROM ivf
+        """,
         "ann_recall": _ann_recall_oracle(),
         "x9_to_micr": _x9_oracle(),
         "sequence_packing": _sequence_packing_oracle(),

@@ -7,14 +7,14 @@ progressive files; this environment has no PIL/cv2, so the DCT
 processes of ITU-T.81 are implemented here:
 
 - encoders: grayscale only (what fixtures synthesize) — level shift,
-  8x8 block DCT (batched matmuls), quality-scaled Annex-K luminance
-  quantization, zigzag; ``encode_jpeg`` writes baseline SOF0 with the
-  standard Annex-K Huffman tables, ``encode_jpeg_progressive`` writes
-  a 6-scan SOF2 file (libjpeg's standard luma scan script: DC at Al=1,
-  two AC spectral bands at Al=2, an AC refinement to Al=1, the DC
-  refinement, and the final AC pass to Al=0) so the fixture corpus
-  exercises spectral selection, successive approximation, EOB runs,
-  and AC correction bits.
+  8x8 block DCT (fixed-order multiply-adds, no BLAS), quality-scaled
+  Annex-K luminance quantization, zigzag; ``encode_jpeg`` writes
+  baseline SOF0 with the standard Annex-K Huffman tables,
+  ``encode_jpeg_progressive`` writes a 6-scan SOF2 file (libjpeg's
+  standard luma scan script: DC at Al=1, two AC spectral bands at
+  Al=2, an AC refinement to Al=1, the DC refinement, and the final AC
+  pass to Al=0) so the fixture corpus exercises spectral selection,
+  successive approximation, EOB runs, and AC correction bits.
 - decoder: any baseline (SOF0/1) or progressive (SOF2) JPEG — 1 or 3
   components, arbitrary sampling factors, DRI/RSTn, tables from the
   file's own DQT/DHT.  Output is grayscale: for YCbCr JPEGs that is
@@ -148,22 +148,49 @@ def _dht_segment(tc_th: int, bits: list[int], vals: list[int]) -> bytes:
     return b"\xff\xc4" + struct.pack(">H", len(payload) + 2) + payload
 
 
-def encode_jpeg(img: np.ndarray, quality: int = 92) -> bytes:
-    """Grayscale baseline JPEG."""
+def _forward_dct(blocks: np.ndarray) -> np.ndarray:
+    """D @ B @ D.T of (n, 8, 8) level-shifted blocks, as fixed-order
+    multiply-adds: the left product first, each sum over k = 0..7 in
+    index order.  A BLAS matmul picks its kernel (and so its rounding)
+    by CPU, which made the encoded bytes depend on the host."""
+    t = _DCT_T[:, 0, None] * blocks[:, None, 0, :]
+    for k in range(1, 8):
+        t += _DCT_T[:, k, None] * blocks[:, None, k, :]
+    coef = t[:, :, 0, None] * _DCT_T[:, 0]
+    for k in range(1, 8):
+        coef += t[:, :, k, None] * _DCT_T[:, k]
+    return coef
+
+
+def _encode_front(img: np.ndarray, quality: int, sof: int
+                  ) -> tuple[np.ndarray, bytes]:
+    """Both encoders' front end: edge-pad to whole blocks → blockify →
+    DCT → quantize → zigzag, giving the (n_blocks, 64) int64
+    coefficients, plus the SOI/DQT/SOFn/DC-DHT header bytes."""
     assert img.dtype == np.uint8 and img.ndim == 2
     h, w = img.shape
     ph, pw = (h + 7) & ~7, (w + 7) & ~7
     padded = np.pad(img, ((0, ph - h), (0, pw - w)), mode="edge")
     quant = _scaled_quant(quality)
-    # blockify -> DCT -> quantize, all vectorized
     blocks = (padded.reshape(ph // 8, 8, pw // 8, 8)
               .transpose(0, 2, 1, 3)
               .reshape(-1, 8, 8).astype(np.float64) - 128.0)
-    # D @ B @ D.T as two batched matmuls: einsum's 3-operand path is
-    # interpreted (no BLAS) and measured ~50x slower on 10k+ blocks
-    coef = _DCT_T @ blocks @ _DCT_T.T
-    q = np.round(coef / quant).astype(np.int32)
-    zz = q.reshape(-1, 64)[:, _ZIGZAG]  # (n_blocks, 64) zigzag order
+    q = np.round(_forward_dct(blocks) / quant).astype(np.int64)
+    qz = quant.reshape(-1)[_ZIGZAG]
+    header = b"".join([
+        b"\xff\xd8",                                       # SOI
+        b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" +    # DQT (8-bit, id 0)
+        bytes(int(x) for x in qz),
+        bytes([0xFF, sof]) + struct.pack(">HBHHB", 11, 8, h, w, 1) +
+        bytes([1, 0x11, 0]),                               # comp 1, 1x1, q0
+        _dht_segment(0x00, _DC_LUMA_BITS, _DC_LUMA_VALS),
+    ])
+    return q.reshape(-1, 64)[:, _ZIGZAG], header
+
+
+def encode_jpeg(img: np.ndarray, quality: int = 92) -> bytes:
+    """Grayscale baseline JPEG."""
+    zz, header = _encode_front(img, quality, 0xC0)        # SOF0
 
     dc_codes = _build_codes(_DC_LUMA_BITS, _DC_LUMA_VALS)
     ac_codes = _build_codes(_AC_LUMA_BITS, _AC_LUMA_VALS)
@@ -199,14 +226,8 @@ def encode_jpeg(img: np.ndarray, quality: int = 92) -> bytes:
             bw.put(c, ln)
     entropy = bw.flush()
 
-    qz = quant.reshape(-1)[_ZIGZAG]
     parts = [
-        b"\xff\xd8",                                       # SOI
-        b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" +    # DQT (8-bit, id 0)
-        bytes(int(x) for x in qz),
-        b"\xff\xc0" + struct.pack(">HBHHB", 11, 8, h, w, 1) +  # SOF0
-        bytes([1, 0x11, 0]),                               # comp 1, 1x1, q0
-        _dht_segment(0x00, _DC_LUMA_BITS, _DC_LUMA_VALS),
+        header,
         _dht_segment(0x10, _AC_LUMA_BITS, _AC_LUMA_VALS),
         b"\xff\xda" + struct.pack(">HB", 8, 1) +           # SOS
         bytes([1, 0x00, 0, 63, 0]),
@@ -333,17 +354,7 @@ def encode_jpeg_progressive(img: np.ndarray, quality: int = 92) -> bytes:
     1-63 refinement to Al=1; DC refinement; AC 1-63 final to Al=0.
     Quantized coefficients are identical to ``encode_jpeg`` at the same
     quality, so a full decode is bit-identical to the baseline file's."""
-    assert img.dtype == np.uint8 and img.ndim == 2
-    h, w = img.shape
-    ph, pw = (h + 7) & ~7, (w + 7) & ~7
-    padded = np.pad(img, ((0, ph - h), (0, pw - w)), mode="edge")
-    quant = _scaled_quant(quality)
-    blocks = (padded.reshape(ph // 8, 8, pw // 8, 8)
-              .transpose(0, 2, 1, 3)
-              .reshape(-1, 8, 8).astype(np.float64) - 128.0)
-    coef = _DCT_T @ blocks @ _DCT_T.T
-    q = np.round(coef / quant).astype(np.int64)
-    zz = q.reshape(-1, 64)[:, _ZIGZAG]      # (n_blocks, 64) zigzag order
+    zz, header = _encode_front(img, quality, 0xC2)        # SOF2
     zz_list = zz.tolist()                   # python ints for bit ops
 
     dc_codes = _build_codes(_DC_LUMA_BITS, _DC_LUMA_VALS)
@@ -390,16 +401,7 @@ def encode_jpeg_progressive(img: np.ndarray, quality: int = 92) -> bytes:
         ((1, 63, 1, 0), ac_scan(band_all, 1, 0)),
     ]
 
-    qz = quant.reshape(-1)[_ZIGZAG]
-    parts = [
-        b"\xff\xd8",                                       # SOI
-        b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" +    # DQT
-        bytes(int(x) for x in qz),
-        b"\xff\xc2" + struct.pack(">HBHHB", 11, 8, h, w, 1) +  # SOF2
-        bytes([1, 0x11, 0]),
-        _dht_segment(0x00, _DC_LUMA_BITS, _DC_LUMA_VALS),
-        _dht_segment(0x10, _PROG_AC_BITS, _PROG_AC_VALS),
-    ]
+    parts = [header, _dht_segment(0x10, _PROG_AC_BITS, _PROG_AC_VALS)]
     for (ss, se, ah, al), entropy in scans:
         parts.append(b"\xff\xda" + struct.pack(">HB", 8, 1)
                      + bytes([1, 0x00, ss, se, (ah << 4) | al]))
@@ -736,8 +738,9 @@ def _luma_plane(frame: dict, luma: dict, quants: dict, raster: np.ndarray,
         raise ValueError("missing quantization table")
     quant = quants[luma["tq"]].reshape(-1).astype(np.float64)
     coef = (raster * quant).reshape(-1, 8, 8)
-    # D.T @ C @ D as two batched matmuls (see encode_jpeg: einsum's
-    # 3-operand path is interpreted and dominated the whole decode)
+    # D.T @ C @ D as two batched matmuls: einsum's 3-operand path is
+    # interpreted and dominated the whole decode, and the encoder's
+    # fixed-order _forward_dct form is ~5x slower than the matmuls
     spatial = _DCT_T.T @ coef @ _DCT_T
     pix = np.clip(np.round(spatial) + 128, 0, 255).astype(np.uint8)
     plane = (pix.reshape(bh, bw, 8, 8)

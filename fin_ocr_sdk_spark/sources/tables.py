@@ -53,7 +53,7 @@ def materialize_fixtures(out_dir: str, n_docs: int, seed: int = 42,
     (used by throughput benches — see fixtures.py docstring)."""
     os.makedirs(out_dir, exist_ok=True)
     manifest_path = os.path.join(out_dir, "MANIFEST.json")
-    want = {"n_docs": n_docs, "seed": seed, "version": 12, "lossy": lossy}
+    want = {"n_docs": n_docs, "seed": seed, "version": 13, "lossy": lossy}
     if os.path.exists(manifest_path):
         with open(manifest_path) as f:
             if json.load(f) == want:

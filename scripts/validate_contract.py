@@ -1,12 +1,17 @@
 """Local mimic of the driver's correctness gate: run every queries()
 entry on Spark and its oracle_sql() twin on DuckDB (views over the
 testdata parquet), compare row count + order-insensitive values.
+It ends with one ``sha256 <query> <digest>`` line per query: a short
+sha256 of the query's canonical Spark result, so two runs (say, before
+and after a refactor) compare with
+``diff <(grep ^sha256 a.log) <(grep ^sha256 b.log)``.
 
 Usage: python scripts/validate_contract.py [sf_dir] [only_query ...]
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import sys
 import time
@@ -38,6 +43,11 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns)).reset_index(drop=True)
 
 
+def digest(df: pd.DataFrame) -> str:
+    """Short sha256 of a canonical frame's CSV text."""
+    return hashlib.sha256(df.to_csv(index=False).encode()).hexdigest()[:16]
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -51,7 +61,7 @@ def main() -> int:
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    failures = []
+    failures, digests = [], {}
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -62,6 +72,8 @@ def main() -> int:
             failures.append(name)
             print(f"{name:28s} SPARK-ERROR {type(e).__name__}: {e}")
             continue
+        g = canon(got)
+        digests[name] = digest(g)
         if name not in oracles:
             print(f"{name:28s} rows-only: {len(got)} rows "
                   f"({time.time() - t0:.1f}s)")
@@ -72,7 +84,7 @@ def main() -> int:
             failures.append(name)
             print(f"{name:28s} ORACLE-ERROR {type(e).__name__}: {e}")
             continue
-        g, e = canon(got), canon(exp)
+        e = canon(exp)
         ok_rows = len(g) == len(e)
         ok_schema = list(g.columns) == list(e.columns)
         ok_vals = ok_rows and ok_schema and g.equals(e)
@@ -91,6 +103,8 @@ def main() -> int:
     n = entrymod.entry(spark).count()
     print(f"entry(spark): {n} rows ({time.time() - t0:.1f}s)")
     spark.stop()
+    for name, d in digests.items():
+        print(f"sha256 {name:28s} {d}")
     print("FAILURES:", failures or "none")
     return 1 if failures else 0
 

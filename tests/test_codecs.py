@@ -404,7 +404,7 @@ def _zz_blocks(plane: np.ndarray, quant: np.ndarray) -> list:
     ph, pw = plane.shape
     blocks = (plane.reshape(ph // 8, 8, pw // 8, 8).transpose(0, 2, 1, 3)
               .reshape(-1, 8, 8).astype(np.float64) - 128.0)
-    q = np.round(J._DCT_T @ blocks @ J._DCT_T.T / quant).astype(np.int64)
+    q = np.round(J._forward_dct(blocks) / quant).astype(np.int64)
     return q.reshape(ph // 8, pw // 8, 64)[:, :, J._ZIGZAG].tolist()
 
 
@@ -546,9 +546,11 @@ _SUB_LUMA = [(1, 1), (2, 2), (1, 1)]  # luma below the frame's max factors
 _SUB_LUMA_V = [(1, 2), (2, 1)]        # luma subsampled horizontally only
 
 # sha256[:16] of (shape, pixels) for each decode, recorded before the
-# baseline and progressive decoders shared one luma tail
+# baseline and progressive decoders shared one luma tail;
+# base_gray_37x53 re-recorded once the encoders' forward DCT stopped
+# depending on the BLAS kernel (it pinned the Haswell kernel's bytes)
 _JPEG_DIGESTS = {
-    "base_gray_37x53": "b82145e1fc175a35",
+    "base_gray_37x53": "30fb4a447f30ba20",
     "base_gray_64x48": "1dce90a525898272",
     "base_420_45x29": "2411f9e35f816540",
     "base_420_dri_45x29": "4dfdc8732d0df605",
@@ -588,6 +590,43 @@ def test_jpeg_luma_tail_digests(name, progressive):
     digest = hashlib.sha256(repr(out.shape).encode()
                             + out.tobytes()).hexdigest()[:16]
     assert digest == _JPEG_DIGESTS[name]
+
+
+_ENCODE_SCRIPT = """
+import hashlib
+import numpy as np
+from fin_ocr_sdk_spark.sources.jpeg import encode_jpeg, encode_jpeg_progressive
+rng = np.random.default_rng(11)
+hsh = hashlib.sha256()
+for (h, w), q in (((53, 37), 85), ((48, 64), 60), ((200, 320), 92)):
+    yy, xx = np.mgrid[0:h, 0:w]
+    img = np.clip(128 + 70 * np.sin(xx / 5.0) * np.cos(yy / 7.0)
+                  + rng.normal(0, 20, (h, w)), 0, 255).astype(np.uint8)
+    for enc in (encode_jpeg, encode_jpeg_progressive):
+        hsh.update(enc(img, q))
+print(hsh.hexdigest())
+"""
+
+
+def test_jpeg_encoding_is_independent_of_the_blas_kernel():
+    """The encoders' bytes do not depend on which OpenBLAS kernel the
+    host picks (fixture digests pin them).  Skips when a forced kernel
+    cannot start on this CPU."""
+    import os
+    import subprocess
+    import sys
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = {}
+    for core in ("Haswell", "Sandybridge"):
+        env = dict(os.environ, OPENBLAS_CORETYPE=core, PYTHONPATH=repo)
+        res = subprocess.run([sys.executable, "-c", _ENCODE_SCRIPT],
+                             env=env, cwd=repo, capture_output=True,
+                             text=True, timeout=120)
+        if res.returncode != 0:
+            pytest.skip(f"OPENBLAS_CORETYPE={core} did not start: "
+                        f"{res.stderr[-200:]}")
+        out[core] = res.stdout.strip()
+    assert out["Haswell"] == out["Sandybridge"]
 
 
 @pytest.mark.parametrize("sampling", [_S420, _SUB_LUMA, _SUB_LUMA_V])

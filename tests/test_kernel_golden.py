@@ -21,16 +21,23 @@ from fin_ocr_sdk_spark.sources import codecs
 from fin_ocr_sdk_spark.sources.tables import fixture_dir
 
 ROTATE_ANGLES = (0.0, 0.01, -0.01, 3.0, -3.0, 15.0, -15.0)
+# above 15 degrees rotate() takes the dense bicubic inverse map
+DENSE_ROTATE_ANGLES = (20.0, -20.0, 45.0, -60.0)
 
 GOLDEN_ROTATE = (
     "8398d9a68022ae2f4ee8e36ee0c0fa0f0ced839937d10f8a8f7063af82effb2b")
+GOLDEN_ROTATE_DENSE = (
+    "848a0ca7b20186ae86cf453be627b9b8299ad88f0f6ed7b0080755f78b147b8c")
 GOLDEN_SCAN = {
     "smoke": "059491695d8db28c648dc55b921677806249eb54d3002475a89e00deef8a7429",
-    "sftest": "0a94473b94d91422bf985c26aa6461d37129140dbc636d585d0feabeeda0f0ac",
+    # re-recorded at fixture version 13: the JPEG encoders' forward DCT
+    # no longer depends on the BLAS kernel (the old digest was the
+    # Haswell kernel's bytes)
+    "sftest": "4b48b43d32b16f3012310f99d510ae589939501d8c3346555fa166cedf27d08b",
 }
 
 
-def _rotate_digest() -> str:
+def _rotate_digest(angles: tuple) -> str:
     """sha256 over rotate() outputs on seeded noise-plus-bars images,
     full frame and bands touching the top and the bottom edge."""
     rng = np.random.default_rng(20261018)
@@ -38,7 +45,7 @@ def _rotate_digest() -> str:
     for h, w in ((61, 97), (240, 410), (377, 133)):
         img = rng.integers(0, 256, (h, w), dtype=np.uint8)
         img[h // 3:h // 3 + 9, w // 8:w - w // 8] //= 4   # a dark bar
-        for ang in ROTATE_ANGLES:
+        for ang in angles:
             for rows in (None, (0, h // 3), (h - h // 4, h),
                          (h // 5, h - h // 5)):
                 out = K.rotate(img, ang, out_rows=rows)
@@ -75,7 +82,18 @@ def _scan_digest(name: str, n_docs: int) -> str:
 
 
 def test_rotate_golden():
-    assert _rotate_digest() == GOLDEN_ROTATE
+    assert _rotate_digest(ROTATE_ANGLES) == GOLDEN_ROTATE
+
+
+def test_rotate_dense_golden(monkeypatch):
+    """rotate() above 15 degrees: every call takes the dense bicubic
+    inverse map, whose output is pinned too."""
+    calls = []
+    real = K._bicubic_sample
+    monkeypatch.setattr(K, "_bicubic_sample",
+                        lambda *a: calls.append(1) or real(*a))
+    assert _rotate_digest(DENSE_ROTATE_ANGLES) == GOLDEN_ROTATE_DENSE
+    assert len(calls) == 3 * len(DENSE_ROTATE_ANGLES) * 4
 
 
 @pytest.mark.parametrize("name,n_docs", [("smoke", 16), ("sftest", 128)])

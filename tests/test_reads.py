@@ -110,22 +110,31 @@ def test_unstattable_paths_fall_back(spark, tmp_path, monkeypatch):
         m._read(spark, str(tmp_path / "missing.parquet"))
 
 
-def test_ann_cosine_topk_builds_with_one_job(spark, tmp_path):
-    """The query vectors are collected unsorted and ordered on the
-    driver: building the query runs only that collect."""
+def _builds_with_one_job(spark, tmp_path, query):
     rng = np.random.default_rng(7)
     ids = rng.permutation(40)
     _write(str(tmp_path / "embeddings.parquet"), vec_id=ids.astype(np.int64),
            embedding=[list(v) for v in rng.normal(size=(40, 6))])
-    want = m.q_ann_cosine_topk(spark, str(tmp_path)).toPandas()
-    q, n = jobs_of(spark, lambda: m.q_ann_cosine_topk(spark, str(tmp_path)))
+    want = query(spark, str(tmp_path)).toPandas()
+    q, n = jobs_of(spark, lambda: query(spark, str(tmp_path)))
     assert n == 1
     got = q.toPandas()
     assert sorted(got["query_id"].unique()) == list(range(8))
-    assert (got.sort_values(["query_id", "cosine", "neighbor_id"])
-            .reset_index(drop=True)
-            .equals(want.sort_values(["query_id", "cosine", "neighbor_id"])
-                    .reset_index(drop=True)))
+    cols = sorted(got.columns)
+    assert (got.sort_values(cols).reset_index(drop=True)
+            .equals(want.sort_values(cols).reset_index(drop=True)))
+
+
+def test_ann_cosine_topk_builds_with_one_job(spark, tmp_path):
+    """The query vectors are collected unsorted and ordered on the
+    driver: building the query runs only that collect."""
+    _builds_with_one_job(spark, tmp_path, m.q_ann_cosine_topk)
+
+
+def test_ann_ivf_topk_builds_with_one_job(spark, tmp_path):
+    """Same for the IVF seed vectors; the probe table is built on the
+    driver from them."""
+    _builds_with_one_job(spark, tmp_path, m.q_ann_ivf_topk)
 
 
 def test_fixture_media_keeps_direct_strategy(spark):
