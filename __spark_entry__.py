@@ -990,7 +990,7 @@ def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("out_h", IntegerType()),
     ])
 
-    def thumb_dims(rows, templates):
+    def thumb_dims(rows):
         import numpy as np
 
         from fin_ocr_sdk_spark.operators import kernels as K
@@ -1026,7 +1026,7 @@ def q_media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("n_bytes", IntegerType()),
     ])
 
-    def dims(rows, templates):
+    def dims(rows):
         from fin_ocr_sdk_spark.sources import codecs
         for ref, fmt, img in rows:
             h, w = codecs.decode_image(img, fmt).shape

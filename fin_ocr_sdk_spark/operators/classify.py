@@ -4,11 +4,12 @@ The reference's opencv translator scores every character crop against
 every match template with normalized cross-correlation and keeps the
 top-3 choices (/root/reference/src/opencvTranslator.ts:199-249).
 
-Relationally this is a broadcast nested-loop theta-join
-(chars × templates, score = NCC, argmax per char — SURVEY §2.3); here
-it is ONE einsum over the whole batch: stack all character crops of all
-documents in the Arrow batch into an (N, 36, 36) tensor and contract
-against the (T, 36, 36) broadcast template tensor.  This is the hot
+Relationally this is a nested-loop theta-join against a small constant
+side (chars × templates, score = NCC, argmax per char — SURVEY §2.3);
+here it is ONE einsum over the whole batch: stack all character crops
+of all documents in the Arrow batch into an (N, 36, 36) tensor and
+contract against the (T, 36, 36) template tensor, which each worker
+builds once (plans.scan.get_default_templates).  This is the hot
 path and it is fully vectorized — no per-char Python beyond the crop.
 """
 
@@ -27,7 +28,8 @@ MAX_TRANSLATOR_CHOICES = 3
 
 @dataclass(frozen=True)
 class TemplateSet:
-    """Broadcast-side immutable template pack."""
+    """Immutable template pack: a per-process constant, built once by
+    plans.scan.get_default_templates."""
 
     tensor: np.ndarray  # (T, 36, 36) float64
     values: list[str]

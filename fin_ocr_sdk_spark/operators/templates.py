@@ -163,8 +163,8 @@ def build_templates() -> dict[str, dict]:
 def template_tensor() -> tuple[np.ndarray, list[str], np.ndarray]:
     """Stack templates into a (T, 36, 36) float64 tensor for batched
     normalized cross-correlation, plus the value list and per-template
-    L2 norms.  This is the broadcast-side of the template-match
-    'join' (SURVEY §2.3)."""
+    L2 norms.  This is the constant side of the template-match 'join'
+    (SURVEY §2.3)."""
     templates = build_templates()
     # preserve reference element order: single-contour eles then multi
     singles = [v for v in templates if templates[v]["num_contours"] == 1]

@@ -44,8 +44,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..session import pin_worker_threads
 from .pipeline import (MEDIA_SCAN_SCHEMA, _direct_media_rows, _media_files,
-                       _planned_units, broadcast_templates, explode_spans,
-                       interleave, scan_rows)
+                       _planned_units, explode_spans, interleave, scan_rows)
 
 LINEAGE_SCHEMA = StructType([
     StructField("partition_id", StringType()),
@@ -62,13 +61,12 @@ def _partition_id(media_file: str) -> str:
     return hashlib.sha1(media_file.encode()).hexdigest()[:16]
 
 
-def make_lineage_kernel(out_dir: str, run_id: str, spark: SparkSession):
+def make_lineage_kernel(out_dir: str, run_id: str):
     """mapInPandas kernel over whole-file units (path, 0, 1): scan
     each media file, write its emitted spans to
     <out>/spans/<partition_id>.parquet, return the lineage row.  The
     span write happens BEFORE the lineage row is returned (lineage-last
     commit protocol)."""
-    bc = broadcast_templates(spark)
     spans_dir = os.path.join(out_dir, "spans")
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -86,8 +84,7 @@ def make_lineage_kernel(out_dir: str, run_id: str, spark: SparkSession):
                 t0 = time.time()
                 # images stream by record batch (a 1 GB part never
                 # becomes a 1 GB Arrow table); only the text spans stay
-                out = list(scan_rows(_direct_media_rows(path, 0, 1),
-                                     bc.value))
+                out = list(scan_rows(_direct_media_rows(path, 0, 1)))
                 h = hashlib.sha256()
                 for ref, _, kind, text in out:
                     h.update(f"{ref}\x00{kind}\x00{text}\x01".encode())
@@ -153,7 +150,7 @@ def run_resumable_extract(spark: SparkSession, documents: DataFrame,
         # into a single task, while the shuffle keeps the scan's tasks
         # and runs the lineage write as a later stage
         (_planned_units(spark, pending)
-         .mapInPandas(make_lineage_kernel(out_dir, run_id, spark),
+         .mapInPandas(make_lineage_kernel(out_dir, run_id),
                       LINEAGE_SCHEMA)
          .repartition(1)
          .write.mode("append").parquet(os.path.join(out_dir, "lineage")))

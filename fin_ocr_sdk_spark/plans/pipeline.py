@@ -12,7 +12,7 @@ Dataflow (SURVEY.md §2.8):
     scan_media: mapInPandas(make_scan_batches)  ← ALL image work, once
        │         per MEDIA row; extraction's per_image is scan_rows =
        │         decode → deskew → band → segment → classify → grammar;
-       │         templates broadcast once per worker
+       │         each worker builds the template pack once
        ▼
     per-media micr:* spans (media_ref, sub_order, kind, text)
        ▼
@@ -43,7 +43,6 @@ from collections.abc import Iterator
 from urllib.parse import unquote
 
 import pandas as pd
-from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (BinaryType, IntegerType, StringType,
@@ -61,7 +60,7 @@ MEDIA_SCAN_SCHEMA = StructType([
 SPAN_OUT_COLS = ("doc_id", "kind", "text", "media_ref", "order")
 
 
-def scan_rows(rows, templates) -> Iterator[tuple[str, int, str, str]]:
+def scan_rows(rows) -> Iterator[tuple[str, int, str, str]]:
     """The per-image step of every extraction path: Check.scan
     (src/check.ts:88-114) over (media_ref, format, image) rows, yielding
     (media_ref, sub_order, kind, text) — micr:line/routing/account/check
@@ -69,7 +68,7 @@ def scan_rows(rows, templates) -> Iterator[tuple[str, int, str, str]]:
     least one row and lineage counts reconcile."""
     from ..plans.scan import scan_check
     for ref, fmt, image in rows:
-        res = scan_check(image, fmt, templates)
+        res = scan_check(image, fmt)
         if res.ok and res.check_info is not None:
             emitted = res.check_info.spans()
         else:
@@ -78,31 +77,20 @@ def scan_rows(rows, templates) -> Iterator[tuple[str, int, str, str]]:
             yield ref, k, kind, text
 
 
-def broadcast_templates(spark: SparkSession) -> Broadcast:
-    """The template tensor, constructed ONCE on the driver (~145 KB
-    pickled) and shipped as a Spark broadcast: deserialized once per
-    WORKER and cached.  Mirrors the reference's init-once translator
-    (src/ocr.ts:44-56)."""
-    from ..plans.scan import get_default_templates
-    return spark.sparkContext.broadcast(get_default_templates())
-
-
-def make_scan_batches(spark: SparkSession, per_image, schema: StructType):
+def make_scan_batches(per_image, schema: StructType):
     """The media-keyed mapInPandas kernel both media strategies run:
-    ``per_image(rows, templates)`` over the (media_ref, format, image)
-    rows of each input batch (see :func:`media_rows`), one output row
-    per tuple it yields, in ``schema``'s column order."""
-    bc = broadcast_templates(spark)
+    ``per_image(rows)`` over the (media_ref, format, image) rows of
+    each input batch (see :func:`media_rows`), one output row per
+    tuple it yields, in ``schema``'s column order."""
     columns = schema.fieldNames()
 
-    def scan_fn_bc(batches: Iterator[pd.DataFrame]
-                   ) -> Iterator[pd.DataFrame]:
+    def scan_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pin_worker_threads()
         for pdf in batches:
-            yield pd.DataFrame(list(per_image(media_rows(pdf), bc.value)),
+            yield pd.DataFrame(list(per_image(media_rows(pdf))),
                                columns=columns)
 
-    return scan_fn_bc
+    return scan_fn
 
 
 def media_rows(pdf: pd.DataFrame) -> Iterator[tuple]:
@@ -413,7 +401,7 @@ def scan_media(media: DataFrame, per_image, schema: StructType
     output to the documents' image spans (:func:`interleave`) drops
     them."""
     spark = media.sparkSession
-    kernel = make_scan_batches(spark, per_image, schema)
+    kernel = make_scan_batches(per_image, schema)
     units = (_slice_units(media)
              if _choose_media_strategy(media) == "direct" else None)
     if units is not None:
@@ -459,13 +447,14 @@ PREPROCESS_SCHEMA = StructType([
 ])
 
 
-def preprocess_rows(rows, templates) -> Iterator[tuple]:
+def preprocess_rows(rows) -> Iterator[tuple]:
     """preprocess_only's per-image step: (media_ref, format, image) →
     (media_ref, overlap, band PNG), with scan_check's failure boundary —
     a decode failure or any later exception is an error row
     (band None), never a failed task."""
     from ..operators import kernels as K
-    from ..plans.scan import find_micr_line, get_micr_band
+    from ..plans.scan import (find_micr_line, get_default_templates,
+                              get_micr_band)
     from ..sources import codecs
     for ref, fmt, image in rows:
         try:
@@ -475,7 +464,7 @@ def preprocess_rows(rows, templates) -> Iterator[tuple]:
             continue
         try:
             band = get_micr_band(gray)
-            line = find_micr_line(band, templates)
+            line = find_micr_line(band, get_default_templates())
             row = (ref, "" if line is None else str(line.overlap).lower(),
                    codecs.encode_png(band))
         except Exception as e:  # noqa: BLE001 — the per-image boundary

@@ -14,7 +14,6 @@ embarrassingly parallel — zero cross-document dataflow.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -296,24 +295,14 @@ def scan_check(image_bytes: bytes | None, fmt: str,
 
 
 _TEMPLATES: TemplateSet | None = None
-_TEMPLATES_KEY: str | None = None
 
 
 def get_default_templates() -> TemplateSet:
-    """Module-global template pack: built once per process (executor),
-    mirroring the reference's init-once translator (src/ocr.ts:44-56).
-    On Spark this is the init-once-per-worker pattern inside the UDF.
-
-    When ``OCR_CORRECTIONS_DIR`` is set (the correctionsDir init arg,
-    src/opencvTranslator.ts:51-52), every persisted ``.tif``/``.ct``
-    correction pair is folded into the pack at init — glyphs learned in
-    one job classify correctly in the next, on every executor."""
-    global _TEMPLATES, _TEMPLATES_KEY
-    corr = os.environ.get("OCR_CORRECTIONS_DIR") or None
-    if _TEMPLATES is None or _TEMPLATES_KEY != corr:
-        tmpl = TemplateSet.build()
-        if corr:
-            from .classify_learn import fold_corrections
-            tmpl = fold_corrections(tmpl, corr)
-        _TEMPLATES, _TEMPLATES_KEY = tmpl, corr
+    """The template pack, built once per process on first use — the
+    reference's init-once translator (src/ocr.ts:44-56).  The pack is
+    a constant, so each Python worker builds its own and no job ships
+    it."""
+    global _TEMPLATES
+    if _TEMPLATES is None:
+        _TEMPLATES = TemplateSet.build()
     return _TEMPLATES

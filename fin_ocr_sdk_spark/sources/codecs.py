@@ -56,9 +56,19 @@ def decode_png(data: bytes) -> np.ndarray:
             break
     if width is None or bit_depth != 8:
         raise ValueError("unsupported PNG (need 8-bit)")
+    if not (width and height):
+        raise ValueError(f"empty PNG raster {width}x{height}")
     channels = {0: 1, 2: 3, 4: 2, 6: 4}[color_type]
-    raw = zlib.decompress(idat)
     stride = width * channels
+    # inflate no further than the declared raster (a size of 0 would
+    # mean no bound): a small IDAT that inflates to gigabytes is
+    # rejected before it is held in memory
+    size = height * (stride + 1)
+    inflate = zlib.decompressobj()
+    raw = inflate.decompress(idat, size)
+    if len(raw) != size or inflate.unconsumed_tail:
+        raise ValueError(f"PNG data does not match its {width}x{height} "
+                         "header")
     # fast path: all scanline filters are 0 (our encoder's output) →
     # one bulk reshape instead of the per-row filter loop
     arr = np.frombuffer(raw, dtype=np.uint8).reshape(height, stride + 1)

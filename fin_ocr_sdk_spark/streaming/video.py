@@ -13,9 +13,8 @@ Spark mapping:
   - per-frame scan → foreachBatch planning the micro-batch through the
                      batch pipeline's one media scan
                      (pipeline.scan_media with scan_rows): the scan
-                     runs in executor tasks with the broadcast
-                     template pack, and only the emitted spans reach
-                     the driver
+                     runs in executor tasks, and only the emitted
+                     spans reach the driver
   - stop-on-false  → the batch callback calls query.stop() when the
                      caller's callback returns False
 """

@@ -279,6 +279,32 @@ def test_jpeg_frame_size_cap_is_valueerror():
             decode_jpeg(bytes(data))
 
 
+@pytest.mark.parametrize("h,w", [(10, 10), (0, 10)])
+def test_png_inflate_stops_at_the_declared_size(h, w):
+    """A PNG whose IDAT inflates far past its IHDR raster (10x10 or an
+    empty raster declared, 256 MB inflated) is a ``decode:`` error, and
+    the decoder never holds the inflated stream."""
+    import tracemalloc
+    import zlib
+
+    from fin_ocr_sdk_spark.plans.scan import scan_check
+    deflate = zlib.compressobj(9)
+    zeros = bytes(1 << 20)
+    idat = b"".join(deflate.compress(zeros) for _ in range(256))
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
+    bomb = (codecs._PNG_SIG + codecs._png_chunk(b"IHDR", ihdr)
+            + codecs._png_chunk(b"IDAT", idat + deflate.flush())
+            + codecs._png_chunk(b"IEND", b""))
+    tracemalloc.start()
+    try:
+        res = scan_check(bomb, "png")
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert not res.ok and res.error.startswith("decode:"), res.error
+    assert peak < 16 << 20, f"peak {peak} bytes"
+
+
 def _bmp24(img: np.ndarray) -> bytes:
     """Bottom-up 24-bit BMP of a gray image (B = G = R)."""
     h, w = img.shape

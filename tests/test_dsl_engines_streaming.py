@@ -1,67 +1,7 @@
-"""Persisted template corrections and the Structured-Streaming
-video-loop analog."""
+"""The Structured-Streaming video-loop analog."""
 
-import numpy as np
 import pytest
 
-from fin_ocr_sdk_spark.plans.classify_learn import learn_char
-from fin_ocr_sdk_spark.plans.scan import get_default_templates
-
-
-# -------------------------------------------------- corrections
-
-def test_learn_char_pure():
-    tmpl = get_default_templates()
-    g = np.zeros((36, 36), dtype=np.uint8)
-    g[10:26, 10:26] = 255
-    t2 = learn_char(tmpl, g, "7")
-    assert len(t2.values) == len(tmpl.values) + 1
-    assert t2.tensor.shape[0] == tmpl.tensor.shape[0] + 1
-    # original is untouched (frozen semantics)
-    assert len(tmpl.values) == 14
-
-
-def test_corrections_persist_across_template_restart(tmp_path,
-                                                     monkeypatch):
-    """Job 1 learns a glyph and persists it (.tif/.ct pair, the
-    reference's corrections-dir layout); job 2 rebuilds the template
-    pack from scratch (simulated executor restart) and classifies the
-    learned glyph correctly from the persisted correction."""
-    import numpy as np
-
-    from fin_ocr_sdk_spark.operators.classify import ncc_scores_batch
-    from fin_ocr_sdk_spark.plans import scan as scan_mod
-    from fin_ocr_sdk_spark.plans.classify_learn import (load_corrections,
-                                                        save_correction)
-
-    corr_dir = str(tmp_path / "corrections")
-    # a glyph shape unlike any built-in template (diagonal stripe)
-    g = np.zeros((36, 36), dtype=np.uint8)
-    for i in range(36):
-        g[i, max(0, i - 2):min(36, i + 3)] = 255
-    save_correction(corr_dir, g, "5", num_contours=1)
-    # an orphan .tif without .ct must be skipped, not crash the load
-    with open(tmp_path / "corrections" / "orphan.tif", "wb") as f:
-        f.write(b"not a committed pair")
-    assert [(v, n) for v, _, n in load_corrections(corr_dir)] == [("5", 1)]
-
-    # ---- restart: wipe the module cache, point at the corrections dir
-    monkeypatch.setenv("OCR_CORRECTIONS_DIR", corr_dir)
-    monkeypatch.setattr(scan_mod, "_TEMPLATES", None)
-    monkeypatch.setattr(scan_mod, "_TEMPLATES_KEY", None)
-    tmpl = scan_mod.get_default_templates()
-    assert len(tmpl.values) == 15 and tmpl.values[-1] == "5"
-    scores = ncc_scores_batch(g[None].astype(np.float64), tmpl)
-    assert tmpl.values[int(scores[0].argmax())] == "5"
-
-    # without the env var the pack reverts to the 14 built-ins
-    monkeypatch.delenv("OCR_CORRECTIONS_DIR")
-    monkeypatch.setattr(scan_mod, "_TEMPLATES", None)
-    monkeypatch.setattr(scan_mod, "_TEMPLATES_KEY", None)
-    assert len(scan_mod.get_default_templates().values) == 14
-
-
-# ---------------------------------------------------- streaming
 
 @pytest.mark.parametrize("nothing", [None])
 def test_streaming_drain(nothing, tmp_path):

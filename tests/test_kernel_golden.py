@@ -35,6 +35,9 @@ GOLDEN_SCAN = {
     # Haswell kernel's bytes)
     "sftest": "4b48b43d32b16f3012310f99d510ae589939501d8c3346555fa166cedf27d08b",
 }
+# sha256 of the template pack: tensor bytes, repr(values), norms bytes
+GOLDEN_TEMPLATES = (
+    "d271da07108526456eab9a9a8e2b72f326717cdca66026561e1781975abb9576")
 
 
 def _rotate_digest(angles: tuple) -> str:
@@ -99,3 +102,30 @@ def test_rotate_dense_golden(monkeypatch):
 @pytest.mark.parametrize("name,n_docs", [("smoke", 16), ("sftest", 128)])
 def test_skew_and_regions_golden(name, n_docs):
     assert _scan_digest(name, n_docs) == GOLDEN_SCAN[name]
+
+
+def test_template_pack_golden():
+    """Every Python worker builds its own template pack: the pack is
+    pinned on the driver and inside a Spark task on local[4], where the
+    worker pins BLAS to one thread."""
+    from fin_ocr_sdk_spark.session import get_spark, pin_worker_threads
+
+    def digest():
+        pack = scan.get_default_templates()
+        hsh = hashlib.sha256(pack.tensor.tobytes())
+        hsh.update(repr(pack.values).encode())
+        hsh.update(pack.norms.tobytes())
+        return hsh.hexdigest()
+
+    def in_task(_):
+        pin_worker_threads()
+        return digest()
+
+    assert digest() == GOLDEN_TEMPLATES
+    spark = get_spark("pytest-templates", master="local[4]")
+    spark.sparkContext.setLogLevel("ERROR")
+    try:
+        got = spark.sparkContext.parallelize([0], 1).map(in_task).collect()
+    finally:
+        spark.stop()
+    assert got == [GOLDEN_TEMPLATES]

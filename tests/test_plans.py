@@ -396,3 +396,34 @@ def test_scan_path_has_no_unset_parameters():
             if key not in _UNSET_ALLOWED:
                 unset.append(key)
     assert not unset, "never passed: " + ", ".join(unset)
+
+
+def test_package_reads_no_settings_and_ships_no_broadcast():
+    """Only session.py reads the environment (``os.environ``,
+    ``os.getenv``), and no package or driver module creates a Spark
+    broadcast variable (a ``<context>.broadcast(...)`` call;
+    ``F.broadcast`` is a join hint): a scan reads only its image."""
+    import ast
+
+    paths = _package_modules()
+    paths["__spark_entry__"] = os.path.join(_REPO, "__spark_entry__.py")
+    env_reads, broadcasts = [], []
+    for name, path in sorted(paths.items()):
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Attribute)
+                    and node.attr in ("environ", "getenv")
+                    and isinstance(node.value, ast.Name)
+                    and node.value.id == "os"
+                    and name.startswith(_PKG)
+                    and name != f"{_PKG}.session"):
+                env_reads.append(f"{name}:{node.lineno}")
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "broadcast"
+                    and not (isinstance(node.func.value, ast.Name)
+                             and node.func.value.id == "F")):
+                broadcasts.append(f"{name}:{node.lineno}")
+    assert env_reads == [], "environment read outside session.py"
+    assert broadcasts == [], "Spark broadcast variable"

@@ -302,7 +302,7 @@ def test_scan_kernel_local_equals_map_in_pandas(spark, smoke_dir):
     input (direct work units, arrow media rows)."""
     from fin_ocr_sdk_spark.plans import pipeline as P
 
-    kernel = P.make_scan_batches(spark, P.scan_rows, P.MEDIA_SCAN_SCHEMA)
+    kernel = P.make_scan_batches(P.scan_rows, P.MEDIA_SCAN_SCHEMA)
     path = os.path.join(smoke_dir, "media.parquet")
     local = pd.concat(kernel(iter([pd.read_parquet(
         path, columns=["media_ref", "format", "image"])])))
